@@ -5,19 +5,17 @@ round bodies execute eagerly inside the query functions).
 
   python scripts/capture_loop_plans.py TREE_DIR SF_DIR OUT_DIR SUFFIX
 
-Writes hyperball_round_{suffix}.txt, pagerank_round_{suffix}.txt and
-hits_halfstep_{suffix}.txt: the plan of one representative round /
-half-step, built exactly the way the loop builds it.
+Writes hyperball_round_{suffix}.txt, hits_halfstep_{suffix}.txt and
+pagerank_final_{suffix}.txt: the plan of one representative round /
+half-step, built exactly the way the loop builds it. TREE_DIR is a
+checkout of this repository (one with unmixing_spark/loops.py).
 """
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
-
-
-def _fmt(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
 
 
 def main() -> None:
@@ -28,7 +26,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from unmixing_spark import dialect as D
-    from unmixing_spark import pipeline
+    from unmixing_spark import loops, pipeline
     from unmixing_spark.queries import linkgraph_q as L
     from unmixing_spark.session import get_spark
 
@@ -39,49 +37,36 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
 
     def write(name, df):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(f"-- {name} ({suffix}: tree={tree}, sf={sf_dir})\n")
-            fh.write(_fmt(df))
+            fh.write(buf.getvalue())
         print(f"wrote {path}")
 
     # HyperBall: one register-propagation round over the wide state
-    setup = L._hb_setup(spark)
-    if len(setup) == 3:            # round-6 shape: (links, state, k)
-        links, state, k = setup
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        from unmixing_spark import dialect as DD
-        state = L._hb_init_acc(state, [f"{DD.dbl(0.0)} AS h", "e AS prev"])
-        upd = [f"(h0 + greatest({DD.dbl(0.0)}, e - prev0) / {DD.dbl(1.0)}) AS h",
-               "e AS prev"]
+    links, state, k = L._hb_setup(spark)
+    state = L._hb_init_acc(state, [f"{D.dbl(0.0)} AS h", "e AS prev"])
+    upd = [f"(h0 + greatest({D.dbl(0.0)}, e - prev0) / {D.dbl(1.0)}) AS h",
+           "e AS prev"]
+    with loops.interpreted_loop(spark, k) as small:
         write("hyperball_round",
-              L._hb_wide_round(links, state, upd, ["h", "prev"], k, cap))
-    else:                          # round-start shape
-        links, state = setup
-        state = L._hb_init_acc(state, [F.lit(0.0).alias("h"),
-                                       F.col("e").alias("prev")])
+              L._hb_wide_round(links, state, upd, ["h", "prev"], k, small))
 
-        def upd(e):
-            return [(F.col("h0") + F.greatest(F.lit(0.0), e - F.col("prev0"))
-                     / F.lit(1.0)).alias("h"), e.alias("prev")]
-
-        write("hyperball_round",
-              L._hb_wide_round(links, state, upd, ["h", "prev"]))
-
-    # HITS: one authority half-step (links join score vector + dst sum)
-    hlinks = spark.sql(
-        f"WITH {L._link_ctes(D.SPARK)} SELECT src, dst FROM links"
-    ).localCheckpoint(eager=True)
+    # HITS: one authority half-step (links join score vector + dst sum),
+    # with the score vector broadcast when it fits, as the loop does
+    hlinks = loops.checkpoint(spark.sql(
+        f"WITH {L.link_ctes(D.SPARK)} SELECT src, dst FROM links"))
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     n = docs.count()
     h = docs.select("doc_id",
                     F.lit(L.HS_SCALE // n).cast("bigint").alias("h"))
     hv = h.withColumnRenamed("doc_id", "src")
-    if hasattr(L, "_loop_nparts"):  # round-6 tree broadcasts the vector
-        bcast_ok = n * 16 < int(spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", str(10 << 20)))
-        if bcast_ok:
-            hv = F.broadcast(hv)
+    if n * 16 < int(spark.conf.get(
+            "spark.sql.autoBroadcastJoinThreshold", str(10 << 20))):
+        hv = F.broadcast(hv)
     write("hits_halfstep",
           hlinks.join(hv, "src").groupBy("dst").agg(F.sum("h").alias("s")))
 

@@ -248,7 +248,7 @@ WORKER_JOINS = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
 from unmixing_spark.session import get_spark
-from unmixing_spark.queries.linkgraph_q import _triangle_clustering
+from unmixing_spark.queries.linkgraph_q import triangle_clustering_sql
 from unmixing_spark import dialect as D
 from pyspark.sql import functions as F
 
@@ -272,7 +272,7 @@ def run_pipeline():
     # representative (5 hash joins + 3 aggregations, degree-ordered
     # wedges, no Python anywhere). All checksummed columns are bigint,
     # so the cross-parallelism checksum is BIT-identical.
-    out = spark.sql(_triangle_clustering(D.SPARK))
+    out = spark.sql(triangle_clustering_sql(D.SPARK))
     agg = out.agg(F.count("*").alias("nodes"),
                   F.sum("triangles").alias("tri_sum"),
                   F.sum("degree").alias("deg_sum"),

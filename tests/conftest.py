@@ -11,6 +11,22 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "reference_fixtures(path): the test reads the reference "
+        "checkout's bundled TIFFs under `path`; skipped when that "
+        "directory is absent")
+
+
+def pytest_collection_modifyitems(config, items):
+    for item in items:
+        mark = item.get_closest_marker("reference_fixtures")
+        if mark is not None and not os.path.isdir(mark.args[0]):
+            item.add_marker(pytest.mark.skip(
+                reason=f"reference fixtures not found: {mark.args[0]}"))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from unmixing_spark.session import get_spark

@@ -23,7 +23,7 @@ def _md5_slice(s: str, start: int) -> int:
 
 
 def _planted_links(n: int) -> list[tuple[int, int, int]]:
-    """Python twin of linkgraph_q._link_ctes: (src, k, dst) triples."""
+    """Python twin of linkgraph_q.link_ctes: (src, k, dst) triples."""
     from unmixing_spark.queries.linkgraph_q import PR_MAX_FAN
     out = []
     for src in range(n):

@@ -11,7 +11,7 @@ from unmixing_spark.lsma.endmembers import (endmembers_by_maximum_angle,
                                             endmembers_by_maximum_area,
                                             endmembers_by_maximum_volume)
 from unmixing_spark.tiffio import read_tiff
-from tests.test_golden_fixtures import CASES, FIX
+from tests.test_golden_fixtures import CASES, FIX, needs_fix
 
 
 @pytest.fixture(scope="module")
@@ -21,6 +21,7 @@ def mnf7():
     return out, gt
 
 
+@needs_fix
 def test_max_volume_grouped_dict(mnf7):
     """Grouped-dict product search (lsma.py:616-632): one candidate per
     class, the combo maximizing |det|."""
@@ -41,6 +42,7 @@ def test_max_volume_grouped_dict(mnf7):
     assert abs(got - best) < 1e-9
 
 
+@needs_fix
 def test_max_volume_with_ref_target(mnf7):
     """Reference semantics (lsma.py:624/641): ref_target shrinks the
     combination size to ndim-1, spectra truncate to ndim components, so
@@ -63,6 +65,7 @@ def test_max_volume_with_ref_target(mnf7):
     assert abs(abs(np.linalg.det(spectra)) - best) < 1e-9
 
 
+@needs_fix
 def test_max_area_flat_sequence(mnf7):
     """area_dim=2 reference default (lsma.py:433): 3-combinations scored
     on the first two components, spectra truncated to ndim=3."""
@@ -80,6 +83,7 @@ def test_max_area_flat_sequence(mnf7):
     assert abs(area2([tuple(c) for c in coords]) - best) < 1e-9
 
 
+@needs_fix
 def test_max_angle(mnf7):
     out, gt = mnf7
     ref = (342683, 4703919)  # tests.py:172
@@ -100,6 +104,7 @@ def test_max_angle(mnf7):
     assert abs(got - best) < 1e-12
 
 
+@needs_fix
 def test_max_volume_dict_with_ref_asserts_group_count(mnf7):
     """Reference constraint (lsma.py:622-623): grouped search + ref_target
     requires ndim == len(groups) + 1; a 3-group dict at ndim=3 must raise

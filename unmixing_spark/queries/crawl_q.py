@@ -28,7 +28,7 @@ from __future__ import annotations
 from unmixing_spark import dialect as D
 from unmixing_spark.pagegen import EPOCH_2025, pages_sql, url_expr
 from unmixing_spark.queries import QuerySpec, register, sql_template
-from unmixing_spark.queries.linkgraph_q import _link_ctes
+from unmixing_spark.queries.linkgraph_q import link_ctes
 from unmixing_spark.queries.text_q import _tokens
 
 # ---- link extraction from html ------------------------------------------------
@@ -42,7 +42,7 @@ def _links_html_ctes(d: str) -> str:
     """Shared CTE chain ending in ``edges``(src, dst, idx, anchor).
 
     Synthesis: each page's html carries one ``<a>`` tag per out-link of
-    the synthetic graph (_link_ctes keep_k — the SINGLE graph definition
+    the synthetic graph (link_ctes keep_k — the SINGLE graph definition
     shared with the centrality queries), concatenated in fan order.
     Every other link is serialized PROTOCOL-RELATIVE (``//host/path``),
     so resolution must recover the scheme from the linking page — a real
@@ -79,7 +79,7 @@ def _links_html_ctes(d: str) -> str:
                      regexp_extract_all(html, {D.rx_lit(A_TAG_RX, d)}, 0) AS tags
               FROM page) t)
     )"""
-    return f"""{_link_ctes(d, keep_k=True)},
+    return f"""{link_ctes(d, keep_k=True)},
     urls AS {D.mat(d)}(
       SELECT doc_id, {url_expr(d)} AS url, text FROM documents
     ),
@@ -614,7 +614,7 @@ def _host_graph(d: str) -> str:
     page graph, which is the point of the rollup."""
     host = "source || '.example.com'"
     return f"""
-    WITH {_link_ctes(d)},
+    WITH {link_ctes(d)},
     hm AS (SELECT doc_id, {host} AS host FROM documents)
     SELECT s.host AS src_host, t.host AS dst_host,
            cast(count(*) as bigint) AS n_links,
@@ -713,7 +713,7 @@ def _crawl_frontier(d: str) -> str:
     dkey = "'d' || host"
     delay = f"1 + ({D.md5_slice(dkey, 1, d)}) % {FRONTIER_DELAY_MODS}"
     return f"""
-    WITH {_link_ctes(d)},
+    WITH {link_ctes(d)},
     indeg AS {D.mat(d)}(
       SELECT dst AS doc_id, cast(count(*) as bigint) AS inlinks
       FROM links GROUP BY dst

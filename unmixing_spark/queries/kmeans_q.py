@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unmixing_spark import dialect as D
-from unmixing_spark import pipeline
+from unmixing_spark import loops, pipeline
 from unmixing_spark.queries import QuerySpec, register
 
 KM_K = 8           # coarse-quantizer cells (IVF nlist at toy scale)
@@ -309,11 +309,10 @@ def _lloyd_assign(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     # task count otherwise inherits the session constant, paying ~32
     # Python task dispatches per round for sub-ms of kernel work; at
     # cluster scale the formula saturates the configured parallelism
-    from unmixing_spark.queries.linkgraph_q import _loop_nparts
-    k = _loop_nparts(spark, emb_tbl.count(), row_bytes=520)
-    emb_arr = (emb_tbl
-               .select("vec_id", F.expr(_QS_EXPR).alias("qs"))
-               .repartition(k, "vec_id").localCheckpoint(eager=True))
+    k = loops.nparts(spark, emb_tbl.count(), row_bytes=520)
+    emb_arr = loops.checkpoint(
+        emb_tbl.select("vec_id", F.expr(_QS_EXPR).alias("qs"))
+        .repartition(k, "vec_id"))
     cb0 = {None: sorted(
         (int(r["vec_id"]), [int(v) for v in r["qs"]])
         for r in emb_arr.filter(F.col("vec_id") < KM_K).collect())}
@@ -322,8 +321,7 @@ def _lloyd_assign(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     # once (eager localCheckpoint): its consumers (moved-count audit +
     # output in the quantizer; the SemDeDup/PQ tails) each re-executed
     # the Arrow kernel otherwise
-    assign = _lloyd_loop(emb_arr, cb0, KM_ROUNDS,
-                         EMB_DIM).localCheckpoint(eager=True)
+    assign = loops.checkpoint(_lloyd_loop(emb_arr, cb0, KM_ROUNDS, EMB_DIM))
     emb_long = (emb_arr
                 .select("vec_id", F.posexplode("qs").alias("pos0", "q"))
                 .select("vec_id", (F.col("pos0") + 1).alias("dim"), "q"))
@@ -560,9 +558,8 @@ def pq_codes_over_embeddings(spark: SparkSession) -> DataFrame:
     set drops 64x. Round shape: the SAME Arrow-kernel recurrence as
     q_kmeans_quantizer, with the codebook dict keyed by subspace (each
     sub's distances score the matching 16-dim slice of the row)."""
-    emb_arr = (spark.table("embeddings")
-               .select("vec_id", F.expr(_QS_EXPR).alias("qs"))
-               .localCheckpoint(eager=True))
+    emb_arr = loops.checkpoint(spark.table("embeddings")
+                               .select("vec_id", F.expr(_QS_EXPR).alias("qs")))
     first = emb_arr.filter(F.col("vec_id") < PQ_K).collect()
     cb0 = {s: sorted(
         (int(r["vec_id"]),

@@ -32,15 +32,16 @@ the per-round re-shuffle of the static edge side entirely.
 
 from __future__ import annotations
 
+import functools
 import math
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unmixing_spark import dialect as D
-from unmixing_spark import pipeline
+from unmixing_spark import loops, pipeline
 from unmixing_spark.queries import QuerySpec, register, sql_template
 
 PR_SCALE = 10 ** 12   # fixed-point scale: total rank mass in integer units
@@ -65,7 +66,7 @@ PR_CKPT_EVERY = 4     # Spark-side lineage truncation cadence (rounds).
                       # is only worth it for ADAPTIVE loops)
 
 
-def _link_ctes(d: str, keep_k: bool = False) -> str:
+def link_ctes(d: str, keep_k: bool = False) -> str:
     """CTE fragment ending in ``links``(src, outdeg, dst): each page emits
     1 + doc_id % PR_MAX_FAN out-links whose targets are md5-derived page
     ids in [0, N) — deterministic, dual-rendered, self-loops allowed
@@ -121,7 +122,7 @@ def _pagerank_oracle(seed_mod: int | None = None) -> str:
     if seed_pred is not None:
         base = f"CASE WHEN d.{seed_pred} THEN {base} ELSE 0 END"
         init = f"CASE WHEN {seed_pred} THEN {init} ELSE 0 END"
-    ctes = [_link_ctes(dd) + extra_cte, f"""r0 AS MATERIALIZED (
+    ctes = [link_ctes(dd) + extra_cte, f"""r0 AS MATERIALIZED (
       SELECT doc_id, cast({init} as bigint)
                AS pr
       FROM documents CROSS JOIN nd{extra_cross})"""]
@@ -175,18 +176,17 @@ def pagerank_over_documents(spark: SparkSession,
     """Driver loop twin of the unrolled oracle: PR_ROUNDS exact-integer
     power-iteration rounds over DataFrames, reading whatever ``documents``
     view is registered (the scaling bench points it at a replicated
-    corpus). The static edge list is localCheckpoint-ed once (on a lossy
-    cluster substitute a reliable checkpoint — same semantics); rank
-    lineage is truncated every PR_CKPT_EVERY rounds so the
-    self-referencing plan stays shallow. The N count() is a one-row
-    parquet-footer action (SURVEY §3.4 class) feeding the integer base
-    literal.
+    corpus). The static edge list is checkpointed once; rank lineage is
+    truncated every PR_CKPT_EVERY rounds so the self-referencing plan
+    stays shallow. The N count() is a one-row parquet-footer action
+    (SURVEY §3.4 class) feeding the integer base literal.
 
     ``seed_mod`` selects the TrustRank variant (see _pagerank_oracle):
     the teleport base and the initial vector land only on the trusted
     seeds {doc_id % seed_mod = 0}; the loop body is IDENTICAL — the
     seed count replaces N in the two integer bases, and the per-node
-    base is masked by seed membership."""
+    base is masked by seed membership. An empty seed set raises
+    ValueError: the teleport vector is undefined without a seed."""
     docs = (docs if docs is not None
             else spark.table("documents")).select("doc_id")
     if seed_mod is None:
@@ -201,17 +201,10 @@ def pagerank_over_documents(spark: SparkSession,
             F.sum((F.col("doc_id") % seed_mod == 0).cast("long"))
             .alias("ns")).collect()[0]
         n_docs, n_seeds = int(row["n"]), int(row["ns"] or 0)
-    # loop partitioning sized from the edge count (~2.5 N), see
-    # _loop_nparts; links carry their src hash layout into every round
-    k = _loop_nparts(spark, 3 * n_docs, row_bytes=24)
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    small = k < cap
-    with _interpreted_loop(spark, small):
-        links = (spark.sql(
-            f"WITH {_link_ctes(D.SPARK)} SELECT src, outdeg, dst "
-            "FROM links")
-            .repartition(k, "src").localCheckpoint(eager=True)
-            .repartition(k, "src"))
+        if n_seeds == 0:
+            raise ValueError(
+                f"TrustRank: seed set {{doc_id % {seed_mod} = 0}} is "
+                "empty")
     if seed_mod is None:
         denom = n_docs
         is_seed = None
@@ -232,16 +225,22 @@ def pagerank_over_documents(spark: SparkSession,
     # state hash-partitioned by doc_id and links by src, each round is
     # ONE exchange (the dst-keyed contribution sum) — the rank side and
     # the merge join move nothing.
+    # loop partitioning sized from the edge count (~2.5 N); links carry
+    # their src hash layout into every round
+    k = loops.nparts(spark, 3 * n_docs, row_bytes=24)
     pr = (docs.select("doc_id", init.cast("bigint").alias("pr"))
           .repartition(k, "doc_id"))
     prev = pr
-    with _interpreted_loop(spark, small):
+    with loops.interpreted_loop(spark, k) as small:
+        links = loops.checkpoint(spark.sql(
+            f"WITH {link_ctes(D.SPARK)} SELECT src, outdeg, dst "
+            "FROM links").repartition(k, "src"), key="src", k=k)
         for r in range(PR_ROUNDS):
             prev = pr
             inc = (links.join(pr.withColumnRenamed("doc_id", "src")
                               .hint("SHUFFLE_HASH"), "src")
                    .select("dst", F.expr("pr div outdeg").alias("c")))
-            if k < cap:
+            if small:
                 inc = inc.repartition(k, "dst")
             inc = inc.groupBy("dst").agg(F.sum("c").alias("s"))
             pr = (pr.join(inc.hint("SHUFFLE_HASH"),
@@ -252,12 +251,11 @@ def pagerank_over_documents(spark: SparkSession,
                               f"div {PR_DAMP_DEN}"))
                           .cast("bigint").alias("pr")))
             if (r + 1) % PR_CKPT_EVERY == 0 and r + 1 < PR_ROUNDS:
-                pr = (pr.localCheckpoint(eager=True)
-                      .repartition(k, "doc_id"))
+                pr = loops.checkpoint(pr, key="doc_id", k=k)
         # final ranks feed three consumers (output join, residual, and
         # the residual's broadcast) — materialize once so none re-runs
         # the chain
-        pr = pr.localCheckpoint(eager=True)
+        pr = loops.checkpoint(pr)
     delta = (pr.withColumnRenamed("pr", "a")
              .join(prev.withColumnRenamed("pr", "b"), "doc_id")
              .agg(F.max(F.abs(F.col("a") - F.col("b"))).alias("max_delta")))
@@ -304,7 +302,7 @@ def _degree_dist(d: str) -> str:
     bitlen_rows = ", ".join(
         f"({k}, {1 << k}, {(1 << (k + 1)) - 1})" for k in range(63))
     return f"""
-    WITH {_link_ctes(d)},
+    WITH {link_ctes(d)},
     bl AS ({D.values_rel(bitlen_rows, "t(k, lo, hi)", d)}),
     indeg AS (SELECT dst AS doc_id, cast(count(*) as bigint) AS deg
               FROM links GROUP BY dst),
@@ -349,7 +347,7 @@ def _link_spam_features(d: str) -> str:
     Final per-host aggregation with map-side combine."""
     host = "source || '.example.com'"
     return f"""
-    WITH {_link_ctes(d)},
+    WITH {link_ctes(d)},
     hm AS (SELECT doc_id, {host} AS host FROM documents),
     hp AS {D.mat(d)}(
       SELECT s.host AS src_host, t.host AS dst_host,
@@ -516,7 +514,7 @@ def _harmonic_oracle() -> str:
     e_r - e_{r-1})/r — the same expression applications in the same order
     as the Spark loop, so the result agrees bit-for-bit before round()."""
     dd = D.DUCKDB
-    ctes = [_link_ctes(dd), _hb_base_ctes(dd),
+    ctes = [link_ctes(dd), _hb_base_ctes(dd),
             f"a0 AS MATERIALIZED ({_hb_agg_sql('s0')})",
             f"""h0 AS MATERIALIZED (
       SELECT a.node, {D.dbl(0.0)} AS h, {_hb_est_sql('a')} AS prev
@@ -570,7 +568,7 @@ def _hb_est_col(cnt, s_int):  # type: ignore[no-untyped-def]
                   lc_e).otherwise(raw)
 
 
-def _hb_setup(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+def _hb_setup(spark: SparkSession) -> tuple[DataFrame, DataFrame, int]:
     """Checkpointed edge list + initial WIDE register state from the SAME
     SQL templates the oracles render — the shared loop scaffolding of the
     HyperBall family (harmonic + neighborhood function).
@@ -590,17 +588,19 @@ def _hb_setup(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     # the loop's exchanges from that (guide §2.2) instead of the
     # session constant; the documents count is a parquet-footer action
     n_docs = spark.table("documents").count()
-    k = _loop_nparts(spark, 3 * n_docs)
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    with _interpreted_loop(spark, k < cap):
+    k = loops.nparts(spark, 3 * n_docs)
+    with loops.interpreted_loop(spark, k):
         # the two checkpoint builds are independent eager jobs over the
         # same documents scan — submit them concurrently (guide §2.6)
         # so the second job's tasks back-fill the first one's tail; the
-        # driver-side saving is one whole job's scheduling+tail latency
+        # driver-side saving is one whole job's scheduling+tail latency.
+        # Re-asserting the layouts matters here: without it every round
+        # re-exchanged links AND state and sorted both for a merge join
+        # (measured: 4 Exchange + 2 SortMergeJoin per round).
         def _build_links() -> DataFrame:
-            return spark.sql(
-                f"WITH {_link_ctes(D.SPARK)} SELECT src, dst FROM links"
-            ).repartition(k, "src").localCheckpoint(eager=True)
+            return loops.checkpoint(spark.sql(
+                f"WITH {link_ctes(D.SPARK)} SELECT src, dst FROM links"
+            ).repartition(k, "src"), key="src", k=k)
 
         def _build_state() -> DataFrame:
             # s0 has EXACTLY one register row per node (one md5 pair
@@ -610,26 +610,21 @@ def _hb_setup(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
             # join reuses.
             wide = [F.when(F.col("b") == b, F.col("rho")).otherwise(0)
                     .alias(f"r{b}") for b in range(HB_M)]
-            return (spark.sql(
+            return loops.checkpoint(spark.sql(
                 f"WITH {_hb_base_ctes(D.SPARK)} "
                 "SELECT node, b, rho FROM s0")
-                .repartition(k, "node").select("node", *wide)
-                .localCheckpoint(eager=True))
+                .repartition(k, "node").select("node", *wide),
+                key="node", k=k)
 
+        # the helper threads inherit the caller's local properties (job
+        # group, description, scheduler pool) and session tags, so their
+        # jobs stay attributed to the query that runs them
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_links = pool.submit(_build_links)
-            f_state = pool.submit(_build_state)
+            f_links = pool.submit(inherit(_build_links))
+            f_state = pool.submit(inherit(_build_state))
             links, state = f_links.result(), f_state.result()
-    # A checkpointed DataFrame is a Scan ExistingRDD: its hash layout
-    # survives physically but the PLANNER forgets it, so every round
-    # re-exchanged links AND state and sorted both for a merge join
-    # (measured: 4 Exchange + 2 SortMergeJoin per round). The lazy
-    # repartition wrappers re-assert the partitioning in-plan — one
-    # exchange per checkpoint job, reused across all rounds inside the
-    # job via ReusedExchange — so the per-round join and the register
-    # aggregation meet already-partitioned inputs (guide §2.4).
-    return (links.repartition(k, "src"),
-            state.repartition(k, "node"), k)
+    return links, state, k
 
 
 _HB_REGS = [f"r{b}" for b in range(HB_M)]
@@ -664,52 +659,6 @@ def _hb_est_expr() -> str:
 _HB_EST_EXPR = _hb_est_expr()
 
 
-@contextmanager
-def _interpreted_loop(spark: SparkSession, small: bool):
-    """Whole-stage-codegen OFF for the loop's eager jobs in the
-    SMALL-data regime only (round-6, measured): each round's 16-column
-    register expressions compile fresh generated classes per stage (the
-    per-round accumulator literal defeats the source-text cache), and
-    at ~50k state rows janino compilation dominates execution —
-    interpreted evaluation of the identical expression trees is 1.5-2x
-    faster end-to-end (HyperBall 15-20 s -> 9-10 s A/B at the 10x
-    replica). ``small`` is the same size-derived signal as the loop
-    partitioning (k < cap), so at cluster scale — where compilation
-    amortizes over billions of rows — codegen stays on. Evaluation mode
-    does not change expression semantics; outputs stay bit-identical
-    (snapshot-gated). The previous value is restored before the lazy
-    output tail is planned."""
-    if not small:
-        yield
-        return
-    prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev)
-
-
-def _loop_nparts(spark: SparkSession, n_rows: int,
-                 row_bytes: int = 160) -> int:
-    """Scale-adaptive partition count for the iterative-loop exchanges
-    (guide §2.2 "fewer, larger reduce partitions" / §2.5): size the
-    per-round shuffles by BYTES (~64 MB targets), floored at 1 and
-    capped at the session's shuffle parallelism — the cluster-scale
-    value. A fixed 32-way exchange over a 50k-row state is pure
-    task-scheduling tax (32 sub-ms tasks per stage, ~12 stages per
-    checkpoint job); at 10^12 pages the same formula saturates the
-    configured parallelism. Floor 2, not 1: ``repartition(1, key)``
-    plans as SinglePartition, which does NOT satisfy the hash
-    clustering the loop joins/aggregations require, so
-    EnsureRequirements stacks a full-width hash exchange on top of it
-    (seen in the executed plan) — hashpartitioning(key, 2) is the
-    smallest layout every downstream operator can reuse."""
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return max(2, min(cap, (n_rows * row_bytes + (64 << 20) - 1)
-                      >> 26))
-
-
 def _hb_cnt_col():
     """Occupied-register count over the wide row: present registers have
     rho >= 1 (the bit-length lookup never yields 0 for a present hash),
@@ -731,7 +680,7 @@ def _hb_sint_col():
 
 
 def _hb_propagate_wide(links: DataFrame, state: DataFrame,
-                       extras: list, k: int, cap: int) -> DataFrame:
+                       extras: list, k: int, small: bool) -> DataFrame:
     """One HyperBall round over the wide state: src-keyed edge join,
     node-keyed register-max aggregation of the CONTRIBUTIONS only, then
     a node-keyed left join merging them into the state row with
@@ -752,12 +701,12 @@ def _hb_propagate_wide(links: DataFrame, state: DataFrame,
                .join(state.selectExpr("node AS src", *_HB_REGS)
                      .hint("SHUFFLE_HASH"), "src")
                .selectExpr("dst AS node", *_HB_REGS))
-    # when the loop's size-derived partition count is below the session
-    # parallelism, pre-repartition so the register aggregation runs on
-    # k partitions (no second exchange — the groupBy's clustering
-    # requirement is already met); at cluster scale (k == cap) keep the
-    # plain groupBy so the map-side partial max is planned as usual
-    if k < cap:
+    # in the small-data regime (loops.interpreted_loop), pre-repartition
+    # so the register aggregation runs on k partitions (no second
+    # exchange — the groupBy's clustering requirement is already met);
+    # at cluster scale keep the plain groupBy so the map-side partial
+    # max is planned as usual
+    if small:
         contrib = contrib.repartition(k, "node")
     cg = contrib.groupBy("node").agg(
         *[F.max(c).alias(f"c_{c}") for c in _HB_REGS])
@@ -767,13 +716,13 @@ def _hb_propagate_wide(links: DataFrame, state: DataFrame,
 
 
 def _hb_wide_round(links: DataFrame, state: DataFrame, acc_exprs: list,
-                   extras: list, k: int, cap: int) -> DataFrame:
+                   extras: list, k: int, small: bool) -> DataFrame:
     """Propagate + estimator + accumulator update, in layered selects so
     cnt/s_int/e each evaluate once per row (CollapseProject is excluded
     session-wide). ``acc_exprs`` are the new accumulator columns as SQL
     strings over the estimator column ``e`` and the carried ``{c}0``
     columns."""
-    agg = _hb_propagate_wide(links, state, extras, k, cap)
+    agg = _hb_propagate_wide(links, state, extras, k, small)
     extras0 = [f"{c}0" for c in extras]
     stats = agg.selectExpr("node", *_HB_REGS, *extras0,
                            _HB_CNT_EXPR, _HB_SINT_EXPR)
@@ -819,23 +768,18 @@ def harmonic_over_documents(spark: SparkSession) -> DataFrame:
     truncates every HB_CKPT_EVERY rounds plus the last two rounds (the
     convergence proof reads both)."""
     links, state, k = _hb_setup(spark)
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     state = _hb_init_acc(state, [f"{D.dbl(0.0)} AS h", "e AS prev"])
     prev_state = state
-    with _interpreted_loop(spark, k < cap):
+    with loops.interpreted_loop(spark, k) as small:
         for r in range(1, HB_ROUNDS + 1):
             prev_state = state
             upd = [f"(h0 + greatest({D.dbl(0.0)}, e - prev0) "
                    f"/ {D.dbl(float(r))}) AS h",
                    "e AS prev"]
             state = _hb_wide_round(links, state, upd, ["h", "prev"],
-                                   k, cap)
+                                   k, small)
             if r % HB_CKPT_EVERY == 0 or r >= HB_ROUNDS - 1:
-                # re-assert the node hash layout the checkpoint erases
-                # from the plan (see _hb_setup) — data does not move
-                # again until the next checkpoint job's head exchange
-                state = (state.localCheckpoint(eager=True)
-                         .repartition(k, "node"))
+                state = loops.checkpoint(state, key="node", k=k)
     conv = _hb_conv_col(state, prev_state)
     stats = state.select("node", "h", _hb_cnt_col().alias("cnt"),
                          _hb_sint_col().alias("s_int"))
@@ -905,7 +849,7 @@ def _hits_oracle() -> str:
     the same three for hubs — every CTE MATERIALIZED (each feeds the
     next half-step plus the residuals)."""
     dd = D.DUCKDB
-    ctes = [_link_ctes(dd), f"""h0 AS MATERIALIZED (
+    ctes = [link_ctes(dd), f"""h0 AS MATERIALIZED (
       SELECT doc_id, cast({D.idiv_i(str(HS_SCALE), 'nd.n', dd)} as bigint)
                AS h
       FROM documents CROSS JOIN nd)"""]
@@ -958,7 +902,7 @@ def hits_over_documents(spark: SparkSession,
                         docs: DataFrame | None = None) -> DataFrame:
     """Driver loop twin of the unrolled oracle, reading the registered
     ``documents`` view: HS_ROUNDS exact-integer HITS rounds; the edge
-    list localCheckpoint-ed once. Each raw-sum table (ar/hr, one row per
+    list checkpointed once. Each raw-sum table (ar/hr, one row per
     linked page) is eagerly checkpointed EVERY half-step: the 1-row
     normalization total that cross-joins back is a broadcast, and a
     broadcast subtree is re-evaluated from its source when the consumer
@@ -967,11 +911,9 @@ def hits_over_documents(spark: SparkSession,
     per-half-step truncation; q_link_pagerank can defer checkpointing
     because its loop has no in-loop aggregate, the CC/HITS loops
     cannot). The normalized vectors a/h stay lazy — they are shallow
-    transforms (doc scan ⋈ checkpointed raw sums ⋈ 1-row broadcast). On
-    a lossy cluster substitute reliable checkpoints — same semantics."""
-    links = spark.sql(
-        f"WITH {_link_ctes(D.SPARK)} SELECT src, dst FROM links"
-    ).localCheckpoint(eager=True)
+    transforms (doc scan ⋈ checkpointed raw sums ⋈ 1-row broadcast)."""
+    links = loops.checkpoint(spark.sql(
+        f"WITH {link_ctes(D.SPARK)} SELECT src, dst FROM links"))
     docs = (docs if docs is not None
             else spark.table("documents")).select("doc_id")
     n = docs.count()
@@ -985,9 +927,8 @@ def hits_over_documents(spark: SparkSession,
     # unchanged when 0-rows drop out), so the fixed-point trajectory is
     # bit-identical; the docs left-join that densified every half-step
     # (24 extra scans + joins) happens ONCE at the end. The L1 total t
-    # rides an Observation evaluated by the same checkpoint job that
-    # materializes the raw sums — the per-half-step 1-row aggregation
-    # job and its broadcast disappear; t embeds as an exact int literal.
+    # is observed on the raw-sum checkpoint — no per-half-step 1-row
+    # aggregation job or broadcast; t embeds as an exact int literal.
     # score vectors are <= N 16-byte rows; when that fits the session's
     # broadcast threshold, ship THEM to the (static, never-shuffled)
     # edge table instead of letting the planner fall back to a
@@ -1000,23 +941,19 @@ def hits_over_documents(spark: SparkSession,
     a = prev_h = prev_a = None
     for r in range(1, HS_ROUNDS + 1):
         prev_h, prev_a = h, a
-        obs_a = Observation()
-        ar = (links.join(side(h.withColumnRenamed("doc_id", "src")), "src")
-              .groupBy("dst").agg(F.sum("h").alias("s"))
-              .observe(obs_a, F.sum("s").alias("t"))
-              .localCheckpoint(eager=True))
-        ta = int(obs_a.get["t"])
+        ar, ta = loops.checkpoint(
+            links.join(side(h.withColumnRenamed("doc_id", "src")), "src")
+            .groupBy("dst").agg(F.sum("h").alias("s")),
+            observe=F.sum("s").alias("t"))
         a = ar.select(F.col("dst").alias("doc_id"),
-                      F.expr(f"(s * {HS_SCALE}) div {ta}")
+                      F.expr(f"(s * {HS_SCALE}) div {int(ta)}")
                       .cast("bigint").alias("a"))
-        obs_h = Observation()
-        hr = (links.join(side(a.withColumnRenamed("doc_id", "dst")), "dst")
-              .groupBy("src").agg(F.sum("a").alias("s"))
-              .observe(obs_h, F.sum("s").alias("t"))
-              .localCheckpoint(eager=True))
-        th = int(obs_h.get["t"])
+        hr, th = loops.checkpoint(
+            links.join(side(a.withColumnRenamed("doc_id", "dst")), "dst")
+            .groupBy("src").agg(F.sum("a").alias("s")),
+            observe=F.sum("s").alias("t"))
         h = hr.select(F.col("src").alias("doc_id"),
-                      F.expr(f"(s * {HS_SCALE}) div {th}")
+                      F.expr(f"(s * {HS_SCALE}) div {int(th)}")
                       .cast("bigint").alias("h"))
 
     def _dense(vec: DataFrame, col: str) -> DataFrame:
@@ -1029,8 +966,8 @@ def hits_over_documents(spark: SparkSession,
 
     # final vectors feed the output join plus a residual each —
     # materialize once so neither consumer re-runs the chain
-    h = _dense(h, "h").localCheckpoint(eager=True)
-    a = _dense(a, "a").localCheckpoint(eager=True)
+    h = loops.checkpoint(_dense(h, "h"))
+    a = loops.checkpoint(_dense(a, "a"))
     prev_h = _dense(prev_h, "h")
     prev_a = _dense(prev_a, "a")
     dh = (h.withColumnRenamed("h", "x")
@@ -1090,7 +1027,7 @@ def _nf_oracle() -> str:
     instead of the 1/r harmonic sum, then one row per radius with the
     cumulative fraction and the first-crossing effective-diameter flag."""
     dd = D.DUCKDB
-    ctes = [_link_ctes(dd), _hb_base_ctes(dd),
+    ctes = [link_ctes(dd), _hb_base_ctes(dd),
             f"a0 AS MATERIALIZED ({_hb_agg_sql('s0')})",
             f"""e0 AS MATERIALIZED (
       SELECT a.node, {_hb_est_sql('a')} AS env, {_hb_est_sql('a')} AS prev
@@ -1134,12 +1071,11 @@ def _nf_oracle() -> str:
 def neighborhood_function_over_documents(spark: SparkSession) -> DataFrame:
     """Driver loop twin of the unrolled NF oracle: the harmonic loop's
     wide-state register propagation with the envelope accumulator. Each
-    round's global NF sum is read through an Observation attached to the
-    state checkpoint job (the cc_labels pattern — zero extra Spark
-    jobs), and the 13-row (r, nf) table is assembled from those
-    Spark-computed doubles; the values round-trip bit-exactly through
-    the driver (Python float IS an IEEE double), so the tail arithmetic
-    matches the oracle as before. (A two-rounds-per-checkpoint fusion —
+    round's global NF sum is observed on the state checkpoint, and the
+    13-row (r, nf) table is assembled from those Spark-computed
+    doubles; the values round-trip bit-exactly through the driver
+    (Python float IS an IEEE double), so the tail arithmetic matches
+    the oracle as before. (A two-rounds-per-checkpoint fusion —
     carrying the odd radius' envelope as an extra column and observing
     both sums in one job — was measured and REJECTED: the odd round's
     state feeds the even round's two consumers, so its merge join +
@@ -1147,26 +1083,19 @@ def neighborhood_function_over_documents(spark: SparkSession) -> DataFrame:
     than the 6 saved job round-trips; 7.6 s vs 6.3 s at the 10x
     replica.)"""
     links, state, k = _hb_setup(spark)
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     state = _hb_init_acc(state, ["e AS env", "e AS prev"])
+    upd = [f"(env0 + greatest({D.dbl(0.0)}, e - prev0)) AS env",
+           "e AS prev"]
     nf_vals = []
-    with _interpreted_loop(spark, k < cap):
-        obs0 = Observation()
-        state = (state.observe(obs0, F.round(F.sum("env"), 6).alias("nf"))
-                 .localCheckpoint(eager=True)
-                 .repartition(k, "node"))
-        nf_vals.append((0, float(obs0.get["nf"])))
-        upd = [f"(env0 + greatest({D.dbl(0.0)}, e - prev0)) AS env",
-               "e AS prev"]
-        for r in range(1, HB_ROUNDS + 1):
-            state = _hb_wide_round(links, state, upd, ["env", "prev"],
-                                   k, cap)
-            obs = Observation()
-            state = (state.observe(obs,
-                                   F.round(F.sum("env"), 6).alias("nf"))
-                     .localCheckpoint(eager=True)
-                     .repartition(k, "node"))
-            nf_vals.append((r, float(obs.get["nf"])))
+    with loops.interpreted_loop(spark, k) as small:
+        for r in range(HB_ROUNDS + 1):
+            if r:
+                state = _hb_wide_round(links, state, upd, ["env", "prev"],
+                                       k, small)
+            state, nf = loops.checkpoint(
+                state, observe=F.round(F.sum("env"), 6).alias("nf"),
+                key="node", k=k)
+            nf_vals.append((r, float(nf)))
     nf = spark.createDataFrame(
         [(int(r), v) for r, v in nf_vals], "r bigint, nf double")
     from pyspark.sql.window import Window
@@ -1193,7 +1122,7 @@ register("q_effective_diameter", QuerySpec(
         "global sums) — the Broder et al. 2000 web-graph structure stat"))
 
 
-def _triangle_clustering(d: str) -> str:
+def triangle_clustering_sql(d: str) -> str:
     """Per-node triangle counts + local clustering coefficient over the
     undirected simple graph underlying the synthetic link graph — the
     Watts-Strogatz local statistic every web-graph structure report
@@ -1219,7 +1148,7 @@ def _triangle_clustering(d: str) -> str:
     single exact-integer division rounded to 6 in both renderings."""
     lex = ("t.u_deg < t.v_deg OR (t.u_deg = t.v_deg AND t.u < t.v)")
     return f"""
-    WITH {_link_ctes(d)},
+    WITH {link_ctes(d)},
     edges AS {D.mat(d)}(
       SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
       FROM links WHERE src <> dst
@@ -1287,7 +1216,7 @@ def _triangle_clustering_spark(spark: SparkSession,
                              repartition=False)
     d = D.SPARK
     edges = spark.sql(
-        f"WITH {_link_ctes(d)} "
+        f"WITH {link_ctes(d)} "
         f"SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v "
         f"FROM links WHERE src <> dst").localCheckpoint(eager=True)
     edges.createOrReplaceTempView("tc_edges")
@@ -1347,7 +1276,7 @@ def _triangle_clustering_spark(spark: SparkSession,
 
 register("q_triangle_clustering", QuerySpec(
     spark_fn=_triangle_clustering_spark,
-    oracle=_triangle_clustering(D.DUCKDB),
+    oracle=triangle_clustering_sql(D.DUCKDB),
     doc="per-node triangle counts + local clustering coefficient "
         "via degree-ordered oriented wedges (Suri-Vassilvitskii / "
         "Latapy shape, skew-bounded) over the undirected simple "
@@ -1376,7 +1305,7 @@ def _degree_assortativity(d: str) -> str:
     degrees ~ O(max_deg) rows), one 1-row global moment aggregate that
     cross-joins back — nothing exceeds the edge list's own exchanges."""
     return f"""
-    WITH {_link_ctes(d)},
+    WITH {link_ctes(d)},
     edges AS {D.mat(d)}(
       SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
       FROM links WHERE src <> dst
@@ -1447,7 +1376,7 @@ def _kcore_edges_sql(d: str) -> str:
     graph — the same derivation q_triangle_clustering dedups from the
     synthetic links."""
     return f"""
-    WITH {_link_ctes(d)},
+    WITH {link_ctes(d)},
     und AS (
       SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
       FROM links WHERE src <> dst
@@ -1505,12 +1434,11 @@ def _kcore_oracle() -> str:
 def kcore_alive(edges: DataFrame, k: int = KC_K,
                 max_rounds: int = KC_MAX_ROUNDS):
     """Adaptive k-core peel over a directed pair list (both orientations
-    of an undirected simple graph), iterated to a PROVEN fixpoint — the
-    same driver-checked Observation cadence as scale_q.cc_labels: the
-    alive-degree aggregate carries a `changed` observation evaluated
-    during the SAME job the eager localCheckpoint runs (zero extra
-    actions), the loop exits when a peel round removes nothing, and it
-    RAISES past max_rounds rather than returning a stale shell.
+    of an undirected simple graph), iterated to a PROVEN fixpoint by
+    loops.fixpoint: each round's alive-degree aggregate observes whether
+    any node falls below k, the loop exits when a peel round removes
+    nothing, and it RAISES past max_rounds rather than returning a stale
+    shell.
 
     Returns (deg, rounds): `deg` is the checkpointed final alive-degree
     table (id, deg) — every row satisfies deg >= k, and callers
@@ -1521,31 +1449,27 @@ def kcore_alive(edges: DataFrame, k: int = KC_K,
     one node-keyed count — the standard distributed peel; the alive set
     only shrinks, and rounds are bounded by the peel depth (typically
     O(log n) on web graphs), not by n."""
-    edges = edges.localCheckpoint(eager=True)
-    alive = edges.select(F.col("u").alias("id")).distinct()
-    rounds = 0
-    while True:
+    edges = loops.checkpoint(edges)
+    alive0 = edges.select(F.col("u").alias("id")).distinct()
+
+    def peel(deg):
+        # lazy: a trivial filter over the checkpointed degree table —
+        # both references below re-run it from checkpoint blocks for
+        # less than an eager checkpoint job would cost (round-6)
+        alive = (alive0 if deg is None
+                 else deg.filter(F.col("deg") >= k).select("id"))
         heads = alive.select(F.col("id").alias("head_id"))
         e_alive = (edges.join(heads, edges["v"] == heads["head_id"])
                         .select(edges["u"].alias("tail_id"), "head_id"))
-        deg = (alive.join(e_alive, alive["id"] == e_alive["tail_id"], "left")
-                    .groupBy(alive["id"])
-                    .agg(F.count("head_id").alias("deg")))
-        obs = Observation()
-        deg = deg.observe(obs, F.coalesce(
-            F.max((F.col("deg") < k).cast("int")), F.lit(0)).alias("changed"))
-        deg = deg.localCheckpoint(eager=True)
-        if not obs.get["changed"]:
-            return deg, rounds
-        rounds += 1
-        if rounds >= max_rounds:
-            raise RuntimeError(
-                f"kcore_alive: no fixpoint after {max_rounds} peel rounds "
-                "— refusing to return a stale k-core shell")
-        # lazy: a trivial filter over the checkpointed degree table —
-        # both next-round references re-run it from checkpoint blocks
-        # for less than the eager checkpoint job it replaced (round-6)
-        alive = deg.filter(F.col("deg") >= k).select("id")
+        return (alive.join(e_alive, alive["id"] == e_alive["tail_id"], "left")
+                .groupBy(alive["id"])
+                .agg(F.count("head_id").alias("deg")))
+
+    return loops.fixpoint(
+        peel, None,
+        changed=F.coalesce(F.max((F.col("deg") < k).cast("int")),
+                           F.lit(0)).alias("changed"),
+        max_rounds=max_rounds, what="k-core shell")
 
 
 def _kcore_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1625,7 +1549,7 @@ def _label_prop_oracle() -> str:
     yields the exact converged labels (the q_neardup_components oracle
     doctrine)."""
     dd = D.DUCKDB
-    ctes = [_link_ctes(dd) + f""",
+    ctes = [link_ctes(dd) + f""",
     und AS (
       SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
       FROM links WHERE src <> dst
@@ -1677,54 +1601,45 @@ def _label_prop_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark shape: the undirected edge list is checkpointed once; each
     round is ONE src-keyed join + one (id, lbl)-keyed count whose argmax
     folds into a map-side-combinable max(struct(c, -lbl)) aggregate —
-    no per-round window, no global sort. Convergence detection rides an
-    Observation on the eager checkpoint (zero extra jobs, the cc_labels
-    mechanism); the loop exits at PROVEN fixpoint and raises past
-    LP_MAX_ROUNDS rather than returning drifting labels. Oracle parity:
+    no per-round window, no global sort. loops.fixpoint exits at the
+    PROVEN fixpoint and raises past LP_MAX_ROUNDS rather than returning
+    drifting labels. Oracle parity:
     fixpoints are stable, so the fixed LP_ORACLE_ROUNDS-deep DuckDB
     unroll lands on the identical labeling whenever its depth >= the
     observed rounds (6-8 across 500-20,000 nodes)."""
     pipeline.register_tables(spark, sf_dir, ("documents",),
                              repartition=False)
     und = spark.sql(
-        f"WITH {_link_ctes(D.SPARK)} SELECT DISTINCT least(src, dst) AS u, "
+        f"WITH {link_ctes(D.SPARK)} SELECT DISTINCT least(src, dst) AS u, "
         "greatest(src, dst) AS v FROM links WHERE src <> dst")
-    adj = (und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-           .unionAll(und.select(F.col("v").alias("src"),
-                                F.col("u").alias("dst")))
-           .localCheckpoint(eager=True))
-    lbl = (spark.table("documents")
-           .select(F.col("doc_id").alias("id"),
-                   F.col("doc_id").alias("lbl")))
-    rounds = 0
-    final = None
-    while True:
+    adj = loops.checkpoint(
+        und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .unionAll(und.select(F.col("v").alias("src"),
+                             F.col("u").alias("dst"))))
+    lbl0 = (spark.table("documents")
+            .select(F.col("doc_id").alias("id"),
+                    F.col("doc_id").alias("lbl")))
+
+    def vote(nxt):
+        lbl = lbl0 if nxt is None else nxt.select("id", "lbl")
         votes = (adj.join(lbl.withColumnRenamed("id", "src")
                           .withColumnRenamed("lbl", "nlbl"), "src")
                  .select(F.col("dst").alias("id"), F.col("nlbl").alias("lbl"))
                  .unionAll(lbl))
         prev = lbl.withColumnRenamed("lbl", "prev")
-        nxt = (votes.groupBy("id", "lbl")
-               .agg(F.count("*").cast("long").alias("c"))
-               .groupBy("id")
-               .agg(F.max(F.struct(F.col("c"),
-                                   (-F.col("lbl")).alias("nl"))).alias("m"))
-               .select("id", (-F.col("m.nl")).cast("long").alias("lbl"))
-               .join(prev, "id"))
-        obs = Observation()
-        nxt = nxt.observe(obs, F.coalesce(
-            F.max((F.col("lbl") != F.col("prev")).cast("int")),
-            F.lit(0)).alias("changed"))
-        nxt = nxt.localCheckpoint(eager=True)
-        if not obs.get["changed"]:
-            final = nxt
-            break
-        rounds += 1
-        if rounds >= LP_MAX_ROUNDS:
-            raise RuntimeError(
-                f"label_prop: no fixpoint after {LP_MAX_ROUNDS} rounds — "
-                "refusing to return drifting community labels")
-        lbl = nxt.select("id", "lbl")
+        return (votes.groupBy("id", "lbl")
+                .agg(F.count("*").cast("long").alias("c"))
+                .groupBy("id")
+                .agg(F.max(F.struct(F.col("c"),
+                                    (-F.col("lbl")).alias("nl"))).alias("m"))
+                .select("id", (-F.col("m.nl")).cast("long").alias("lbl"))
+                .join(prev, "id"))
+
+    final, _rounds = loops.fixpoint(
+        vote, None,
+        changed=F.coalesce(F.max((F.col("lbl") != F.col("prev"))
+                                 .cast("int")), F.lit(0)).alias("changed"),
+        max_rounds=LP_MAX_ROUNDS, what="community labels")
     converged = final.agg(
         (F.lit(1) - F.coalesce(
             F.max((F.col("lbl") != F.col("prev")).cast("int")), F.lit(0)))
@@ -1775,7 +1690,7 @@ def _modularity(d: str) -> str:
     exact until a single community's degree sum passes 3e9, the honest
     overflow edge a 10^12-page run would pre-aggregate in double."""
     return f"""
-    WITH {_link_ctes(d)},
+    WITH {link_ctes(d)},
     und AS {D.mat(d)}(
       SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
       FROM links WHERE src <> dst
@@ -1865,7 +1780,7 @@ def _bowtie_oracle() -> str:
     re-checked in-query: monotone set sizes equal across the last two
     rounds prove all three closures are fixpoints."""
     dd = D.DUCKDB
-    ctes = [_link_ctes(dd), """degs AS (
+    ctes = [link_ctes(dd), """degs AS (
       SELECT id, cast(count(*) as bigint) AS dg FROM (
         SELECT src AS id FROM links
         UNION ALL
@@ -1920,33 +1835,29 @@ def _bt_reach_spark(edges: DataFrame, pivot_df: DataFrame) -> DataFrame:
     """Adaptive frontier BFS to the exact reachability closure: per
     round one src-keyed join (frontier is tiny and broadcastable most
     rounds — AQE decides) + one anti-join against the closure so far;
-    the Observation on the eagerly-checkpointed new-frontier counts
-    discovered nodes with zero extra jobs. Exits at the PROVEN empty
-    frontier; raises past BT_MAX_ROUNDS rather than returning a
-    truncated closure. The closure is APPEND-ONLY in deed as well as
-    word: only each round's new frontier is ever materialized; the
-    closure the anti-join (and the caller) sees is the lazy union of
+    loops.fixpoint observes the new frontier's size and exits at the
+    PROVEN empty frontier, raising past BT_MAX_ROUNDS rather than
+    returning a truncated closure. The closure is APPEND-ONLY in deed as
+    well as word: only each round's new frontier is ever materialized;
+    the closure the anti-join (and the caller) sees is the lazy union of
     the already-checkpointed per-round frontiers, so per-round
     checkpoint I/O is frontier-sized, never O(|closure|). Scale shape
     (10^12 pages): per-round traffic is frontier-sized, and on a
     cluster the edge side is bucketed by src so rounds reuse one
     partitioning."""
-    frontier = pivot_df.localCheckpoint(eager=True)
-    reached = frontier
-    for _ in range(BT_MAX_ROUNDS):
-        new = (edges.join(frontier.withColumnRenamed("id", "src"), "src")
-               .select(F.col("dst").alias("id")).distinct()
-               .join(reached, "id", "left_anti"))
-        obs = Observation()
-        new = new.observe(obs, F.count(F.lit(1)).alias("n"))
-        new = new.localCheckpoint(eager=True)
-        if not obs.get["n"]:
-            return reached
-        reached = reached.unionAll(new)  # union of checkpointed parts
-        frontier = new
-    raise RuntimeError(
-        f"bowtie: reachability not closed after {BT_MAX_ROUNDS} rounds — "
-        "refusing to return a truncated closure")
+    frontiers = []
+
+    def expand(frontier):
+        frontiers.append(frontier)
+        reached = functools.reduce(DataFrame.unionAll, frontiers)
+        return (edges.join(frontier.withColumnRenamed("id", "src"), "src")
+                .select(F.col("dst").alias("id")).distinct()
+                .join(reached, "id", "left_anti"))
+
+    loops.fixpoint(expand, loops.checkpoint(pivot_df),
+                   changed=F.count(F.lit(1)).alias("n"),
+                   max_rounds=BT_MAX_ROUNDS, what="reachability closure")
+    return functools.reduce(DataFrame.unionAll, frontiers)
 
 
 def _bowtie_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1969,9 +1880,8 @@ def _bowtie_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     on 200M pages in 2000)."""
     pipeline.register_tables(spark, sf_dir, ("documents",),
                              repartition=False)
-    links = spark.sql(
-        f"WITH {_link_ctes(D.SPARK)} SELECT src, dst FROM links"
-    ).localCheckpoint(eager=True)
+    links = loops.checkpoint(spark.sql(
+        f"WITH {link_ctes(D.SPARK)} SELECT src, dst FROM links"))
     degs = (links.select(F.col("src").alias("id"))
             .unionAll(links.select(F.col("dst").alias("id")))
             .groupBy("id").agg(F.count(F.lit(1)).alias("dg")))
@@ -1986,9 +1896,9 @@ def _bowtie_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot_id = int(piv_row["id"])
     pivot_df = spark.createDataFrame([(pivot_id,)], "id bigint")
     rev = links.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    sym = links.unionAll(rev).localCheckpoint(eager=True)
+    sym = loops.checkpoint(links.unionAll(rev))
     fw = _bt_reach_spark(links, pivot_df)
-    bw = _bt_reach_spark(rev.localCheckpoint(eager=True), pivot_df)
+    bw = _bt_reach_spark(loops.checkpoint(rev), pivot_df)
     wc = _bt_reach_spark(sym, pivot_df)
     docs = spark.table("documents").select("doc_id")
     tagged = (docs

@@ -11,11 +11,11 @@ different physical plan, bit-equal results.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unmixing_spark import dialect as D
-from unmixing_spark import pipeline
+from unmixing_spark import loops, pipeline
 from unmixing_spark.pagegen import cell_raster_sql, geo_pages_sql
 from unmixing_spark.queries import QuerySpec, register, sql_template
 from unmixing_spark.queries.spatial_q import AOIS, QUERY_POINTS, _knn_join, _pip_join
@@ -132,7 +132,7 @@ def _session_windows_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline.register_tables(spark, sf_dir, ("events",),
                              repartition=False)
     ev = spark.read.table("events")
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    target = loops.shuffle_partitions(spark)
     if ev.rdd.getNumPartitions() < max(target // 4, 2):
         ev = ev.repartition(target, "user_id")
     ev = ev.withColumn("ts", F.date_trunc("second", "ts"))
@@ -616,67 +616,60 @@ def cc_labels(edges: DataFrame, max_rounds: int = CC_MAX_ROUNDS,
               edges_checkpointed: bool = False):
     """Label-propagation connected components over a directed edge list
     (columns u, v; pass both directions for an undirected graph), iterated
-    to a PROVEN fixpoint. Each round is a neighbor-min label exchange
-    (join keyed by node id) plus a pointer jump lbl <- lbl(lbl) (join
-    keyed by label), so propagation distance doubles per round. The
-    neighbor-min of round k carries the previous label through the
-    aggregate, and an attached Observation reads max(lbl < prev) during
-    the SAME job the eager localCheckpoint runs — convergence detection
-    costs zero extra Spark jobs. The loop exits when a round proves no
-    label changed (so fixpoint held at entry to that round) and RAISES
-    past max_rounds rather than returning stale labels.
+    to a PROVEN fixpoint by loops.fixpoint. Each round is a neighbor-min
+    label exchange (join keyed by node id) plus a pointer jump
+    lbl <- lbl(lbl) (join keyed by label), so propagation distance
+    doubles per round. The neighbor-min carries the previous label
+    through the aggregate, and the round observes max(lbl < prev). The
+    loop exits when a round proves no label changed (so fixpoint held at
+    entry to that round) and RAISES past max_rounds rather than
+    returning stale labels.
 
     Returns (n, rounds): `n` is the checkpointed final neighbor-min
     table with columns (id, lbl, prev) where lbl == prev row-wise —
     callers can re-derive the convergence proof in-query from it —
     and `rounds` is the number of full (exchange + jump) rounds run.
 
-    localCheckpoint trades fault tolerance for speed (severed lineage,
-    executor-local blocks) — right for this single-JVM harness; on a
-    lossy multi-executor cluster substitute reliable checkpoint() or a
-    table write per round, same semantics. Lineage truncation each round
-    is load-bearing: without it the 3-joins-per-round self-referencing
-    plan grows past what Catalyst can re-optimize. A caller that already
-    holds a checkpointed edge list passes ``edges_checkpointed=True`` to
-    skip re-materializing a second copy of it."""
+    Lineage truncation each round is load-bearing: without it the
+    3-joins-per-round self-referencing plan grows past what Catalyst can
+    re-optimize. A caller that already holds a checkpointed edge list
+    passes ``edges_checkpointed=True`` to skip re-materializing a second
+    copy of it."""
     if not edges_checkpointed:
-        edges = edges.localCheckpoint(eager=True)
-    lbl = edges.select(F.col("u").alias("id")).distinct() \
-               .withColumn("lbl", F.col("id"))
-    rounds = 0
-    while True:
+        edges = loops.checkpoint(edges)
+    lbl0 = edges.select(F.col("u").alias("id")).distinct() \
+                .withColumn("lbl", F.col("id"))
+
+    def propagate(n):
+        if n is None:
+            lbl = lbl0
+        else:
+            ptr = n.select(F.col("id").alias("p_id"),
+                           F.col("lbl").alias("p_lbl"))
+            # Measured at sf0.1: ~0.5 s/round is per-STAGE fixed cost —
+            # the same wall with eager/lazy checkpoints and with shuffle
+            # partitions scoped down to 2, so neither knob is worth its
+            # complexity; at cluster scale the identical stages amortize
+            # over arbitrarily large candidate graphs.
+            lbl = loops.checkpoint(
+                n.join(ptr, n["lbl"] == ptr["p_id"], "left")
+                .select(n["id"],
+                        F.least(n["lbl"], F.coalesce("p_lbl", n["lbl"]))
+                        .alias("lbl")))
         nb = lbl.withColumnRenamed("id", "v").withColumnRenamed("lbl", "nlbl")
-        n = (lbl.join(edges, lbl["id"] == edges["u"], "left")
+        return (lbl.join(edges, lbl["id"] == edges["u"], "left")
                 .join(nb, "v", "left")
                 .select(lbl["id"], lbl["lbl"].alias("prev"),
                         F.least(lbl["lbl"], F.coalesce("nlbl", lbl["lbl"]))
                         .alias("lbl"))
                 .groupBy("id").agg(F.min("lbl").alias("lbl"),
                                    F.min("prev").alias("prev")))
-        obs = Observation()
-        n = n.observe(obs, F.coalesce(
-            F.max((F.col("lbl") < F.col("prev")).cast("int")),
-            F.lit(0)).alias("changed"))
-        n = n.localCheckpoint(eager=True)
-        if not obs.get["changed"]:
-            return n, rounds
-        rounds += 1
-        if rounds >= max_rounds:
-            raise RuntimeError(
-                f"cc_labels: no fixpoint after {max_rounds} rounds "
-                f"(2^{max_rounds} - 1 hop cover) — refusing to return "
-                "stale component labels")
-        ptr = n.select(F.col("id").alias("p_id"), F.col("lbl").alias("p_lbl"))
-        lbl = (n.join(ptr, n["lbl"] == ptr["p_id"], "left")
-                .select(n["id"],
-                        F.least(n["lbl"], F.coalesce("p_lbl", n["lbl"]))
-                        .alias("lbl")))
-        # Measured at sf0.1: ~0.5 s/round is per-STAGE fixed cost — the
-        # same wall with eager/lazy checkpoints and with shuffle
-        # partitions scoped down to 2, so neither knob is worth its
-        # complexity; at cluster scale the identical stages amortize
-        # over arbitrarily large candidate graphs.
-        lbl = lbl.localCheckpoint(eager=True)
+
+    return loops.fixpoint(
+        propagate, None,
+        changed=F.coalesce(F.max((F.col("lbl") < F.col("prev"))
+                                 .cast("int")), F.lit(0)).alias("changed"),
+        max_rounds=max_rounds, what="component labels")
 
 
 def _neardup_components_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
