@@ -17,6 +17,8 @@ Each query is labeled via setJobDescription (guide §1.5).
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import sys
@@ -64,8 +66,10 @@ def main() -> None:
     if args.explain:
         name = names[0]
         df = qs[name](spark, args.sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
         os.makedirs(os.path.dirname(args.explain), exist_ok=True)
         with open(args.explain, "w") as fh:
             fh.write(f"-- {name} ({args.sf_dir})\n")

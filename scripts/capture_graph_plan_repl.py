@@ -11,6 +11,8 @@ bench replica's.
 """
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -36,12 +38,12 @@ def main() -> None:
                   .drop("rep"))
     replicated.createOrReplaceTempView("documents")
     pr = L.pagerank_over_documents(spark)
-    txt = pr._sc._jvm.PythonSQLUtils.explainString(
-        pr._jdf.queryExecution(), "formatted")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        pr.explain("formatted")
     with open(out_path, "w") as fh:
-        fh.write(f"-- pagerank final state at repl={repl} "
-                 f"({docs.count() * repl} pages), sf={sf_dir}\n")
-        fh.write(txt)
+        fh.write(f"-- pagerank final state at repl={repl}, sf={sf_dir}\n")
+        fh.write(buf.getvalue())
     print(f"wrote {out_path}")
     spark.stop()
 

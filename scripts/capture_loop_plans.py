@@ -32,8 +32,7 @@ def main() -> None:
 
     spark = get_spark(app_name=f"loopplans-{suffix}")
     spark.sparkContext.setLogLevel("ERROR")
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, sf_dir, ("documents",))
     os.makedirs(out_dir, exist_ok=True)
 
     def write(name, df):

@@ -12,6 +12,8 @@ scripts/capture_loop_plans.py.
 """
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -32,8 +34,10 @@ def main() -> None:
     for name in names:
         try:
             df = qs[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            plan = buf.getvalue()
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {e}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")

@@ -119,8 +119,7 @@ def test_hb_setup_jobs_stay_in_callers_job_group(spark):
     from unmixing_spark import pipeline
     from unmixing_spark.queries.linkgraph_q import _hb_setup
 
-    pipeline.register_tables(spark, SF_SMALL, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, SF_SMALL, ("documents",))
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = "loops-hb-setup"

@@ -12,6 +12,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from unmixing_spark import dialect as D
+from unmixing_spark import loops
 from unmixing_spark import pagegen
 from unmixing_spark.lsma.mapper import unmix_cells, unmix_tiles
 from unmixing_spark.raster.rasterize import assemble_tiles
@@ -28,39 +29,29 @@ CANONICAL_ENDMEMBERS = np.array([
 ])
 
 
-# Round-6 scan-parallelism fix (guide §2.5 "input skew: one huge
-# unsplittable file ... repartition immediately after the read"): the
-# corpus parquet files are single-row-group singletons, so a bare scan
-# yields ONE task doing real work and every CPU-heavy map stage
-# downstream (tokenize, shingle, quantize, decode) runs serially no
-# matter how many cores the session has. When the scan offers fewer
-# splits than the session's parallelism target, repartition by the
-# table's key right after the read — a one-time shuffle of the (small)
-# raw table that the whole query tree then fans out from; the HASH key
-# keeps the placement deterministic (guide §2.5's rand() warning) and
-# matches the doc_id/vec_id-keyed windows and joins downstream. On a
-# real deployment the table is many files and the scan already
-# parallelizes — the condition below then never fires.
-_REPART_KEYS = {"documents": "doc_id", "embeddings": "vec_id",
-                "events": "event_id"}
-_scan_parts_cache: dict[tuple[str, str], int] = {}
+# The local corpus tables are single-split parquet files, so a bare scan
+# runs every downstream map stage in one task.
+_FAN_OUT_KEYS = {"documents": "doc_id", "embeddings": "vec_id",
+                 "events": "event_id"}
 
 
 def register_tables(spark: SparkSession, sf_dir: str,
                     tables: tuple[str, ...] = ("documents",),
-                    repartition: bool = True) -> None:
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+                    fan_out: bool = False) -> None:
+    """Register ``{sf_dir}/{t}.parquet`` as the temp view ``t`` for each
+    table. ``fan_out=True`` hash-repartitions a scan with fewer than
+    ``max(target // 4, 2)`` splits by the table's key to the session's
+    shuffle width ``target``; a many-file table keeps its own splits.
+    Declare it only with a measured gain: 10 interleaved pairs at sf0.1
+    (``count()`` timing, ``q_posting_lists`` as the noise canary) where
+    the fan-out side wins at least 9 and its median by more than the
+    other side's IQR, and no loss on the 10x replica
+    (``scripts/make_sf_bench_replica.py``)."""
+    target = loops.shuffle_partitions(spark)
     for t in tables:
         df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        key = _REPART_KEYS.get(t)
-        if repartition and key is not None:
-            cache_key = (sf_dir, t)
-            scan_parts = _scan_parts_cache.get(cache_key)
-            if scan_parts is None:
-                scan_parts = df.rdd.getNumPartitions()
-                _scan_parts_cache[cache_key] = scan_parts
-            if scan_parts < max(target // 4, 2):
-                df = df.repartition(target, key)
+        if fan_out and df.rdd.getNumPartitions() < max(target // 4, 2):
+            df = df.repartition(target, _FAN_OUT_KEYS[t])
         df.createOrReplaceTempView(t)
 
 

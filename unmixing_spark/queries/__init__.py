@@ -32,15 +32,14 @@ def register(name: str, spec: QuerySpec) -> None:
 
 
 def sql_template(name: str, template: Callable[[str], str], doc: str = "",
-                 tables: tuple[str, ...] = ("documents",),
-                 repartition: bool = True) -> None:
+                 tables: tuple[str, ...] = ("documents",)) -> None:
     """Register a dual-dialect SQL template. ``template(dialect)`` must
     reference only pre-registered view names (region nation customer
     supplier part orders lineitem events documents embeddings).
-    ``repartition=False`` opts the Spark rendering out of the
-    single-split scan fan-out (pipeline.register_tables) — right for
-    light projection/window queries where the extra exchange is pure
-    tax (round-6 measurements).
+    The Spark rendering reads the plain scans; a query that earns the
+    single-split scan fan-out (``pipeline.register_tables(...,
+    fan_out=True)``, gated on a measured gain) registers its own
+    ``spark_fn``.
 
     Round-6 note on multi-consumer CTEs in templates: a Spark-side
     checkpoint-the-shared-subquery variant (textual substitution of the
@@ -50,14 +49,14 @@ def sql_template(name: str, template: Callable[[str], str], doc: str = "",
     count() timing Catalyst prunes each inlined duplicate chain to the
     few columns its consumer needs, which beats an eager all-column
     checkpoint. CTE materialization only pays when the duplicated work
-    survives pruning (the winnow/cdc/bm25/main_content conversions in
-    their own spark_fns)."""
+    survives pruning (the winnow/cdc/bm25 conversions in their own
+    spark_fns)."""
     from unmixing_spark import dialect as D
     from unmixing_spark.pipeline import register_tables
 
     def spark_fn(spark: SparkSession, sf_dir: str,
                  _t=template, _tabs=tables) -> DataFrame:
-        register_tables(spark, sf_dir, _tabs, repartition=repartition)
+        register_tables(spark, sf_dir, _tabs)
         return spark.sql(_t(D.SPARK))
 
     register(name, QuerySpec(spark_fn=spark_fn, oracle=template(D.DUCKDB), doc=doc))

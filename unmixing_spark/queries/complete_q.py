@@ -319,8 +319,7 @@ def _stack_multisource(d: str) -> str:
 
 
 sql_template("q_stack_multisource", _stack_multisource,
-             "multi-source band stack: N subdataset aggs joined on the shared grid (utils.py:1036-1064)",
-             repartition=False)
+             "multi-source band stack: N subdataset aggs joined on the shared grid (utils.py:1036-1064)")
 
 
 # ---- forward-model validation (L5; rows-only: needs FCLS) ------------------------------

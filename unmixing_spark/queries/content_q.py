@@ -192,114 +192,10 @@ def _main_content(d: str) -> str:
     """
 
 
-def _main_content_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_main_content's Spark side (round-6 optimization, guide §2.4/§5):
-    the template's ``bctx`` CTE feeds both ``kept`` and ``tot``, and
-    Catalyst inlines CTEs — so the whole line-decompose + block-window
-    chain executed twice. Materialize the classified block table ONCE
-    (eager localCheckpoint) and aggregate the two report sides from it.
-    Same expressions as the template — bit-identical results, DuckDB
-    oracle text unchanged."""
-    pipeline.register_tables(spark, sf_dir, ("documents",))
-    d = D.SPARK
-    stop = "', '".join(LEXICON["en"] + LEXICON["de"])
-    blk_of = D.idiv_i("ln", str(BLOCK_LINES), d)
-    seed = (f"{D.to_str('b.doc_id', d)} || ':' || "
-            f"{D.to_str('b.blk', d)} || ':lnk'")
-    cls0 = f"""CASE
-        WHEN link_frac > {D.dbl(MC_LINK_MAX)} THEN 'bad'
-        WHEN words < {MC_LEN_LOW} THEN
-          CASE WHEN stop_hits = 0 THEN 'bad' ELSE 'short' END
-        WHEN stop_frac >= {D.dbl(MC_STOP_HI)} AND words >= {MC_LEN_HIGH}
-          THEN 'good'
-        WHEN stop_frac >= {D.dbl(MC_STOP_LO)} THEN 'neargood'
-        ELSE 'bad' END"""
-    w = "PARTITION BY doc_id ORDER BY blk"
-    bctx = spark.sql(f"""
-    WITH {_lines_cte(d)},
-    lblk AS (
-      SELECT doc_id, {blk_of} AS blk, ln, n_words, line
-      FROM deco
-    ),
-    tstop AS (
-      SELECT doc_id, {D.idiv_i('ln', str(BLOCK_LINES), d)} AS blk,
-             cast(sum(CASE WHEN tok IN ('{stop}') THEN 1 ELSE 0 END)
-                  as bigint) AS stop_hits
-      FROM ltok GROUP BY doc_id, {D.idiv_i('ln', str(BLOCK_LINES), d)}
-    ),
-    bagg AS (
-      SELECT doc_id, blk,
-             cast(sum(n_words) as bigint) AS words,
-             {D.ordered_string_agg('line', 'ln', "' '", d)} AS btext
-      FROM lblk GROUP BY doc_id, blk
-    ),
-    bseed AS (
-      SELECT b.doc_id, b.blk, b.words, b.btext, s.stop_hits,
-             {D.md5_slice(seed, 1, d)} AS a
-      FROM bagg b JOIN tstop s ON s.doc_id = b.doc_id AND s.blk = b.blk
-    ),
-    bdens AS (
-      SELECT doc_id, blk, words, btext, stop_hits,
-             CASE WHEN a % 3 = 0
-                  THEN least(1 + {D.idiv_i('a', '3', d)} % 4, words)
-                  ELSE 0 END AS link_words
-      FROM bseed
-    ),
-    bfrac AS (
-      SELECT doc_id, blk, words, btext, stop_hits, link_words,
-             round(cast(link_words as double) / words, 6) AS link_frac,
-             round(cast(stop_hits as double) / words, 6) AS stop_frac
-      FROM bdens
-    ),
-    bcls AS (
-      SELECT doc_id, blk, words, btext, link_frac, stop_frac,
-             {cls0} AS cls0
-      FROM bfrac
-    )
-    SELECT doc_id, blk, words, btext, link_frac, stop_frac, cls0,
-           CASE
-             WHEN cls0 = 'good' THEN 1
-             WHEN cls0 IN ('short', 'neargood')
-                  AND (coalesce(lag(cls0) OVER ({w}), '') = 'good'
-                       OR coalesce(lead(cls0) OVER ({w}), '') = 'good')
-               THEN 1
-             ELSE 0 END AS is_good
-    FROM bcls""").localCheckpoint(eager=True)
-    bctx.createOrReplaceTempView("mc_bctx")
-    return spark.sql(f"""
-    WITH kept AS (
-      SELECT doc_id,
-             cast(count(*) as bigint) AS good_blocks,
-             cast(sum(CASE WHEN cls0 <> 'good' THEN 1 ELSE 0 END)
-                  as bigint) AS promoted_blocks,
-             cast(sum(words) as bigint) AS content_words,
-             {D.sha256_(D.ordered_string_agg('btext', 'blk', 'chr(10)', d), d)}
-               AS content_sha
-      FROM mc_bctx WHERE is_good = 1 GROUP BY doc_id
-    ),
-    tot AS (
-      SELECT doc_id, cast(count(*) as bigint) AS n_blocks,
-             cast(sum(words) as bigint) AS total_words,
-             cast(sum(CASE WHEN cls0 = 'bad' THEN 1 ELSE 0 END)
-                  as bigint) AS bad_blocks
-      FROM mc_bctx GROUP BY doc_id
-    )
-    SELECT t.doc_id, t.n_blocks, t.bad_blocks,
-           cast(coalesce(k.good_blocks, 0) as bigint) AS good_blocks,
-           cast(coalesce(k.promoted_blocks, 0) as bigint) AS promoted_blocks,
-           cast(coalesce(k.content_words, 0) as bigint) AS content_words,
-           round(cast(coalesce(k.content_words, 0) as double)
-                 / t.total_words, 6) AS content_frac,
-           k.content_sha
-    FROM tot t LEFT JOIN kept k ON k.doc_id = t.doc_id
-    """)
-
-
-register("q_main_content", QuerySpec(
-    spark_fn=_main_content_spark, oracle=_main_content(D.DUCKDB),
-    doc="jusText-style main-content extraction: block text/stopword/"
-        "link densities, context-free classification + one-hop "
-        "context promotion, SHA-256 of the extracted text"))
+sql_template("q_main_content", _main_content,
+             "jusText-style main-content extraction: block text/stopword/"
+             "link densities, context-free classification + one-hop "
+             "context promotion, SHA-256 of the extracted text")
 
 
 # ---- quality-aware near-dup representative (keep longest per component) ------

@@ -57,8 +57,7 @@ def _dedup_latest(d: str) -> str:
 
 
 sql_template("q_dedup_latest_crawl", _dedup_latest,
-             "keep newest crawl per (host, lang) — ranking window dedup (SURVEY §2.5 MISSING row)",
-             repartition=False)
+             "keep newest crawl per (host, lang) — ranking window dedup (SURVEY §2.5 MISSING row)")
 
 
 # -- mode aggregation (mask_ledaps_qa, utils.py:796-845: modal QA value) --

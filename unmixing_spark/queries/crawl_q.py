@@ -137,8 +137,7 @@ sql_template("q_extract_links", _extract_links,
              "href extraction from page html + url resolution (incl. "
              "protocol-relative) joined against the page table, with an "
              "in-query proof the recovered edges equal the synthetic "
-             "link graph the centrality queries run on",
-             repartition=False)
+             "link graph the centrality queries run on")
 
 
 def _anchor_text(d: str) -> str:
@@ -406,8 +405,7 @@ def _bloom_crossdedup_spark(spark, sf_dir):
     oracle text unchanged."""
     from unmixing_spark import pipeline
 
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, sf_dir, ("documents",))
     d = D.SPARK
     pow2_rows = ", ".join(f"({n}, {1 << n})" for n in range(32))
 

@@ -551,8 +551,7 @@ def _corpus_keep(d: str) -> str:
 sql_template("q_corpus_keep", _corpus_keep,
              "end-to-end curation decision: exact dup + LSH near-dup + "
              "eval split + contamination + LM perplexity ceiling, one "
-             "auditable flag per reason",
-             repartition=False)
+             "auditable flag per reason")
 
 
 # ---- DSIR importance weights -------------------------------------------------
@@ -1001,8 +1000,7 @@ sql_template("q_html_extract", _html_extract,
              "HTML→text extraction (C4-style boilerplate strip): "
              "script/style/comment removal, tag strip, entity decode, "
              "ws-normalize — with an in-query byte-identical roundtrip "
-             "proof against the north-rule text invariant",
-             repartition=False)
+             "proof against the north-rule text invariant")
 
 
 # ---- CCNet perplexity buckets --------------------------------------------------

@@ -168,8 +168,7 @@ def _zorder_layout(d: str) -> str:
 
 sql_template("q_zorder_layout", _zorder_layout,
              "Z-order vs ingest file layout: per-probe min/max-pruned "
-             "files touched, rows scanned, scan amplification",
-             repartition=False)
+             "files touched, rows scanned, scan amplification")
 
 
 # ---- small-file compaction planning ---------------------------------------

@@ -163,11 +163,8 @@ def _pagerank_oracle(seed_mod: int | None = None) -> str:
 
 
 def _pagerank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
-    # per-round rank joins read the plain sized scan (see _hits_spark)
-    return pagerank_over_documents(
-        spark, docs=spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    pipeline.register_tables(spark, sf_dir, ("documents",))
+    return pagerank_over_documents(spark)
 
 
 def pagerank_over_documents(spark: SparkSession,
@@ -390,11 +387,8 @@ TRUST_SEED_MOD = 50   # trusted seed set = doc_id % 50 == 0 (~2% of pages
 
 
 def _trustrank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
-    return pagerank_over_documents(
-        spark, seed_mod=TRUST_SEED_MOD,
-        docs=spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    pipeline.register_tables(spark, sf_dir, ("documents",))
+    return pagerank_over_documents(spark, seed_mod=TRUST_SEED_MOD)
 
 
 register("q_trustrank", QuerySpec(
@@ -794,8 +788,7 @@ def harmonic_over_documents(spark: SparkSession) -> DataFrame:
 
 
 def _harmonic_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, sf_dir, ("documents",))
     return harmonic_over_documents(spark)
 
 
@@ -988,14 +981,8 @@ def hits_over_documents(spark: SparkSession,
 
 
 def _hits_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
-    # the per-round rank joins fare best against the plain sized scan
-    # (A/B-measured: raw+broadcast 12.0s vs checkpointed 12.9s vs the
-    # repartitioned view re-scanned per round 19.8s at sf1.0) — the
-    # repartitioned view still feeds the one-shot link build above
-    return hits_over_documents(
-        spark, docs=spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    pipeline.register_tables(spark, sf_dir, ("documents",))
+    return hits_over_documents(spark)
 
 
 register("q_hits_scores", QuerySpec(
@@ -1110,8 +1097,7 @@ def neighborhood_function_over_documents(spark: SparkSession) -> DataFrame:
 
 
 def _nf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, sf_dir, ("documents",))
     return neighborhood_function_over_documents(spark)
 
 
@@ -1212,8 +1198,7 @@ def _triangle_clustering_spark(spark: SparkSession,
     four, and every reference re-ran the whole synthetic-link chain.
     Same text fragments over the views; results bit-identical; DuckDB
     oracle text unchanged."""
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, sf_dir, ("documents",))
     d = D.SPARK
     edges = spark.sql(
         f"WITH {link_ctes(d)} "
@@ -1481,8 +1466,7 @@ def _kcore_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same style of in-query proof as q_neardup_components:
     recomputed from the checkpointed final degree table when the result
     executes, not a literal."""
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, sf_dir, ("documents",))
     edges = spark.sql(_kcore_edges_sql(D.SPARK))
     deg, _rounds = kcore_alive(edges)
     converged = deg.agg(
@@ -1607,8 +1591,7 @@ def _label_prop_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoints are stable, so the fixed LP_ORACLE_ROUNDS-deep DuckDB
     unroll lands on the identical labeling whenever its depth >= the
     observed rounds (6-8 across 500-20,000 nodes)."""
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, sf_dir, ("documents",))
     und = spark.sql(
         f"WITH {link_ctes(D.SPARK)} SELECT DISTINCT least(src, dst) AS u, "
         "greatest(src, dst) AS v FROM links WHERE src <> dst")
@@ -1878,8 +1861,7 @@ def _bowtie_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     for distance DISTRIBUTIONS; the bowtie needs only set membership,
     which is exactly computable at web scale this way — Broder ran it
     on 200M pages in 2000)."""
-    pipeline.register_tables(spark, sf_dir, ("documents",),
-                             repartition=False)
+    pipeline.register_tables(spark, sf_dir, ("documents",))
     links = loops.checkpoint(spark.sql(
         f"WITH {link_ctes(D.SPARK)} SELECT src, dst FROM links"))
     degs = (links.select(F.col("src").alias("id"))

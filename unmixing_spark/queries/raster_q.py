@@ -191,8 +191,7 @@ def _composite_median(d: str) -> str:
 
 
 sql_template("q_composite_reducers", _composite_median,
-             "multi-date composite: median/min/max/mean reducers (utils.composite, utils.py:343-389)",
-             repartition=False)
+             "multi-date composite: median/min/max/mean reducers (utils.composite, utils.py:343-389)")
 
 
 def _composite_normalize(d: str) -> str:

@@ -121,21 +121,10 @@ def _session_windows_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's gap rule runs on floored epochs, and event timestamps
     carry fractional seconds — a raw-precision session_window would split
     a 1799.5s-gap pair differently than the floored oracle (the ASOF-tie
-    coin-flip class).
-
-    Round-6 (guide §2.4 "two operations keyed the same way share one
-    exchange"): the generic event_id scan-fanout scatter fed straight
-    into the session aggregation's user_id exchange — two full moves of
-    the events table where one suffices. Keying the fanout by user_id
-    makes the single exchange BOTH the scan parallelizer and the
-    aggregation layout (EnsureRequirements adds nothing on top)."""
-    pipeline.register_tables(spark, sf_dir, ("events",),
-                             repartition=False)
-    ev = spark.read.table("events")
-    target = loops.shuffle_partitions(spark)
-    if ev.rdd.getNumPartitions() < max(target // 4, 2):
-        ev = ev.repartition(target, "user_id")
-    ev = ev.withColumn("ts", F.date_trunc("second", "ts"))
+    coin-flip class)."""
+    pipeline.register_tables(spark, sf_dir, ("events",))
+    ev = spark.read.table("events").withColumn(
+        "ts", F.date_trunc("second", "ts"))
     return (ev.groupBy(F.session_window("ts", f"{SESSION_GAP_S} seconds")
                        .alias("w"), "user_id")
             .agg(F.count("*").cast("long").alias("events"),

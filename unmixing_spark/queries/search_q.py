@@ -321,8 +321,7 @@ def _posting_lists(d: str) -> str:
 sql_template("q_posting_lists", _posting_lists,
              "inverted-index posting lists: per term df/cf + the "
              "delta-encoded (gap:tf) posting string in doc order, "
-             "SHA-256 pinned",
-             repartition=False)
+             "SHA-256 pinned")
 
 
 CONT_N = 4        # token shingle length for containment

@@ -593,7 +593,8 @@ def _mh_audit_spark(spark, sf_dir):
     from unmixing_spark.queries.text_q import (N_HASHES, SHINGLE,
                                                minhash_lsh_views)
 
-    pipeline.register_tables(spark, sf_dir, ("documents",))
+    # the per-row shingle arrays below repay the scan fan-out
+    pipeline.register_tables(spark, sf_dir, ("documents",), fan_out=True)
     d = D.SPARK
     sig_v, capped_v = minhash_lsh_views(spark)
     # Round-6 exact side (guide §2.3/§2.4): a document's DISTINCT

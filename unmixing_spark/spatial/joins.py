@@ -183,20 +183,7 @@ def knn_join(cells: DataFrame, queries: list[tuple[str, float, float]],
     pending = {name: min(init_rings, cap) for name, _, _ in queries}
     coords = {name: (lon, lat) for name, lon, lat in queries}
     out_rows: list[tuple] = []
-    # round-6: every probe reads ONLY cell_id (distances derive from the
-    # id), but each re-probe round re-ran the caller's whole cell chain
-    # (md5 geocode + aggregation for the registered query). When a
-    # second round is actually needed, materialize the id list once so
-    # expansion rounds re-scan a checkpointed id list instead of the
-    # corpus. NOT eager up front: the common case certifies every query
-    # in the first probe, and an unconditional checkpoint measured
-    # slower there (2.2 vs 1.7 s at the 10x replica) — the inline probe
-    # benefits from aggregate pruning that a checkpoint forfeits.
-    probe_round = 0
     while pending:
-        if probe_round == 1:
-            cells = cells.select("cell_id").localCheckpoint(eager=True)
-        probe_round += 1
         qspecs = [(n, coords[n][0], coords[n][1], r)
                   for n, r in pending.items()]
         probe, exhaustive = _knn_probe(cells, qspecs, k, g)
