@@ -13,7 +13,10 @@ defaults when no master is set by the submitter).
 
 The job is the checkpointed version of entry(): pages → geocode →
 cell raster → tiles → FCLS abundance, written as per-batch commits with
-lineage + metrics so a killed run resumes (io/checkpoint.py).
+lineage + metrics so a killed run resumes (io/checkpoint.py). The one
+materialization point is ``pipeline.flagship_abundance_tiles``, an eager
+checkpoint of the abundance tiles: the chain runs once per run, and each
+``tile_id % n_batches`` batch is a filter over the checkpoint.
 """
 
 from __future__ import annotations

@@ -50,11 +50,14 @@ class BatchCheckpointer:
                     lineage: dict | None = None) -> dict:
         """Idempotent write: overwrite the batch partition, then commit the
         manifest atomically (the Iceberg overwriteByFilter + snapshot-
-        commit pattern)."""
+        commit pattern). The manifest's ``wall_s`` is a monotonic
+        (``perf_counter``) duration of this write alone — over a
+        materialized frame that is the batch, not the upstream pipeline;
+        ``committed_at`` is wall-clock epoch seconds."""
         bdir = self._batch_dir(batch_id)
         if os.path.exists(bdir):
             shutil.rmtree(bdir)  # re-run of an uncommitted/failed batch
-        t0 = time.time()
+        t0 = time.perf_counter()
         # per-batch metrics: row count + per-numeric-column min/max/mean/std
         # (the reference stamps these on every raster write — dump_raster,
         # utils.py:582-614; Iceberg keeps them as column metrics). Collected
@@ -82,7 +85,7 @@ class BatchCheckpointer:
             "batch_id": batch_id,
             "rows": n_rows,
             "column_stats": stats,
-            "wall_s": round(time.time() - t0, 3),
+            "wall_s": round(time.perf_counter() - t0, 3),
             "committed_at": time.time(),
             "lineage": lineage or {},
         }

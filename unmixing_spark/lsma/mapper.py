@@ -11,7 +11,8 @@ process pool and Arrow batches replace pickled chunks:
 - MESMA path (per-pixel endmembers, lsma.py:159-167): endmember tensors
   travel as a co-partitioned ``array<double>`` column next to the spectra —
   never collected, never broadcast.
-- Tile path: grouped per ``tile_id`` via ``applyInPandas``, emitting one
+- Tile path: ``mapInPandas`` over tile rows (grouped per ``tile_id`` by
+  the sort-based ``mapInPandas`` of raster/rasterize.py), emitting one
   abundance cube per tile — the unit the BASELINE throughput metric counts.
 
 Determinism: per-pixel independence ⇒ output invariant to partitioning

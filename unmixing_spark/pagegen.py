@@ -104,8 +104,8 @@ def cell_raster_sql(dialect: str, documents: str = "documents",
                     grid: GridSpec = WORLD_GRID) -> str:
     """The rasterize step as a relational aggregate: one row per occupied
     cell, 6 'band' statistics. This is the long/sparse form of the raster
-    cube (SURVEY.md §1.5) — tile assembly to dense (p,m,n) arrays happens
-    in raster/rasterize.py via applyInPandas."""
+    cube (SURVEY.md §1.5) — tile assembly to sparse tile rows happens in
+    raster/rasterize.py via a sort-based mapInPandas."""
     tokens = f"size({D.ws_split('text', dialect)})" if dialect == D.SPARK \
         else f"len({D.ws_split('text', dialect)})"
     doy = D.idiv(f"warc_epoch - {EPOCH_2025}", "86400")

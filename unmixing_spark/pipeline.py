@@ -1,9 +1,10 @@
 """End-to-end pipeline stages (SURVEY.md §3.5 lifecycle).
 
 pages → geo_pages → cell_raster → tiles → abundance. Each stage is a
-DataFrame; at cluster scale each materializes to an Iceberg/parquet
-checkpoint (io/checkpoint.py) so a killed job resumes from the last
-committed tile batch.
+lazy DataFrame except the tile abundances: ``flagship_abundance_tiles``
+is the one materialization point, an eager ``loops.checkpoint``, so the
+commit batches of io/checkpoint.py (filters on ``tile_id``) read it
+instead of re-running the chain per batch.
 """
 
 from __future__ import annotations
@@ -80,5 +81,16 @@ def flagship_abundance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def flagship_abundance_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile-rowed FCLS — the unit the BASELINE throughput metric counts."""
-    return unmix_tiles(tiles(spark, sf_dir), CANONICAL_ENDMEMBERS)
+    """Tile-rowed FCLS — the unit the BASELINE throughput metric counts.
+
+    Returned through an eager ``loops.checkpoint``: the whole chain (scan,
+    cell aggregate, tile assembly, FCLS) runs once, in this call, and
+    every consumer plans as ``Scan ExistingRDD``. A commit batch
+    ``filter(tile_id % n == i)`` therefore plans as a Filter over the
+    checkpoint with no ``MapInPandas`` and no ``Exchange``, and each
+    manifest's ``wall_s`` times its own batch only. Eager, not lazy: the
+    cost is one pipeline pass even when a resume finds every batch
+    already committed. A kill loses the in-memory blocks, so a resume
+    recomputes the frame once, not once per batch. q_fcls_tiles and
+    ``entry()`` read the same checkpoint."""
+    return loops.checkpoint(unmix_tiles(tiles(spark, sf_dir), CANONICAL_ENDMEMBERS))
