@@ -1,7 +1,8 @@
 """The shared loop mechanics (unmixing_spark/loops.py) and the adaptive
 operators built on them: fixpoint convergence and its round cap, the
 one-job observed checkpoint, job attribution of concurrent checkpoint
-builds, and the TrustRank empty-seed guard."""
+builds, the TrustRank empty-seed guard, and that no eager checkpoint
+bypasses ``loops.checkpoint``."""
 
 from __future__ import annotations
 
@@ -145,3 +146,35 @@ def test_trustrank_empty_seed_set_raises(spark):
     seed_mod = int(docs.agg(F.max("doc_id")).first()[0]) + 1
     with pytest.raises(ValueError, match="seed set .* is empty"):
         pagerank_over_documents(spark, seed_mod=seed_mod, docs=docs)
+
+
+def test_every_eager_checkpoint_goes_through_loops():
+    """``loops.checkpoint`` is the engine's one eager checkpoint, so a
+    checkpoint mode (e.g. a reliable ``checkpoint()`` for lossy
+    clusters) needs to touch only loops.py. The only other
+    ``localCheckpoint(`` calls allowed are the BPE trainer's two LAZY
+    ones (``text_q._bpe_train``): each round already runs a collect over
+    the new table, and an eager checkpoint would add a job per round."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(loops.__file__).parent
+    text_q = root / "queries" / "text_q.py"
+    bpe = next(n for n in ast.walk(ast.parse(text_q.read_text()))
+               if isinstance(n, ast.FunctionDef) and n.name == "_bpe_train")
+    allowed, stray = [], []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "loops.py":
+            continue
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if "localCheckpoint(" not in line:
+                continue
+            site = f"{path.relative_to(root)}:{no}: {line.strip()}"
+            if (path == text_q and bpe.lineno <= no <= bpe.end_lineno
+                    and line.strip() == ".localCheckpoint())"):
+                allowed.append(site)
+            else:
+                stray.append(site)
+    assert not stray, "eager checkpoints outside loops.checkpoint:\n" + \
+        "\n".join(stray)
+    assert len(allowed) == 2, allowed

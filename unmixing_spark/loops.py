@@ -1,9 +1,15 @@
-"""Mechanics shared by every iterative operator (connected components,
-k-core, label propagation, bow-tie BFS, PageRank/TrustRank, HITS,
-HyperBall/NF, Lloyd/PQ): the eager checkpoint with its observed scalar
-and layout re-assertion, the adaptive fixpoint loop with its round cap,
-the size-derived loop partition count, and the small-data codegen
-switch. Each loop module keeps only its round body.
+"""The engine's one eager checkpoint, plus the mechanics shared by every
+iterative operator (connected components, k-core, label propagation,
+bow-tie BFS, PageRank/TrustRank, HITS, HyperBall/NF, Lloyd/PQ).
+
+``checkpoint`` is the only place the package materializes a DataFrame
+eagerly: loop rounds, multi-consumer CTEs that the Spark-side forks
+compute once, and the flagship abundance tiles all call it, so a
+different checkpoint mode changes this module alone. The loop
+mechanics are its observed scalar and layout re-assertion, the adaptive
+fixpoint loop with its round cap, the size-derived loop partition
+count, and the small-data codegen switch. Each loop module keeps only
+its round body.
 
 Checkpoint and observe. A driver loop truncates lineage with an eager
 ``localCheckpoint``: each round references the previous one (often

@@ -260,7 +260,7 @@ def _simhash_pairs_spark(spark, sf_dir):
     consumer differently, so ReuseExchange cannot dedupe them) — the
     eager localCheckpoint makes all six consumers read one 50k-row
     table. Results pinned bit-identical; DuckDB oracle text unchanged."""
-    from unmixing_spark import pipeline
+    from unmixing_spark import loops, pipeline
 
     pipeline.register_tables(spark, sf_dir, ("documents",))
     d = D.SPARK
@@ -271,12 +271,11 @@ def _simhash_pairs_spark(spark, sf_dir):
             f"THEN {1 << b} ELSE 0 END)"
             for b in range(32))
 
-    tfq = spark.sql(
+    loops.checkpoint(spark.sql(
         f"SELECT doc_id, tok, cast(count(*) as bigint) AS c "
         f"FROM {_tokens(d)} GROUP BY doc_id, tok"
-    ).localCheckpoint(eager=True)
-    tfq.createOrReplaceTempView("sp64_tfq")
-    sh = spark.sql(f"""
+    )).createOrReplaceTempView("sp64_tfq")
+    loops.checkpoint(spark.sql(f"""
     WITH th AS (
       SELECT tok, {D.md5_slice('tok', 1, d)} AS h1,
              {D.md5_slice('tok', 9, d)} AS h2
@@ -286,8 +285,7 @@ def _simhash_pairs_spark(spark, sf_dir):
            cast({wbits('h1')} as bigint) AS lo,
            cast({wbits('h2')} as bigint) AS hi
     FROM sp64_tfq JOIN th ON th.tok = sp64_tfq.tok GROUP BY doc_id
-    """).localCheckpoint(eager=True)
-    sh.createOrReplaceTempView("sp64_sh")
+    """)).createOrReplaceTempView("sp64_sh")
     # Spark-side tail: block rows carry (lo, hi) so the Hamming filter
     # runs INSIDE the self-join stage, before any exchange — the
     # correlated-bit skew of a small vocabulary makes block values hot
@@ -348,6 +346,29 @@ def _bloom_crossdedup(d: str) -> str:
     here it IS the oracle check). All exchanges are digest-keyed or
     broadcast; no all-pairs. Per-shard filters at 10^12 pages are this
     same query GROUPed by shard key."""
+    return f"""
+    WITH {_bloom_pg(d)},
+    sp AS {D.mat(d)}(
+      {_bloom_sp(d)}
+    ),
+    {_bloom_tail(d, "sp")}"""
+
+
+def _bloom_pg(d: str) -> str:
+    return f"pg AS (SELECT * FROM ({pages_sql(d)}) q)"
+
+
+def _bloom_sp(d: str) -> str:
+    """Per page over ``pg``: url, text digest and the new-crawl flag."""
+    return f"""SELECT url, md5(text) AS tk,
+             CASE WHEN {D.ts_to_epoch('warc_ts', d)} < {BLOOM_CUTOFF}
+                  THEN 0 ELSE 1 END AS is_new
+      FROM pg"""
+
+
+def _bloom_tail(d: str, sp: str) -> str:
+    """Filter build over the old digests, probes of the new ones, and
+    the ground-truth join, over a digest relation ``sp``."""
     pow2_rows = ", ".join(f"({n}, {1 << n})" for n in range(32))
     def pos_union(src: str, cols: str) -> str:
         return " UNION ALL ".join(
@@ -355,16 +376,8 @@ def _bloom_crossdedup(d: str) -> str:
             f"% {BLOOM_M} AS p FROM {src}"
             for o in (1, 9, 17))
     w = D.idiv_i("p", "32", d)
-    return f"""
-    WITH pg AS (SELECT * FROM ({pages_sql(d)}) q),
-    sp AS {D.mat(d)}(
-      SELECT url, md5(text) AS tk,
-             CASE WHEN {D.ts_to_epoch('warc_ts', d)} < {BLOOM_CUTOFF}
-                  THEN 0 ELSE 1 END AS is_new
-      FROM pg
-    ),
-    pow2 AS ({D.values_rel(pow2_rows, "t(n, p)", d)}),
-    oldk AS {D.mat(d)}(SELECT DISTINCT tk FROM sp WHERE is_new = 0),
+    return f"""pow2 AS ({D.values_rel(pow2_rows, "t(n, p)", d)}),
+    oldk AS {D.mat(d)}(SELECT DISTINCT tk FROM {sp} WHERE is_new = 0),
     opos AS ({pos_union('oldk', 'tk')}),
     obits AS (SELECT DISTINCT {w} AS w, p % 32 AS b FROM opos),
     bloom AS {D.mat(d)}(
@@ -372,7 +385,7 @@ def _bloom_crossdedup(d: str) -> str:
       FROM obits JOIN pow2 p2 ON p2.n = b
       GROUP BY w
     ),
-    probe AS {D.mat(d)}(SELECT url, tk FROM sp WHERE is_new = 1),
+    probe AS {D.mat(d)}(SELECT url, tk FROM {sp} WHERE is_new = 1),
     ppos AS ({pos_union('probe', 'url')}),
     hits AS (
       SELECT pp.url,
@@ -400,61 +413,15 @@ def _bloom_crossdedup_spark(spark, sf_dir):
     is computed ONCE and checkpointed — as a CTE it was re-executed by
     each of its four consumers (old keys, probe stream, and the two
     ground-truth joins), each re-run re-deriving the synthetic page
-    table and re-hashing every text. The tail SQL is the template's own
-    text over the checkpointed views; results bit-identical, DuckDB
-    oracle text unchanged."""
-    from unmixing_spark import pipeline
+    table and re-hashing every text."""
+    from unmixing_spark import loops, pipeline
 
     pipeline.register_tables(spark, sf_dir, ("documents",))
     d = D.SPARK
-    pow2_rows = ", ".join(f"({n}, {1 << n})" for n in range(32))
-
-    def pos_union(src: str, cols: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT {cols}, ({D.hex2int(f'substr(tk, {o}, 8)', d)}) "
-            f"% {BLOOM_M} AS p FROM {src}"
-            for o in (1, 9, 17))
-
-    w = D.idiv_i("p", "32", d)
-    sp = spark.sql(f"""
-    WITH pg AS (SELECT * FROM ({pages_sql(d)}) q)
-    SELECT url, md5(text) AS tk,
-           CASE WHEN {D.ts_to_epoch('warc_ts', d)} < {BLOOM_CUTOFF}
-                THEN 0 ELSE 1 END AS is_new
-    FROM pg
-    """).localCheckpoint(eager=True)
-    sp.createOrReplaceTempView("bl_sp")
-    return spark.sql(f"""
-    WITH pow2 AS ({D.values_rel(pow2_rows, "t(n, p)", d)}),
-    oldk AS (SELECT DISTINCT tk FROM bl_sp WHERE is_new = 0),
-    opos AS ({pos_union('oldk', 'tk')}),
-    obits AS (SELECT DISTINCT {w} AS w, p % 32 AS b FROM opos),
-    bloom AS (
-      SELECT w, cast(sum(p2.p) as bigint) AS wd
-      FROM obits JOIN pow2 p2 ON p2.n = b
-      GROUP BY w
-    ),
-    probe AS (SELECT url, tk FROM bl_sp WHERE is_new = 1),
-    ppos AS ({pos_union('probe', 'url')}),
-    hits AS (
-      SELECT pp.url,
-             min(CASE WHEN f.wd IS NOT NULL AND (f.wd & p2.p) <> 0
-                      THEN 1 ELSE 0 END) AS bloom_hit
-      FROM ppos pp
-      JOIN pow2 p2 ON p2.n = pp.p % 32
-      LEFT JOIN bloom f ON f.w = {D.idiv_i('pp.p', '32', d)}
-      GROUP BY pp.url
-    )
-    SELECT pr.url,
-           cast(h.bloom_hit as bigint) AS bloom_hit,
-           cast(CASE WHEN o.tk IS NOT NULL THEN 1 ELSE 0 END as bigint)
-             AS exact_dup,
-           cast(CASE WHEN h.bloom_hit = 1 AND o.tk IS NULL
-                     THEN 1 ELSE 0 END as bigint) AS false_pos
-    FROM probe pr
-    JOIN hits h ON h.url = pr.url
-    LEFT JOIN oldk o ON o.tk = pr.tk
-    """)
+    loops.checkpoint(spark.sql(
+        f"WITH {_bloom_pg(d)}\n    {_bloom_sp(d)}"
+    )).createOrReplaceTempView("bl_sp")
+    return spark.sql(f"WITH {_bloom_tail(d, 'bl_sp')}")
 
 
 register("q_bloom_crossdedup", QuerySpec(

@@ -1275,18 +1275,32 @@ def _winnow_fp(d: str) -> str:
     same exchange; the shared-fingerprint table is a fp-hash-keyed
     aggregation joined back hash-keyed. No all-pairs; the fingerprint
     index is ~2/(w+1) of the gram volume by construction."""
-    from unmixing_spark.queries.text_q import _lead_gram, _pos_tokens
-    h = D.hex2int("substr(md5(gram), 1, 8)", d)
     return f"""
     WITH g AS (
-      SELECT doc_id, pos, ({h}) * {_WIN_HB} + ({_WIN_PB} - pos) AS cmb
+      {_winnow_g(d)}
+    ),
+    wm AS (
+      {_winnow_wm("g")}
+    ),
+    sel AS {D.mat(d)}(
+      {_winnow_sel(d)}
+    ),
+    {_winnow_tail("g", "sel")}"""
+
+
+def _winnow_g(d: str) -> str:
+    """Per gram position: the combined (hash, position) key ``cmb``."""
+    h = D.hex2int("substr(md5(gram), 1, 8)", d)
+    return f"""SELECT doc_id, pos, ({h}) * {_WIN_HB} + ({_WIN_PB} - pos) AS cmb
       FROM (SELECT doc_id, pos, {_lead_gram(WIN_K)} AS gram
             FROM {_pos_tokens(d)} WINDOW w AS (PARTITION BY doc_id
                                                ORDER BY pos))
-      WHERE gram IS NOT NULL
-    ),
-    wm AS (
-      -- every gram position ends a window over the last <= WIN_W grams
+      WHERE gram IS NOT NULL"""
+
+
+def _winnow_wm(g: str) -> str:
+    """The window minimum ``m`` of ``cmb`` over a gram relation."""
+    return f"""-- every gram position ends a window over the last <= WIN_W grams
       -- (boundary windows at pos < WIN_W are partial — the prefix
       -- convention; the >= k+w-1 sharing guarantee is unaffected, the
       -- selection is a superset of strict-window winnowing)
@@ -1294,26 +1308,33 @@ def _winnow_fp(d: str) -> str:
              min(cmb) OVER (PARTITION BY doc_id ORDER BY pos
                             ROWS BETWEEN {WIN_W - 1} PRECEDING
                             AND CURRENT ROW) AS m
-      FROM g
-    ),
-    sel AS {D.mat(d)}(
-      SELECT DISTINCT doc_id,
+      FROM {g}"""
+
+
+def _winnow_sel(d: str) -> str:
+    """The selected fingerprints (decoded hash and position) over
+    ``wm``."""
+    return f"""SELECT DISTINCT doc_id,
              {D.idiv_i('m', str(_WIN_HB), d)} AS fp_h,
              {_WIN_PB} - (m % {_WIN_HB}) AS fp_pos
-      FROM wm
-    ),
-    shared AS (
+      FROM wm"""
+
+
+def _winnow_tail(g: str, sel: str) -> str:
+    """Cross-doc shared fingerprint counts and the per-doc report over
+    the gram and selection relations."""
+    return f"""shared AS (
       SELECT fp_h, cast(count(DISTINCT doc_id) as bigint) AS nd
-      FROM sel GROUP BY fp_h
+      FROM {sel} GROUP BY fp_h
     ),
     ng AS (SELECT doc_id, cast(count(*) as bigint) AS n_grams
-           FROM g GROUP BY doc_id)
+           FROM {g} GROUP BY doc_id)
     SELECT s.doc_id,
            max(n.n_grams)                 AS n_grams,
            cast(count(*) as bigint)       AS n_fp,
            cast(sum(CASE WHEN sh.nd >= 2 THEN 1 ELSE 0 END) as bigint)
              AS n_shared_fp
-    FROM sel s
+    FROM {sel} s
     JOIN shared sh ON sh.fp_h = s.fp_h
     JOIN ng n ON n.doc_id = s.doc_id
     GROUP BY s.doc_id
@@ -1326,50 +1347,18 @@ def _winnow_fp_spark(spark, sf_dir):
     inlines the template's CTEs, so ``g`` (token explode + 4-gram md5)
     executes 3x — once under each ``sel`` consumer and once under ``ng``
     — and the window-min + DISTINCT behind ``sel`` executes 2x. The
-    gram table and the fingerprint selection are each materialized ONCE
-    (eager localCheckpoint); the tail aggregations read the
-    checkpointed tables. Expressions are the template's own renderings
-    — results bit-identical, DuckDB oracle text unchanged."""
-    from unmixing_spark import pipeline
+    gram table and the fingerprint selection are each materialized ONCE;
+    the tail aggregations read the checkpointed tables."""
+    from unmixing_spark import loops, pipeline
 
     pipeline.register_tables(spark, sf_dir, ("documents",))
     d = D.SPARK
-    h = D.hex2int("substr(md5(gram), 1, 8)", d)
-    g = spark.sql(f"""
-      SELECT doc_id, pos, ({h}) * {_WIN_HB} + ({_WIN_PB} - pos) AS cmb
-      FROM (SELECT doc_id, pos, {_lead_gram(WIN_K)} AS gram
-            FROM {_pos_tokens(d)} WINDOW w AS (PARTITION BY doc_id
-                                               ORDER BY pos))
-      WHERE gram IS NOT NULL""").localCheckpoint(eager=True)
-    g.createOrReplaceTempView("win_g")
-    sel = spark.sql(f"""
-      SELECT DISTINCT doc_id,
-             {D.idiv_i('m', str(_WIN_HB), d)} AS fp_h,
-             {_WIN_PB} - (m % {_WIN_HB}) AS fp_pos
-      FROM (
-        SELECT doc_id,
-               min(cmb) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN {WIN_W - 1} PRECEDING
-                              AND CURRENT ROW) AS m
-        FROM win_g)""").localCheckpoint(eager=True)
-    sel.createOrReplaceTempView("win_sel")
-    return spark.sql("""
-    WITH shared AS (
-      SELECT fp_h, cast(count(DISTINCT doc_id) as bigint) AS nd
-      FROM win_sel GROUP BY fp_h
-    ),
-    ng AS (SELECT doc_id, cast(count(*) as bigint) AS n_grams
-           FROM win_g GROUP BY doc_id)
-    SELECT s.doc_id,
-           max(n.n_grams)                 AS n_grams,
-           cast(count(*) as bigint)       AS n_fp,
-           cast(sum(CASE WHEN sh.nd >= 2 THEN 1 ELSE 0 END) as bigint)
-             AS n_shared_fp
-    FROM win_sel s
-    JOIN shared sh ON sh.fp_h = s.fp_h
-    JOIN ng n ON n.doc_id = s.doc_id
-    GROUP BY s.doc_id
-    """)
+    loops.checkpoint(spark.sql(_winnow_g(d))).createOrReplaceTempView(
+        "win_g")
+    loops.checkpoint(spark.sql(
+        f"WITH wm AS ({_winnow_wm('win_g')}\n) {_winnow_sel(d)}"
+    )).createOrReplaceTempView("win_sel")
+    return spark.sql(f"WITH {_winnow_tail('win_g', 'win_sel')}")
 
 
 register("q_winnow_fingerprints", QuerySpec(

@@ -464,13 +464,12 @@ def _mask_regions_spark(spark, sf_dir):
     work downstream of one corpus-sized aggregation, exactly like the
     tile pipeline's rasterize step."""
     from pyspark.sql import functions as F
-    from unmixing_spark import pipeline
+    from unmixing_spark import loops, pipeline
     from unmixing_spark.queries.scale_q import cc_labels
 
     pipeline.register_tables(spark, sf_dir, ("documents",))
-    cells = spark.sql(
-        f"WITH {_region_cells(D.SPARK)} SELECT * FROM cells"
-    ).localCheckpoint(eager=True)
+    cells = loops.checkpoint(spark.sql(
+        f"WITH {_region_cells(D.SPARK)} SELECT * FROM cells"))
     # the SAME adjacency fragment the oracle renders, over a temp view
     # of the checkpointed cells (one definition of the region graph)
     cells.createOrReplaceTempView("cells")

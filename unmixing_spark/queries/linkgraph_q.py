@@ -1132,50 +1132,60 @@ def triangle_clustering_sql(d: str) -> str:
 
     Exactness: counts are bigint; the coefficient 2T/(deg*(deg-1)) is a
     single exact-integer division rounded to 6 in both renderings."""
-    lex = ("t.u_deg < t.v_deg OR (t.u_deg = t.v_deg AND t.u < t.v)")
+    steps = ",\n    ".join(
+        f"{name} AS {D.mat(d)}(\n      {body}\n    )"
+        for name, body in _triangle_steps("edges", "deg", "o").items())
     return f"""
     WITH {link_ctes(d)},
-    edges AS {D.mat(d)}(
-      SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-      FROM links WHERE src <> dst
-    ),
-    deg AS {D.mat(d)}(
-      SELECT node, cast(count(*) as bigint) AS deg
-      FROM (SELECT u AS node FROM edges
+    {steps},
+    {_triangle_tail("deg", "tri")}"""
+
+
+def _triangle_steps(edges: str, deg: str, o: str) -> dict[str, str]:
+    """The four materialized steps in order — simple undirected edges,
+    degrees, degree-oriented edges, triangles — each over the given
+    names of the earlier steps' relations (``edges`` reads ``links``)."""
+    lex = ("t.u_deg < t.v_deg OR (t.u_deg = t.v_deg AND t.u < t.v)")
+    return {
+        "edges": """SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
+      FROM links WHERE src <> dst""",
+        "deg": f"""SELECT node, cast(count(*) as bigint) AS deg
+      FROM (SELECT u AS node FROM {edges}
             UNION ALL
-            SELECT v AS node FROM edges) both_ends
-      GROUP BY node
-    ),
-    o AS {D.mat(d)}(
-      SELECT CASE WHEN {lex} THEN t.u ELSE t.v END       AS a,
+            SELECT v AS node FROM {edges}) both_ends
+      GROUP BY node""",
+        "o": f"""SELECT CASE WHEN {lex} THEN t.u ELSE t.v END       AS a,
              CASE WHEN {lex} THEN t.v ELSE t.u END       AS b,
              CASE WHEN {lex} THEN t.v_deg ELSE t.u_deg END AS b_deg
       FROM (
         SELECT e.u, e.v, du.deg AS u_deg, dv.deg AS v_deg
-        FROM edges e
-        JOIN deg du ON du.node = e.u
-        JOIN deg dv ON dv.node = e.v
-      ) t
-    ),
-    tri AS {D.mat(d)}(
-      SELECT w.a AS x, w.b1 AS y, w.b2 AS z
+        FROM {edges} e
+        JOIN {deg} du ON du.node = e.u
+        JOIN {deg} dv ON dv.node = e.v
+      ) t""",
+        "tri": f"""SELECT w.a AS x, w.b1 AS y, w.b2 AS z
       FROM (
         SELECT o1.a, o1.b AS b1, o2.b AS b2
-        FROM o o1
-        JOIN o o2 ON o2.a = o1.a
+        FROM {o} o1
+        JOIN {o} o2 ON o2.a = o1.a
         WHERE o1.b_deg < o2.b_deg
            OR (o1.b_deg = o2.b_deg AND o1.b < o2.b)
       ) w
-      JOIN o e ON e.a = w.b1 AND e.b = w.b2
-    ),
-    nt AS (
+      JOIN {o} e ON e.a = w.b1 AND e.b = w.b2""",
+    }
+
+
+def _triangle_tail(deg: str, tri: str) -> str:
+    """Per-node triangle counts, the global count and the clustering
+    report over the degree and triangle relations."""
+    return f"""nt AS (
       SELECT node, cast(count(*) as bigint) AS triangles
-      FROM (SELECT x AS node FROM tri
-            UNION ALL SELECT y AS node FROM tri
-            UNION ALL SELECT z AS node FROM tri) corners
+      FROM (SELECT x AS node FROM {tri}
+            UNION ALL SELECT y AS node FROM {tri}
+            UNION ALL SELECT z AS node FROM {tri}) corners
       GROUP BY node
     ),
-    tot AS (SELECT cast(count(*) as bigint) AS n_tri FROM tri)
+    tot AS (SELECT cast(count(*) as bigint) AS n_tri FROM {tri})
     SELECT dg.node                                    AS doc_id,
            dg.deg                                     AS degree,
            cast(coalesce(nt.triangles, 0) as bigint)  AS triangles,
@@ -1184,7 +1194,7 @@ def triangle_clustering_sql(d: str) -> str:
                            / cast(dg.deg * (dg.deg - 1) as double)
                       ELSE cast(0 as double) END, 6)  AS clustering,
            tot.n_tri                                  AS total_triangles
-    FROM deg dg
+    FROM {deg} dg
     LEFT JOIN nt ON nt.node = dg.node
     CROSS JOIN tot
     """
@@ -1195,68 +1205,14 @@ def _triangle_clustering_spark(spark: SparkSession,
     """q_triangle_clustering's Spark side (round-6): the edge list,
     degree table, oriented-edge table and triangle list are each
     checkpointed once — as CTEs, ``o`` had three consumers and ``tri``
-    four, and every reference re-ran the whole synthetic-link chain.
-    Same text fragments over the views; results bit-identical; DuckDB
-    oracle text unchanged."""
+    four, and every reference re-ran the whole synthetic-link chain."""
     pipeline.register_tables(spark, sf_dir, ("documents",))
-    d = D.SPARK
-    edges = spark.sql(
-        f"WITH {link_ctes(d)} "
-        f"SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v "
-        f"FROM links WHERE src <> dst").localCheckpoint(eager=True)
-    edges.createOrReplaceTempView("tc_edges")
-    deg = spark.sql("""
-      SELECT node, cast(count(*) as bigint) AS deg
-      FROM (SELECT u AS node FROM tc_edges
-            UNION ALL
-            SELECT v AS node FROM tc_edges) both_ends
-      GROUP BY node""").localCheckpoint(eager=True)
-    deg.createOrReplaceTempView("tc_deg")
-    lex = "t.u_deg < t.v_deg OR (t.u_deg = t.v_deg AND t.u < t.v)"
-    o = spark.sql(f"""
-      SELECT CASE WHEN {lex} THEN t.u ELSE t.v END       AS a,
-             CASE WHEN {lex} THEN t.v ELSE t.u END       AS b,
-             CASE WHEN {lex} THEN t.v_deg ELSE t.u_deg END AS b_deg
-      FROM (
-        SELECT e.u, e.v, du.deg AS u_deg, dv.deg AS v_deg
-        FROM tc_edges e
-        JOIN tc_deg du ON du.node = e.u
-        JOIN tc_deg dv ON dv.node = e.v
-      ) t""").localCheckpoint(eager=True)
-    o.createOrReplaceTempView("tc_o")
-    tri = spark.sql("""
-      SELECT w.a AS x, w.b1 AS y, w.b2 AS z
-      FROM (
-        SELECT o1.a, o1.b AS b1, o2.b AS b2
-        FROM tc_o o1
-        JOIN tc_o o2 ON o2.a = o1.a
-        WHERE o1.b_deg < o2.b_deg
-           OR (o1.b_deg = o2.b_deg AND o1.b < o2.b)
-      ) w
-      JOIN tc_o e ON e.a = w.b1 AND e.b = w.b2
-      """).localCheckpoint(eager=True)
-    tri.createOrReplaceTempView("tc_tri")
-    return spark.sql("""
-    WITH nt AS (
-      SELECT node, cast(count(*) as bigint) AS triangles
-      FROM (SELECT x AS node FROM tc_tri
-            UNION ALL SELECT y AS node FROM tc_tri
-            UNION ALL SELECT z AS node FROM tc_tri) corners
-      GROUP BY node
-    ),
-    tot AS (SELECT cast(count(*) as bigint) AS n_tri FROM tc_tri)
-    SELECT dg.node                                    AS doc_id,
-           dg.deg                                     AS degree,
-           cast(coalesce(nt.triangles, 0) as bigint)  AS triangles,
-           round(CASE WHEN dg.deg >= 2
-                      THEN cast(2 * coalesce(nt.triangles, 0) as double)
-                           / cast(dg.deg * (dg.deg - 1) as double)
-                      ELSE cast(0 as double) END, 6)  AS clustering,
-           tot.n_tri                                  AS total_triangles
-    FROM tc_deg dg
-    LEFT JOIN nt ON nt.node = dg.node
-    CROSS JOIN tot
-    """)
+    steps = _triangle_steps("tc_edges", "tc_deg", "tc_o")
+    steps["edges"] = f"WITH {link_ctes(D.SPARK)} {steps['edges']}"
+    for name, body in steps.items():
+        loops.checkpoint(spark.sql(body)).createOrReplaceTempView(
+            f"tc_{name}")
+    return spark.sql(f"WITH {_triangle_tail('tc_deg', 'tc_tri')}")
 
 
 register("q_triangle_clustering", QuerySpec(
@@ -1883,21 +1839,21 @@ def _bowtie_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     bw = _bt_reach_spark(loops.checkpoint(rev), pivot_df)
     wc = _bt_reach_spark(sym, pivot_df)
     docs = spark.table("documents").select("doc_id")
-    tagged = (docs
-              .join(fw.withColumnRenamed("id", "doc_id")
-                    .withColumn("f", F.lit(1)), "doc_id", "left")
-              .join(bw.withColumnRenamed("id", "doc_id")
-                    .withColumn("b", F.lit(1)), "doc_id", "left")
-              .join(wc.withColumnRenamed("id", "doc_id")
-                    .withColumn("w", F.lit(1)), "doc_id", "left")
-              .select("doc_id",
-                      F.when(F.col("f").isNotNull()
-                             & F.col("b").isNotNull(), "SCC")
-                      .when(F.col("b").isNotNull(), "IN")
-                      .when(F.col("f").isNotNull(), "OUT")
-                      .when(F.col("w").isNotNull(), "TENDRIL")
-                      .otherwise("DISCONNECTED").alias("region"))
-              .localCheckpoint(eager=True))
+    tagged = loops.checkpoint(
+        docs
+        .join(fw.withColumnRenamed("id", "doc_id")
+              .withColumn("f", F.lit(1)), "doc_id", "left")
+        .join(bw.withColumnRenamed("id", "doc_id")
+              .withColumn("b", F.lit(1)), "doc_id", "left")
+        .join(wc.withColumnRenamed("id", "doc_id")
+              .withColumn("w", F.lit(1)), "doc_id", "left")
+        .select("doc_id",
+                F.when(F.col("f").isNotNull()
+                       & F.col("b").isNotNull(), "SCC")
+                .when(F.col("b").isNotNull(), "IN")
+                .when(F.col("f").isNotNull(), "OUT")
+                .when(F.col("w").isNotNull(), "TENDRIL")
+                .otherwise("DISCONNECTED").alias("region")))
     sized = tagged.groupBy("region").agg(
         F.count(F.lit(1)).cast("bigint").alias("region_size"))
     return (tagged.join(F.broadcast(sized), "region")

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unmixing_spark import dialect as D
-from unmixing_spark import pipeline
+from unmixing_spark import loops, pipeline
 from unmixing_spark.pagegen import BAND_NAMES, cell_raster_sql, geo_pages_sql
 from unmixing_spark.queries import QuerySpec, register, sql_template
 
@@ -23,7 +23,7 @@ def _mnf_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               mnf_transform_distributed)
     # eager checkpoint: the fit's single action has two aggregate
     # branches over this chain and the transform re-reads it (round-6)
-    cells = pipeline.cell_raster(spark, sf_dir).localCheckpoint(eager=True)
+    cells = loops.checkpoint(pipeline.cell_raster(spark, sf_dir))
     R, mu, snr = mnf_fit_distributed(cells, list(BAND_NAMES))
     out = mnf_transform_distributed(cells, list(BAND_NAMES), R, mu)
     return out.select("cell_id",
@@ -343,14 +343,13 @@ def _lsma_classic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fit's one action evaluates TWO aggregate branches over this table —
     # with a cold lazy cache both branches race to compute the
     # md5-geocode chain; the checkpoint pays it exactly once
-    cells = pipeline.cell_raster(spark, sf_dir).localCheckpoint(eager=True)
+    cells = loops.checkpoint(pipeline.cell_raster(spark, sf_dir))
     bands = list(BAND_NAMES)
     # mask: density-slice analogue — drop cells failing the QA predicate
     masked = cells.filter((F.col("b2") > 0.0) & (F.col("b1") >= 1.0))
     # MNF rotation (two-pass)
     R, mu, snr = mnf_fit_distributed(masked, bands)
-    mnf = (mnf_transform_distributed(masked, bands, R, mu)
-           .localCheckpoint(eager=True))
+    mnf = loops.checkpoint(mnf_transform_distributed(masked, bands, R, mu))
     mnf_cols = [f"mnf{i+1}" for i in range(len(bands))]
     # endmember induction: PPI top-3 in MNF space. The top-k ids and their
     # MNF spectra are gathered in ONE driver action: broadcast the 3-row

@@ -54,14 +54,20 @@ def _corpus_ctes(d: str) -> str:
       SELECT doc_id, cast(count(*) as bigint) AS dl
       FROM toks GROUP BY doc_id
     ),
-    stats AS {D.mat(d)}(
+    {_corpus_stats(d, "tf")}"""
+
+
+def _corpus_stats(d: str, tf: str) -> str:
+    """``stats`` over ``dl`` and the ``lex`` dictionary over a ``tf``
+    posting relation."""
+    return f"""stats AS {D.mat(d)}(
       SELECT cast(count(*) as bigint) AS n_docs,
              cast(sum(dl) as double) / cast(count(*) as double) AS avgdl
       FROM dl
     ),
     lex AS {D.mat(d)}(
       SELECT tok, cast(count(*) as bigint) AS df
-      FROM tf GROUP BY tok
+      FROM {tf} GROUP BY tok
     )"""
 
 
@@ -69,6 +75,13 @@ def _bm25_chain(d: str) -> str:
     """The shared BM25 CTE chain ending in ``scored``(qid, doc_id,
     score, n_hit_terms) — factored so q_search_snippets ranks with the
     SAME scorer q_bm25_topk exposes."""
+    return f"""{_corpus_ctes(d)},
+    {_bm25_scorer(d, "tf")}"""
+
+
+def _bm25_scorer(d: str, tf: str) -> str:
+    """qids → qcand → qterms → contribs → scored over ``lex``, ``dl``,
+    ``stats`` and a ``tf`` posting relation."""
     k1 = D.dbl(BM25_K1)
     b = D.dbl(BM25_B)
     qkey = f"'qt' || {D.to_str('q.qid', d)} || ':' || l.tok"
@@ -84,8 +97,7 @@ def _bm25_chain(d: str) -> str:
     nhit = " + ".join(
         f"max(CASE WHEN rn = {r} THEN 1 ELSE 0 END)"
         for r in range(1, BM25_QLEN + 1))
-    return f"""{_corpus_ctes(d)},
-    qids AS ({D.values_rel(qid_rows, "t(qid)", d)}),
+    return f"""qids AS ({D.values_rel(qid_rows, "t(qid)", d)}),
     qcand AS (
       SELECT q.qid, l.tok, l.df,
              row_number() OVER (PARTITION BY q.qid
@@ -100,7 +112,7 @@ def _bm25_chain(d: str) -> str:
       SELECT qt.qid, t.doc_id, qt.rn,
              ({idf}) * ({tfnorm}) AS contrib
       FROM qterms qt
-      JOIN tf t ON t.tok = qt.tok
+      JOIN {tf} t ON t.tok = qt.tok
       JOIN dl g ON g.doc_id = t.doc_id
       CROSS JOIN stats s
     ),
@@ -138,7 +150,11 @@ def _bm25_topk(d: str) -> str:
     (AQE handles a hot query's skew like any hot reduce key)."""
     return f"""
     WITH {_bm25_chain(d)}
-    SELECT qid, cast(rnk as bigint) AS rank, doc_id, score, n_hit_terms
+    {_BM25_TOPK_SELECT}"""
+
+
+# the per-qid top-k rows of ``scored``; dialect-invariant text
+_BM25_TOPK_SELECT = f"""SELECT qid, cast(rnk as bigint) AS rank, doc_id, score, n_hit_terms
     FROM (
       SELECT qid, doc_id, score, n_hit_terms,
              row_number() OVER (PARTITION BY qid
@@ -154,83 +170,25 @@ def _bm25_topk_spark(spark, sf_dir):
     Catalyst inlines the template's CTEs, so the token explode behind
     ``toks`` ran twice (under ``tf`` and ``dl``) and ``tf`` itself ran
     twice (under ``lex`` and ``contribs``). The (doc, tok, tf) posting
-    table is materialized ONCE (eager localCheckpoint); ``dl`` is
-    derived from it as sum(tf) — identical to count(*) over the token
-    stream by construction — and lex/stats/scorer read the checkpointed
-    postings. Same scoring expressions as the template — bit-identical
-    results, DuckDB oracle text unchanged."""
-    from unmixing_spark import pipeline
+    table is materialized ONCE; ``dl`` is derived from it as sum(tf) —
+    identical to count(*) over the token stream by construction — and
+    lex/stats/scorer read the checkpointed postings."""
+    from unmixing_spark import loops, pipeline
 
     pipeline.register_tables(spark, sf_dir, ("documents",))
     d = D.SPARK
-    tf = spark.sql(
+    loops.checkpoint(spark.sql(
         f"SELECT doc_id, tok, cast(count(*) as bigint) AS tf "
         f"FROM (SELECT doc_id, tok FROM {_tokens(d)}) toks "
-        f"GROUP BY doc_id, tok").localCheckpoint(eager=True)
-    tf.createOrReplaceTempView("bm25_tf")
-    k1 = D.dbl(BM25_K1)
-    b = D.dbl(BM25_B)
-    qkey = f"'qt' || {D.to_str('q.qid', d)} || ':' || l.tok"
-    idf = ("ln(cast(2 * s.n_docs + 2 as double)) - "
-           "ln(cast(2 * qt.df + 1 as double))")
-    tfnorm = (f"(cast(t.tf as double) * ({k1} + {D.dbl(1.0)})) / "
-              f"(cast(t.tf as double) + {k1} * ({D.dbl(1.0)} - {b} + "
-              f"{b} * cast(g.dl as double) / s.avgdl))")
-    qid_rows = ", ".join(f"({q})" for q in range(BM25_QUERIES))
-    pivot = " + ".join(
-        f"coalesce(max(CASE WHEN rn = {r} THEN contrib END), {D.dbl(0.0)})"
-        for r in range(1, BM25_QLEN + 1))
-    nhit = " + ".join(
-        f"max(CASE WHEN rn = {r} THEN 1 ELSE 0 END)"
-        for r in range(1, BM25_QLEN + 1))
+        f"GROUP BY doc_id, tok")).createOrReplaceTempView("bm25_tf")
     return spark.sql(f"""
     WITH dl AS (
       SELECT doc_id, cast(sum(tf) as bigint) AS dl
       FROM bm25_tf GROUP BY doc_id
     ),
-    stats AS (
-      SELECT cast(count(*) as bigint) AS n_docs,
-             cast(sum(dl) as double) / cast(count(*) as double) AS avgdl
-      FROM dl
-    ),
-    lex AS (
-      SELECT tok, cast(count(*) as bigint) AS df
-      FROM bm25_tf GROUP BY tok
-    ),
-    qids AS ({D.values_rel(qid_rows, "t(qid)", d)}),
-    qcand AS (
-      SELECT q.qid, l.tok, l.df,
-             row_number() OVER (PARTITION BY q.qid
-                                ORDER BY md5({qkey})) AS rn
-      FROM lex l CROSS JOIN qids q
-      WHERE l.df >= {BM25_MIN_DF}
-    ),
-    qterms AS (
-      SELECT qid, tok, df, rn FROM qcand WHERE rn <= {BM25_QLEN}
-    ),
-    contribs AS (
-      SELECT qt.qid, t.doc_id, qt.rn,
-             ({idf}) * ({tfnorm}) AS contrib
-      FROM qterms qt
-      JOIN bm25_tf t ON t.tok = qt.tok
-      JOIN dl g ON g.doc_id = t.doc_id
-      CROSS JOIN stats s
-    ),
-    scored AS (
-      SELECT qid, doc_id,
-             round({pivot}, 6) AS score,
-             cast({nhit} as bigint) AS n_hit_terms
-      FROM contribs GROUP BY qid, doc_id
-    )
-    SELECT qid, cast(rnk as bigint) AS rank, doc_id, score, n_hit_terms
-    FROM (
-      SELECT qid, doc_id, score, n_hit_terms,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY score DESC, doc_id) AS rnk
-      FROM scored
-    ) r
-    WHERE rnk <= {BM25_TOPK}
-    """)
+    {_corpus_stats(d, "bm25_tf")},
+    {_bm25_scorer(d, "bm25_tf")}
+    {_BM25_TOPK_SELECT}""")
 
 
 register("q_bm25_topk", QuerySpec(

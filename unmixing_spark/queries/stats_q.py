@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from unmixing_spark import dialect as D
 from unmixing_spark.queries import QuerySpec, register, sql_template
-from unmixing_spark.queries.text_q import _pos_tokens, _tokens
+from unmixing_spark.queries.text_q import N_HASHES, _pos_tokens, _tokens
 
 # ---- count-min-sketch heavy hitters -----------------------------------------
 
@@ -204,11 +204,22 @@ def _cdc_chunks(d: str) -> str:
     back hash-keyed — exactly the exact-dedup shuffle shape, no
     all-pairs. The chunk-hash table is the big exchange at 100 TB, as in
     any CAS/dedup store."""
+    return f"""
+    WITH {_cdc_head(d)},
+    chunks AS {D.mat(d)}(
+      {_cdc_chunks_body(d)}
+    ),
+    {_cdc_tail("chunks")}"""
+
+
+def _cdc_head(d: str) -> str:
+    """The token-window chain pos → rh → st → ch (rolling-hash cuts,
+    chunk starts, running chunk index), shared by the template and
+    q_cdc_chunks' Spark side."""
     gram = " || ' ' || ".join(
         [f"lag(tok, {k}) OVER w" for k in range(CDC_W - 1, 0, -1)] + ["tok"])
     h = D.hex2int("substr(md5(gram), 1, 8)", d)
-    return f"""
-    WITH pos AS (SELECT doc_id, pos, tok FROM {_pos_tokens(d)}),
+    return f"""pos AS (SELECT doc_id, pos, tok FROM {_pos_tokens(d)}),
     rh AS (
       SELECT doc_id, pos, tok,
              CASE WHEN gram IS NOT NULL AND ({h}) % {CDC_MOD} = 0
@@ -228,19 +239,27 @@ def _cdc_chunks(d: str) -> str:
              sum(starts) OVER (PARTITION BY doc_id ORDER BY pos
                                ROWS UNBOUNDED PRECEDING) AS chunk_idx
       FROM st
-    ),
-    chunks AS {D.mat(d)}(
-      SELECT doc_id, chunk_idx,
+    )"""
+
+
+def _cdc_chunks_body(d: str) -> str:
+    """One row per (doc_id, chunk_idx) over ``ch``: token count and the
+    chunk's content hash."""
+    return f"""SELECT doc_id, chunk_idx,
              cast(count(*) as bigint) AS n_toks,
              md5({D.ordered_string_agg('tok', 'pos', "' '", d)})
                AS chunk_md5
-      FROM ch GROUP BY doc_id, chunk_idx
-    ),
-    dup AS (
+      FROM ch GROUP BY doc_id, chunk_idx"""
+
+
+def _cdc_tail(chunks: str) -> str:
+    """The ``dup`` table and the per-doc report over a ``chunks``
+    relation."""
+    return f"""dup AS (
       SELECT chunk_md5,
              cast(count(*) as bigint) AS copies,
              cast(count(DISTINCT doc_id) as bigint) AS nd
-      FROM chunks GROUP BY chunk_md5
+      FROM {chunks} GROUP BY chunk_md5
     )
     SELECT c.doc_id,
            cast(count(*) as bigint)      AS n_chunks,
@@ -251,7 +270,7 @@ def _cdc_chunks(d: str) -> str:
                 as bigint) AS dup_toks,
            cast(sum(CASE WHEN u.nd >= 2 THEN c.n_toks ELSE 0 END)
                 as bigint) AS crossdoc_dup_toks
-    FROM chunks c JOIN dup u ON u.chunk_md5 = c.chunk_md5
+    FROM {chunks} c JOIN dup u ON u.chunk_md5 = c.chunk_md5
     GROUP BY c.doc_id
     """
 
@@ -261,63 +280,16 @@ def _cdc_chunks_spark(spark, sf_dir):
     the template's ``chunks`` CTE has two consumers (``dup`` and the
     final join), and Catalyst inlines CTEs — so the whole token-window
     chain (posexplode + 3 doc-keyed window passes + ordered string_agg)
-    executed twice. Materialize ``chunks`` ONCE (eager localCheckpoint)
-    and run the dup/report tail over it. Same expressions as the
-    template — bit-identical results, DuckDB oracle text unchanged."""
-    from unmixing_spark import pipeline
+    executed twice. Materialize ``chunks`` ONCE and run the dup/report
+    tail over it."""
+    from unmixing_spark import loops, pipeline
 
     pipeline.register_tables(spark, sf_dir, ("documents",))
     d = D.SPARK
-    gram = " || ' ' || ".join(
-        [f"lag(tok, {k}) OVER w" for k in range(CDC_W - 1, 0, -1)] + ["tok"])
-    h = D.hex2int("substr(md5(gram), 1, 8)", d)
-    chunks = spark.sql(f"""
-    WITH pos AS (SELECT doc_id, pos, tok FROM {_pos_tokens(d)}),
-    rh AS (
-      SELECT doc_id, pos, tok,
-             CASE WHEN gram IS NOT NULL AND ({h}) % {CDC_MOD} = 0
-                  THEN 1 ELSE 0 END AS cuts_after
-      FROM (SELECT doc_id, pos, tok, {gram} AS gram
-            FROM pos WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
-    ),
-    st AS (
-      SELECT doc_id, pos, tok,
-             CASE WHEN lag(pos) OVER w2 IS NULL
-                       OR lag(cuts_after) OVER w2 = 1
-                  THEN 1 ELSE 0 END AS starts
-      FROM rh WINDOW w2 AS (PARTITION BY doc_id ORDER BY pos)
-    ),
-    ch AS (
-      SELECT doc_id, pos, tok,
-             sum(starts) OVER (PARTITION BY doc_id ORDER BY pos
-                               ROWS UNBOUNDED PRECEDING) AS chunk_idx
-      FROM st
-    )
-    SELECT doc_id, chunk_idx,
-           cast(count(*) as bigint) AS n_toks,
-           md5({D.ordered_string_agg('tok', 'pos', "' '", d)})
-             AS chunk_md5
-    FROM ch GROUP BY doc_id, chunk_idx""").localCheckpoint(eager=True)
-    chunks.createOrReplaceTempView("cdc_chunks_t")
-    return spark.sql("""
-    WITH dup AS (
-      SELECT chunk_md5,
-             cast(count(*) as bigint) AS copies,
-             cast(count(DISTINCT doc_id) as bigint) AS nd
-      FROM cdc_chunks_t GROUP BY chunk_md5
-    )
-    SELECT c.doc_id,
-           cast(count(*) as bigint)      AS n_chunks,
-           cast(sum(c.n_toks) as bigint) AS n_toks,
-           cast(sum(CASE WHEN u.copies >= 2 THEN 1 ELSE 0 END) as bigint)
-             AS dup_chunks,
-           cast(sum(CASE WHEN u.copies >= 2 THEN c.n_toks ELSE 0 END)
-                as bigint) AS dup_toks,
-           cast(sum(CASE WHEN u.nd >= 2 THEN c.n_toks ELSE 0 END)
-                as bigint) AS crossdoc_dup_toks
-    FROM cdc_chunks_t c JOIN dup u ON u.chunk_md5 = c.chunk_md5
-    GROUP BY c.doc_id
-    """)
+    loops.checkpoint(spark.sql(
+        f"WITH {_cdc_head(d)}\n    {_cdc_chunks_body(d)}"
+    )).createOrReplaceTempView("cdc_chunks_t")
+    return spark.sql(f"WITH {_cdc_tail('cdc_chunks_t')}")
 
 
 register("q_cdc_chunks", QuerySpec(
@@ -387,14 +359,25 @@ def _hll_distinct(d: str) -> str:
     partition, the textbook mergeable sketch (per-shard registers merge
     by max; this GROUP BY is exactly that merge). The exact distinct is
     the audit side only — at 10^12 rows one runs just the sketch."""
+    return f"""
+    WITH {_hll_scopes(d)},
+    {_hll_sketch(d, "items")},
+    ex AS (
+      SELECT scope, lang, cast(count(DISTINCT item) as bigint) AS exact_nd
+      FROM items GROUP BY scope, lang
+    )
+    {_HLL_REPORT}"""
+
+
+def _hll_sketch(d: str, items: str) -> str:
+    """hashed → reg → grp → full_reg → est over an ``items`` relation:
+    the per-(scope, lang) registers and the estimator's sums."""
     h = D.hex2int("substr(md5(item), 1, 8)", d)
     rest = D.idiv_i("h", str(HLL_M), d)
     regs = ", ".join(f"({i})" for i in range(HLL_M))
-    return f"""
-    WITH {_hll_scopes(d)},
-    hashed AS (
+    return f"""hashed AS (
       SELECT scope, lang, h % {HLL_M} AS idx, {rest} AS rest
-      FROM (SELECT scope, lang, {h} AS h FROM items)
+      FROM (SELECT scope, lang, {h} AS h FROM {items})
     ),
     reg AS (
       SELECT scope, lang, idx,
@@ -402,7 +385,7 @@ def _hll_distinct(d: str) -> str:
                       ELSE bit_count((rest & (-rest)) - 1) + 1 END) AS m
       FROM hashed GROUP BY scope, lang, idx
     ),
-    grp AS (SELECT DISTINCT scope, lang FROM items),
+    grp AS (SELECT DISTINCT scope, lang FROM {items}),
     full_reg AS (
       SELECT g.scope, g.lang, r.i AS idx, coalesce(reg.m, 0) AS m
       FROM grp g
@@ -416,12 +399,12 @@ def _hll_distinct(d: str) -> str:
                AS s,
              cast(sum(CASE WHEN m = 0 THEN 1 ELSE 0 END) as bigint) AS v
       FROM full_reg GROUP BY scope, lang
-    ),
-    ex AS (
-      SELECT scope, lang, cast(count(DISTINCT item) as bigint) AS exact_nd
-      FROM items GROUP BY scope, lang
-    )
-    SELECT e.scope, e.lang, x.exact_nd,
+    )"""
+
+
+# the estimate (linear counting in the small range, raw HLL above it)
+# joined to the exact count ``ex``; dialect-invariant text
+_HLL_REPORT = f"""SELECT e.scope, e.lang, x.exact_nd,
            cast(CASE WHEN raw <= {D.dbl(2.5)} * {HLL_M} AND e.v > 0
                      THEN 1 ELSE 0 END as bigint) AS linear_branch,
            round(CASE WHEN raw <= {D.dbl(2.5)} * {HLL_M} AND e.v > 0
@@ -437,67 +420,28 @@ def _hll_distinct(d: str) -> str:
 def _hll_distinct_spark(spark, sf_dir):
     """q_hll_distinct's Spark side (round-6 optimization, guide
     §2.3/§2.4): collapse the item stream to the DISTINCT (scope, lang,
-    item) table ONCE (eager localCheckpoint — the stream has three CTE
-    consumers, and each CTE reference re-executes the explodes) and hash
-    only that. Register max over occurrences == max over distinct items
-    (rho is a function of the item), exact_nd = count(*) of the distinct
-    table, grp identical — results bit-identical, md5 volume drops
-    corpus → vocabulary, and the lead() window behind the bigram stream
-    is replaced by the _hll_scopes Spark-rendering array transform (no
-    doc_id exchange+sort). DuckDB oracle text unchanged."""
-    from unmixing_spark import pipeline
+    item) table ONCE (the stream has three CTE consumers, and each CTE
+    reference re-executes the explodes) and hash only that. Register max
+    over occurrences == max over distinct items (rho is a function of
+    the item), exact_nd = count(*) of the distinct table, grp identical
+    — md5 volume drops corpus → vocabulary, and the lead() window
+    behind the bigram stream is replaced by the _hll_scopes
+    Spark-rendering array transform (no doc_id exchange+sort)."""
+    from unmixing_spark import loops, pipeline
 
     pipeline.register_tables(spark, sf_dir, ("documents",))
     d = D.SPARK
-    h = D.hex2int("substr(md5(item), 1, 8)", d)
-    rest = D.idiv_i("h", str(HLL_M), d)
-    regs = ", ".join(f"({i})" for i in range(HLL_M))
-    itemd = spark.sql(
+    loops.checkpoint(spark.sql(
         f"WITH {_hll_scopes(d)} "
         f"SELECT DISTINCT scope, lang, item FROM items"
-    ).localCheckpoint(eager=True)
-    itemd.createOrReplaceTempView("hll_itemd")
+    )).createOrReplaceTempView("hll_itemd")
     return spark.sql(f"""
-    WITH hashed AS (
-      SELECT scope, lang, h % {HLL_M} AS idx, {rest} AS rest
-      FROM (SELECT scope, lang, {h} AS h FROM hll_itemd)
-    ),
-    reg AS (
-      SELECT scope, lang, idx,
-             max(CASE WHEN rest = 0 THEN {HLL_RMAX}
-                      ELSE bit_count((rest & (-rest)) - 1) + 1 END) AS m
-      FROM hashed GROUP BY scope, lang, idx
-    ),
-    grp AS (SELECT DISTINCT scope, lang FROM hll_itemd),
-    full_reg AS (
-      SELECT g.scope, g.lang, r.i AS idx, coalesce(reg.m, 0) AS m
-      FROM grp g
-      CROSS JOIN ({D.values_rel(regs, "r(i)", d)}) r
-      LEFT JOIN reg ON reg.scope = g.scope AND reg.lang = g.lang
-                   AND reg.idx = r.i
-    ),
-    est AS (
-      SELECT scope, lang,
-             sum({D.dbl(1.0)} / cast(cast(1 as bigint) << m as double))
-               AS s,
-             cast(sum(CASE WHEN m = 0 THEN 1 ELSE 0 END) as bigint) AS v
-      FROM full_reg GROUP BY scope, lang
-    ),
+    WITH {_hll_sketch(d, "hll_itemd")},
     ex AS (
       SELECT scope, lang, cast(count(*) as bigint) AS exact_nd
       FROM hll_itemd GROUP BY scope, lang
     )
-    SELECT e.scope, e.lang, x.exact_nd,
-           cast(CASE WHEN raw <= {D.dbl(2.5)} * {HLL_M} AND e.v > 0
-                     THEN 1 ELSE 0 END as bigint) AS linear_branch,
-           round(CASE WHEN raw <= {D.dbl(2.5)} * {HLL_M} AND e.v > 0
-                      THEN {HLL_M} * (ln({HLL_M}) - ln(e.v))
-                      ELSE raw END, 6) AS est_nd
-    FROM (SELECT scope, lang, v, s,
-                 {D.dbl(HLL_ALPHA)} * {HLL_M} * {HLL_M} / s AS raw
-          FROM est) e
-    JOIN ex x ON x.scope = e.scope AND x.lang = e.lang
-    """)
+    {_HLL_REPORT}""")
 
 
 register("q_hll_distinct", QuerySpec(
@@ -509,21 +453,49 @@ register("q_hll_distinct", QuerySpec(
 
 # ---- MinHash Jaccard-estimate accuracy audit ----------------------------------
 
-def _mh_audit_tail(d: str, sig: str, capped: str, shs: str) -> str:
-    """Shared CTE text (pairs -> exact intersections -> estimates ->
-    fixed-point rounding) rendered for both dialects over the given
-    relation names — the kmeans_q pattern, so the Spark side can feed
-    once-computed inputs while the DuckDB oracle unrolls the full
-    chain."""
-    from unmixing_spark.queries.text_q import N_HASHES
-    matches = " + ".join(
-        f"CASE WHEN sa.m{j} = sb.m{j} THEN 1 ELSE 0 END"
-        for j in range(N_HASHES))
+def _mh_pairs(d: str, capped: str) -> str:
+    """The DISTINCT candidate pairs of the capped LSH bucket join."""
     return f"""pairs AS {D.mat(d)}(
       SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
       FROM {capped} a JOIN {capped} b
         ON b.bh = a.bh AND b.doc_id > a.doc_id
-    ),
+    )"""
+
+
+def _mh_fixed_point(d: str, keys: str, matched: str, i: str, na: str,
+                    nb: str, src: str) -> str:
+    """The estimate / exact / error projection over ``src``: ``keys``
+    yields doc_a, doc_b and matched_hashes; ``matched`` is the matching
+    signature count, ``i`` the exact intersection size and ``na``/``nb``
+    the two shingle-set sizes."""
+    return f"""SELECT doc_a, doc_b, matched_hashes,
+           cast(est_u as double) / {D.dbl(1e6)}            AS est_jaccard,
+           cast(ex_u as double) / {D.dbl(1e6)}             AS exact_jaccard,
+           cast(abs(est_u - ex_u) as double) / {D.dbl(1e6)} AS abs_err
+    FROM (
+      SELECT {keys},
+             -- micro-unit (1e-6) fixed point, HALF_UP by exact integer
+             -- arithmetic: round(x/y * 1e6) = (2*1e6*x + y) div (2*y).
+             -- Engine round() on doubles disagrees at binary half-way
+             -- ties (Spark decimal-expansion HALF_UP vs DuckDB libm);
+             -- integer rounding cannot.
+             {matched} * {1000000 // N_HASHES} AS est_u,
+             {D.idiv_i(f'2000000 * {i} + ({na} + {nb} - {i})',
+                       f'2 * ({na} + {nb} - {i})', d)} AS ex_u
+      FROM {src}) z
+    """
+
+
+def _mh_matches() -> str:
+    return " + ".join(
+        f"CASE WHEN sa.m{j} = sb.m{j} THEN 1 ELSE 0 END"
+        for j in range(N_HASHES))
+
+
+def _mh_audit_tail(d: str, sig: str, capped: str, shs: str) -> str:
+    """The oracle's pairs → exact intersections → estimates → fixed
+    point chain over the given relation names."""
+    return f"""{_mh_pairs(d, capped)},
     nsh AS {D.mat(d)}(
       SELECT doc_id, cast(count(*) as bigint) AS n FROM {shs}
       GROUP BY doc_id
@@ -536,32 +508,19 @@ def _mh_audit_tail(d: str, sig: str, capped: str, shs: str) -> str:
       GROUP BY p.da, p.db
     ),
     est AS (
-      SELECT p.da, p.db, ({matches}) AS matched
+      SELECT p.da, p.db, ({_mh_matches()}) AS matched
       FROM pairs p
       JOIN {sig} sa ON sa.doc_id = p.da
       JOIN {sig} sb ON sb.doc_id = p.db
     )
-    SELECT doc_a, doc_b, matched_hashes,
-           cast(est_u as double) / {D.dbl(1e6)}            AS est_jaccard,
-           cast(ex_u as double) / {D.dbl(1e6)}             AS exact_jaccard,
-           cast(abs(est_u - ex_u) as double) / {D.dbl(1e6)} AS abs_err
-    FROM (
-      SELECT e.da AS doc_a, e.db AS doc_b,
-             cast(e.matched as bigint) AS matched_hashes,
-             -- micro-unit (1e-6) fixed point, HALF_UP by exact integer
-             -- arithmetic: round(x/y * 1e6) = (2*1e6*x + y) div (2*y).
-             -- Engine round() on doubles disagrees at binary half-way
-             -- ties (Spark decimal-expansion HALF_UP vs DuckDB libm);
-             -- integer rounding cannot.
-             e.matched * {1000000 // N_HASHES} AS est_u,
-             {D.idiv_i('2000000 * coalesce(i.i, 0) '
-                       '+ (na.n + nb.n - coalesce(i.i, 0))',
-                       '2 * (na.n + nb.n - coalesce(i.i, 0))', d)} AS ex_u
-      FROM est e
-      LEFT JOIN inter i ON i.da = e.da AND i.db = e.db
-      JOIN nsh na ON na.doc_id = e.da
-      JOIN nsh nb ON nb.doc_id = e.db) z
-    """
+    """ + _mh_fixed_point(
+        d, "e.da AS doc_a, e.db AS doc_b,\n"
+           "             cast(e.matched as bigint) AS matched_hashes",
+        "e.matched", "coalesce(i.i, 0)", "na.n", "nb.n",
+        "est e\n"
+        "      LEFT JOIN inter i ON i.da = e.da AND i.db = e.db\n"
+        "      JOIN nsh na ON na.doc_id = e.da\n"
+        "      JOIN nsh nb ON nb.doc_id = e.db")
 
 
 def _mh_audit_oracle() -> str:
@@ -582,16 +541,15 @@ def _mh_audit_spark(spark, sf_dir):
 
     Scale shape: the signature, capped-bucket, and distinct-shingle
     inputs are each computed ONCE and lineage-truncated (eager
-    localCheckpoint — the pure-SQL form re-expanded each multi-
-    referenced CTE into a 44-parquet-scan plan; at production scale this
-    is a persist()); candidate pairs come from the capped LSH bucket
-    join (O(docs*bands)); the exact side joins each pair's two DISTINCT
-    shingle posting lists PAIR-KEYED (pairs join first, then the two
-    doc-keyed probes) — never a bare shingle-keyed self-join, which a
-    31-token vocabulary (or real boilerplate) would send quadratic."""
-    from unmixing_spark import pipeline
-    from unmixing_spark.queries.text_q import (N_HASHES, SHINGLE,
-                                               minhash_lsh_views)
+    checkpoint — the pure-SQL form re-expanded each multi-referenced CTE
+    into a 44-parquet-scan plan; at production scale this is a
+    persist()); candidate pairs come from the capped LSH bucket join
+    (O(docs*bands)); the exact side joins each pair's two DISTINCT
+    shingle sets PAIR-KEYED (pairs join first, then the two doc-keyed
+    probes) — never a bare shingle-keyed self-join, which a 31-token
+    vocabulary (or real boilerplate) would send quadratic."""
+    from unmixing_spark import loops, pipeline
+    from unmixing_spark.queries.text_q import SHINGLE, minhash_lsh_views
 
     # the per-row shingle arrays below repay the scan fan-out
     pipeline.register_tables(spark, sf_dir, ("documents",), fan_out=True)
@@ -602,48 +560,29 @@ def _mh_audit_spark(spark, sf_dir):
     # as ONE per-row array expression — no shingle explode, no
     # (doc, sh) distinct exchange (13.6M rows at sf1.0) — and the exact
     # intersections become array_intersect sizes on the pair join
-    # (|A∩B| and |A|/|B| are identical set quantities). The fixed-point
-    # arithmetic below is byte-for-byte the shared _mh_audit_tail
-    # rendering; the DuckDB oracle text is unchanged.
-    arr = spark.sql(
+    # (|A∩B| and |A|/|B| are identical set quantities).
+    loops.checkpoint(spark.sql(
         f"SELECT doc_id, array_distinct(transform("
         f"sequence(1, greatest(length(text) - {SHINGLE} + 1, 1)), "
         f"i -> substr(text, i, {SHINGLE}))) AS shs FROM documents"
-    ).localCheckpoint(eager=True)
-    arr.createOrReplaceTempView("mh_sharr")
-    matches = " + ".join(
-        f"CASE WHEN sa.m{j} = sb.m{j} THEN 1 ELSE 0 END"
-        for j in range(N_HASHES))
+    )).createOrReplaceTempView("mh_sharr")
     return spark.sql(f"""
-    WITH pairs AS (
-      SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-      FROM {capped_v} a JOIN {capped_v} b
-        ON b.bh = a.bh AND b.doc_id > a.doc_id
-    ),
+    WITH {_mh_pairs(d, capped_v)},
     ji AS (
       SELECT p.da, p.db,
              cast(size(array_intersect(x.shs, y.shs)) as bigint) AS i,
              cast(size(x.shs) as bigint) AS na,
              cast(size(y.shs) as bigint) AS nb,
-             cast(({matches}) as bigint) AS matched
+             cast(({_mh_matches()}) as bigint) AS matched
       FROM pairs p
       JOIN mh_sharr x ON x.doc_id = p.da
       JOIN mh_sharr y ON y.doc_id = p.db
       JOIN {sig_v} sa ON sa.doc_id = p.da
       JOIN {sig_v} sb ON sb.doc_id = p.db
     )
-    SELECT doc_a, doc_b, matched_hashes,
-           cast(est_u as double) / {D.dbl(1e6)}            AS est_jaccard,
-           cast(ex_u as double) / {D.dbl(1e6)}             AS exact_jaccard,
-           cast(abs(est_u - ex_u) as double) / {D.dbl(1e6)} AS abs_err
-    FROM (
-      SELECT da AS doc_a, db AS doc_b,
-             matched AS matched_hashes,
-             matched * {1000000 // N_HASHES} AS est_u,
-             {D.idiv_i('2000000 * i + (na + nb - i)',
-                       '2 * (na + nb - i)', d)} AS ex_u
-      FROM ji) z
-    """)
+    """ + _mh_fixed_point(
+        d, "da AS doc_a, db AS doc_b, matched AS matched_hashes",
+        "matched", "i", "na", "nb", "ji"))
 
 
 register("q_minhash_est_audit", QuerySpec(

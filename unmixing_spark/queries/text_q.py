@@ -16,6 +16,7 @@ from __future__ import annotations
 import pandas as pd
 
 from unmixing_spark import dialect as D
+from unmixing_spark import loops
 from unmixing_spark.queries import QuerySpec, register, sql_template
 
 
@@ -150,7 +151,7 @@ def _lsh_buckets_cte(d: str) -> str:
 
 def minhash_lsh_views(spark) -> tuple[str, str]:
     """Build the MinHash signature and capped-bucket tables ONCE each
-    (eager localCheckpoint) and register them as temp views — the
+    (``loops.checkpoint``) and register them as temp views — the
     round-6 fix for the chain's CTE re-execution (banded feeds BANDS
     union branches plus the capped window plus every candidate join;
     each CTE reference re-ran the full 8-gram shingle+md5 pass, measured
@@ -158,15 +159,13 @@ def minhash_lsh_views(spark) -> tuple[str, str]:
     (sig, capped) for the per-query tails; same bit-identical chain, so
     every consumer's results are unchanged."""
     d = D.SPARK
-    sig = spark.sql(
+    loops.checkpoint(spark.sql(
         f"WITH {_minhash_sig(d)} SELECT * FROM sig"
-    ).localCheckpoint(eager=True)
-    sig.createOrReplaceTempView("mh_sig_v")
-    capped = spark.sql(
+    )).createOrReplaceTempView("mh_sig_v")
+    loops.checkpoint(spark.sql(
         f"WITH {_lsh_bucket_tail(d, 'mh_sig_v')} "
         f"SELECT doc_id, bh FROM capped"
-    ).localCheckpoint(eager=True)
-    capped.createOrReplaceTempView("mh_capped_v")
+    )).createOrReplaceTempView("mh_capped_v")
     return "mh_sig_v", "mh_capped_v"
 
 
@@ -191,7 +190,7 @@ def _minhash_lsh(d: str) -> str:
 def _minhash_lsh_spark(spark, sf_dir):
     """q_minhash_lsh_pairs' Spark side: the checkpointed sig/capped
     views (minhash_lsh_views — one shingle pass total) plus the pair
-    self-join tail. Results bit-identical; oracle text unchanged."""
+    self-join tail."""
     from unmixing_spark.pipeline import register_tables
 
     register_tables(spark, sf_dir, ("documents",))

@@ -27,7 +27,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from unmixing_spark import dialect as D
-from unmixing_spark import pipeline
+from unmixing_spark import loops, pipeline
 from unmixing_spark.io.warc import read_warc, write_warc
 from unmixing_spark.pagegen import pages_sql
 from unmixing_spark.queries import QuerySpec, register
@@ -59,9 +59,8 @@ def _warc_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = read_warc(spark, out_dir)
         back.createOrReplaceTempView("warc_back")
         # materialize before the files vanish
-        return spark.sql(
-            _fingerprint_sql(D.SPARK, "warc_back")).localCheckpoint(
-            eager=True)
+        return loops.checkpoint(
+            spark.sql(_fingerprint_sql(D.SPARK, "warc_back")))
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -103,12 +102,12 @@ def _wet_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_wet(pages, out_dir, gzip_records=True)
         back = read_wet(spark, out_dir)
         back.createOrReplaceTempView("wet_back")
-        return spark.sql(f"""
+        return loops.checkpoint(spark.sql(f"""
             SELECT url, warc_epoch,
                    cast(length(text) as bigint) AS text_chars,
                    {D.sha256_('text', D.SPARK)} AS text_sha
             FROM wet_back
-        """).localCheckpoint(eager=True)
+        """))
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -198,8 +197,8 @@ def _wat_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_wat(pages, out_dir, gzip_records=True)
         back = read_wat(spark, out_dir)
         back.createOrReplaceTempView("wat_back")
-        return spark.sql(
-            _wat_fingerprint_sql(d, "wat_back")).localCheckpoint(eager=True)
+        return loops.checkpoint(
+            spark.sql(_wat_fingerprint_sql(d, "wat_back")))
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unmixing_spark import dialect as D
-from unmixing_spark import pipeline
+from unmixing_spark import loops, pipeline
 
 QC_REG = 1e-3     # L2 regularization (keeps the fit deterministic-ish
                   # and the coefficients bounded on the small corpus)
@@ -90,11 +90,10 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sort_array(F.collect_list(F.struct("b", "c")))
                  .alias("pairs"))
             .select("doc_id", to_vec("pairs").alias("features")))
-    data = (vecs.join(labels, "doc_id")
-            .withColumn("is_train", (F.col("doc_id") % 2 == 0)
-                        .cast("bigint"))
-            .localCheckpoint(eager=True))  # one materialization: the fit
-    # iterates over the train split and scoring reads it again
+    # one materialization: the fit iterates over the train split and
+    # scoring reads it again
+    data = loops.checkpoint(vecs.join(labels, "doc_id").withColumn(
+        "is_train", (F.col("doc_id") % 2 == 0).cast("bigint")))
     lr = LogisticRegression(featuresCol="features", labelCol="label",
                             maxIter=QC_MAX_ITER, regParam=QC_REG)
     model = lr.fit(data.filter("is_train = 1"))
