@@ -3,13 +3,15 @@
 the extra measurements the optimization round needs):
 
   python bench_extra.py SF_DIR q_a,q_b,...   [--mode count|noop] [--runs N]
-  python bench_extra.py SF_DIR q_a --explain plans/r06/q_a_before.txt
+  python bench_extra.py SF_DIR q_a,q_b,... --explain OUT_DIR
 
 - ``count`` replicates the frozen bench's timing (fn(spark, sf) +
   df.count()) so numbers are comparable with BENCH_r0x.json.
 - ``noop`` writes through the no-op sink (guide §1.4): every column of
   every row computed, nothing optimized away by count()'s pruning.
-- ``--explain`` captures .explain("formatted") for the plan artifacts.
+- ``--explain`` writes .explain("formatted") of every named query to
+  ``OUT_DIR/{name}.txt`` (no timing). A "before" tree captures its plans
+  with its own copy of this file.
 
 Each query is labeled via setJobDescription (guide §1.5).
 """
@@ -34,8 +36,8 @@ def main() -> None:
     ap.add_argument("--mode", default="count", choices=["count", "noop"])
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--explain", default=None,
-                    help="write .explain('formatted') of the FIRST query "
-                         "to this path (no timing)")
+                    help="write .explain('formatted') of every query to "
+                         "DIR/{name}.txt (no timing)")
     args = ap.parse_args()
 
     from unmixing_spark.session import get_spark
@@ -64,17 +66,15 @@ def main() -> None:
      .mapInPandas(_noop_py, "id long").count())
 
     if args.explain:
-        name = names[0]
-        df = qs[name](spark, args.sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        os.makedirs(os.path.dirname(args.explain), exist_ok=True)
-        with open(args.explain, "w") as fh:
-            fh.write(f"-- {name} ({args.sf_dir})\n")
-            fh.write(plan)
-        print(f"wrote {args.explain} ({len(plan)} bytes)")
+        os.makedirs(args.explain, exist_ok=True)
+        for name in names:
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                qs[name](spark, args.sf_dir).explain("formatted")
+            path = os.path.join(args.explain, f"{name}.txt")
+            with open(path, "w") as fh:
+                fh.write(f"-- {name} ({args.sf_dir})\n{buf.getvalue()}")
+            print(f"wrote {path}")
         return
 
     timings: dict[str, list[float]] = {n: [] for n in names}

@@ -1,369 +1,135 @@
 #!/usr/bin/env python
 """N-vs-4N scaling evidence (BASELINE.json north rule).
 
-Runs the identical flagship job — pages → geocode → cell agg → tile
-assembly → FCLS abundance — at two local parallelism levels (default
-local[8] vs local[32]) on the same input, reports throughput at both plus
-scaling efficiency, and checks output equality across parallelism (the
-reference's 1-vs-2-process determinism test, tests.py:62-82, generalized).
+Runs one job at two local parallelism levels (default local[8] vs
+local[32]) on the same input, reports throughput at both plus scaling
+efficiency, and checks that the output is identical across parallelism
+(the reference's 1-vs-2-process determinism test, tests.py:62-82,
+generalized).
 
-The input is the sf dir's documents table deterministically replicated
-REPL× (each replica re-keyed through md5 so it lands elsewhere on the
-grid) — same data, bigger N, zero RNG.
+Five jobs are registered queries, run as ``__spark_entry__.queries()``
+hands them out (see ``JOBS``); ``media`` is
+q_video_sig_pairs' pipeline at REPL x its N_DOCS cap (``media_pairs``).
 
-Each level runs in a fresh subprocess (own JVM) so nothing is shared.
-Usage: python scripts/scaling_bench.py [sf_dir] [repl] [cores_small] [cores_big]
-Writes BENCH/BASELINE.md and prints one JSON line.
+The input is the sf dir's documents table copied REPL times, each copy
+re-keyed ``doc_id * REPL + rep`` (ids stay contiguous, so the synthetic
+link graph regenerates at full size) — same data, bigger N, zero RNG.
+``write_replica`` writes it once per invocation to ``REPLICA_DIR``, in
+its own process, before any level and outside every timed section.
+
+Each level runs in a fresh process (own JVM): one warm-up run of the job
+on the un-replicated sf dir, then the timed run over the replica — the
+job plus one action reading the output's row count and the sum of
+xxhash64 over all its columns (``level``). Levels alternate and each
+keeps its best wall over SCALING_REPEATS (default 2) runs; the outputs
+are identical when every run of both levels gives the same rows and hash.
+
+Usage: python scripts/scaling_bench.py [sf_dir] [repl] [cores_small] [cores_big] [job]
+Prints one JSON line; the fcls job also writes BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
 
 import json
+import multiprocessing
 import os
-import subprocess
 import sys
+import tempfile
+import time
+from concurrent.futures import ProcessPoolExecutor
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-WORKER = r'''
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from unmixing_spark.session import get_spark
-from unmixing_spark import pipeline
-from unmixing_spark.pagegen import BAND_NAMES, cell_raster_sql
-from unmixing_spark import dialect as D
-from unmixing_spark.raster.rasterize import assemble_tiles
-from unmixing_spark.lsma.mapper import unmix_tiles
-from pyspark.sql import functions as F
-
-cores = %(cores)d
-spark = get_spark(app_name="scaling-bench", master=f"local[{cores}]",
-                  shuffle_partitions=max(cores * 2, 8))
-spark.sparkContext.setLogLevel("ERROR")
-
-# deterministic replication: re-key each doc per replica (md5 re-geocodes)
-docs = spark.read.parquet("%(sf)s/documents.parquet")
-repl = %(repl)d
-# spread the single-file source across tasks BEFORE replication so the
-# expansion itself is parallel (a 1-partition source serializes the map side)
-replicated = (docs.repartition(cores * 3)
-              .crossJoin(F.broadcast(spark.range(repl).withColumnRenamed("id", "rep")))
-              .withColumn("doc_id", F.col("doc_id") * repl + F.col("rep"))
-              .drop("rep"))
-replicated.createOrReplaceTempView("documents")
-
-def run_pipeline():
-    cells = spark.sql(cell_raster_sql(D.SPARK))
-    tiles = assemble_tiles(cells, list(BAND_NAMES))
-    ab = unmix_tiles(tiles, pipeline.CANONICAL_ENDMEMBERS)
-    return ab.agg(F.count("*").alias("tiles"), F.sum("n_pixels").alias("px"),
-                  F.sum(F.round(F.col("mean_rmse"), 6)).alias("rmse_sum")).collect()[0]
-
-# warmup: identical plan on a small slice — JIT/codegen/python-worker spawn
-# happens here, so the timed section measures steady-state throughput (the
-# 100 TB-relevant quantity), not cold start
-docs.limit(200).createOrReplaceTempView("documents")
-run_pipeline()
-replicated.createOrReplaceTempView("documents")
-
-t0 = time.time()
-agg = run_pipeline()
-wall = time.time() - t0
-print(json.dumps({"cores": cores, "wall_s": round(wall, 2),
-                  "tiles": agg["tiles"], "pixels": agg["px"],
-                  "tiles_per_sec": round(agg["tiles"] / wall, 2),
-                  "rmse_sum": round(float(agg["rmse_sum"]), 4)}))
-spark.stop()
-'''
+REPLICA_DIR = os.path.join(tempfile.gettempdir(), "scaling_bench_replica")
+JOBS = {"fcls": "q_fcls_tiles", "sasma": "q_sasma_interpolation",
+        "dedup": "q_neardup_components", "graph": "q_link_pagerank",
+        "joins": "q_triangle_clustering", "media": "q_video_sig_pairs"}
 
 
-WORKER_SASMA = r'''
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from unmixing_spark.session import get_spark
-from unmixing_spark.pagegen import cell_raster_sql
-from unmixing_spark import dialect as D
-from unmixing_spark.raster.rasterize import assemble_tiles
-from unmixing_spark.sasma.focal import interpolate_endmember_tiles
-from unmixing_spark.sasma.kernels import kernel_idw_l1
-from pyspark.sql import functions as F
+def write_replica(spark, sf: str, repl: int, out: str) -> None:
+    """``{out}/documents.parquet``: every document of ``sf`` copied
+    ``repl`` times, re-keyed ``doc_id * repl + rep``. One task (and one
+    file) per copy, so the file count does not depend on the level."""
+    from pyspark.sql import functions as F
 
-cores = %(cores)d
-spark = get_spark(app_name="scaling-bench-sasma", master=f"local[{cores}]",
-                  shuffle_partitions=max(cores * 2, 8))
-spark.sparkContext.setLogLevel("ERROR")
-
-docs = spark.read.parquet("%(sf)s/documents.parquet")
-repl = %(repl)d
-replicated = (docs.repartition(cores * 3)
-              .crossJoin(F.broadcast(spark.range(repl).withColumnRenamed("id", "rep")))
-              .withColumn("doc_id", F.col("doc_id") * repl + F.col("rep"))
-              .drop("rep"))
-replicated.createOrReplaceTempView("documents")
-
-def run_pipeline():
-    # q_sasma_interpolation's exact job (queries/pipeline_q.py): cell
-    # raster -> 3-class label -> sparse tiles -> halo-exchanged
-    # normalized-convolution interpolation per (tile, class, band)
-    cells = (spark.sql(cell_raster_sql(D.SPARK))
-             .withColumn("cls", F.when(F.col("b1") >= 2.0, 2.0)
-                         .when(F.col("b4") >= 50.0, 1.0).otherwise(0.0)))
-    tiles = assemble_tiles(cells, ["b2", "b4", "cls"])
-    out = interpolate_endmember_tiles(
-        tiles, kernel_idw_l1(5), class_band=2, spectral_bands=[0, 1],
-        labels=[0, 1, 2])
-    per_row = out.select(
-        "tile_id",
-        F.round(F.aggregate("interp", F.lit(0.0),
-                            lambda a, v: a + F.coalesce(
-                                F.nanvl(v, F.lit(0.0)), F.lit(0.0))), 4)
-        .alias("s"))
-    return per_row.agg(F.count("*").alias("groups"),
-                       F.count_distinct("tile_id").alias("tiles"),
-                       F.sum("s").alias("checksum")).collect()[0]
-
-docs.limit(200).createOrReplaceTempView("documents")
-run_pipeline()                      # warmup: JIT + python workers
-replicated.createOrReplaceTempView("documents")
-
-t0 = time.time()
-agg = run_pipeline()
-wall = time.time() - t0
-print(json.dumps({"cores": cores, "wall_s": round(wall, 2),
-                  "tiles": agg["tiles"], "pixels": agg["groups"],
-                  "tiles_per_sec": round(agg["tiles"] / wall, 2),
-                  "rmse_sum": round(float(agg["checksum"]), 4)}))
-spark.stop()
-'''
-
-WORKER_DEDUP = r'''
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from unmixing_spark.session import get_spark
-from unmixing_spark import dialect as D
-from unmixing_spark.queries.text_q import _minhash_lsh
-from unmixing_spark.queries.scale_q import cc_labels
-from pyspark.sql import functions as F
-
-cores = %(cores)d
-spark = get_spark(app_name="scaling-bench-dedup", master=f"local[{cores}]",
-                  shuffle_partitions=max(cores * 2, 8))
-spark.sparkContext.setLogLevel("ERROR")
-
-docs = spark.read.parquet("%(sf)s/documents.parquet")
-repl = %(repl)d
-replicated = (docs.repartition(cores * 3)
-              .crossJoin(F.broadcast(spark.range(repl).withColumnRenamed("id", "rep")))
-              .withColumn("doc_id", F.col("doc_id") * repl + F.col("rep"))
-              .drop("rep"))
-replicated.createOrReplaceTempView("documents")
-
-def run_pipeline():
-    # q_neardup_components' exact job: MinHash signatures -> banded LSH
-    # candidate pairs -> adaptive connected-components labels. Replication
-    # keeps text identical across replicas, so replicas are exact LSH
-    # duplicates — components fuse across replicas, which is the WORST
-    # (densest) case for the label exchange.
-    pairs = spark.sql(_minhash_lsh(D.SPARK)).select("doc_a", "doc_b")
-    edges = (pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-             .unionAll(pairs.select(F.col("doc_b").alias("u"),
-                                    F.col("doc_a").alias("v"))))
-    edges = edges.localCheckpoint(eager=True)
-    n_edges = edges.count()
-    labels, rounds = cc_labels(edges, edges_checkpointed=True)
-    agg = labels.agg(F.count("*").alias("nodes"),
-                     F.sum("lbl").alias("lbl_sum"),
-                     F.sum((F.col("lbl") == F.col("id")).cast("long"))
-                     .alias("keepers")).collect()[0]
-    return {"nodes": int(agg["nodes"] or 0), "edges": n_edges,
-            "rounds": rounds,
-            "checksum": float((agg["lbl_sum"] or 0) + (agg["keepers"] or 0))}
-
-docs.limit(200).createOrReplaceTempView("documents")
-run_pipeline()                      # warmup: JIT + shingle/md5 codegen
-replicated.createOrReplaceTempView("documents")
-
-t0 = time.time()
-r = run_pipeline()
-wall = time.time() - t0
-print(json.dumps({"cores": cores, "wall_s": round(wall, 2),
-                  "tiles": r["nodes"], "pixels": r["edges"],
-                  "tiles_per_sec": round(r["nodes"] / wall, 2),
-                  "rounds": r["rounds"],
-                  "rmse_sum": round(r["checksum"], 4)}))
-spark.stop()
-'''
-
-WORKER_GRAPH = r'''
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from unmixing_spark.session import get_spark
-from unmixing_spark.queries.linkgraph_q import pagerank_over_documents
-from pyspark.sql import functions as F
-
-cores = %(cores)d
-spark = get_spark(app_name="scaling-bench-graph", master=f"local[{cores}]",
-                  shuffle_partitions=max(cores * 2, 8))
-spark.sparkContext.setLogLevel("ERROR")
-
-docs = spark.read.parquet("%(sf)s/documents.parquet")
-repl = %(repl)d
-# re-keying keeps doc_ids contiguous 0..N*repl-1 (the link CTE's
-# precondition), so the synthetic md5 graph REGENERATES at full size —
-# a genuinely repl-x bigger graph, not repl copies of the small one
-replicated = (docs.repartition(cores * 3)
-              .crossJoin(F.broadcast(spark.range(repl).withColumnRenamed("id", "rep")))
-              .withColumn("doc_id", F.col("doc_id") * repl + F.col("rep"))
-              .drop("rep"))
-replicated.createOrReplaceTempView("documents")
-
-def run_pipeline():
-    # q_link_pagerank's exact job: 20 fixed-point integer power-iteration
-    # rounds (one edge-keyed join + one dst-keyed sum + one spine join
-    # per round). The recurrence is pure bigint, so the checksum is
-    # BIT-identical across parallelism levels, not merely close.
-    pr = pagerank_over_documents(spark)
-    agg = pr.agg(F.count("*").alias("pages"),
-                 F.sum("rank_fp").alias("rank_sum"),
-                 F.max("max_delta").alias("delta")).collect()[0]
-    return {"pages": int(agg["pages"]), "rank_sum": int(agg["rank_sum"]),
-            "delta": int(agg["delta"])}
-
-docs.limit(200).createOrReplaceTempView("documents")
-run_pipeline()                      # warmup: JIT + join/agg codegen
-replicated.createOrReplaceTempView("documents")
-
-t0 = time.time()
-r = run_pipeline()
-wall = time.time() - t0
-print(json.dumps({"cores": cores, "wall_s": round(wall, 2),
-                  "tiles": r["pages"], "pixels": r["pages"] * 20,
-                  "tiles_per_sec": round(r["pages"] / wall, 2),
-                  "rmse_sum": float(r["rank_sum"] %% 10**12 + r["delta"])}))
-spark.stop()
-'''
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    reps = spark.range(0, repl, 1, repl).withColumnRenamed("id", "rep")
+    cols = [(F.col("doc_id") * repl + F.col("rep")).alias("doc_id")
+            if c == "doc_id" else F.col(c) for c in docs.columns]
+    (reps.crossJoin(F.broadcast(docs)).select(*cols)
+     .write.mode("overwrite").parquet(f"{out}/documents.parquet"))
 
 
-WORKER_JOINS = r"""
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from unmixing_spark.session import get_spark
-from unmixing_spark.queries.linkgraph_q import triangle_clustering_sql
-from unmixing_spark import dialect as D
-from pyspark.sql import functions as F
+def media_pairs(spark, d: str, repl: int):
+    """q_video_sig_pairs' pipeline over ``N_DOCS * repl`` documents: the
+    registered query caps its input at N_DOCS by design, so this is the
+    one job the harness builds itself. Doc ids below the cap each seed a
+    distinct video plus its planted drop+noise twin; ``planted`` marks
+    the twin pairs."""
+    from pyspark.sql import functions as F
 
-cores = %(cores)d
-spark = get_spark(app_name="scaling-bench-joins", master=f"local[{cores}]",
-                  shuffle_partitions=max(cores * 2, 8))
-spark.sparkContext.setLogLevel("ERROR")
+    from unmixing_spark.queries.media_q import N_DOCS, _gen_videos
+    from unmixing_spark.text.multimodal import dhash_pairs, video_signatures
 
-docs = spark.read.parquet("%(sf)s/documents.parquet")
-repl = %(repl)d
-# re-keying keeps doc_ids contiguous 0..N*repl-1 (the link CTE's
-# precondition), so the synthetic md5 graph REGENERATES at full size
-replicated = (docs.repartition(cores * 3)
-              .crossJoin(F.broadcast(spark.range(repl).withColumnRenamed("id", "rep")))
-              .withColumn("doc_id", F.col("doc_id") * repl + F.col("rep"))
-              .drop("rep"))
-replicated.createOrReplaceTempView("documents")
-
-def run_pipeline():
-    # q_triangle_clustering's exact SQL: the pure-relational family's
-    # representative (5 hash joins + 3 aggregations, degree-ordered
-    # wedges, no Python anywhere). All checksummed columns are bigint,
-    # so the cross-parallelism checksum is BIT-identical.
-    out = spark.sql(triangle_clustering_sql(D.SPARK))
-    agg = out.agg(F.count("*").alias("nodes"),
-                  F.sum("triangles").alias("tri_sum"),
-                  F.sum("degree").alias("deg_sum"),
-                  F.max("total_triangles").alias("total")).collect()[0]
-    return {"nodes": int(agg["nodes"]), "tri_sum": int(agg["tri_sum"]),
-            "deg_sum": int(agg["deg_sum"]), "total": int(agg["total"])}
-
-docs.limit(200).createOrReplaceTempView("documents")
-run_pipeline()                      # warmup: JIT + join/agg codegen
-replicated.createOrReplaceTempView("documents")
-
-t0 = time.time()
-r = run_pipeline()
-wall = time.time() - t0
-print(json.dumps({"cores": cores, "wall_s": round(wall, 2),
-                  "tiles": r["nodes"], "pixels": 3 * r["total"],
-                  "tiles_per_sec": round(r["nodes"] / wall, 2),
-                  "rmse_sum": float(r["tri_sum"] * 7 + r["deg_sum"])}))
-spark.stop()
-"""
-
-WORKER_MEDIA = r"""
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from unmixing_spark.session import get_spark
-from unmixing_spark.queries.media_q import _gen_videos
-from unmixing_spark.text.multimodal import dhash_pairs, video_signatures
-from pyspark.sql import functions as F
-
-cores = %(cores)d
-spark = get_spark(app_name="scaling-bench-media", master=f"local[{cores}]",
-                  shuffle_partitions=max(cores * 2, 8))
-spark.sparkContext.setLogLevel("ERROR")
-
-docs = spark.read.parquet("%(sf)s/documents.parquet")
-repl = %(repl)d
-# q_video_sig_pairs' exact job at repl x its N_DOCS=96: contiguous doc
-# ids seed DISTINCT deterministic videos (not copies), each with its
-# planted drop+noise re-encode twin — the Python-decode-heavy media
-# family (render + fake-codec decode + per-frame dHash in mapInPandas,
-# majority vote + banded hamming join in pure SQL). Embarrassingly
-# parallel map side; the join side's bucket rows stay O(videos x 8).
-base = (docs.select((F.col("doc_id") %% 96).alias("k")).distinct()
-        .crossJoin(F.broadcast(spark.range(repl).withColumnRenamed("id", "rep")))
-        .select((F.col("k") * repl + F.col("rep")).alias("doc_id"))
-        .repartition(cores * 3, "doc_id"))
-
-def run_pipeline():
+    base = (spark.read.parquet(f"{d}/documents.parquet").select("doc_id")
+            .where(F.col("doc_id") < N_DOCS * repl)
+            .repartition(3 * spark.sparkContext.defaultParallelism, "doc_id"))
     videos = base.mapInPandas(_gen_videos, "id long, video binary")
-    sigs = video_signatures(videos, every_n=2)
-    pairs = dhash_pairs(sigs, hash_col="vhash", max_hamming=7, n_bands=8)
-    agg = pairs.agg(
-        F.count("*").alias("pairs"),
-        F.sum("hamming").alias("ham_sum"),
-        F.sum(((F.col("id_a") %% 2 == 0)
-               & (F.col("id_b") == F.col("id_a") + 1)).cast("long"))
-        .alias("planted")).collect()[0]
-    return {"pairs": int(agg["pairs"] or 0), "ham": int(agg["ham_sum"] or 0),
-            "planted": int(agg["planted"] or 0)}
-
-docs.limit(8).select("doc_id").createOrReplaceTempView("_warm")
-warm = spark.table("_warm").mapInPandas(_gen_videos, "id long, video binary")
-video_signatures(warm, every_n=2).count()   # warmup: JIT + Arrow + codecs
-
-t0 = time.time()
-r = run_pipeline()
-wall = time.time() - t0
-n_videos = 2 * 96 * repl
-assert r["planted"] == 96 * repl, r
-print(json.dumps({"cores": cores, "wall_s": round(wall, 2),
-                  "tiles": n_videos, "pixels": r["pairs"],
-                  "tiles_per_sec": round(n_videos / wall, 2),
-                  "rmse_sum": float(r["ham"] * 13 + r["pairs"])}))
-spark.stop()
-"""
-
-WORKERS = {"fcls": WORKER, "sasma": WORKER_SASMA, "dedup": WORKER_DEDUP,
-           "graph": WORKER_GRAPH, "joins": WORKER_JOINS,
-           "media": WORKER_MEDIA}
+    pairs = dhash_pairs(video_signatures(videos, every_n=2),
+                        hash_col="vhash", max_hamming=7, n_bands=8)
+    return pairs.withColumn(
+        "planted", ((F.col("id_a") % 2 == 0)
+                    & (F.col("id_b") == F.col("id_a") + 1)).cast("int"))
 
 
-def run_level(sf: str, repl: int, cores: int, job: str = "fcls") -> dict:
-    code = WORKERS[job] % {"repo": REPO, "sf": sf, "repl": repl,
-                           "cores": cores}
-    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                         text=True, timeout=3600)
-    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
-    if not lines:
-        sys.stderr.write(out.stderr[-3000:])
-        raise RuntimeError(f"worker at local[{cores}] produced no result")
-    return json.loads(lines[-1])
+def level(spark, job: str, d: str, repl: int) -> dict:
+    """One timed run of ``job`` over the sf dir ``d`` (``repl`` copies of
+    the source): build the job's DataFrame, then one action reading its
+    row count and ``sum(xxhash64(all columns))`` as a decimal."""
+    import __spark_entry__ as ent
+    from pyspark.sql import functions as F
+
+    t0 = time.perf_counter()
+    df = (media_pairs(spark, d, repl) if job == "media"
+          else ent.queries()[JOBS[job]](spark, d))
+    extra = [F.sum("planted").alias("planted")] if job == "media" else []
+    row = df.agg(F.count("*").alias("rows"),
+                 F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))
+                 .alias("hash"), *extra).first()
+    wall = time.perf_counter() - t0
+    if job == "media":
+        from unmixing_spark.queries.media_q import N_DOCS
+        assert row["planted"] == N_DOCS * repl, row
+    return {"wall_s": round(wall, 2), "rows": row["rows"],
+            "hash": str(row["hash"]),
+            "rows_per_sec": round(row["rows"] / wall, 2)}
+
+
+def timed_level(spark, sf: str, replica: str, repl: int, job: str) -> dict:
+    level(spark, job, sf, 1)    # warm-up: JIT, codegen, Python workers
+    return {"cores": spark.sparkContext.defaultParallelism,
+            **level(spark, job, replica, repl)}
+
+
+def _with_session(cores: int, fn, *args):
+    from unmixing_spark.session import get_spark
+
+    spark = get_spark(app_name="scaling-bench", master=f"local[{cores}]",
+                      shuffle_partitions=max(cores * 2, 8))
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        return fn(spark, *args)
+    finally:
+        spark.stop()
+
+
+def in_fresh_process(cores: int, fn, *args):
+    """``fn(spark, *args)`` in a new interpreter with its own JVM (a
+    worker that dies raises BrokenProcessPool instead of hanging)."""
+    spawn = multiprocessing.get_context("spawn")
+    with ProcessPoolExecutor(1, mp_context=spawn) as pool:
+        return pool.submit(_with_session, cores, fn, *args).result()
 
 
 def main() -> None:
@@ -372,28 +138,28 @@ def main() -> None:
     small = int(sys.argv[3]) if len(sys.argv) > 3 else 8
     big = int(sys.argv[4]) if len(sys.argv) > 4 else 32
     job = sys.argv[5] if len(sys.argv) > 5 else "fcls"
+    if job not in JOBS:
+        raise SystemExit(f"job must be one of {sorted(JOBS)}")
 
-    # The sandbox host shows variable external load (loadavg ~10 with no
-    # local consumer), so single runs are noisy: alternate the two levels
-    # and keep the best wall per level.
+    in_fresh_process(big, write_replica, sf, repl, REPLICA_DIR)
+    # The host shows variable external load, so single runs are noisy:
+    # alternate the two levels and keep the best wall per level.
     repeats = int(os.environ.get("SCALING_REPEATS", "2"))
     runs_small, runs_big = [], []
     for _ in range(repeats):
-        runs_small.append(run_level(sf, repl, small, job))
-        runs_big.append(run_level(sf, repl, big, job))
+        for runs, cores in ((runs_small, small), (runs_big, big)):
+            runs.append(in_fresh_process(cores, timed_level, sf,
+                                         REPLICA_DIR, repl, job))
     r_small = min(runs_small, key=lambda r: r["wall_s"])
     r_big = min(runs_big, key=lambda r: r["wall_s"])
 
     factor = big / small
-    eff = (r_big["tiles_per_sec"] / r_small["tiles_per_sec"]) / factor
-    # checksum tolerance: both jobs sum per-row round() values, where only
-    # the double summation order varies with partitioning (~1e-12 relative)
-    same = (r_small["tiles"] == r_big["tiles"]
-            and r_small["pixels"] == r_big["pixels"]
-            and abs(r_small["rmse_sum"] - r_big["rmse_sum"]) < 1e-6)
+    eff = r_small["wall_s"] / r_big["wall_s"] / factor
+    same = len({(r["rows"], r["hash"]) for r in runs_small + runs_big}) == 1
     result = {
-        "metric": f"{job} tiles/sec scaling local[{small}] -> local[{big}]",
-        "sf_dir": sf, "replication": repl,
+        "metric": f"{job} ({JOBS[job]}) rows/sec scaling "
+                  f"local[{small}] -> local[{big}]",
+        "sf_dir": sf, "replication": repl, "replica_dir": REPLICA_DIR,
         "small": r_small, "big": r_big,
         "scaling_efficiency": round(eff, 3),
         "outputs_identical_across_parallelism": same,
@@ -413,27 +179,28 @@ def main() -> None:
         if cut != -1:
             tail = "\n" + old[cut:]
     with open(md_path, "w") as f:
-        f.write(f"""# BENCH — measured numbers (this sandbox)
+        f.write(f"""# BENCH — measured numbers ({os.cpu_count()}-CPU host)
 
-Flagship job: pages → md5 geocode → grid cell aggregation → dense tile
-assembly → FCLS abundance (q=3, p=6), on {sf} documents replicated
-{repl}x deterministically ({r_small['pixels']:,} unmixed pixels,
-{r_small['tiles']:,} tiles).
+Flagship job: q_fcls_tiles (pages → md5 geocode → grid cell aggregation
+→ tile assembly → FCLS abundance, q=3, p=6), on {sf} documents
+replicated {repl}x deterministically ({r_small['rows']:,} tiles).
 
-| parallelism | wall (s) | tiles/sec | pixels |
-|---|---|---|---|
-| local[{small}] | {r_small['wall_s']} | {r_small['tiles_per_sec']} | {r_small['pixels']:,} |
-| local[{big}] | {r_big['wall_s']} | {r_big['tiles_per_sec']} | {r_big['pixels']:,} |
+| parallelism | wall (s) | tiles/sec |
+|---|---|---|
+| local[{small}] | {r_small['wall_s']} | {r_small['rows_per_sec']} |
+| local[{big}] | {r_big['wall_s']} | {r_big['rows_per_sec']} |
 
 **Scaling efficiency ({small} → {big} cores, {factor:.0f}x): {eff:.3f}**
 (BASELINE.json target ≥ 0.8 from N to 4N)
 
-**Correctness under parallelism**: tiles, unmixed pixel counts, and
-round(6) per-tile RMSE sums identical across both levels: **{same}**
-(generalizes reference test tests.py:62-82).
+**Correctness under parallelism**: row count and the sum of xxhash64
+over every output column identical across all runs of both levels:
+**{same}** (generalizes reference test tests.py:62-82).
 
-Method: each level runs in a fresh JVM subprocess; identical input,
-identical code; shuffle partitions = 2x cores; AQE on.
+Method: the replica is written once, in its own process, before any
+level; each level runs in a fresh JVM subprocess, warms up on the
+un-replicated sf dir, then times the query plus one checksum action;
+shuffle partitions = max(2x cores, 8); AQE on.
 """ + tail)
 
 

@@ -151,25 +151,30 @@ def test_trustrank_empty_seed_set_raises(spark):
 def test_every_eager_checkpoint_goes_through_loops():
     """``loops.checkpoint`` is the engine's one eager checkpoint, so a
     checkpoint mode (e.g. a reliable ``checkpoint()`` for lossy
-    clusters) needs to touch only loops.py. The only other
-    ``localCheckpoint(`` calls allowed are the BPE trainer's two LAZY
-    ones (``text_q._bpe_train``): each round already runs a collect over
-    the new table, and an eager checkpoint would add a job per round."""
+    clusters) needs to touch only loops.py. The scan covers the engine,
+    ``scripts/`` and ``bench_extra.py`` (not the frozen ``perfbench/``).
+    The only other ``localCheckpoint(`` calls allowed are the BPE
+    trainer's two LAZY ones (``text_q._bpe_train``): each round already
+    runs a collect over the new table, and an eager checkpoint would add
+    a job per round."""
     import ast
     import pathlib
 
     root = pathlib.Path(loops.__file__).parent
+    repo = root.parent
     text_q = root / "queries" / "text_q.py"
     bpe = next(n for n in ast.walk(ast.parse(text_q.read_text()))
                if isinstance(n, ast.FunctionDef) and n.name == "_bpe_train")
     allowed, stray = [], []
-    for path in sorted(root.rglob("*.py")):
+    paths = [*root.rglob("*.py"), *(repo / "scripts").rglob("*.py"),
+             repo / "bench_extra.py"]
+    for path in sorted(paths):
         if path == root / "loops.py":
             continue
         for no, line in enumerate(path.read_text().splitlines(), 1):
             if "localCheckpoint(" not in line:
                 continue
-            site = f"{path.relative_to(root)}:{no}: {line.strip()}"
+            site = f"{path.relative_to(repo)}:{no}: {line.strip()}"
             if (path == text_q and bpe.lineno <= no <= bpe.end_lineno
                     and line.strip() == ".localCheckpoint())"):
                 allowed.append(site)

@@ -17,7 +17,8 @@ process pool and Arrow batches replace pickled chunks:
 
 Determinism: per-pixel independence ⇒ output invariant to partitioning
 (reference pins this for 1 vs 2 processes, tests.py:62-82; we pin it
-across parallelism levels in scripts/scaling_bench.py and
+across parallelism levels in scripts/scaling_bench.py's fcls job — exact
+row count and xxhash64 sum of q_fcls_tiles — and in
 tests/test_determinism.py).
 """
 

@@ -53,8 +53,9 @@ from unmixing_spark.queries import QuerySpec, register
 
 # Docs that contribute a media pair (one original + one planted twin
 # per modality): bounded so each registry query prices the pipeline
-# shape, not pure-Python codec throughput, at every sf. The scaling
-# worker (scripts/scaling_bench.py media job) is where volume grows.
+# shape, not pure-Python codec throughput, at every sf. Volume grows in
+# scripts/scaling_bench.py's media job (media_pairs), which runs this
+# pipeline over N_DOCS x the replication factor.
 N_DOCS = 96
 
 

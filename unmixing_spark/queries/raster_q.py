@@ -564,6 +564,13 @@ def _tile_pyramid(d: str) -> str:
         return (f"cast(round({col} * {D.dbl(1e6)}) as bigint)"
                 f" * cast(b1 as bigint)")
 
+    # the means round half-up in exact integer micro-units, then take one
+    # IEEE division: a double round(x, 6) differs between the dialects
+    # at the last digit
+    def mean(col: str) -> str:
+        q = D.idiv_i(f"2 * p.{col} + p.b1", "2 * p.b1", d)
+        return f"cast({q} as double) / {D.dbl(1e6)}"
+
     ctes = [f"""l0 AS (
       SELECT {grid.cell_to_ix('cell_id')} AS px,
              {grid.cell_to_iy('cell_id')} AS py,
@@ -596,12 +603,9 @@ def _tile_pyramid(d: str) -> str:
     base AS (SELECT level_pages AS total_pages FROM lvl_tot WHERE level = 0)
     SELECT p.level, p.px, p.py,
            p.b1 AS pages,
-           round(cast(p.s2 as double)
-                 / (cast(p.b1 as double) * {D.dbl(1e6)}), 6) AS mean_text_len,
-           round(cast(p.s4 as double)
-                 / (cast(p.b1 as double) * {D.dbl(1e6)}), 6) AS mean_tokens,
-           round(cast(p.s5 as double)
-                 / (cast(p.b1 as double) * {D.dbl(1e6)}), 6) AS mean_url_len,
+           {mean('s2')} AS mean_text_len,
+           {mean('s4')} AS mean_tokens,
+           {mean('s5')} AS mean_url_len,
            p.b6 AS latest_doy,
            t.level_pages AS level_pages,
            cast(CASE WHEN t.level_pages = b.total_pages THEN 1 ELSE 0 END

@@ -73,15 +73,6 @@ def copy_nodata(source: np.ndarray, target: np.ndarray,
     return out
 
 
-def mask_by_query(cube: np.ndarray, query: np.ndarray, invert: bool = False,
-                  nodata: float = NODATA) -> np.ndarray:
-    """Boolean query array → NoData stamp across bands (utils.py:757-793)."""
-    out = cube.copy()
-    q = query if not invert else ~query
-    out[:, q] = nodata
-    return out
-
-
 def subarray(cube: np.ndarray, filtered_value: float = NODATA,
              indices: bool = False):
     """(p, m, n) → (p, z) keeping pixels that are not `filtered_value` in

@@ -102,37 +102,3 @@ def assemble_tiles(cells: DataFrame, band_cols: list[str],
     return (cells.repartition(F.col("tile_id"))
             .sortWithinPartitions("tile_id", "cell_id")
             .mapInPandas(_build_batch, TILE_SCHEMA))
-
-
-def explode_tiles(tiles: DataFrame, band_names: list[str],
-                  grid: GridSpec = WORLD_GRID) -> DataFrame:
-    """Inverse pivot: tile rows → one row per occupied pixel
-    (cell_id, b1..bp) — the relational ravel_and_filter (lsma.py:769-796)."""
-    p = len(band_names)
-    tile = grid.tile
-    nxc, ntx = grid.nx, grid.ntx
-    schema = "cell_id long, " + ", ".join(f"{b} double" for b in band_names)
-
-    def _unravel(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            out_cells, out_bands = [], []
-            for tile_id, ridx, rbands in zip(pdf["tile_id"], pdf["idx"],
-                                             pdf["bands"]):
-                idx = np.asarray(ridx, dtype=np.int64)
-                vals = np.asarray(rbands, dtype=np.float64).reshape(p, len(idx))
-                keep = vals[0] != NODATA                 # band-0 filter rule
-                idx, vals = idx[keep], vals[:, keep]
-                ty, tx = divmod(int(tile_id), ntx)
-                r, c = idx // tile, idx % tile
-                out_cells.append((ty * tile + r) * nxc + (tx * tile + c))
-                out_bands.append(vals)
-            cells_all = np.concatenate(out_cells)
-            bands_all = np.concatenate(out_bands, axis=1)
-            out = {"cell_id": cells_all}
-            for bi, b in enumerate(band_names):
-                out[b] = bands_all[bi]
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(_unravel, schema)

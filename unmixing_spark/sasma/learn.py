@@ -52,16 +52,3 @@ def predict_cart(model, cells: DataFrame, feature_cols: list[str],
     return (model.transform(assembled)
             .withColumn(out_col, F.col("prediction").cast("int"))
             .drop("features", "rawPrediction", "probability", "prediction"))
-
-
-def percentile_cleanup(cells: DataFrame, score_col: str, class_col: str,
-                       target_class: int, keep_top: float = 0.1) -> DataFrame:
-    """Keep only the top-fraction of a class by a score — the notebook's
-    np.percentile cleanup of CART output (SASMA nb cell 26; SURVEY §2.5
-    W5) as a percent_rank window."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(class_col).orderBy(F.desc(score_col))
-    ranked = cells.withColumn("_pr", F.percent_rank().over(w))
-    return (ranked.filter((F.col(class_col) != target_class) |
-                          (F.col("_pr") <= keep_top)).drop("_pr"))

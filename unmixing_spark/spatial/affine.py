@@ -30,17 +30,3 @@ def pixel_to_xy(pixels: np.ndarray, gt: GT) -> np.ndarray:
     lon = px[:, 0] * gt[1] + gt[0]
     lat = px[:, 1] * gt[5] + gt[3]
     return np.stack([lon, lat], axis=1)
-
-
-def pixel_footprint(pixels: np.ndarray, gt: GT) -> np.ndarray:
-    """(N, 2) (col, row) → (N, 4, 2) square footprint corner rings
-    (CCW from upper-left) — point_to_pixel_geometry (lsma.py:695-741)
-    without the OGR/EPSG machinery."""
-    ul = pixel_to_xy(pixels, gt)
-    dx, dy = gt[1], gt[5]
-    corners = np.empty((len(ul), 4, 2))
-    corners[:, 0] = ul
-    corners[:, 1] = ul + [dx, 0.0]
-    corners[:, 2] = ul + [dx, dy]
-    corners[:, 3] = ul + [0.0, dy]
-    return corners
