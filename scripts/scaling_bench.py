@@ -25,7 +25,9 @@ keeps its best wall over SCALING_REPEATS (default 2) runs; the outputs
 are identical when every run of both levels gives the same rows and hash.
 
 Usage: python scripts/scaling_bench.py [sf_dir] [repl] [cores_small] [cores_big] [job]
-Prints one JSON line; the fcls job also writes BENCH/BASELINE.md.
+Prints one JSON line. The fcls job also writes its result as a markdown
+table to ``TABLE_PATH``, next to the replica, and names that path in the
+line's ``table`` field; nothing in the checkout is written.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 REPLICA_DIR = os.path.join(tempfile.gettempdir(), "scaling_bench_replica")
+TABLE_PATH = os.path.join(tempfile.gettempdir(), "scaling_bench_fcls.md")
 JOBS = {"fcls": "q_fcls_tiles", "sasma": "q_sasma_interpolation",
         "dedup": "q_neardup_components", "graph": "q_link_pagerank",
         "joins": "q_triangle_clustering", "media": "q_video_sig_pairs"}
@@ -156,6 +159,8 @@ def main() -> None:
     factor = big / small
     eff = r_small["wall_s"] / r_big["wall_s"] / factor
     same = len({(r["rows"], r["hash"]) for r in runs_small + runs_big}) == 1
+    table = write_table(sf, repl, small, big, r_small, r_big, eff, same) \
+        if job == "fcls" else None
     result = {
         "metric": f"{job} ({JOBS[job]}) rows/sec scaling "
                   f"local[{small}] -> local[{big}]",
@@ -163,22 +168,16 @@ def main() -> None:
         "small": r_small, "big": r_big,
         "scaling_efficiency": round(eff, 3),
         "outputs_identical_across_parallelism": same,
+        "table": table,
     }
     print(json.dumps(result))
-    if job != "fcls":
-        return      # non-flagship jobs: numbers are folded into BASELINE.md
-                    # by hand (the md template below is the flagship table)
 
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    md_path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    # preserve the hand-curated sections (methodology + headline notes)
-    tail = ""
-    if os.path.exists(md_path):
-        old = open(md_path).read()
-        cut = old.find("## Methodology notes")
-        if cut != -1:
-            tail = "\n" + old[cut:]
-    with open(md_path, "w") as f:
+
+def write_table(sf: str, repl: int, small: int, big: int, r_small: dict,
+                r_big: dict, eff: float, same: bool) -> str:
+    """The fcls result as a markdown table in TABLE_PATH, next to the
+    replica; folding it into BENCH/BASELINE.md is a manual step."""
+    with open(TABLE_PATH, "w") as f:
         f.write(f"""# BENCH — measured numbers ({os.cpu_count()}-CPU host)
 
 Flagship job: q_fcls_tiles (pages → md5 geocode → grid cell aggregation
@@ -190,7 +189,7 @@ replicated {repl}x deterministically ({r_small['rows']:,} tiles).
 | local[{small}] | {r_small['wall_s']} | {r_small['rows_per_sec']} |
 | local[{big}] | {r_big['wall_s']} | {r_big['rows_per_sec']} |
 
-**Scaling efficiency ({small} → {big} cores, {factor:.0f}x): {eff:.3f}**
+**Scaling efficiency ({small} → {big} cores, {big / small:.0f}x): {eff:.3f}**
 (BASELINE.json target ≥ 0.8 from N to 4N)
 
 **Correctness under parallelism**: row count and the sum of xxhash64
@@ -201,7 +200,8 @@ Method: the replica is written once, in its own process, before any
 level; each level runs in a fresh JVM subprocess, warms up on the
 un-replicated sf dir, then times the query plus one checksum action;
 shuffle partitions = max(2x cores, 8); AQE on.
-""" + tail)
+""")
+    return TABLE_PATH
 
 
 if __name__ == "__main__":

@@ -123,7 +123,36 @@ def test_flagship_batch_plans_without_recompute(spark):
     plan = buf.getvalue()
     assert "Scan ExistingRDD" in plan, plan
     assert "MapInPandas" not in plan, plan
+    assert "MapInArrow" not in plan, plan
     assert "Exchange" not in plan, plan
+
+
+def test_concurrent_batch_writes_keep_the_callers_job_group(spark, tmp_path):
+    """run_batched writes its batches on helper threads: every job the
+    commit runs is in the caller's job group, and there is at least one
+    write job per batch."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    batches = _flagship_batches(spark)
+
+    def marker(group: str) -> int:
+        sc.setJobGroup(group, "job id marker")
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setJobGroup("", "")
+        return max(tracker.getJobIdsForGroup(group))
+
+    first = marker("commit-before")
+    sc.setJobGroup("commit-probe", "concurrent batch writes")
+    try:
+        assert run_batched(spark, batches, str(tmp_path / "out")) == {0, 1, 2, 3}
+    finally:
+        sc.setJobGroup("", "")
+    last = marker("commit-after")
+    jobs = set(tracker.getJobIdsForGroup("commit-probe"))
+    assert jobs == set(range(first + 1, last)), (first, last, sorted(jobs))
+    assert len(jobs) >= 4
 
 
 def test_flagship_kill_and_resume_equals_uninterrupted(spark, tmp_path):

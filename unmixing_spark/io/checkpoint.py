@@ -18,7 +18,9 @@ A batch is COMMITTED iff its manifest exists; manifests are written via
 tmpfile + atomic rename AFTER the data lands, so a kill at any point
 leaves either a committed batch or an invisible partial one. Re-running a
 batch first deletes its data dir (idempotent overwrite), so resume is
-exactly-once per batch.
+exactly-once per batch. ``run_batched`` writes the uncommitted batches
+concurrently; each one still commits on its own: data first, then the
+manifest's rename.
 """
 
 from __future__ import annotations
@@ -27,7 +29,9 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,9 +55,11 @@ class BatchCheckpointer:
         """Idempotent write: overwrite the batch partition, then commit the
         manifest atomically (the Iceberg overwriteByFilter + snapshot-
         commit pattern). The manifest's ``wall_s`` is a monotonic
-        (``perf_counter``) duration of this write alone — over a
-        materialized frame that is the batch, not the upstream pipeline;
-        ``committed_at`` is wall-clock epoch seconds."""
+        (``perf_counter``) duration of this write — over a materialized
+        frame that is the batch, not the upstream pipeline. ``run_batched``
+        writes its batches concurrently, so ``wall_s`` also includes the
+        time the batch waited on the others for cores. ``committed_at`` is
+        wall-clock epoch seconds."""
         bdir = self._batch_dir(batch_id)
         if os.path.exists(bdir):
             shutil.rmtree(bdir)  # re-run of an uncommitted/failed batch
@@ -108,15 +114,29 @@ class BatchCheckpointer:
 def run_batched(spark: SparkSession, batches: dict[int, DataFrame],
                 out_dir: str, fail_after: int | None = None) -> set[int]:
     """Run a batch plan, skipping already-committed batches (resume).
-    `fail_after` simulates a mid-job kill for the resume test."""
+
+    The uncommitted batches are written concurrently, one thread each, so
+    their one-task write jobs share the cores instead of queueing; every
+    batch still commits on its own (data first, then its manifest's
+    atomic rename). The threads inherit the caller's local properties
+    (job group, description) and session tags, so the write jobs stay
+    attributed to the caller. `fail_after=n` simulates a mid-job kill for
+    the resume test: only the first n uncommitted batches are written,
+    then it raises."""
     ck = BatchCheckpointer(out_dir)
     done = ck.committed_batches()
-    processed = 0
-    for bid in sorted(batches):
-        if bid in done:
-            continue  # resume: skip committed work
-        ck.write_batch(bid, batches[bid], lineage={"stage": "tile_batch"})
-        processed += 1
-        if fail_after is not None and processed >= fail_after:
-            raise RuntimeError(f"simulated kill after {processed} batches")
+    todo = [bid for bid in sorted(batches) if bid not in done]
+    if fail_after is not None:
+        todo = todo[:fail_after]
+    if todo:
+        with ThreadPoolExecutor(max_workers=len(todo)) as pool:
+            # one wrapper per batch: each copies the caller's properties,
+            # so the concurrent writes never share one properties object
+            futures = [pool.submit(inheritable_thread_target(spark)(ck.write_batch),
+                                   bid, batches[bid], lineage={"stage": "tile_batch"})
+                       for bid in todo]
+            for f in futures:
+                f.result()
+    if fail_after is not None and len(todo) == fail_after:
+        raise RuntimeError(f"simulated kill after {len(todo)} batches")
     return ck.committed_batches()

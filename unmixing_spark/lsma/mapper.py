@@ -11,15 +11,21 @@ process pool and Arrow batches replace pickled chunks:
 - MESMA path (per-pixel endmembers, lsma.py:159-167): endmember tensors
   travel as a co-partitioned ``array<double>`` column next to the spectra —
   never collected, never broadcast.
-- Tile path: ``mapInPandas`` over tile rows (grouped per ``tile_id`` by
-  the sort-based ``mapInPandas`` of raster/rasterize.py), emitting one
-  abundance cube per tile — the unit the BASELINE throughput metric counts.
+- Tile path: ``mapInArrow`` over tile rows (grouped per ``tile_id`` by
+  the sort-based ``mapInArrow`` of raster/rasterize.py), emitting one
+  abundance cube per tile — the unit the BASELINE throughput metric
+  counts. Gather, scatter and the per-tile metrics are whole-array numpy
+  steps over the Arrow list buffers, with no per-tile Python.
 
-Determinism: per-pixel independence ⇒ output invariant to partitioning
-(reference pins this for 1 vs 2 processes, tests.py:62-82; we pin it
-across parallelism levels in scripts/scaling_bench.py's fcls job — exact
-row count and xxhash64 sum of q_fcls_tiles — and in
-tests/test_determinism.py).
+Determinism: the pixels are independent, but the batched FCLS solve is
+not bit-invariant to which pixels share an Arrow batch (the normal-
+equation products run over the whole batch). Results agree across
+partitionings after rounding to 10 decimals (tests/test_synthetic_scene.py
+splits one solve into two; the reference pins 1 vs 2 processes,
+tests.py:62-82) and are bit-identical only for an unchanged partitioning.
+scripts/scaling_bench.py's fcls job checks the row count and the xxhash64
+sum of q_fcls_tiles (whose mean_rmse is rounded to 4 decimals) across
+parallelism levels, as does tests/test_determinism.py.
 """
 
 from __future__ import annotations
@@ -28,11 +34,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from unmixing_spark.lsma.fcls import fcls_abundance, predict_spectra_from_abundance
 from unmixing_spark.raster import NODATA
+from unmixing_spark.raster.rasterize import band_major_positions, list_array, nan_as_null
 
 
 def unmix_cells(cells: DataFrame, endmembers: np.ndarray,
@@ -71,6 +78,100 @@ ABUNDANCE_TILE_SCHEMA = (
     "tile_id long, q int, m int, n int, idx array<int>, "
     "abundances array<double>, n_pixels long, mean_rmse double"
 )
+_ABUNDANCE_COLS = [f.split()[0] for f in ABUNDANCE_TILE_SCHEMA.split(", ")]
+
+
+def segment_sums(x: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """``x[s:s+n].sum()`` for every segment, bit for bit, without a
+    per-segment Python call. It follows numpy's own summation order: a
+    reduction runs over chunks of ``np.getbufsize()`` elements added in
+    sequence, and each chunk is a pairwise sum (halves split at a multiple
+    of 8 above 128 elements, eight interleaved accumulators from 8 to 128,
+    a plain running sum below 8). ``np.add.reduceat`` and ``np.bincount``
+    sum in plain sequence, so they differ from ``.sum()`` in the last bits
+    from 3 elements up."""
+    out = np.full(len(lens), -0.0)
+    buf = np.getbufsize()
+    chunked = lens > buf
+    if chunked.any():
+        s, n = starts[chunked], lens[chunked]
+        last = n - (n - 1) // buf * buf
+        out[chunked] = segment_sums(x, s, n - last) + segment_sums(x, s + n - last, last)
+    split = (lens > 128) & ~chunked
+    if split.any():
+        s, n = starts[split], lens[split]
+        half = n // 2 - n // 2 % 8
+        out[split] = segment_sums(x, s, half) + segment_sums(x, s + half, n - half)
+    block = (lens >= 8) & (lens <= 128)
+    if block.any():
+        s, n = starts[block], lens[block]
+        whole = n - n % 8
+        r = x[s[:, None] + np.arange(8)]
+        for i in range(8, 128, 8):
+            more = i < whole
+            r[more] += x[s[more, None] + i + np.arange(8)]
+        res = (r[:, 0] + r[:, 1] + (r[:, 2] + r[:, 3])) + \
+            (r[:, 4] + r[:, 5] + (r[:, 6] + r[:, 7]))
+        for j in range(7):
+            more = whole + j < n
+            res[more] += x[s[more] + whole[more] + j]
+        out[block] = res
+    for j in range(7):
+        more = (lens < 8) & (lens > j)
+        out[more] += x[starts[more] + j]
+    return out
+
+
+def unmix_tile_batches(batches: Iterator[pa.RecordBatch], endmembers: np.ndarray,
+                       delta: float | None = None) -> Iterator[pa.RecordBatch]:
+    """Sparse tile batches (tile_id, p, m, n, idx, bands) → abundance tile
+    batches, one batched FCLS solve per batch.
+
+    Works on the flat ``values``/``offsets`` buffers of the list columns:
+    one index array gathers every tile's band-major block into an (N, p)
+    pixel matrix, one ``fcls_abundance`` call solves the valid pixels, one
+    index array scatters the abundances back to band-major (q, n_occ)
+    blocks, and the per-tile pixel counts and mean RMSEs are segment
+    reductions (``segment_sums`` keeps numpy's summation order, so a
+    tile's mean equals ``rmse[tile].mean()`` bit for bit)."""
+    E = np.ascontiguousarray(np.asarray(endmembers, dtype=np.float64))
+    q = E.shape[0]
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        p = int(rb.column("p")[0].as_py())
+        idx, bands = rb.column("idx"), rb.column("bands")
+        offsets = idx.offsets.to_numpy() - idx.offsets[0].as_py()
+        counts, n = np.diff(offsets), int(offsets[-1])
+        # a tile's bands list is its (p, n_occ) block, so the batch's bands
+        # are one band-major run starting at the first list offset
+        X = np.ascontiguousarray(bands.values.to_numpy(zero_copy_only=False)[
+            bands.offsets[0].as_py() + band_major_positions(counts, p)].T)
+        valid = X[:, 0] != NODATA
+        A_all = np.full((n, q), NODATA)
+        rmse = np.zeros(0)
+        if valid.any():
+            A = fcls_abundance(X[valid], E, delta=delta)
+            A_all[valid] = A
+            R = predict_spectra_from_abundance(A, E)
+            rmse = np.sqrt(np.mean((R - X[valid]) ** 2, axis=1))
+        flat = np.empty(n * q)
+        flat[band_major_positions(counts, q).ravel()] = A_all.T.ravel()
+        # per-tile valid counts and mean RMSE: rmse holds the valid pixels
+        # in tile order, so each tile is one contiguous segment of it
+        cv = np.r_[0, np.cumsum(valid)][offsets]
+        n_px = np.diff(cv)
+        mean_rmse = np.full(len(counts), np.nan)
+        hit = n_px > 0
+        mean_rmse[hit] = segment_sums(rmse, cv[:-1][hit], n_px[hit]) / n_px[hit]
+        yield pa.RecordBatch.from_arrays([
+            rb.column("tile_id"),
+            pa.array(np.full(rb.num_rows, q, np.int32)),
+            rb.column("m"), rb.column("n"), idx,
+            list_array(q * offsets, nan_as_null(flat)),
+            pa.array(n_px, pa.int64()),
+            nan_as_null(mean_rmse),
+        ], names=_ABUNDANCE_COLS)
 
 
 def unmix_tiles(tiles: DataFrame, endmembers: np.ndarray,
@@ -79,50 +180,16 @@ def unmix_tiles(tiles: DataFrame, endmembers: np.ndarray,
     tile (same sparse layout, q bands) + per-tile metrics. Pixels whose
     band-0 value is NODATA are filtered (lsma.py:794 rule).
 
-    Vectorized across the whole Arrow batch: every tile's valid pixels
-    gather into ONE (N, p) matrix, one batched FCLS solve, scatter back.
-    Per-pixel independence makes the batching exact (and partition-
-    invariant — the reference's determinism test, tests.py:62-82)."""
-    E = np.ascontiguousarray(np.asarray(endmembers, dtype=np.float64))
-    q = E.shape[0]
-
-    def _unmix(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            p = int(pdf["p"].iloc[0])
-            counts = np.array([len(i) for i in pdf["idx"]])
-            X = np.concatenate([np.asarray(b, dtype=np.float64).reshape(p, -1).T
-                                for b in pdf["bands"]]) if counts.sum() else \
-                np.zeros((0, p))
-            valid = X[:, 0] != NODATA if len(X) else np.zeros(0, bool)
-            A_all = np.full((len(X), q), NODATA, dtype=np.float64)
-            rmse_all = np.zeros(len(X))
-            if valid.any():
-                A = fcls_abundance(X[valid], E, delta=delta)
-                A_all[valid] = A
-                R = predict_spectra_from_abundance(A, E)
-                rmse_all[valid] = np.sqrt(np.mean((R - X[valid]) ** 2, axis=1))
-            ends = np.cumsum(counts)
-            starts = ends - counts
-            abund, n_px, mean_rmse = [], [], []
-            for s, e in zip(starts, ends):
-                abund.append(A_all[s:e].T.ravel())          # (q, n_occ) band-major
-                v = valid[s:e]
-                n_px.append(int(v.sum()))
-                mean_rmse.append(float(rmse_all[s:e][v].mean()) if v.any() else float("nan"))
-            yield pd.DataFrame({
-                "tile_id": pdf["tile_id"].to_numpy(),
-                "q": np.full(len(pdf), q, dtype=np.int32),
-                "m": pdf["m"].to_numpy().astype(np.int32),
-                "n": pdf["n"].to_numpy().astype(np.int32),
-                "idx": pdf["idx"],
-                "abundances": abund,
-                "n_pixels": np.asarray(n_px, dtype=np.int64),
-                "mean_rmse": mean_rmse,
-            })
-
-    return tiles.mapInPandas(_unmix, ABUNDANCE_TILE_SCHEMA)
+    Vectorized across the whole Arrow batch (``unmix_tile_batches``):
+    every tile's valid pixels gather into ONE (N, p) matrix, one batched
+    FCLS solve, scatter back. The pixels are independent, but the batched
+    solve is not bit-invariant to which pixels share a batch: results
+    agree across partitionings after rounding to 10 decimals
+    (tests/test_synthetic_scene.py) and are bit-identical only for an
+    unchanged partitioning."""
+    return tiles.mapInArrow(
+        lambda it: unmix_tile_batches(it, endmembers, delta),
+        ABUNDANCE_TILE_SCHEMA)
 
 
 def unmix_cells_mesma(cells: DataFrame, band_cols: list[str],

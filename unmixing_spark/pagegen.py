@@ -105,16 +105,21 @@ def cell_raster_sql(dialect: str, documents: str = "documents",
     """The rasterize step as a relational aggregate: one row per occupied
     cell, 6 'band' statistics. This is the long/sparse form of the raster
     cube (SURVEY.md §1.5) — tile assembly to sparse tile rows happens in
-    raster/rasterize.py via a sort-based mapInPandas."""
+    raster/rasterize.py via a sort-based mapInArrow."""
     tokens = f"size({D.ws_split('text', dialect)})" if dialect == D.SPARK \
         else f"len({D.ws_split('text', dialect)})"
+    # Spark plans count(DISTINCT) as a second aggregation with its own
+    # exchange; collect_set keeps the cell aggregate in one. Both skip
+    # NULLs, and lang has a handful of values, so the sets stay small.
+    langs = "size(collect_set(lang))" if dialect == D.SPARK \
+        else "count(distinct lang)"
     doy = D.idiv(f"warc_epoch - {EPOCH_2025}", "86400")
     return f"""
     SELECT cell_id,
            cast(min(tile_id) as bigint)              AS tile_id,
            cast(count(*) as double)                  AS b1,
            round(avg(length(text)), 6)               AS b2,
-           cast(count(distinct lang) as double)      AS b3,
+           cast({langs} as double)      AS b3,
            round(avg({tokens}), 6)                   AS b4,
            round(avg(length(url)), 6)                AS b5,
            cast(max({doy}) as double)                AS b6

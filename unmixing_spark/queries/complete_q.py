@@ -234,6 +234,14 @@ def _crosscrs_regrid(d: str) -> str:
     # (flaky value-hash gate). Micrometer quantization keeps the binning a
     # pure function of the (identical to <1e-6 m) projected values.
     eq, nq = "round(easting, 6)", "round(northing, 6)"
+    # Both sides' keys are non-NULL (zone pages and occupied cells), so
+    # `<=>` joins exactly as `=`. In Spark, `=` makes Catalyst infer
+    # isnotnull(ei, ni) on src and push it through the aggregate and the
+    # UTM projections: the pushed filter is the whole UTM tree with every
+    # column reference expanded (170k characters), which overflows the
+    # 64 KB method limit and drops the scan stage out of whole-stage
+    # codegen. `<=>` infers no such filter.
+    eq_op = "<=>" if d == D.SPARK else "="
     return f"""
     WITH src AS (
       SELECT {D.idiv(eq, cell_m)} AS ei,
@@ -250,7 +258,7 @@ def _crosscrs_regrid(d: str) -> str:
       FROM ({tgt})
     )
     SELECT t.cell_id, t.ei, t.ni, s.v AS text_len_resampled, s.src_pages
-    FROM tgt t LEFT JOIN src s ON t.ei = s.ei AND t.ni = s.ni
+    FROM tgt t LEFT JOIN src s ON t.ei {eq_op} s.ei AND t.ni {eq_op} s.ni
     """
 
 

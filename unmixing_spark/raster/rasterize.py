@@ -9,15 +9,20 @@ materialized transiently inside kernels that need spatial structure
 occupancy the dense form is 1000x larger and its Arrow serialization
 dominated the whole pipeline (measured: 118s of a 160s run at 23k tiles).
 
-Grouping is sort-based inside mapInPandas (one Python call per Arrow
+Grouping is sort-based inside ``mapInArrow`` (one Python call per Arrow
 batch) rather than applyInPandas (one call per tile): at millions of
-small tiles the per-group overhead dominates otherwise.
+small tiles the per-group overhead dominates otherwise. The batch is
+assembled with whole-array numpy steps straight from the Arrow buffers —
+no pandas frame and no per-tile Python loop — and the list columns are
+built from one offsets array each.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +35,7 @@ TILE_SCHEMA = (
     "tile_id long, x0 double, y0 double, dx double, dy double, "
     "p int, m int, n int, idx array<int>, bands array<double>"
 )
+_TILE_COLS = [f.split()[0] for f in TILE_SCHEMA.split(", ")]
 
 
 def tile_to_dense(row) -> np.ndarray:
@@ -43,62 +49,92 @@ def tile_to_dense(row) -> np.ndarray:
     return arr.reshape(p, m, n)
 
 
+def nan_as_null(values: np.ndarray) -> pa.Array:
+    """A double array with NaN stored as null — the pandas-to-Arrow rule
+    (``from_pandas``) the tile columns have always been written under."""
+    nan = np.isnan(values)
+    return pa.array(values, pa.float64(), mask=nan if nan.any() else None)
+
+
+def list_array(offsets: np.ndarray, values: pa.Array) -> pa.ListArray:
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
+
+
+def band_major_positions(counts: np.ndarray, width: int) -> np.ndarray:
+    """(width, N) positions of N pixels in the concatenated band-major
+    blocks of tiles holding ``counts`` pixels each: pixel i of a tile that
+    starts at pixel s and holds c pixels keeps band b at width*s + b*c +
+    (i - s)."""
+    n = int(counts.sum())
+    seg_start = np.repeat(np.cumsum(counts) - counts, counts)
+    seg_count = np.repeat(counts, counts)
+    return (width - 1) * seg_start + np.arange(n) + \
+        np.arange(width)[:, None] * seg_count
+
+
+def assemble_batches(batches: Iterator[pa.RecordBatch], band_cols: list[str],
+                     grid: GridSpec = WORLD_GRID) -> Iterator[pa.RecordBatch]:
+    """Cell batches sorted by ``(tile_id, cell_id)`` → sparse tile batches.
+
+    Inside one tile the cell order IS the local-index order (cell_id =
+    iy * nx + ix, lidx = (iy % tile) * tile + ix % tile), so a tile is a
+    contiguous run that needs no sort: tile starts come from one
+    ``flatnonzero`` over the sorted tile ids, and ``lidx`` and the
+    band-major scatter positions from one vectorized step each. The
+    trailing tile of a batch is carried into the next, which may continue
+    it."""
+    carry = None
+    for rb in batches:
+        cols = (rb.column("tile_id").to_numpy(zero_copy_only=False),
+                rb.column("cell_id").to_numpy(zero_copy_only=False),
+                np.stack([rb.column(bc).cast(pa.float64())
+                          .to_numpy(zero_copy_only=False) for bc in band_cols])
+                if rb.num_rows else np.zeros((len(band_cols), 0)))
+        if carry is not None:
+            cols = tuple(np.concatenate([c, x], axis=-1)
+                         for c, x in zip(carry, cols))
+        if not len(cols[0]):
+            carry = None
+            continue
+        cut = int(np.searchsorted(cols[0], cols[0][-1]))
+        carry = tuple(c[..., cut:] for c in cols)
+        if cut:
+            yield _assemble(*(c[..., :cut] for c in cols), grid)
+    if carry is not None:
+        yield _assemble(*carry, grid)
+
+
+def _assemble(tids: np.ndarray, cells: np.ndarray, bands: np.ndarray,
+              grid: GridSpec) -> pa.RecordBatch:
+    """Whole tiles, sorted by (tile_id, cell_id), → one tile batch."""
+    (p, n), tile, deg = bands.shape, grid.tile, grid.deg
+    starts = np.flatnonzero(np.r_[True, tids[1:] != tids[:-1]])
+    counts = np.diff(np.r_[starts, n])
+    uniq = tids[starts]
+    lidx = ((cells // grid.nx) % tile) * tile + (cells % grid.nx) % tile
+    flat = np.empty(p * n)
+    flat[band_major_positions(counts, p).ravel()] = bands.ravel()
+    ty, tx = np.divmod(uniq, grid.ntx)
+    k = len(uniq)
+    offsets = np.r_[starts, n]
+    return pa.RecordBatch.from_arrays([
+        pa.array(uniq, pa.int64()),
+        pa.array(-180.0 + (tx * tile).astype(np.float64) * deg),
+        pa.array(90.0 - (ty * tile).astype(np.float64) * deg),
+        pa.array(np.full(k, deg)),
+        pa.array(np.full(k, -deg)),
+        pa.array(np.full(k, p, np.int32)),
+        pa.array(np.full(k, tile, np.int32)),
+        pa.array(np.full(k, tile, np.int32)),
+        list_array(offsets, pa.array(lidx.astype(np.int32))),
+        list_array(p * offsets, nan_as_null(flat)),
+    ], names=_TILE_COLS)
+
+
 def assemble_tiles(cells: DataFrame, band_cols: list[str],
                    grid: GridSpec = WORLD_GRID) -> DataFrame:
     """cells (cell_id, tile_id, b1..bp) → sparse tile rows."""
-    p = len(band_cols)
-    tile = grid.tile
-    nxc, ntx, deg = grid.nx, grid.ntx, grid.deg
-
-    def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        tids = pdf["tile_id"].to_numpy()
-        order = np.argsort(tids, kind="stable")
-        tids = tids[order]
-        cells_np = pdf["cell_id"].to_numpy()[order]
-        bands_np = np.stack([pdf[bc].to_numpy(dtype=np.float64)[order]
-                             for bc in band_cols])
-        uniq = np.unique(tids)
-        bounds = np.searchsorted(tids, uniq)
-        rows = {k: [] for k in ("tile_id", "x0", "y0", "dx", "dy",
-                                "p", "m", "n", "idx", "bands")}
-        for gi, tid in enumerate(uniq):
-            lo = bounds[gi]
-            hi = bounds[gi + 1] if gi + 1 < len(uniq) else len(tids)
-            iy = cells_np[lo:hi] // nxc
-            ix = cells_np[lo:hi] % nxc
-            lidx = (iy % tile) * tile + (ix % tile)
-            o = np.argsort(lidx)
-            ty, tx = divmod(int(tid), ntx)
-            rows["tile_id"].append(int(tid))
-            rows["x0"].append(-180.0 + tx * tile * deg)
-            rows["y0"].append(90.0 - ty * tile * deg)
-            rows["dx"].append(deg)
-            rows["dy"].append(-deg)
-            rows["p"].append(p)
-            rows["m"].append(tile)
-            rows["n"].append(tile)
-            rows["idx"].append(lidx[o].astype(np.int32))
-            rows["bands"].append(bands_np[:, lo:hi][:, o].ravel())
-        return pd.DataFrame(rows)
-
-    def _build_batch(it):
-        # carry the trailing tile group across batch boundaries
-        carry = None
-        for pdf in it:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            tids = pdf["tile_id"].to_numpy()
-            keep = tids != tids[-1]
-            carry = pdf[~keep]
-            pdf = pdf[keep]
-            if len(pdf):
-                yield _assemble(pdf)
-        if carry is not None and len(carry):
-            yield _assemble(carry)
-
     return (cells.repartition(F.col("tile_id"))
             .sortWithinPartitions("tile_id", "cell_id")
-            .mapInPandas(_build_batch, TILE_SCHEMA))
+            .mapInArrow(lambda it: assemble_batches(it, band_cols, grid),
+                        TILE_SCHEMA))
