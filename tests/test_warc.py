@@ -11,6 +11,43 @@ from tests.conftest import SF_SMALL
 from unmixing_spark.io.warc import CRLF, build_record, parse_warc
 from unmixing_spark.queries import registry
 
+# sha256 of the decompressed record per (kind, url, payload), generated
+# from the three per-format builders before they became one table-driven
+# builder: any byte the record layout moves fails here
+_PIN_URLS = ("https://src0.example.com/en/42",
+             "https://b\u00fccher.example.de/stra\u00dfe?q=\u00fc")
+_PIN_PAYLOADS = ("<html><body>hello</body></html>",
+                 '{"Envelope":{"WARC-Date":1735689600}} h\u00e9llo w\u00f6rld')
+RECORD_SHA256 = {
+    "warc": ["742c5e5de9f280ddeb4b8d33ea559b3be6af591b6712ff6c04bd44051a8067cc",
+             "2945e49206303b25acea6ba8a2d604a093ea002a12f3c5ac289b04abf1bacb5f",
+             "1a2853044356ba827feccd7e9f6b57520aaffd2fd8d7cdc48b7ce5d56c510a11",
+             "dfd970849aac483288fbe53a4c4ae26b0c7c598bdd4c037202c24f2670cf5a8d"],
+    "wet": ["ab51ec23861344e9d601ad2abaa30ba76072086e1e1149996a50945d950cb72b",
+            "93f953552ddfb221c83ca084dc033ee1c46e1f24bb996490bf66b66f8541aa0c",
+            "3d233dbab8ebfa3ba6cefd9a3b5bd7ed0b558e0f7891d31712294e8bde636c7d",
+            "ffed92c59f47cca5b78797a9232d3db19869803f5be288581b139f746398b328"],
+    "wat": ["52e16b53a0112b935c2e3e5d148e42bdcaf5545a5a23d2180fe155e9135adc76",
+            "9edca8f5b9d281f3dd450f11e2d42fbd9ce7faed56d093129d09874f579b36fd",
+            "a9cfa0db160538006afcb18a23bbe9c81b344c7e4e6c32eb229b88238052f77f",
+            "8821bb04d7806ff31d9729b6dbbed051a5880c69779868b4e2e822db7627aba2"],
+}
+
+
+@pytest.mark.parametrize("kind", sorted(RECORD_SHA256))
+def test_record_bytes_pinned(kind):
+    import hashlib
+
+    from unmixing_spark.io import warc
+
+    build = {"warc": warc.build_record,
+             "wet": warc.build_conversion_record,
+             "wat": warc.build_metadata_record}[kind]
+    got = [hashlib.sha256(gzip.decompress(
+        build(url, 1735689600, payload.encode()))).hexdigest()
+        for url in _PIN_URLS for payload in _PIN_PAYLOADS]
+    assert got == RECORD_SHA256[kind]
+
 
 def test_record_roundtrip_plain_and_gzip():
     url = "https://src0.example.com/en/42"
