@@ -65,25 +65,19 @@ def write_replica(spark, sf: str, repl: int, out: str) -> None:
 
 
 def media_pairs(spark, d: str, repl: int):
-    """q_video_sig_pairs' pipeline over ``N_DOCS * repl`` documents: the
-    registered query caps its input at N_DOCS by design, so this is the
-    one job the harness builds itself. Doc ids below the cap each seed a
-    distinct video plus its planted drop+noise twin; ``planted`` marks
-    the twin pairs."""
+    """q_video_sig_pairs' pipeline (``media_q.twin_pairs``) over
+    ``N_DOCS * repl`` documents: the registered query caps its input at
+    N_DOCS by design, so this is the one job that hands the pipeline its
+    own base. Doc ids below the cap each seed a distinct video plus its
+    planted drop+noise twin; ``planted`` marks the twin pairs."""
     from pyspark.sql import functions as F
 
-    from unmixing_spark.queries.media_q import N_DOCS, _gen_videos
-    from unmixing_spark.text.multimodal import dhash_pairs, video_signatures
+    from unmixing_spark.queries.media_q import N_DOCS, twin_pairs
 
     base = (spark.read.parquet(f"{d}/documents.parquet").select("doc_id")
             .where(F.col("doc_id") < N_DOCS * repl)
             .repartition(3 * spark.sparkContext.defaultParallelism, "doc_id"))
-    videos = base.mapInPandas(_gen_videos, "id long, video binary")
-    pairs = dhash_pairs(video_signatures(videos, every_n=2),
-                        hash_col="vhash", max_hamming=7, n_bands=8)
-    return pairs.withColumn(
-        "planted", ((F.col("id_a") % 2 == 0)
-                    & (F.col("id_b") == F.col("id_a") + 1)).cast("int"))
+    return twin_pairs(base, "video")
 
 
 def level(spark, job: str, d: str, repl: int) -> dict:

@@ -30,6 +30,9 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     from unmixing_spark.session import get_spark
-    s = get_spark(app_name="unmixing-tests", master="local[8]", shuffle_partitions=8)
+    # sf0.001 inputs need no 8g heap (the get_spark default): with one,
+    # the tests' JVM grew to 7-8 GB resident
+    s = get_spark(app_name="unmixing-tests", master="local[8]", shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": "4g"})
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -2,7 +2,8 @@
 queries over its replica: a 2x replica of sf0.001 written by the
 harness's replica writer doubles the documents, and the graph job's level
 body reports the row count and xxhash64 sum of a direct q_link_pagerank
-run over the same replica."""
+run over the same replica. The media job runs q_video_sig_pairs'
+pipeline on its own base, which at one copy is the query's own input."""
 
 from __future__ import annotations
 
@@ -38,3 +39,17 @@ def test_graph_level_runs_the_registered_query_over_the_replica(
     direct = ent.queries()["q_link_pagerank"](spark, replica)
     hashes = direct.select(F.xxhash64(*direct.columns).alias("h")).collect()
     assert r["hash"] == str(sum(row["h"] for row in hashes))
+
+
+def test_media_level_equals_the_registered_video_query(spark):
+    from unmixing_spark.queries.media_q import N_DOCS
+
+    sb = _harness()
+    r = sb.level(spark, "media", SF_SMALL, 1)
+
+    direct = ent.queries()["q_video_sig_pairs"](spark, SF_SMALL)
+    rows = direct.select(F.xxhash64(*direct.columns).alias("h"),
+                         "planted").collect()
+    assert r["rows"] == len(rows)
+    assert r["hash"] == str(sum(row["h"] for row in rows))
+    assert sum(row["planted"] for row in rows) == N_DOCS

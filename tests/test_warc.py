@@ -8,7 +8,8 @@ import gzip
 import pytest
 
 from tests.conftest import SF_SMALL
-from unmixing_spark.io.warc import CRLF, build_record, parse_warc
+from unmixing_spark.io.warc import (CRLF, build_record, parse_records,
+                                    read_records, write_records)
 from unmixing_spark.queries import registry
 
 # sha256 of the decompressed record per (kind, url, payload), generated
@@ -38,37 +39,37 @@ RECORD_SHA256 = {
 def test_record_bytes_pinned(kind):
     import hashlib
 
-    from unmixing_spark.io import warc
-
-    build = {"warc": warc.build_record,
-             "wet": warc.build_conversion_record,
-             "wat": warc.build_metadata_record}[kind]
     got = [hashlib.sha256(gzip.decompress(
-        build(url, 1735689600, payload.encode()))).hexdigest()
+        build_record(kind, url, 1735689600, payload.encode()))).hexdigest()
         for url in _PIN_URLS for payload in _PIN_PAYLOADS]
     assert got == RECORD_SHA256[kind]
+
+
+def _plain(kind, url, epoch, payload):
+    """A record as plain (not gzipped) bytes."""
+    return gzip.decompress(build_record(kind, url, epoch, payload))
 
 
 def test_record_roundtrip_plain_and_gzip():
     url = "https://src0.example.com/en/42"
     html = b"<html><body>hello</body></html>"
-    for gz in (False, True):
-        rec = build_record(url, 1735689600, html, gzip_record=gz)
-        [(u, ep, h)] = list(parse_warc(rec))
+    for rec in (_plain("warc", url, 1735689600, html),
+                build_record("warc", url, 1735689600, html)):
+        [(u, ep, h)] = list(parse_records("warc", rec))
         assert (u, ep, h) == (url, 1735689600, html)
     # per-record gzip members concatenate into a multi-member stream
     stream = b"".join(
-        build_record(f"{url}?i={i}", 1735689600 + i, html + bytes([48 + i]))
+        build_record("warc", f"{url}?i={i}", 1735689600 + i,
+                     html + bytes([48 + i]))
         for i in range(3))
-    recs = list(parse_warc(stream))
+    recs = list(parse_records("warc", stream))
     assert len(recs) == 3
     assert [r[1] for r in recs] == [1735689600, 1735689601, 1735689602]
     assert all(r[2].endswith(bytes([48 + i])) for i, r in enumerate(recs))
 
 
 def test_record_is_spec_shaped():
-    rec = build_record("https://x.example.com/p", 1735689600, b"<html/>",
-                       gzip_record=False)
+    rec = _plain("warc", "https://x.example.com/p", 1735689600, b"<html/>")
     head, _, rest = rec.partition(CRLF + CRLF)
     lines = head.split(CRLF)
     assert lines[0] == b"WARC/1.0"
@@ -79,32 +80,28 @@ def test_record_is_spec_shaped():
     assert rest.startswith(b"HTTP/1.1 200 OK" + CRLF)
     assert rec.endswith(CRLF + CRLF)
     # deterministic: identical inputs, identical bytes
-    assert rec == build_record("https://x.example.com/p", 1735689600,
-                               b"<html/>", gzip_record=False)
+    assert rec == _plain("warc", "https://x.example.com/p", 1735689600,
+                         b"<html/>")
 
 
 def test_malformed_records_raise():
-    good = build_record("https://x.example.com/p", 1735689600, b"<html/>",
-                        gzip_record=False)
+    good = _plain("warc", "https://x.example.com/p", 1735689600, b"<html/>")
     with pytest.raises(ValueError, match="magic"):
-        list(parse_warc(b"HTTP/1.1 200 OK" + CRLF + good))
+        list(parse_records("warc", b"HTTP/1.1 200 OK" + CRLF + good))
     with pytest.raises(ValueError, match="truncated WARC record content"):
-        list(parse_warc(good[:-10]))
+        list(parse_records("warc", good[:-10]))
     with pytest.raises(ValueError, match="terminator"):
-        list(parse_warc(good[:-4] + b"XXXX"))
+        list(parse_records("warc", good[:-4] + b"XXXX"))
     with pytest.raises(ValueError, match="Content-Length"):
         bad = good.replace(b"Content-Length: ", b"Content-Size: ", 1)
-        list(parse_warc(bad))
+        list(parse_records("warc", bad))
     with pytest.raises(ValueError, match="truncated WARC header"):
-        list(parse_warc(b"WARC/1.0" + CRLF + b"WARC-Type: response"))
+        list(parse_records("warc", b"WARC/1.0" + CRLF + b"WARC-Type: response"))
 
 
 def test_distributed_roundtrip_byte_identical(spark, tmp_path):
-    from pyspark.sql import functions as F
-
     from unmixing_spark import dialect as D
     from unmixing_spark import pipeline
-    from unmixing_spark.io.warc import read_warc, write_warc
     from unmixing_spark.pagegen import pages_sql
 
     pipeline.register_tables(spark, SF_SMALL, ("documents",))
@@ -114,12 +111,12 @@ def test_distributed_roundtrip_byte_identical(spark, tmp_path):
     """).repartition(3, "url")
     out = str(tmp_path / "warc")
     (tmp_path / "warc").mkdir()
-    n = write_warc(pages, out, gzip_records=True)
+    n = write_records("warc", pages, out)
     src = {r["url"]: (r["warc_epoch"], bytes(r["html"]))
            for r in pages.collect()}
     assert n == len(src)
 
-    back = read_warc(spark, out)
+    back = read_records("warc", spark, out)
     got = {r["url"]: (r["warc_epoch"], bytes(r["html"]))
            for r in back.collect()}
     assert got == src   # byte-identical html + epoch per url
@@ -143,48 +140,39 @@ def test_wet_record_roundtrip_and_linkage():
     response record for the same url carries."""
     import uuid
 
-    from unmixing_spark.io.warc import build_conversion_record, parse_wet
-
     url = "https://src0.example.com/en/42"
     text = "hello web é world"
-    for gz in (False, True):
-        rec = build_conversion_record(url, 1735689600, text.encode(),
-                                      gzip_record=gz)
-        [(u, ep, t)] = list(parse_wet(rec))
+    raw = _plain("wet", url, 1735689600, text.encode())
+    for rec in (raw, build_record("wet", url, 1735689600, text.encode())):
+        [(u, ep, t)] = list(parse_records("wet", rec))
         assert (u, ep, t) == (url, 1735689600, text)
-    raw = build_conversion_record(url, 1735689600, text.encode(),
-                                  gzip_record=False)
     head = raw.split(CRLF + CRLF, 1)[0].decode()
     assert "WARC-Type: conversion" in head
     assert "Content-Type: text/plain" in head
     refers = str(uuid.uuid5(uuid.NAMESPACE_URL, url))
     assert f"WARC-Refers-To: <urn:uuid:{refers}>" in head
-    resp = build_record(url, 1735689600, b"<html/>", gzip_record=False)
+    resp = _plain("warc", url, 1735689600, b"<html/>")
     assert f"WARC-Record-ID: <urn:uuid:{refers}>" in resp.decode()
 
 
 def test_mixed_warc_wet_stream_filters_by_type():
-    """A stream holding response AND conversion records: parse_warc
-    yields only responses, parse_wet only conversions; malformed
+    """A stream holding response AND conversion records: the warc kind
+    yields only responses, the wet kind only conversions; malformed
     conversion records still raise."""
-    from unmixing_spark.io.warc import build_conversion_record, parse_wet
-
     url = "https://src1.example.com/de/7"
-    stream = (build_record(url, 1735689600, b"<html>x</html>")
-              + build_conversion_record(url, 1735689600, b"x"))
-    assert [r[2] for r in parse_warc(stream)] == [b"<html>x</html>"]
-    assert [r[2] for r in parse_wet(stream)] == ["x"]
-    bad = build_conversion_record(url, 1735689600, b"x",
-                                  gzip_record=False)[:-2]
+    stream = (build_record("warc", url, 1735689600, b"<html>x</html>")
+              + build_record("wet", url, 1735689600, b"x"))
+    assert [r[2] for r in parse_records("warc", stream)] == [b"<html>x</html>"]
+    assert [r[2] for r in parse_records("wet", stream)] == ["x"]
+    bad = _plain("wet", url, 1735689600, b"x")[:-2]
     with pytest.raises(ValueError):
-        list(parse_wet(bad))
+        list(parse_records("wet", bad))
 
 
 def test_wet_distributed_roundtrip_byte_identical(spark, tmp_path):
-    """write_wet → read_wet over the pages synthesis preserves every
-    (url, epoch, text) byte-exactly."""
+    """The wet kind's write → read over the pages synthesis preserves
+    every (url, epoch, text) byte-exactly."""
     from unmixing_spark import dialect as D
-    from unmixing_spark.io.warc import read_wet, write_wet
     from unmixing_spark.pagegen import pages_sql
     from unmixing_spark.pipeline import register_tables
 
@@ -196,11 +184,11 @@ def test_wet_distributed_roundtrip_byte_identical(spark, tmp_path):
     out = str(tmp_path / "wet")
     import os
     os.makedirs(out)
-    n = write_wet(pages, out, gzip_records=True)
+    n = write_records("wet", pages, out)
     src = {(r.url, r.warc_epoch, r.text) for r in pages.collect()}
     assert n == len(src)
     back = {(r.url, r.warc_epoch, r.text)
-            for r in read_wet(spark, out).collect()}
+            for r in read_records("wet", spark, out).collect()}
     assert back == src
 
 
@@ -211,34 +199,27 @@ def test_wat_record_roundtrip_and_linkage():
     the same url — the WAT sidecar's linkage contract."""
     import uuid
 
-    from unmixing_spark.io.warc import build_metadata_record, parse_wat
-
     url = "https://src0.example.com/en/42"
     wat = '{"Envelope":{"Payload-Metadata":{"Actual-Content-Length":7}}}'
-    for gz in (False, True):
-        rec = build_metadata_record(url, 1735689600, wat.encode(),
-                                    gzip_record=gz)
-        [(u, ep, j)] = list(parse_wat(rec))
+    raw = _plain("wat", url, 1735689600, wat.encode())
+    for rec in (raw, build_record("wat", url, 1735689600, wat.encode())):
+        [(u, ep, j)] = list(parse_records("wat", rec))
         assert (u, ep, j) == (url, 1735689600, wat)
-    raw = build_metadata_record(url, 1735689600, wat.encode(),
-                                gzip_record=False)
     head = raw.split(CRLF + CRLF, 1)[0].decode()
     assert "WARC-Type: metadata" in head
     assert "Content-Type: application/json" in head
     refers = str(uuid.uuid5(uuid.NAMESPACE_URL, url))
     assert f"WARC-Refers-To: <urn:uuid:{refers}>" in head
-    # a mixed stream: parse_wat skips response records, and vice versa
-    stream = build_record(url, 1735689600, b"<html/>",
-                          gzip_record=False) + raw
-    assert [r[2] for r in parse_wat(stream)] == [wat]
-    assert [r[2] for r in parse_warc(stream)] == [b"<html/>"]
+    # a mixed stream: the wat kind skips response records, and vice versa
+    stream = _plain("warc", url, 1735689600, b"<html/>") + raw
+    assert [r[2] for r in parse_records("wat", stream)] == [wat]
+    assert [r[2] for r in parse_records("warc", stream)] == [b"<html/>"]
 
 
 def test_wat_distributed_roundtrip_byte_identical(spark, tmp_path):
-    """write_wat → read_wat over the pages synthesis preserves every
-    (url, epoch, wat_json) byte-exactly."""
+    """The wat kind's write → read over the pages synthesis preserves
+    every (url, epoch, wat_json) byte-exactly."""
     from unmixing_spark import dialect as D
-    from unmixing_spark.io.warc import read_wat, write_wat
     from unmixing_spark.pagegen import pages_sql
     from unmixing_spark.pipeline import register_tables
     from unmixing_spark.queries.warc_q import _wat_json_sql
@@ -255,11 +236,11 @@ def test_wat_distributed_roundtrip_byte_identical(spark, tmp_path):
     out = str(tmp_path / "wat")
     import os
     os.makedirs(out)
-    n = write_wat(pages, out, gzip_records=True)
+    n = write_records("wat", pages, out)
     src = {(r.url, r.warc_epoch, r.wat_json) for r in pages.collect()}
     assert n == len(src)
     back = {(r.url, r.warc_epoch, r.wat_json)
-            for r in read_wat(spark, out).collect()}
+            for r in read_records("wat", spark, out).collect()}
     assert back == src
     # every payload is well-formed JSON with the envelope keys
     import json

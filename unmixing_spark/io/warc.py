@@ -1,35 +1,45 @@
 """WARC 1.0 (ISO 28500) source/sink — the on-disk format web-scale
-corpora actually arrive in (Common Crawl distributes every crawl as
-.warc.gz files of HTTP response records).
+corpora actually arrive in. Common Crawl ships every crawl as three
+record kinds, each in .warc.gz files of per-record gzip members:
 
-Writer: ``write_warc`` serializes a pages DataFrame (url, warc_epoch,
-html) into one WARC file per partition — each record a spec-shaped
-``WARC-Type: response`` block (WARC headers, then an HTTP/1.1 response
-whose payload is the html bytes), deterministically identified by
-uuid5(url). With ``gzip_records=True`` every record is its own gzip
-member concatenated into the file — Common Crawl's exact layout, which
-is what lets a reader stream records without decompressing the whole
-file.
+- ``warc``: ``WARC-Type: response`` records, an HTTP/1.1 response
+  whose payload is the html bytes;
+- ``wet``: ``conversion`` records (WARC 1.0 Annex C usage), the
+  extracted text as the payload with no HTTP block;
+- ``wat``: ``metadata`` records, a JSON envelope as the payload.
 
-Reader: ``read_warc`` is the source connector: ``binaryFile`` scan →
-``mapInPandas`` parse. Scale shape (the real 100 TB path): WARC is not
-block-splittable, so parallelism is one task per file — exactly how
-production Common Crawl jobs run (a crawl is ~64k-90k files of ~1 GB,
-saturating any cluster); the parser is pure bytes work per task and the
-Arrow batch boundary carries (url, warc_epoch, html) out. Malformed
-input (bad magic, truncated content, missing terminator) raises
-ValueError rather than yielding silently wrong records.
+``KINDS`` holds what tells them apart; one builder, parser, writer and
+reader serve all three. Every record is identified deterministically
+by uuid5 of its url (sidecar kinds prefix the url with ``kind:``), and
+a sidecar's ``WARC-Refers-To`` is the id of the response for the same
+url. Per-record gzip members are Common Crawl's exact layout, which is
+what lets a reader stream records without decompressing the whole file.
 
-Round-trip fidelity is the north-rule invariant: q_warc_roundtrip
-(queries/warc_q.py) proves byte-identical html per url through the
-on-disk format against the SQL-synthesized oracle.
+Writer: ``write_records`` serializes a pages DataFrame (url,
+warc_epoch, payload column) into one file per partition, streamed
+batch by batch (Arrow), so executor memory holds one batch, not one
+file. Reader: ``read_records`` is the source connector: ``binaryFile``
+scan → ``mapInPandas`` parse. Scale shape (the real 100 TB path): WARC
+is not block-splittable, so parallelism is one task per file — exactly
+how production Common Crawl jobs run (a crawl is ~64k-90k files of
+~1 GB, saturating any cluster). Malformed input (bad magic, truncated
+content, missing terminator) raises ValueError rather than yielding
+silently wrong records; plain and gzip input both parse, since input
+comes from outside the program.
+
+Round-trip fidelity is the north-rule invariant: q_warc_roundtrip,
+q_wet_roundtrip and q_wat_roundtrip (queries/warc_q.py) prove
+byte-identical payloads per url through the on-disk format against the
+SQL-synthesized oracle.
 """
 
 from __future__ import annotations
 
 import gzip
+import os
 import uuid
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,27 +47,55 @@ CRLF = b"\r\n"
 _MAGIC = b"WARC/1.0"
 
 
-def build_record(url: str, warc_epoch: int, html: bytes,
-                 gzip_record: bool = True) -> bytes:
-    """One spec-shaped response record (optionally its own gzip
-    member)."""
-    http = (b"HTTP/1.1 200 OK" + CRLF
-            + b"Content-Type: text/html; charset=UTF-8" + CRLF
-            + b"Content-Length: " + str(len(html)).encode() + CRLF + CRLF
-            + html)
-    rid = uuid.uuid5(uuid.NAMESPACE_URL, url)
+class Kind(NamedTuple):
+    warc_type: str
+    id_prefix: str      # prepended to the url for the record's uuid5 id
+    content_type: str
+    column: str         # the payload column of the pages DataFrame
+    spark_type: str     # binary: bytes as they are; string: utf-8 text
+    ext: str
+
+
+KINDS = {
+    "warc": Kind("response", "", "application/http; msgtype=response",
+                 "html", "binary", ".warc.gz"),
+    "wet": Kind("conversion", "wet:", "text/plain",
+                "text", "string", ".warc.wet.gz"),
+    "wat": Kind("metadata", "wat:", "application/json",
+                "wat_json", "string", ".warc.wat.gz"),
+}
+
+
+def _urn(rid: uuid.UUID) -> bytes:
+    return b"<urn:uuid:" + str(rid).encode() + b">"
+
+
+def build_record(kind: str, url: str, warc_epoch: int,
+                 payload: bytes) -> bytes:
+    """One spec-shaped record of ``kind`` as its own gzip member."""
+    k = KINDS[kind]
+    ids = [b"WARC-Record-ID: "
+           + _urn(uuid.uuid5(uuid.NAMESPACE_URL, k.id_prefix + url))]
+    if k.warc_type == "response":
+        payload = (b"HTTP/1.1 200 OK" + CRLF
+                   + b"Content-Type: text/html; charset=UTF-8" + CRLF
+                   + b"Content-Length: " + str(len(payload)).encode()
+                   + CRLF + CRLF + payload)
+    else:   # a sidecar points at the response record for the same url
+        ids.append(b"WARC-Refers-To: "
+                   + _urn(uuid.uuid5(uuid.NAMESPACE_URL, url)))
     date = datetime.fromtimestamp(int(warc_epoch), tz=timezone.utc)
     headers = CRLF.join([
         _MAGIC,
-        b"WARC-Type: response",
-        b"WARC-Record-ID: <urn:uuid:" + str(rid).encode() + b">",
+        b"WARC-Type: " + k.warc_type.encode(),
+        *ids,
         b"WARC-Date: " + date.strftime("%Y-%m-%dT%H:%M:%SZ").encode(),
         b"WARC-Target-URI: " + url.encode(),
-        b"Content-Type: application/http; msgtype=response",
-        b"Content-Length: " + str(len(http)).encode(),
+        b"Content-Type: " + k.content_type.encode(),
+        b"Content-Length: " + str(len(payload)).encode(),
     ])
-    rec = headers + CRLF + CRLF + http + CRLF + CRLF
-    return gzip.compress(rec, mtime=0) if gzip_record else rec
+    return gzip.compress(headers + CRLF + CRLF + payload + CRLF + CRLF,
+                         mtime=0)
 
 
 def _iter_records(data: bytes):
@@ -94,240 +132,70 @@ def _iter_records(data: bytes):
         i = body_start + clen + 4
 
 
-def _record_epoch(headers: dict[str, str]) -> int:
-    date = headers.get("warc-date", "")
-    return int(datetime.strptime(
-        date, "%Y-%m-%dT%H:%M:%SZ").replace(
-        tzinfo=timezone.utc).timestamp())
-
-
-def parse_warc(data: bytes):
-    """Yield (url, warc_epoch, html) per response record."""
+def parse_records(kind: str, data: bytes):
+    """Yield (url, warc_epoch, payload) per record of ``kind``, skipping
+    records of other kinds; the payload is bytes for ``warc`` (the HTTP
+    block stripped) and text for the sidecar kinds."""
+    k = KINDS[kind]
     for headers, body in _iter_records(data):
-        if headers.get("warc-type") != "response":
+        if headers.get("warc-type") != k.warc_type:
             continue
-        split = body.find(CRLF + CRLF)
-        if split < 0:
-            raise ValueError("response record without HTTP header block")
-        yield (headers.get("warc-target-uri", ""), _record_epoch(headers),
-               body[split + 4:])
+        if k.warc_type == "response":
+            split = body.find(CRLF + CRLF)
+            if split < 0:
+                raise ValueError("response record without HTTP header block")
+            payload = body[split + 4:]
+        else:
+            payload = body.decode("utf-8", "strict")
+        epoch = datetime.strptime(
+            headers.get("warc-date", ""), "%Y-%m-%dT%H:%M:%SZ").replace(
+            tzinfo=timezone.utc).timestamp()
+        yield headers.get("warc-target-uri", ""), int(epoch), payload
 
 
-def parse_wet(data: bytes):
-    """Yield (url, warc_epoch, text) per conversion record (the WET
-    sidecar layout: the body IS the extracted text, no HTTP block)."""
-    for headers, body in _iter_records(data):
-        if headers.get("warc-type") != "conversion":
-            continue
-        yield (headers.get("warc-target-uri", ""), _record_epoch(headers),
-               body.decode("utf-8", "strict"))
-
-
-def build_conversion_record(url: str, warc_epoch: int, text: bytes,
-                            gzip_record: bool = True) -> bytes:
-    """One WET conversion record (Common Crawl's extracted-text sidecar,
-    WARC 1.0 Annex C usage): WARC-Type: conversion, WARC-Refers-To
-    pointing at the uuid5 id the response record for the same url
-    carries, payload = the extracted text bytes directly (no HTTP
-    block)."""
-    rid = uuid.uuid5(uuid.NAMESPACE_URL, "wet:" + url)
-    refers = uuid.uuid5(uuid.NAMESPACE_URL, url)
-    date = datetime.fromtimestamp(int(warc_epoch), tz=timezone.utc)
-    headers = CRLF.join([
-        _MAGIC,
-        b"WARC-Type: conversion",
-        b"WARC-Record-ID: <urn:uuid:" + str(rid).encode() + b">",
-        b"WARC-Refers-To: <urn:uuid:" + str(refers).encode() + b">",
-        b"WARC-Date: " + date.strftime("%Y-%m-%dT%H:%M:%SZ").encode(),
-        b"WARC-Target-URI: " + url.encode(),
-        b"Content-Type: text/plain",
-        b"Content-Length: " + str(len(text)).encode(),
-    ])
-    rec = headers + CRLF + CRLF + text + CRLF + CRLF
-    return gzip.compress(rec, mtime=0) if gzip_record else rec
-
-
-def build_metadata_record(url: str, warc_epoch: int, wat_json: bytes,
-                          gzip_record: bool = True) -> bytes:
-    """One WAT metadata record (Common Crawl's third sidecar format):
-    WARC-Type: metadata, Content-Type: application/json, WARC-Refers-To
-    pointing at the response record's uuid5 id, payload = the JSON
-    metadata envelope bytes. Same Annex-C usage shape as the WET
-    conversion record — only the type, content type and payload differ."""
-    rid = uuid.uuid5(uuid.NAMESPACE_URL, "wat:" + url)
-    refers = uuid.uuid5(uuid.NAMESPACE_URL, url)
-    date = datetime.fromtimestamp(int(warc_epoch), tz=timezone.utc)
-    headers = CRLF.join([
-        _MAGIC,
-        b"WARC-Type: metadata",
-        b"WARC-Record-ID: <urn:uuid:" + str(rid).encode() + b">",
-        b"WARC-Refers-To: <urn:uuid:" + str(refers).encode() + b">",
-        b"WARC-Date: " + date.strftime("%Y-%m-%dT%H:%M:%SZ").encode(),
-        b"WARC-Target-URI: " + url.encode(),
-        b"Content-Type: application/json",
-        b"Content-Length: " + str(len(wat_json)).encode(),
-    ])
-    rec = headers + CRLF + CRLF + wat_json + CRLF + CRLF
-    return gzip.compress(rec, mtime=0) if gzip_record else rec
-
-
-def parse_wat(data: bytes):
-    """Yield (url, warc_epoch, wat_json) per metadata record (the WAT
-    sidecar layout: the body IS the JSON envelope, no HTTP block)."""
-    for headers, body in _iter_records(data):
-        if headers.get("warc-type") != "metadata":
-            continue
-        yield (headers.get("warc-target-uri", ""), _record_epoch(headers),
-               body.decode("utf-8", "strict"))
-
-
-def write_wat(pages: DataFrame, out_dir: str,
-              gzip_records: bool = True) -> int:
-    """Write (url, warc_epoch, wat_json) partitions as
-    ``part-N.warc.wat[.gz]`` metadata-record files under ``out_dir``;
-    returns the record count. Same streamed one-file-per-partition shape
-    as ``write_warc``/``write_wet``."""
-    import os
-
-    ext = ".warc.wat.gz" if gzip_records else ".warc.wat"
+def write_records(kind: str, pages: DataFrame, out_dir: str) -> int:
+    """Write (url, warc_epoch, payload column) partitions as
+    ``part-N{ext}`` files of ``kind`` records under ``out_dir``; returns
+    the total record count. One file per partition, streamed
+    batch by batch."""
+    k = KINDS[kind]
 
     def _write(batches):
         import pandas as pd
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}{ext}")
         wrote = 0
-        with open(path, "wb") as f:
+        with open(os.path.join(out_dir, f"part-{pid:05d}{k.ext}"), "wb") as f:
             for pdf in batches:
-                for url, epoch, wat in zip(pdf["url"], pdf["warc_epoch"],
-                                           pdf["wat_json"]):
-                    f.write(build_metadata_record(
-                        str(url), int(epoch), str(wat).encode(),
-                        gzip_record=gzip_records))
+                for url, epoch, payload in zip(pdf["url"], pdf["warc_epoch"],
+                                               pdf[k.column]):
+                    payload = (bytes(payload) if k.spark_type == "binary"
+                               else str(payload).encode())
+                    f.write(build_record(kind, str(url), int(epoch), payload))
                     wrote += 1
         yield pd.DataFrame({"n": [wrote]})
 
-    counts = (pages.select("url", "warc_epoch", "wat_json")
+    counts = (pages.select("url", "warc_epoch", k.column)
               .mapInPandas(_write, "n long").collect())
     return sum(r["n"] for r in counts)
 
 
-def read_wat(spark: SparkSession, path: str) -> DataFrame:
-    """Source connector: WAT directory/glob → DataFrame(url, warc_epoch,
-    wat_json). One task per file, Arrow-batched parse — same shape as
-    ``read_warc``."""
-    files = spark.read.format("binaryFile").load(path)
+def read_records(kind: str, spark: SparkSession, path: str) -> DataFrame:
+    """Source connector: directory/glob of ``kind`` files →
+    DataFrame(url, warc_epoch, payload column). One task per file (the
+    format's parallelism unit), parsed inside an Arrow-batched
+    mapInPandas."""
+    k = KINDS[kind]
 
     def _parse(batches):
         import pandas as pd
 
         for pdf in batches:
             rows = [rec for content in pdf["content"]
-                    for rec in parse_wat(bytes(content))]
-            yield pd.DataFrame(rows,
-                               columns=["url", "warc_epoch", "wat_json"])
+                    for rec in parse_records(kind, bytes(content))]
+            yield pd.DataFrame(rows, columns=["url", "warc_epoch", k.column])
 
-    return (files.select("content")
-            .mapInPandas(_parse,
-                         "url string, warc_epoch long, wat_json string"))
-
-
-def write_wet(pages: DataFrame, out_dir: str,
-              gzip_records: bool = True) -> int:
-    """Write (url, warc_epoch, text) partitions as ``part-N.warc.wet[.gz]``
-    conversion-record files under ``out_dir``; returns the record count.
-    Same streamed one-file-per-partition shape as ``write_warc``."""
-    import os
-
-    ext = ".warc.wet.gz" if gzip_records else ".warc.wet"
-
-    def _write(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}{ext}")
-        wrote = 0
-        with open(path, "wb") as f:
-            for pdf in batches:
-                for url, epoch, text in zip(pdf["url"], pdf["warc_epoch"],
-                                            pdf["text"]):
-                    f.write(build_conversion_record(
-                        str(url), int(epoch), str(text).encode(),
-                        gzip_record=gzip_records))
-                    wrote += 1
-        yield pd.DataFrame({"n": [wrote]})
-
-    counts = (pages.select("url", "warc_epoch", "text")
-              .mapInPandas(_write, "n long").collect())
-    return sum(r["n"] for r in counts)
-
-
-def read_wet(spark: SparkSession, path: str) -> DataFrame:
-    """Source connector: WET directory/glob → DataFrame(url, warc_epoch,
-    text). One task per file, Arrow-batched parse — same shape as
-    ``read_warc``."""
-    files = spark.read.format("binaryFile").load(path)
-
-    def _parse(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [rec for content in pdf["content"]
-                    for rec in parse_wet(bytes(content))]
-            yield pd.DataFrame(rows,
-                               columns=["url", "warc_epoch", "text"])
-
-    return (files.select("content")
-            .mapInPandas(_parse, "url string, warc_epoch long, text string"))
-
-
-def write_warc(pages: DataFrame, out_dir: str,
-               gzip_records: bool = True) -> int:
-    """Write (url, warc_epoch, html) partitions as ``part-N.warc[.gz]``
-    files under ``out_dir``; returns the total record count. One file
-    per partition, streamed batch-by-batch (Arrow), so executor memory
-    holds one batch, not one file."""
-    import os
-
-    ext = ".warc.gz" if gzip_records else ".warc"
-
-    def _write(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}{ext}")
-        wrote = 0
-        with open(path, "wb") as f:
-            for pdf in batches:
-                for url, epoch, html in zip(pdf["url"], pdf["warc_epoch"],
-                                            pdf["html"]):
-                    f.write(build_record(str(url), int(epoch), bytes(html),
-                                         gzip_record=gzip_records))
-                    wrote += 1
-        yield pd.DataFrame({"n": [wrote]})
-
-    counts = (pages.select("url", "warc_epoch", "html")
-              .mapInPandas(_write, "n long").collect())
-    return sum(r["n"] for r in counts)
-
-
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """Source connector: WARC directory/glob → DataFrame(url,
-    warc_epoch, html). One task per file (the format's parallelism
-    unit), parsed inside an Arrow-batched mapInPandas."""
-    files = spark.read.format("binaryFile").load(path)
-
-    def _parse(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [rec for content in pdf["content"]
-                    for rec in parse_warc(bytes(content))]
-            yield pd.DataFrame(rows,
-                               columns=["url", "warc_epoch", "html"])
-
-    return (files.select("content")
-            .mapInPandas(_parse, "url string, warc_epoch long, html binary"))
+    return (spark.read.format("binaryFile").load(path).select("content")
+            .mapInPandas(_parse, f"url string, warc_epoch long, "
+                                 f"{k.column} {k.spark_type}"))

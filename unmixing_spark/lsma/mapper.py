@@ -82,43 +82,16 @@ _ABUNDANCE_COLS = [f.split()[0] for f in ABUNDANCE_TILE_SCHEMA.split(", ")]
 
 
 def segment_sums(x: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """``x[s:s+n].sum()`` for every segment, bit for bit, without a
-    per-segment Python call. It follows numpy's own summation order: a
-    reduction runs over chunks of ``np.getbufsize()`` elements added in
-    sequence, and each chunk is a pairwise sum (halves split at a multiple
-    of 8 above 128 elements, eight interleaved accumulators from 8 to 128,
-    a plain running sum below 8). ``np.add.reduceat`` and ``np.bincount``
-    sum in plain sequence, so they differ from ``.sum()`` in the last bits
-    from 3 elements up."""
-    out = np.full(len(lens), -0.0)
-    buf = np.getbufsize()
-    chunked = lens > buf
-    if chunked.any():
-        s, n = starts[chunked], lens[chunked]
-        last = n - (n - 1) // buf * buf
-        out[chunked] = segment_sums(x, s, n - last) + segment_sums(x, s + n - last, last)
-    split = (lens > 128) & ~chunked
-    if split.any():
-        s, n = starts[split], lens[split]
-        half = n // 2 - n // 2 % 8
-        out[split] = segment_sums(x, s, half) + segment_sums(x, s + half, n - half)
-    block = (lens >= 8) & (lens <= 128)
-    if block.any():
-        s, n = starts[block], lens[block]
-        whole = n - n % 8
-        r = x[s[:, None] + np.arange(8)]
-        for i in range(8, 128, 8):
-            more = i < whole
-            r[more] += x[s[more, None] + i + np.arange(8)]
-        res = (r[:, 0] + r[:, 1] + (r[:, 2] + r[:, 3])) + \
-            (r[:, 4] + r[:, 5] + (r[:, 6] + r[:, 7]))
-        for j in range(7):
-            more = whole + j < n
-            res[more] += x[s[more] + whole[more] + j]
-        out[block] = res
-    for j in range(7):
-        more = (lens < 8) & (lens > j)
-        out[more] += x[starts[more] + j]
+    """``x[s:s+n].sum()`` for every segment, bit for bit, with one numpy
+    call per distinct segment length: the segments of one length gather
+    into the rows of a matrix, and a row sum keeps the summation order
+    of a 1-D ``.sum()``. ``np.add.reduceat`` and ``np.bincount`` sum in
+    plain sequence, so they differ from ``.sum()`` in the last bits from
+    3 elements up."""
+    out = np.zeros(len(lens))
+    for n in np.unique(lens):
+        sel = lens == n
+        out[sel] = x[starts[sel, None] + np.arange(n)].sum(axis=1)
     return out
 
 

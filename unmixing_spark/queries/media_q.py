@@ -37,11 +37,17 @@ is the PER-BIT MAJORITY across sampled frames — computed in pure Spark
 SQL aggregation, order-free so temporal misalignment is harmless — and
 pairing again reuses the banded join. Rows-only; pins in
 tests/test_video_dedup.py.
+
+All three are one pipeline, ``twin_pairs``: the modality's row in
+``MODALITIES`` supplies the per-doc original + planted twin and the
+fingerprint stage; scripts/scaling_bench.py's media job runs the same
+function over its own base.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -50,6 +56,10 @@ from pyspark.sql import functions as F
 
 from unmixing_spark.pipeline import register_tables
 from unmixing_spark.queries import QuerySpec, register
+from unmixing_spark.text.audio import audio_fingerprints, encode_wav
+from unmixing_spark.text.multimodal import (dhash_pairs, encode_fake_image,
+                                            encode_png, image_dhash,
+                                            video_signatures)
 
 # Docs that contribute a media pair (one original + one planted twin
 # per modality): bounded so each registry query prices the pipeline
@@ -87,48 +97,13 @@ def render_page_image(seed: int, h: int = 48, w: int = 64) -> np.ndarray:
     return (np.stack(chans, axis=-1) * 255).astype(np.uint8)
 
 
-def _gen_images(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # imports inside the worker function: keeps the module importable on
-    # executors without forcing codec imports at registry time
+def _image_twins(seed: int) -> tuple[bytes, bytes]:
+    """A lossless PNG original and its lossy JPEG-q90 re-encode."""
+    # the JPEG codec is imported where it runs, not at registry time
     from unmixing_spark.text.jpeg import encode_jpeg
-    from unmixing_spark.text.multimodal import encode_png
 
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        ids, payloads = [], []
-        for doc_id in pdf["doc_id"]:
-            img = render_page_image(int(doc_id))
-            ids.append(2 * int(doc_id))
-            payloads.append(bytearray(encode_png(img)))
-            ids.append(2 * int(doc_id) + 1)
-            payloads.append(bytearray(encode_jpeg(img, quality=90)))
-        yield pd.DataFrame({"id": ids, "image": payloads})
-
-
-def _image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from unmixing_spark.text.multimodal import dhash_pairs, image_dhash
-
-    register_tables(spark, sf_dir, ("documents",))
-    base = (spark.table("documents")
-            .select("doc_id").orderBy("doc_id").limit(N_DOCS)
-            .repartition(_media_parts(spark), "doc_id"))
-    frames = base.mapInPandas(_gen_images, "id long, image binary")
-    pairs = dhash_pairs(image_dhash(frames), max_hamming=7, n_bands=8)
-    return (pairs
-            .withColumn(
-                "planted",
-                ((F.col("id_a") % 2 == 0)
-                 & (F.col("id_b") == F.col("id_a") + 1)).cast("int"))
-            .orderBy("id_a", "id_b"))
-
-
-register("q_image_dhash_pairs", QuerySpec(
-    spark_fn=_image_dhash_pairs,
-    oracle=None,
-    doc="image near-dup pairs: decode+dHash mapInPandas stage, banded "
-        "hamming self-join (exact for hamming<n_bands); rows-only — "
-        "pinned in tests/test_image_dedup.py"))
+    img = render_page_image(seed)
+    return encode_png(img), encode_jpeg(img, quality=90)
 
 
 def render_page_audio(seed: int, rate: int = 8000,
@@ -151,54 +126,16 @@ def render_page_audio(seed: int, rate: int = 8000,
     return np.rint(x * 20000).astype(np.int16)
 
 
-def _gen_clips(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from unmixing_spark.text.audio import encode_wav
-
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        ids, payloads = [], []
-        for doc_id in pdf["doc_id"]:
-            x = render_page_audio(int(doc_id))
-            ids.append(2 * int(doc_id))
-            payloads.append(bytearray(encode_wav(x, 8000)))
-            # planted near-dup: gain x0.6 then boxcar decimate-by-2
-            # re-encode at half rate (the resample_audio kernel)
-            y = np.rint(x * 0.6).astype(np.int16)
-            n = (len(y) // 2) * 2
-            dec = np.clip(np.rint(y[:n].astype(np.float64)
-                                  .reshape(-1, 2).mean(axis=1)),
-                          -32768, 32767).astype(np.int16)
-            ids.append(2 * int(doc_id) + 1)
-            payloads.append(bytearray(encode_wav(dec, 4000)))
-        yield pd.DataFrame({"id": ids, "audio": payloads})
-
-
-def _audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from unmixing_spark.text.audio import audio_fingerprints
-    from unmixing_spark.text.multimodal import dhash_pairs
-
-    register_tables(spark, sf_dir, ("documents",))
-    base = (spark.table("documents")
-            .select("doc_id").orderBy("doc_id").limit(N_DOCS)
-            .repartition(_media_parts(spark), "doc_id"))
-    clips = base.mapInPandas(_gen_clips, "id long, audio binary")
-    pairs = dhash_pairs(audio_fingerprints(clips), hash_col="fp",
-                        max_hamming=7, n_bands=8)
-    return (pairs
-            .withColumn(
-                "planted",
-                ((F.col("id_a") % 2 == 0)
-                 & (F.col("id_b") == F.col("id_a") + 1)).cast("int"))
-            .orderBy("id_a", "id_b"))
-
-
-register("q_audio_fp_pairs", QuerySpec(
-    spark_fn=_audio_fp_pairs,
-    oracle=None,
-    doc="audio near-dup pairs: decode+spectral-fingerprint mapInPandas "
-        "stage, banded hamming self-join (exact for hamming<n_bands); "
-        "rows-only — pinned in tests/test_audio_dedup.py"))
+def _audio_twins(seed: int) -> tuple[bytes, bytes]:
+    """A WAV original and its gain x0.6, boxcar decimate-by-2 re-encode
+    at half rate (the resample_audio kernel)."""
+    x = render_page_audio(seed)
+    y = np.rint(x * 0.6).astype(np.int16)
+    n = (len(y) // 2) * 2
+    dec = np.clip(np.rint(y[:n].astype(np.float64)
+                          .reshape(-1, 2).mean(axis=1)),
+                  -32768, 32767).astype(np.int16)
+    return encode_wav(x, 8000), encode_wav(dec, 4000)
 
 
 N_VIDEO_FRAMES = 20
@@ -242,8 +179,6 @@ def render_page_video(seed: int, perturb: bool = False) -> bytes:
     """Concatenated fake-image frames; the perturbed twin drops every
     7th frame (temporal misalignment) and adds +-10 per-pixel noise (a
     lossy re-encode) — the distortions the majority vote must absorb."""
-    from unmixing_spark.text.multimodal import encode_fake_image
-
     frames = []
     for t in range(N_VIDEO_FRAMES):
         if perturb and t % 7 == 3:
@@ -256,40 +191,72 @@ def render_page_video(seed: int, perturb: bool = False) -> bytes:
     return b"".join(frames)
 
 
-def _gen_videos(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        ids, payloads = [], []
-        for doc_id in pdf["doc_id"]:
-            ids.append(2 * int(doc_id))
-            payloads.append(bytearray(render_page_video(int(doc_id))))
-            ids.append(2 * int(doc_id) + 1)
-            payloads.append(bytearray(render_page_video(int(doc_id),
-                                                        perturb=True)))
-        yield pd.DataFrame({"id": ids, "video": payloads})
+def _video_twins(seed: int) -> tuple[bytes, bytes]:
+    return render_page_video(seed), render_page_video(seed, perturb=True)
 
 
-def _video_sig_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from unmixing_spark.text.multimodal import dhash_pairs, video_signatures
+# modality: (original + planted twin per doc id, the fingerprint stage
+# over (id, payload) rows, its hash column)
+MODALITIES = {
+    "image": (_image_twins, image_dhash, "dhash"),
+    "audio": (_audio_twins, audio_fingerprints, "fp"),
+    "video": (_video_twins, partial(video_signatures, every_n=2), "vhash"),
+}
 
-    register_tables(spark, sf_dir, ("documents",))
-    base = (spark.table("documents")
-            .select("doc_id").orderBy("doc_id").limit(N_DOCS)
-            .repartition(_media_parts(spark), "doc_id"))
-    videos = base.mapInPandas(_gen_videos, "id long, video binary")
-    sigs = video_signatures(videos, every_n=2)
-    pairs = dhash_pairs(sigs, hash_col="vhash", max_hamming=7, n_bands=8)
-    return (pairs
-            .withColumn(
-                "planted",
-                ((F.col("id_a") % 2 == 0)
-                 & (F.col("id_b") == F.col("id_a") + 1)).cast("int"))
-            .orderBy("id_a", "id_b"))
 
+def twin_pairs(base: DataFrame, modality: str) -> DataFrame:
+    """The planted-pair near-dup pipeline over ``base``'s doc ids: each
+    doc seeds an original (id ``2 * doc_id``) and its planted twin (id
+    ``2 * doc_id + 1``) in one mapInPandas stage, the modality's
+    fingerprint hashes them, ``dhash_pairs`` joins them by hamming
+    distance, and ``planted`` marks the twin pairs. Unordered."""
+    twins, fingerprint, hash_col = MODALITIES[modality]
+
+    def _gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            ids, payloads = [], []
+            for doc_id in pdf["doc_id"]:
+                for i, payload in enumerate(twins(int(doc_id))):
+                    ids.append(2 * int(doc_id) + i)
+                    payloads.append(bytearray(payload))
+            yield pd.DataFrame({"id": ids, modality: payloads})
+
+    docs = base.mapInPandas(_gen, f"id long, {modality} binary")
+    pairs = dhash_pairs(fingerprint(docs), hash_col=hash_col, max_hamming=7,
+                        n_bands=8)
+    return pairs.withColumn(
+        "planted", ((F.col("id_a") % 2 == 0)
+                    & (F.col("id_b") == F.col("id_a") + 1)).cast("int"))
+
+
+def _media_query(modality: str):
+    def spark_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_tables(spark, sf_dir, ("documents",))
+        base = (spark.table("documents")
+                .select("doc_id").orderBy("doc_id").limit(N_DOCS)
+                .repartition(_media_parts(spark), "doc_id"))
+        return twin_pairs(base, modality).orderBy("id_a", "id_b")
+    return spark_fn
+
+
+register("q_image_dhash_pairs", QuerySpec(
+    spark_fn=_media_query("image"),
+    oracle=None,
+    doc="image near-dup pairs: decode+dHash mapInPandas stage, banded "
+        "hamming self-join (exact for hamming<n_bands); rows-only — "
+        "pinned in tests/test_image_dedup.py"))
+
+register("q_audio_fp_pairs", QuerySpec(
+    spark_fn=_media_query("audio"),
+    oracle=None,
+    doc="audio near-dup pairs: decode+spectral-fingerprint mapInPandas "
+        "stage, banded hamming self-join (exact for hamming<n_bands); "
+        "rows-only — pinned in tests/test_audio_dedup.py"))
 
 register("q_video_sig_pairs", QuerySpec(
-    spark_fn=_video_sig_pairs,
+    spark_fn=_media_query("video"),
     oracle=None,
     doc="video near-dup pairs: frame-sample + per-frame dHash, per-bit "
         "majority signature in pure SQL aggregation, banded hamming "

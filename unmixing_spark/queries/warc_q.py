@@ -1,8 +1,9 @@
-"""q_warc_roundtrip — the WARC source/sink connector (io/warc.py)
-driven end-to-end under the oracle gate.
+"""q_warc_roundtrip, q_wet_roundtrip, q_wat_roundtrip — the Common
+Crawl record connector (io/warc.py) driven end-to-end under the oracle
+gate, one query per record kind through one body (``_roundtrip``).
 
 The Spark side materializes the pages table INTO spec-shaped
-per-record-gzipped WARC files (one per partition), reads them back
+per-record-gzipped files of the kind (one per partition), reads them back
 through the binaryFile + mapInPandas source connector, and emits
 per-url fingerprints of what survived the on-disk format. The DuckDB
 oracle computes the same fingerprints straight from the SQL page
@@ -28,11 +29,39 @@ from pyspark.sql import DataFrame, SparkSession
 
 from unmixing_spark import dialect as D
 from unmixing_spark import loops, pipeline
-from unmixing_spark.io.warc import read_warc, write_warc
+from unmixing_spark.io.warc import read_records, write_records
 from unmixing_spark.pagegen import pages_sql
 from unmixing_spark.queries import QuerySpec, register
 
 WARC_PARTS = 4   # writer partitions → files; the reader gets one task each
+
+
+def _roundtrip(kind: str, pages, fingerprint):
+    """The Spark side of a record kind's roundtrip: ``pages(d)`` rendered
+    for Spark is written as ``kind`` records, read back through the
+    source connector, and ``fingerprint(d, rel)`` is materialized over
+    what survived before the files vanish."""
+    def spark_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        pipeline.register_tables(spark, sf_dir, ("documents",))
+        written = spark.sql(pages(D.SPARK)).repartition(WARC_PARTS, "url")
+        out_dir = tempfile.mkdtemp(prefix=f"unmixing_{kind}_")
+        try:
+            write_records(kind, written, out_dir)
+            read_records(kind, spark, out_dir).createOrReplaceTempView(
+                f"{kind}_back")
+            return loops.checkpoint(
+                spark.sql(fingerprint(D.SPARK, f"{kind}_back")))
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
+    return spark_fn
+
+
+def _pages(d: str, payload: str) -> str:
+    """url, capture epoch and the ``payload`` column of every page."""
+    return f"""
+      SELECT url, {D.ts_to_epoch('warc_ts', d)} AS warc_epoch, {payload}
+      FROM ({pages_sql(d)})
+    """
 
 
 def _fingerprint_sql(d: str, rel: str) -> str:
@@ -47,89 +76,53 @@ def _fingerprint_sql(d: str, rel: str) -> str:
     """
 
 
-def _warc_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pipeline.register_tables(spark, sf_dir, ("documents",))
-    pages = spark.sql(f"""
-        SELECT url, {D.ts_to_epoch('warc_ts', D.SPARK)} AS warc_epoch, html
-        FROM ({pages_sql(D.SPARK)})
-    """).repartition(WARC_PARTS, "url")
-    out_dir = tempfile.mkdtemp(prefix="unmixing_warc_")
-    try:
-        write_warc(pages, out_dir, gzip_records=True)
-        back = read_warc(spark, out_dir)
-        back.createOrReplaceTempView("warc_back")
-        # materialize before the files vanish
-        return loops.checkpoint(
-            spark.sql(_fingerprint_sql(D.SPARK, "warc_back")))
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def _warc_oracle() -> str:
-    d = D.DUCKDB
-    inner = f"""(
-      SELECT url, {D.ts_to_epoch('warc_ts', d)} AS warc_epoch, html
-      FROM ({pages_sql(d)})
-    ) p"""
-    return _fingerprint_sql(d, inner)
-
-
 register("q_warc_roundtrip", QuerySpec(
-    spark_fn=_warc_roundtrip_spark, oracle=_warc_oracle(),
+    spark_fn=_roundtrip("warc", lambda d: _pages(d, "html"),
+                        _fingerprint_sql),
+    oracle=_fingerprint_sql(D.DUCKDB, f"({_pages(D.DUCKDB, 'html')}) p"),
     doc="WARC source/sink roundtrip: pages → per-record-gzipped WARC "
         "files → binaryFile+mapInPandas reader → per-url byte "
         "fingerprints, oracle-matched against the direct SQL synthesis"))
 
 
-def _wet_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WET sidecar roundtrip: the extracted-text layer (WARC-Type:
-    conversion) written and re-read through io/warc.py's WET path. The
-    corpus `text` column IS the extracted text (q_html_extract proves
-    extraction inverts the page synthesis), so fingerprinting what
-    survives the conversion-record format extends the north-rule
-    byte-identical-text invariant through the SECOND on-disk format web
-    corpora ship in. Same scale shape as q_warc_roundtrip: streamed
-    file-per-partition write, one reader task per file, no shuffles."""
-    from unmixing_spark.io.warc import read_wet, write_wet
+# ---- WET extracted-text sidecar ------------------------------------------
+# The extracted-text layer (WARC-Type: conversion). The corpus `text`
+# column IS the extracted text (q_html_extract proves extraction inverts
+# the page synthesis), so fingerprinting what survives the
+# conversion-record format extends the north-rule byte-identical-text
+# invariant through the SECOND on-disk format web corpora ship in.
 
-    pipeline.register_tables(spark, sf_dir, ("documents",))
-    pages = spark.sql(f"""
-        SELECT url, {D.ts_to_epoch('warc_ts', D.SPARK)} AS warc_epoch, text
-        FROM ({pages_sql(D.SPARK)})
-    """).repartition(WARC_PARTS, "url")
-    out_dir = tempfile.mkdtemp(prefix="unmixing_wet_")
-    try:
-        write_wet(pages, out_dir, gzip_records=True)
-        back = read_wet(spark, out_dir)
-        back.createOrReplaceTempView("wet_back")
-        return loops.checkpoint(spark.sql(f"""
-            SELECT url, warc_epoch,
-                   cast(length(text) as bigint) AS text_chars,
-                   {D.sha256_('text', D.SPARK)} AS text_sha
-            FROM wet_back
-        """))
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def _wet_oracle() -> str:
-    d = D.DUCKDB
+def _text_fingerprint_sql(d: str, rel: str,
+                          epoch: str = "warc_epoch") -> str:
+    """url, capture epoch, text length + sha; the oracle passes the
+    epoch expression over the pages synthesis itself."""
     return f"""
-    SELECT url, {D.ts_to_epoch('warc_ts', d)} AS warc_epoch,
+    SELECT url, {epoch},
            cast(length(text) as bigint) AS text_chars,
            {D.sha256_('text', d)} AS text_sha
-    FROM ({pages_sql(d)}) p
+    FROM {rel}
     """
 
 
 register("q_wet_roundtrip", QuerySpec(
-    spark_fn=_wet_roundtrip_spark, oracle=_wet_oracle(),
+    spark_fn=_roundtrip("wet", lambda d: _pages(d, "text"),
+                        _text_fingerprint_sql),
+    oracle=_text_fingerprint_sql(
+        D.DUCKDB, f"({pages_sql(D.DUCKDB)}) p",
+        f"{D.ts_to_epoch('warc_ts', D.DUCKDB)} AS warc_epoch"),
     doc="WET conversion-record roundtrip: extracted text → per-record-"
         "gzipped WET files → reader → per-url text fingerprints, "
         "oracle-matched against the direct SQL synthesis"))
 
 
 # ---- WAT metadata sidecar ------------------------------------------------
+# The metadata layer (WARC-Type: metadata, JSON envelope), the third and
+# last on-disk format Common Crawl ships a crawl in. The envelope is
+# computed IN SQL by `_wat_json_sql`, so the bytes Spark writes and the
+# bytes the DuckDB oracle reconstructs are the same expression — a full
+# value-hash match proves the connector round-trips the JSON payload
+# byte-identically AND that the payload parses (two fields are
+# json-extracted back out on both sides).
 
 def _wat_json_sql(d: str) -> str:
     """The WAT JSON envelope as a SQL string expression over a pages
@@ -169,54 +162,19 @@ def _wat_fingerprint_sql(d: str, rel: str) -> str:
     """
 
 
-def _wat_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WAT sidecar roundtrip: the metadata layer (WARC-Type: metadata,
-    JSON envelope) written and re-read through io/warc.py's WAT path —
-    the third and last on-disk format Common Crawl ships a crawl in
-    (WARC responses + WET text + WAT metadata). The envelope is computed
-    IN SQL by the shared `_wat_json_sql` template, so the bytes Spark
-    writes and the bytes the DuckDB oracle reconstructs are the same
-    expression — a full value-hash match proves the connector round-
-    trips the JSON payload byte-identically AND that the payload parses
-    (two fields are json-extracted back out on both sides). Same scale
-    shape as the WARC/WET twins: streamed file-per-partition write, one
-    reader task per file, no shuffles."""
-    from unmixing_spark.io.warc import read_wat, write_wat
-
-    pipeline.register_tables(spark, sf_dir, ("documents",))
-    d = D.SPARK
-    pages = spark.sql(f"""
-        SELECT url, warc_epoch, {_wat_json_sql(d)} AS wat_json
-        FROM (
-          SELECT url, {D.ts_to_epoch('warc_ts', d)} AS warc_epoch, html, text
-          FROM ({pages_sql(d)})
-        )
-    """).repartition(WARC_PARTS, "url")
-    out_dir = tempfile.mkdtemp(prefix="unmixing_wat_")
-    try:
-        write_wat(pages, out_dir, gzip_records=True)
-        back = read_wat(spark, out_dir)
-        back.createOrReplaceTempView("wat_back")
-        return loops.checkpoint(
-            spark.sql(_wat_fingerprint_sql(d, "wat_back")))
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def _wat_oracle() -> str:
-    d = D.DUCKDB
-    inner = f"""(
+def _wat_pages(d: str) -> str:
+    return f"""
       SELECT url, warc_epoch, {_wat_json_sql(d)} AS wat_json
       FROM (
         SELECT url, {D.ts_to_epoch('warc_ts', d)} AS warc_epoch, html, text
         FROM ({pages_sql(d)})
       )
-    ) w"""
-    return _wat_fingerprint_sql(d, inner)
+    """
 
 
 register("q_wat_roundtrip", QuerySpec(
-    spark_fn=_wat_roundtrip_spark, oracle=_wat_oracle(),
+    spark_fn=_roundtrip("wat", _wat_pages, _wat_fingerprint_sql),
+    oracle=_wat_fingerprint_sql(D.DUCKDB, f"({_wat_pages(D.DUCKDB)}) w"),
     doc="WAT metadata-record roundtrip: SQL-built JSON envelopes → "
         "per-record-gzipped WAT files → reader → payload hash + "
         "json-extracted fields, oracle-matched against the direct "
