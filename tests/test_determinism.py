@@ -10,6 +10,7 @@ import hashlib
 import numpy as np
 import pytest
 
+from tests.conftest import SF_SMALL
 from unmixing_spark.functions.mnf import mnf_rotate
 from unmixing_spark.lsma.endmembers import spectra_at_xy
 from unmixing_spark.lsma.fcls import fcls_abundance
@@ -74,27 +75,39 @@ def test_fcls_scene_chunking_byte_equal():
     assert np.array_equal(np.round(A, 10), np.round(halves, 10))
 
 
+def _focal_tiles(tiles, window, band, class_band, grid):
+    """Single-band focal interpolation through the halo path: one class
+    label that every pixel carries, so the class mask keeps them all.
+    -> {tile_id: (tile, tile) interpolated band}."""
+    from unmixing_spark.sasma.focal import interpolate_endmember_tiles
+
+    out = interpolate_endmember_tiles(tiles, window, class_band=class_band,
+                                      spectral_bands=[band], labels=[1],
+                                      grid=grid)
+    return {int(r["tile_id"]):
+            np.array([np.nan if v is None else v for v in r["interp"]],
+                     dtype=np.float64).reshape(grid.tile, grid.tile)
+            for r in out.collect()}
+
+
 def test_focal_halo_matches_local(spark):
     """Distributed halo-exchange focal interpolation must equal the
     single-node normalized convolution on the stitched raster."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from unmixing_spark import pipeline
     from unmixing_spark.pagegen import BAND_NAMES
     from unmixing_spark.raster.rasterize import assemble_tiles, tile_to_dense
-    from unmixing_spark.sasma.focal import (focal_interpolate_tiles,
-                                            normalized_convolution)
+    from unmixing_spark.sasma.focal import normalized_convolution
     from unmixing_spark.sasma.kernels import kernel_idw_l1
     from unmixing_spark.spatial.grid import WORLD_GRID as g
 
-    cells = pipeline.cell_raster(spark, "/root/testdata/sf0.001")
-    tiles = assemble_tiles(cells, list(BAND_NAMES)).cache()
+    cells = (pipeline.cell_raster(spark, SF_SMALL)
+             .withColumn("cls", F.lit(1.0)))
+    tiles = assemble_tiles(cells, [*BAND_NAMES, "cls"]).cache()
     window = kernel_idw_l1(5)
-    dist = {int(r["tile_id"]):
-            np.array([np.nan if v is None else v for v in r["interp"]],
-                     dtype=np.float64).reshape(g.tile, g.tile)
-            for r in focal_interpolate_tiles(tiles, window, band=1).collect()}
+    dist = _focal_tiles(tiles, window, band=1, class_band=len(BAND_NAMES),
+                        grid=g)
 
     # build the full dense mosaic locally from the same tiles and convolve
     rows = tiles.collect()
@@ -200,17 +213,18 @@ def test_multiring_halo_kernel_larger_than_tile(spark):
     tile size (the reference's 110 px SASMA window regime) must still
     match the single-node convolution on the stitched mosaic. Uses a
     small 8-cell-tile grid so radius 10 needs 2 halo rings."""
-    import pandas as pd
     from unmixing_spark.raster.rasterize import assemble_tiles, tile_to_dense
-    from unmixing_spark.sasma.focal import (focal_interpolate_tiles,
-                                            normalized_convolution)
+    from unmixing_spark.sasma.focal import normalized_convolution
     from unmixing_spark.sasma.kernels import kernel_idw_l1
     from unmixing_spark.spatial.grid import GridSpec
 
     g = GridSpec(deg=0.05, tile=8)
     rng = np.random.default_rng(29)
-    # a 5x5-tile region of g, ~40% occupancy, deterministic values
-    base_ty, base_tx = 300, 400  # well inside g.nty=450, g.ntx=900
+    # a 5x5-tile region of g, ~40% occupancy, deterministic values; its
+    # center tile (base + 2) opens a BLOCK_T-tile halo block on both
+    # axes, so only the second halo ring brings in the tiles 2 to its
+    # left and above
+    base_ty, base_tx = 302, 402  # well inside g.nty=450, g.ntx=900
     rows = []
     for dty in range(5):
         for dtx in range(5):
@@ -220,16 +234,13 @@ def test_multiring_halo_kernel_larger_than_tile(spark):
                 cy = (base_ty + dty) * 8 + r_
                 cx = (base_tx + dtx) * 8 + c_
                 rows.append((int(cy * g.nx + cx), int(tile_id),
-                             float(rng.integers(1, 500))))
-    cells = spark.createDataFrame(rows, "cell_id long, tile_id long, b1 double")
-    tiles = assemble_tiles(cells, ["b1"], grid=g).cache()
+                             float(rng.integers(1, 500)), 1.0))
+    cells = spark.createDataFrame(
+        rows, "cell_id long, tile_id long, b1 double, cls double")
+    tiles = assemble_tiles(cells, ["b1", "cls"], grid=g).cache()
 
     window = kernel_idw_l1(21)  # radius 10 > tile 8 -> 2 rings
-    dist = {int(r["tile_id"]):
-            np.array([np.nan if v is None else v for v in r["interp"]],
-                     dtype=np.float64).reshape(8, 8)
-            for r in focal_interpolate_tiles(tiles, window, band=0,
-                                             grid=g).collect()}
+    dist = _focal_tiles(tiles, window, band=0, class_band=1, grid=g)
 
     trows = tiles.collect()
     mosaic = np.zeros((5 * 8, 5 * 8))

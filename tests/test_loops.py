@@ -1,8 +1,9 @@
 """The shared loop mechanics (unmixing_spark/loops.py) and the adaptive
 operators built on them: fixpoint convergence and its round cap, the
 one-job observed checkpoint, job attribution of concurrent checkpoint
-builds, the TrustRank empty-seed guard, and that no eager checkpoint
-bypasses ``loops.checkpoint``."""
+builds, the TrustRank empty-seed guard, that no eager checkpoint
+bypasses ``loops.checkpoint``, and that no per-row ``mapInPandas`` body
+bypasses ``boundary.map_rows``."""
 
 from __future__ import annotations
 
@@ -183,3 +184,51 @@ def test_every_eager_checkpoint_goes_through_loops():
     assert not stray, "eager checkpoints outside loops.checkpoint:\n" + \
         "\n".join(stray)
     assert len(allowed) == 2, allowed
+
+
+# Every mapInPandas call in the package, by (module, enclosing
+# function): the row map, the WARC file sink, and whole-batch numpy
+# stages. A per-payload decoder goes through ``boundary.map_rows``; a
+# new site here needs a stated reason it cannot.
+MAP_IN_PANDAS_SITES = {
+    ("boundary.py", "map_rows"): "the row map itself",
+    ("io/warc.py", "write_records"): "a per-partition file sink: one "
+                                     "file per task, one count row out",
+    ("functions/mnf.py", "mnf_transform_distributed"):
+        "whole-batch numpy projection",
+    ("lsma/mapper.py", "unmix_cells"): "whole-batch FCLS solve",
+    ("lsma/mapper.py", "unmix_cells_mesma"):
+        "whole-batch FCLS solves grouped by endmember matrix",
+    ("lsma/ppi.py", "ppi_distributed"):
+        "whole-batch skewer projections, per-batch extremes out",
+}
+
+
+def test_every_row_map_goes_through_boundary():
+    """A per-payload Python decoder crosses the Arrow boundary only
+    through ``boundary.map_rows``, so its batch loop exists once. The
+    scan pins each ``mapInPandas(`` call in the package to its module
+    and innermost enclosing function, one call per pinned site."""
+    import ast
+    import pathlib
+    from collections import Counter
+
+    root = pathlib.Path(loops.__file__).parent
+    sites = Counter()
+
+    def visit(node, module, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mapInPandas"):
+            sites[(module, fn)] += 1
+        for child in ast.iter_child_nodes(node):
+            visit(child, module, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(root).as_posix(),
+              None)
+    assert sites == Counter(list(MAP_IN_PANDAS_SITES)), (
+        f"unpinned: {sorted(set(sites) - set(MAP_IN_PANDAS_SITES))}, "
+        f"gone: {sorted(set(MAP_IN_PANDAS_SITES) - set(sites))}, "
+        f"counts: {dict(sites)}")

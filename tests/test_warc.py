@@ -8,8 +8,9 @@ import gzip
 import pytest
 
 from tests.conftest import SF_SMALL
-from unmixing_spark.io.warc import (CRLF, build_record, parse_records,
-                                    read_records, write_records)
+from unmixing_spark.io.warc import (CRLF, KINDS, build_record,
+                                    parse_records, read_records,
+                                    write_records)
 from unmixing_spark.queries import registry
 
 # sha256 of the decompressed record per (kind, url, payload), generated
@@ -247,3 +248,23 @@ def test_wat_distributed_roundtrip_byte_identical(spark, tmp_path):
     for _, _, j in back:
         env = json.loads(j)["Envelope"]
         assert {"Payload-Metadata", "WARC-Header-Metadata"} <= env.keys()
+
+
+@pytest.mark.parametrize("kind,payload", [("wet", "x"),
+                                          ("warc", bytearray(b"<p>x</p>"))])
+def test_null_payload_rejected(spark, tmp_path, kind, payload):
+    """A NULL payload has no record bytes: the writer raises a
+    ValueError naming the kind, the payload column and the url instead
+    of writing the text ``None`` (string kinds) or failing in
+    ``bytes(None)`` (binary kinds)."""
+    k = KINDS[kind]
+    pages = spark.createDataFrame(
+        [("https://u1.example/", 1735689600, None),
+         ("https://u2.example/", 1735689600, payload)],
+        f"url string, warc_epoch long, {k.column} {k.spark_type}").coalesce(1)
+    with pytest.raises(Exception) as err:
+        write_records(kind, pages, str(tmp_path))
+    msg = str(err.value)
+    assert "ValueError" in msg
+    assert (f"{kind} record for url 'https://u1.example/': "
+            f"NULL payload column '{k.column}'") in msg

@@ -19,13 +19,14 @@ Writer: ``write_records`` serializes a pages DataFrame (url,
 warc_epoch, payload column) into one file per partition, streamed
 batch by batch (Arrow), so executor memory holds one batch, not one
 file. Reader: ``read_records`` is the source connector: ``binaryFile``
-scan → ``mapInPandas`` parse. Scale shape (the real 100 TB path): WARC
-is not block-splittable, so parallelism is one task per file — exactly
-how production Common Crawl jobs run (a crawl is ~64k-90k files of
-~1 GB, saturating any cluster). Malformed input (bad magic, truncated
-content, missing terminator) raises ValueError rather than yielding
-silently wrong records; plain and gzip input both parse, since input
-comes from outside the program.
+scan → ``boundary.map_rows`` parse. Scale shape (the real 100 TB
+path): WARC is not block-splittable, so parallelism is one task per
+file — exactly how production Common Crawl jobs run (a crawl is
+~64k-90k files of ~1 GB, saturating any cluster). Malformed input (bad
+magic, truncated content, missing terminator) raises ValueError rather
+than yielding silently wrong records; plain and gzip input both parse,
+since input comes from outside the program. A NULL payload has no
+record bytes, so the writer raises ValueError for it too.
 
 Round-trip fidelity is the north-rule invariant: q_warc_roundtrip,
 q_wet_roundtrip and q_wat_roundtrip (queries/warc_q.py) prove
@@ -42,6 +43,8 @@ from datetime import datetime, timezone
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+
+from unmixing_spark.boundary import map_rows
 
 CRLF = b"\r\n"
 _MAGIC = b"WARC/1.0"
@@ -170,6 +173,9 @@ def write_records(kind: str, pages: DataFrame, out_dir: str) -> int:
             for pdf in batches:
                 for url, epoch, payload in zip(pdf["url"], pdf["warc_epoch"],
                                                pdf[k.column]):
+                    if payload is None:
+                        raise ValueError(f"{kind} record for url {url!r}: "
+                                         f"NULL payload column {k.column!r}")
                     payload = (bytes(payload) if k.spark_type == "binary"
                                else str(payload).encode())
                     f.write(build_record(kind, str(url), int(epoch), payload))
@@ -184,18 +190,10 @@ def write_records(kind: str, pages: DataFrame, out_dir: str) -> int:
 def read_records(kind: str, spark: SparkSession, path: str) -> DataFrame:
     """Source connector: directory/glob of ``kind`` files →
     DataFrame(url, warc_epoch, payload column). One task per file (the
-    format's parallelism unit), parsed inside an Arrow-batched
-    mapInPandas."""
+    format's parallelism unit), each file's records parsed by one
+    ``boundary.map_rows`` call."""
     k = KINDS[kind]
-
-    def _parse(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [rec for content in pdf["content"]
-                    for rec in parse_records(kind, bytes(content))]
-            yield pd.DataFrame(rows, columns=["url", "warc_epoch", k.column])
-
-    return (spark.read.format("binaryFile").load(path).select("content")
-            .mapInPandas(_parse, f"url string, warc_epoch long, "
-                                 f"{k.column} {k.spark_type}"))
+    return map_rows(spark.read.format("binaryFile").load(path)
+                    .select("content"),
+                    lambda content: parse_records(kind, bytes(content)),
+                    f"url string, warc_epoch long, {k.column} {k.spark_type}")

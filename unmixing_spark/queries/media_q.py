@@ -7,7 +7,7 @@ deterministic synthetic images are rendered per doc_id (low-frequency
 sinusoid mixes whose coarse luma structure survives JPEG quantization),
 each doc contributes a lossless PNG original AND a lossy JPEG-q90
 re-encode (a planted near-duplicate), every payload is decoded and
-64-bit dHashed in one vectorized mapInPandas stage, and candidate pairs
+64-bit dHashed in one per-payload decode stage, and candidate pairs
 come from the Manku-style banded (band,value)-keyed self-join — exact
 for hamming < n_bands by pigeonhole, so the planted PNG/JPEG twins MUST
 all surface. Registered rows-only (PNG/JPEG decode is not expressible
@@ -46,14 +46,13 @@ function over its own base.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from unmixing_spark.boundary import map_rows
 from unmixing_spark.pipeline import register_tables
 from unmixing_spark.queries import QuerySpec, register
 from unmixing_spark.text.audio import audio_fingerprints, encode_wav
@@ -207,23 +206,17 @@ MODALITIES = {
 def twin_pairs(base: DataFrame, modality: str) -> DataFrame:
     """The planted-pair near-dup pipeline over ``base``'s doc ids: each
     doc seeds an original (id ``2 * doc_id``) and its planted twin (id
-    ``2 * doc_id + 1``) in one mapInPandas stage, the modality's
+    ``2 * doc_id + 1``) in one row-map stage, the modality's
     fingerprint hashes them, ``dhash_pairs`` joins them by hamming
     distance, and ``planted`` marks the twin pairs. Unordered."""
     twins, fingerprint, hash_col = MODALITIES[modality]
 
-    def _gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                for i, payload in enumerate(twins(int(doc_id))):
-                    ids.append(2 * int(doc_id) + i)
-                    payloads.append(bytearray(payload))
-            yield pd.DataFrame({"id": ids, modality: payloads})
+    def _gen(doc_id):
+        for i, payload in enumerate(twins(int(doc_id))):
+            yield 2 * int(doc_id) + i, bytearray(payload)
 
-    docs = base.mapInPandas(_gen, f"id long, {modality} binary")
+    docs = map_rows(base.select("doc_id"), _gen,
+                    f"id long, {modality} binary")
     pairs = dhash_pairs(fingerprint(docs), hash_col=hash_col, max_hamming=7,
                         n_bands=8)
     return pairs.withColumn(

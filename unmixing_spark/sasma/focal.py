@@ -6,15 +6,15 @@ contribute neither to the weighted sum nor to the weight normalizer;
 constant-0 padding outside the array.
 
 Distributed form (SURVEY.md §2.5 W3): focal windows cross tile borders, so
-each tile is joined with border strips of its 8 neighbors (halo exchange
-via GridSpec.neighbors) before a grouped-map UDF runs the kernel on the
-padded tile and emits only the interior. One shuffle (the halo join),
-kernel math stays in NumPy.
+``interpolate_endmember_tiles`` ships each tile to every BLOCK_T x BLOCK_T
+tile block whose halo (multi-ring, ``ceil(r / tile)`` rings) it falls in;
+a grouped-map UDF convolves the block's padded supertile and emits only
+the interiors of the block's own tiles. One shuffle (the halo fan-out),
+kernel math stays in NumPy. A single-band focal mean is the case of one
+class label that every pixel carries.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -80,63 +80,6 @@ def interpolate_endmember_map(spectra: np.ndarray, em_locations: np.ndarray,
             for i in range(q)]
 
 
-def focal_interpolate_tiles(tiles: DataFrame, window: np.ndarray,
-                            band: int = 0, grid: GridSpec = WORLD_GRID,
-                            nodata: float = NODATA) -> DataFrame:
-    """Distributed focal interpolation with halo exchange.
-
-    tiles: (tile_id, p, m, n, bands). Each tile row is replicated to every
-    tile within ``ceil(r / tile)`` Chebyshev rings (MULTI-RING halos — the
-    reference's 110 px SASMA window needs 2 rings on 32-cell tiles; SASMA
-    notebook cell 31, SURVEY §7.4.3), tagged with the destination tile;
-    the grouped map assembles an S×S super-tile (S = 2·rings+1),
-    convolves, emits the interior."""
-    r = window.shape[-1] // 2
-    t = grid.tile
-    rings = _halo_rings(r, t)
-    S = 2 * rings + 1
-    ntx = grid.ntx
-
-    halo = tiles.withColumn(
-        "dest", F.explode(_halo_dest_expr(grid, rings)))
-
-    schema = "tile_id long, m int, n int, interp array<double>"
-
-    def _conv(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        dest = int(key[0])
-        dty, dtx = divmod(dest, ntx)
-        sup = np.full((S * t, S * t), 0.0)
-        center = None
-        for tile_id, m_, n_, idx, bands_ in zip(
-                pdf["tile_id"], pdf["m"], pdf["n"], pdf["idx"], pdf["bands"]):
-            vals = np.asarray(bands_, dtype=np.float64).reshape(-1, len(idx))
-            block = np.full(int(m_) * int(n_), nodata)
-            block[np.asarray(idx, dtype=np.int64)] = vals[band]
-            b = np.where(block == nodata, 0.0, block).reshape(int(m_), int(n_))
-            ty, tx = divmod(int(tile_id), ntx)
-            oy, ox = ty - dty + rings, tx - dtx + rings
-            if 0 <= oy < S and 0 <= ox < S:
-                sup[oy * t:(oy + 1) * t, ox * t:(ox + 1) * t] = b
-            if int(tile_id) == dest:
-                center = True
-        if center is None:
-            # dest tile exists only as a neighbor's halo target — emit
-            # nothing (dtype-stable empty frame for Arrow)
-            return pd.DataFrame({
-                "tile_id": pd.Series([], dtype="int64"),
-                "m": pd.Series([], dtype="int32"),
-                "n": pd.Series([], dtype="int32"),
-                "interp": pd.Series([], dtype="object"),
-            })
-        out = normalized_convolution(sup, window, 0.0, nodata)[0]
-        interior = out[rings * t:(rings + 1) * t, rings * t:(rings + 1) * t]
-        return pd.DataFrame({"tile_id": [dest], "m": [t], "n": [t],
-                             "interp": [interior.ravel()]})
-
-    halo = _pin_group_partitions(halo, ["dest"])
-    return halo.groupBy("dest").applyInPandas(_conv, schema)
-
-
 def _pin_group_partitions(df: DataFrame, keys: list[str]) -> DataFrame:
     """Explicit keyed repartition before a grouped-map UDF.
 
@@ -184,23 +127,6 @@ def _halo_rings(r: int, t: int) -> int:
     halos support the reference's large SASMA windows (110 px at 32-cell
     tiles → 2 rings; SASMA notebook cell 31, SURVEY §7.4.3)."""
     return max(1, -(-r // t))  # ceil(r / t), at least one ring
-
-
-def _halo_dest_expr(grid: GridSpec, rings: int):
-    """Destination tile ids (self + all tiles within Chebyshev ``rings``)
-    as closed-form JVM arithmetic on tile_id — whole-stage codegen, no
-    Python crossing on the fan-out."""
-    ntx = grid.ntx
-    nty = (grid.ny + grid.tile - 1) // grid.tile
-    ty = F.floor(F.col("tile_id") / ntx)
-    tx = F.col("tile_id") % ntx
-    dests = []
-    for dy in range(-rings, rings + 1):
-        for dx in range(-rings, rings + 1):
-            y, x = ty + dy, tx + dx
-            valid = (y >= 0) & (y < nty) & (x >= 0) & (x < ntx)
-            dests.append(F.when(valid, (y * ntx + x).cast("long")))
-    return F.array_compact(F.array(*dests))
 
 
 def interpolate_endmember_tiles(tiles: DataFrame, window: np.ndarray,

@@ -5,27 +5,29 @@ The task brief's multimodal axis names audio alongside images and video.
 WAV/PCM is simple enough to implement FOR REAL from the public RIFF spec
 (no external libs): 16-bit little-endian PCM, mono or interleaved
 multi-channel. Compressed codecs (MP3, AAC, Opus) raise
-NotImplementedError — the Spark-side plumbing (binary column, mapInPandas
-batch shape, schema) is identical for them; only the per-payload decode
-call changes.
+NotImplementedError — the Spark-side plumbing (binary column, row map,
+schema) is identical for them; only the per-payload decode call
+changes.
 
 Operators mirror multimodal.py's image patterns:
 - audio_features: decode + duration / RMS / zero-crossing-rate / peak per
   clip (the stats a speech-corpus filter like VoxPopuli or YODAS keys on).
 - resample_audio: integer-factor decimation with a boxcar prefilter
   (declared simple lowpass — a production resampler uses a windowed-sinc
-  polyphase filter; same batch shape).
-Both are vectorized mapInPandas — no per-row Python UDFs.
+  polyphase filter; same stage shape).
+- audio_fingerprints: decode + 64-bit spectral fingerprint per clip.
+Each decodes one payload per Python call (numpy within the clip) and
+crosses the Arrow boundary through ``boundary.map_rows``.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from unmixing_spark.boundary import map_rows
 
 
 def encode_wav(samples: np.ndarray, rate: int) -> bytes:
@@ -71,41 +73,25 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
 
 
 def audio_features(clips: DataFrame, payload_col: str = "audio") -> DataFrame:
-    """Decode + per-clip stats as a vectorized mapInPandas operator:
-    duration, RMS level (dBFS), zero-crossing rate, peak amplitude —
-    the silence/clipping filters a speech-corpus pipeline keys on."""
+    """Per-clip decode + stats: duration, RMS level (dBFS),
+    zero-crossing rate, peak amplitude — the silence/clipping filters a
+    speech-corpus pipeline keys on. One Python decode per payload."""
     schema = ("id long, channels int, rate int, n_samples long, "
               "duration_s double, rms_dbfs double, zcr double, peak int")
 
-    def _feat(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rows: dict[str, list] = {k: [] for k in (
-                "id", "channels", "rate", "n_samples", "duration_s",
-                "rms_dbfs", "zcr", "peak")}
-            for i, payload in zip(pdf["id"], pdf[payload_col]):
-                arr, rate = decode_wav(bytes(payload))
-                x = arr.astype(np.float64)
-                n = arr.shape[0]
-                rms = float(np.sqrt(np.mean(x ** 2))) if n else 0.0
-                mono = x.mean(axis=1)
-                zc = (float(np.mean(np.signbit(mono[1:])
-                                    != np.signbit(mono[:-1])))
-                      if n > 1 else 0.0)
-                rows["id"].append(int(i))
-                rows["channels"].append(arr.shape[1])
-                rows["rate"].append(int(rate))
-                rows["n_samples"].append(n)
-                rows["duration_s"].append(n / rate)
-                rows["rms_dbfs"].append(
-                    20.0 * np.log10(rms / 32768.0) if rms > 0
-                    else float("-inf"))
-                rows["zcr"].append(zc)
-                rows["peak"].append(int(np.max(np.abs(x))) if n else 0)
-            yield pd.DataFrame(rows)
+    def _feat(i, payload):
+        arr, rate = decode_wav(bytes(payload))
+        x = arr.astype(np.float64)
+        n = arr.shape[0]
+        rms = float(np.sqrt(np.mean(x ** 2))) if n else 0.0
+        mono = x.mean(axis=1)
+        zc = (float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
+              if n > 1 else 0.0)
+        yield (int(i), arr.shape[1], int(rate), n, n / rate,
+               20.0 * np.log10(rms / 32768.0) if rms > 0 else float("-inf"),
+               zc, int(np.max(np.abs(x))) if n else 0)
 
-    return clips.mapInPandas(_feat, schema)
+    return map_rows(clips.select("id", payload_col), _feat, schema)
 
 
 def resample_audio(clips: DataFrame, factor: int,
@@ -114,24 +100,16 @@ def resample_audio(clips: DataFrame, factor: int,
     each factor-sized window, then decimate — binary→binary, rate/factor
     in the re-encoded header. Tail samples that do not fill a window are
     dropped (declared; a polyphase resampler would consume them)."""
-    schema = "id long, audio binary"
+    def _resample(i, payload):
+        arr, rate = decode_wav(bytes(payload))
+        n = (arr.shape[0] // factor) * factor
+        win = arr[:n].astype(np.float64)
+        win = win.reshape(-1, factor, arr.shape[1]).mean(axis=1)
+        out = np.clip(np.rint(win), -32768, 32767).astype(np.int16)
+        yield int(i), encode_wav(out, rate // factor)
 
-    def _resample(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids, payloads = [], []
-            for i, payload in zip(pdf["id"], pdf[payload_col]):
-                arr, rate = decode_wav(bytes(payload))
-                n = (arr.shape[0] // factor) * factor
-                win = arr[:n].astype(np.float64)
-                win = win.reshape(-1, factor, arr.shape[1]).mean(axis=1)
-                out = np.clip(np.rint(win), -32768, 32767).astype(np.int16)
-                ids.append(int(i))
-                payloads.append(encode_wav(out, rate // factor))
-            yield pd.DataFrame({"id": ids, "audio": payloads})
-
-    return clips.mapInPandas(_resample, schema)
+    return map_rows(clips.select("id", payload_col), _resample,
+                    "id long, audio binary")
 
 
 def audio_fingerprint64(arr: np.ndarray, rate: int, n_t: int = 8,
@@ -182,21 +160,12 @@ def audio_fingerprint64(arr: np.ndarray, rate: int, n_t: int = 8,
 
 def audio_fingerprints(clips: DataFrame,
                        payload_col: str = "audio") -> DataFrame:
-    """Decode + fingerprint as one vectorized mapInPandas stage:
-    (id, fp bigint) out — the map side of audio near-dup dedup; the
-    join side is multimodal.dhash_pairs(hash_col='fp'), pure DataFrame
-    ops over bit-slice buckets, exactly as with images."""
-    schema = "id long, fp long"
+    """Per-clip decode + fingerprint, (id, fp bigint) out — the map
+    side of audio near-dup dedup; the join side is
+    multimodal.dhash_pairs(hash_col='fp'), pure DataFrame ops over
+    bit-slice buckets, exactly as with images."""
 
-    def _fp(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids, fps = [], []
-            for i, payload in zip(pdf["id"], pdf[payload_col]):
-                arr, rate = decode_wav(bytes(payload))
-                ids.append(int(i))
-                fps.append(audio_fingerprint64(arr, rate))
-            yield pd.DataFrame({"id": ids, "fp": fps})
+    def _fp(i, payload):
+        yield int(i), audio_fingerprint64(*decode_wav(bytes(payload)))
 
-    return clips.mapInPandas(_fp, schema)
+    return map_rows(clips.select("id", payload_col), _fp, "id long, fp long")

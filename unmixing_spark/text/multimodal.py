@@ -22,12 +22,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from unmixing_spark.boundary import map_rows
 
 FAKE_MAGIC = b"FAKE"
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -193,51 +193,33 @@ def decode_image(payload: bytes) -> np.ndarray:
 
 
 def image_features(frames: DataFrame, payload_col: str = "image") -> DataFrame:
-    """Decode + per-channel stats as a vectorized mapInPandas operator —
-    the batch shape a real feature extractor would use."""
+    """Per-image decode + per-channel stats, one Python decode per
+    payload; a channel the image lacks reads NULL."""
     schema = ("id long, height int, width int, channels int, "
               "mean_r double, mean_g double, mean_b double")
 
-    def _feat(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("id", "height", "width", "channels",
-                                    "mean_r", "mean_g", "mean_b")}
-            for i, payload in zip(pdf["id"], pdf[payload_col]):
-                arr = decode_image(bytes(payload))
-                rows["id"].append(int(i))
-                rows["height"].append(arr.shape[0])
-                rows["width"].append(arr.shape[1])
-                rows["channels"].append(arr.shape[2])
-                means = arr.mean(axis=(0, 1))
-                for ch, name in enumerate(("mean_r", "mean_g", "mean_b")):
-                    rows[name].append(float(means[ch]) if ch < arr.shape[2] else float("nan"))
-            yield pd.DataFrame(rows)
+    def _feat(i, payload):
+        arr = decode_image(bytes(payload))
+        means = arr.mean(axis=(0, 1))
+        yield (int(i), *arr.shape,
+               *(float(means[ch]) if ch < arr.shape[2] else float("nan")
+                 for ch in range(3)))
 
-    return frames.mapInPandas(_feat, schema)
+    return map_rows(frames.select("id", payload_col), _feat, schema)
 
 
 def resize_images(frames: DataFrame, out_h: int, out_w: int,
                   payload_col: str = "image") -> DataFrame:
     """Nearest-neighbor resize (pure NumPy — works for any decoded image),
     re-encoded with the fake codec. Demonstrates binary→binary transforms."""
-    schema = "id long, image binary"
+    def _resize(i, payload):
+        arr = decode_image(bytes(payload))
+        ys = (np.arange(out_h) * arr.shape[0] // out_h)
+        xs = (np.arange(out_w) * arr.shape[1] // out_w)
+        yield int(i), encode_fake_image(arr[np.ix_(ys, xs)])
 
-    def _resize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids, payloads = [], []
-            for i, payload in zip(pdf["id"], pdf[payload_col]):
-                arr = decode_image(bytes(payload))
-                ys = (np.arange(out_h) * arr.shape[0] // out_h)
-                xs = (np.arange(out_w) * arr.shape[1] // out_w)
-                ids.append(int(i))
-                payloads.append(encode_fake_image(arr[np.ix_(ys, xs)]))
-            yield pd.DataFrame({"id": ids, "image": payloads})
-
-    return frames.mapInPandas(_resize, schema)
+    return map_rows(frames.select("id", payload_col), _resize,
+                    "id long, image binary")
 
 
 def _block_mean(a: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -281,21 +263,16 @@ def dhash64(arr: np.ndarray) -> int:
 
 def image_dhash(frames: DataFrame, payload_col: str = "image",
                 id_col: str = "id") -> DataFrame:
-    """Decode + perceptual-hash as a vectorized mapInPandas operator:
-    one Arrow batch in, one (id, dhash bigint) batch out. This is the
-    map side of image near-dup dedup — the join side (dhash_pairs) is
-    pure DataFrame ops, so only the unavoidable decode runs in Python."""
-    schema = f"{id_col} long, dhash long"
+    """Per-image decode + perceptual hash, (id, dhash bigint) out, one
+    Python decode per payload. This is the map side of image near-dup
+    dedup — the join side (dhash_pairs) is pure DataFrame ops, so only
+    the unavoidable decode runs in Python."""
 
-    def _hash(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = [int(i) for i in pdf[id_col]]
-            hs = [dhash64(decode_image(bytes(p))) for p in pdf[payload_col]]
-            yield pd.DataFrame({id_col: ids, "dhash": hs})
+    def _hash(i, payload):
+        yield int(i), dhash64(decode_image(bytes(payload)))
 
-    return frames.mapInPandas(_hash, schema)
+    return map_rows(frames.select(id_col, payload_col), _hash,
+                    f"{id_col} long, dhash long")
 
 
 def dhash_pairs(hashes: DataFrame, id_col: str = "id",
@@ -349,28 +326,19 @@ def sample_video_frames(videos: DataFrame, every_n: int = 10,
     """Frame sampling over a fake video payload (concatenated fake-image
     frames): one output row per sampled frame — the UDTF-style expansion
     shape (1 row → m rows) a real ffmpeg sampler produces."""
-    schema = "id long, frame_no int, image binary"
+    def _sample(i, payload):
+        buf = bytes(payload)
+        off, fno = 0, 0
+        while off < len(buf):
+            h, w, c = struct.unpack("<HHB", buf[off + 4:off + 9])
+            size = 9 + h * w * c
+            if fno % every_n == 0:
+                yield int(i), fno, buf[off:off + size]
+            off += size
+            fno += 1
 
-    def _sample(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids, fnos, frames_out = [], [], []
-            for i, payload in zip(pdf["id"], pdf[payload_col]):
-                buf = bytes(payload)
-                off, fno = 0, 0
-                while off < len(buf):
-                    h, w, c = struct.unpack("<HHB", buf[off + 4:off + 9])
-                    size = 9 + h * w * c
-                    if fno % every_n == 0:
-                        ids.append(int(i))
-                        fnos.append(fno)
-                        frames_out.append(buf[off:off + size])
-                    off += size
-                    fno += 1
-            yield pd.DataFrame({"id": ids, "frame_no": fnos, "image": frames_out})
-
-    return videos.mapInPandas(_sample, schema)
+    return map_rows(videos.select("id", payload_col), _sample,
+                    "id long, frame_no int, image binary")
 
 
 def frame_dhash(frames: DataFrame, payload_col: str = "image",
@@ -378,19 +346,12 @@ def frame_dhash(frames: DataFrame, payload_col: str = "image",
                 frame_col: str = "frame_no") -> DataFrame:
     """Per-frame decode + dHash keeping the (id, frame_no) key — the map
     side of video near-dup signatures."""
-    schema = f"{id_col} long, {frame_col} int, dhash long"
 
-    def _hash(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            yield pd.DataFrame({
-                id_col: [int(i) for i in pdf[id_col]],
-                frame_col: [int(f) for f in pdf[frame_col]],
-                "dhash": [dhash64(decode_image(bytes(p)))
-                          for p in pdf[payload_col]]})
+    def _hash(i, frame_no, payload):
+        yield int(i), int(frame_no), dhash64(decode_image(bytes(payload)))
 
-    return frames.mapInPandas(_hash, schema)
+    return map_rows(frames.select(id_col, frame_col, payload_col), _hash,
+                    f"{id_col} long, {frame_col} int, dhash long")
 
 
 def video_signatures(videos: DataFrame, every_n: int = 5,

@@ -145,6 +145,21 @@ def _centroid_udfs(centroids: np.ndarray, n_probe: int):
     return assign_list, probe_lists
 
 
+def _coarse_centroids(c_n: DataFrame, n_centroids: int,
+                      seed: int) -> np.ndarray:
+    """(n_centroids, dim) coarse-quantizer centers: seeded pyspark.ml
+    KMeans over the ``unit`` column. One fit for the IVF and IVF-PQ
+    paths."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    km = KMeans(k=n_centroids, seed=seed, maxIter=20,
+                featuresCol="features", predictionCol="ivf_list")
+    model = km.fit(c_n.withColumn("features", array_to_vector("unit"))
+                   .select("features"))
+    return np.stack([np.asarray(c) for c in model.clusterCenters()])
+
+
 def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
                  n_centroids: int = 16, n_probe: int = 4,
                  seed: int = 42) -> DataFrame:
@@ -161,16 +176,9 @@ def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     are the table's partition keys and n_probe/n_centroids tunes the
     recall/cost point; lists are disjoint so no candidate dedup is
     needed (unlike multi-table LSH)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     c_n = _l2_normed(corpus, "unit")
-    km = KMeans(k=n_centroids, seed=seed, maxIter=20,
-                featuresCol="features", predictionCol="ivf_list")
-    model = km.fit(c_n.withColumn("features", array_to_vector("unit"))
-                   .select("features"))
-    centroids = np.stack([np.asarray(c) for c in model.clusterCenters()])
-    assign_list, probe_lists = _centroid_udfs(centroids, n_probe)
+    assign_list, probe_lists = _centroid_udfs(
+        _coarse_centroids(c_n, n_centroids, seed), n_probe)
 
     c = (c_n.withColumn("ivf_list", assign_list("unit"))
          .select("vec_id", "embedding", "ivf_list").alias("c"))
@@ -212,13 +220,7 @@ def ann_ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     sd = dim // pq_m
 
     c_n = _l2_normed(corpus, "unit").cache()
-
-    # coarse quantizer (same recipe as ann_ivf_topk, shared helpers)
-    km = KMeans(k=n_centroids, seed=seed, maxIter=20,
-                featuresCol="features", predictionCol="ivf_list")
-    model = km.fit(c_n.withColumn("features", array_to_vector("unit"))
-                   .select("features"))
-    coarse = np.stack([np.asarray(c) for c in model.clusterCenters()])
+    coarse = _coarse_centroids(c_n, n_centroids, seed)
     assign_list, probe_lists = _centroid_udfs(coarse, n_probe)
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
