@@ -19,6 +19,7 @@ Reference: lsma.py:179-230; tests.py:43-82 pin FCLS bytes the same way.
 
 from __future__ import annotations
 
+import warnings
 from fractions import Fraction
 
 import duckdb
@@ -252,9 +253,14 @@ def test_focal_class_idw_twin_matches_halo_kernel(spark):
              .withColumn("cls", F.when(F.col("b1") >= 2.0, 2.0)
                          .when(F.col("b4") >= 50.0, 1.0).otherwise(0.0)))
     tiles = assemble_tiles(cells, ["b2", "cls"])
-    out = interpolate_endmember_tiles(
-        tiles, kernel_idw_l1(5), class_band=1, spectral_bands=[0],
-        labels=[0, 1, 2])
+    # building the plan infers no eval type from partial type hints
+    # (PySpark warns when it cannot)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = interpolate_endmember_tiles(
+            tiles, kernel_idw_l1(5), class_band=1, spectral_bands=[0],
+            labels=[0, 1, 2])
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
     kern = {}
     for row in out.collect():
         interp = np.array([np.nan if x is None else float(x)

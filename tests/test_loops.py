@@ -2,8 +2,8 @@
 operators built on them: fixpoint convergence and its round cap, the
 one-job observed checkpoint, job attribution of concurrent checkpoint
 builds, the TrustRank empty-seed guard, that no eager checkpoint
-bypasses ``loops.checkpoint``, and that no per-row ``mapInPandas`` body
-bypasses ``boundary.map_rows``."""
+bypasses ``loops.checkpoint``, and that no hand-written ``mapInPandas`` or
+``mapInArrow`` body bypasses ``boundary.map_rows``/``boundary.map_matrix``."""
 
 from __future__ import annotations
 
@@ -186,49 +186,60 @@ def test_every_eager_checkpoint_goes_through_loops():
     assert len(allowed) == 2, allowed
 
 
-# Every mapInPandas call in the package, by (module, enclosing
-# function): the row map, the WARC file sink, and whole-batch numpy
-# stages. A per-payload decoder goes through ``boundary.map_rows``; a
-# new site here needs a stated reason it cannot.
-MAP_IN_PANDAS_SITES = {
-    ("boundary.py", "map_rows"): "the row map itself",
-    ("io/warc.py", "write_records"): "a per-partition file sink: one "
-                                     "file per task, one count row out",
-    ("functions/mnf.py", "mnf_transform_distributed"):
-        "whole-batch numpy projection",
-    ("lsma/mapper.py", "unmix_cells"): "whole-batch FCLS solve",
-    ("lsma/mapper.py", "unmix_cells_mesma"):
-        "whole-batch FCLS solves grouped by endmember matrix",
-    ("lsma/ppi.py", "ppi_distributed"):
-        "whole-batch skewer projections, per-batch extremes out",
-}
+# Every mapInPandas and mapInArrow call in the package, one entry per
+# call: (module, innermost enclosing function, reason). A per-payload
+# decoder goes through ``boundary.map_rows`` and a whole-batch numpy
+# stage through ``boundary.map_matrix``; a new site here needs a stated
+# reason it cannot.
+MAP_IN_PANDAS_SITES = [
+    ("boundary.py", "map_rows", "the row map itself"),
+    ("io/warc.py", "write_records", "a per-partition file sink: one file "
+                                    "per task, one count row out"),
+]
+MAP_IN_ARROW_SITES = [
+    ("boundary.py", "map_matrix", "the matrix map itself"),
+    ("raster/rasterize.py", "assemble_tiles",
+     "sort-based tile grouping over the Arrow buffers: list columns out"),
+    ("lsma/mapper.py", "unmix_tiles",
+     "FCLS over the Arrow list buffers of sparse tiles: list columns out"),
+    ("queries/kmeans_q.py", "_lloyd_loop",
+     "Lloyd update: exact-integer per-cluster partial sums of a list "
+     "column, accumulated across the task's batches"),
+    ("queries/kmeans_q.py", "_lloyd_loop",
+     "Lloyd assign: one output batch per subspace of each input batch"),
+]
 
 
 def test_every_row_map_goes_through_boundary():
     """A per-payload Python decoder crosses the Arrow boundary only
-    through ``boundary.map_rows``, so its batch loop exists once. The
-    scan pins each ``mapInPandas(`` call in the package to its module
-    and innermost enclosing function, one call per pinned site."""
+    through ``boundary.map_rows`` and a whole-batch numpy stage only
+    through ``boundary.map_matrix``, so each batch loop exists once. The
+    scan pins each ``mapInPandas(``/``mapInArrow(`` call in the package
+    to its module and innermost enclosing function, one pin per call."""
     import ast
     import pathlib
     from collections import Counter
 
     root = pathlib.Path(loops.__file__).parent
+    pinned = {"mapInPandas": MAP_IN_PANDAS_SITES,
+              "mapInArrow": MAP_IN_ARROW_SITES}
     sites = Counter()
 
     def visit(node, module, fn):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             fn = node.name
         if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "mapInPandas"):
-            sites[(module, fn)] += 1
+                and node.func.attr in pinned):
+            sites[(node.func.attr, module, fn)] += 1
         for child in ast.iter_child_nodes(node):
             visit(child, module, fn)
 
     for path in sorted(root.rglob("*.py")):
         visit(ast.parse(path.read_text()), path.relative_to(root).as_posix(),
               None)
-    assert sites == Counter(list(MAP_IN_PANDAS_SITES)), (
-        f"unpinned: {sorted(set(sites) - set(MAP_IN_PANDAS_SITES))}, "
-        f"gone: {sorted(set(MAP_IN_PANDAS_SITES) - set(sites))}, "
+    want = Counter((method, module, fn) for method, pins in pinned.items()
+                   for module, fn, _ in pins)
+    assert sites == want, (
+        f"unpinned: {sorted(set(sites) - set(want))}, "
+        f"gone: {sorted(set(want) - set(sites))}, "
         f"counts: {dict(sites)}")

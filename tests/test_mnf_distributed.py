@@ -14,7 +14,8 @@ import numpy as np
 import pytest
 
 from unmixing_spark.functions.mnf import (NODATA, mnf_fit,
-                                          mnf_fit_distributed, mnf_rotate)
+                                          mnf_fit_distributed, mnf_rotate,
+                                          mnf_transform_distributed)
 
 P, M, N = 6, 12, 17
 
@@ -59,6 +60,23 @@ def test_distributed_fit_partition_invariant(spark, dense_cube):
     R17, mu17, _ = mnf_fit_distributed(_cells_df(spark, dense_cube, 17), bands)
     assert np.abs(R3 - R17).max() < 1e-9
     assert np.abs(mu3 - mu17).max() < 1e-9
+
+
+def test_distributed_transform_equals_single_node(spark, dense_cube):
+    """Pass 2 projects every cell as ``mnf_rotate`` does, the NoData
+    cells included: their NoData band values are remapped to 0 before
+    the projection, as in pass 1."""
+    Y0 = mnf_rotate(dense_cube)[0].reshape(P, M * N).T
+    bands = [f"b{k+1}" for k in range(P)]
+    cells = _cells_df(spark, dense_cube, 3)
+    R, mu, _ = mnf_fit_distributed(cells, bands)
+    rows = (mnf_transform_distributed(cells, bands, R, mu)
+            .orderBy("cell_id").collect())
+    assert [r["cell_id"] for r in rows] == list(range(M * N))
+    Y = np.array([[r[f"mnf{k+1}"] for k in range(P)] for r in rows])
+    nodata_cells = [4 * N + 7, 0]
+    assert np.abs(Y[nodata_cells] - Y0[nodata_cells]).max() < 1e-6
+    assert np.abs(Y - Y0).max() < 1e-6
 
 
 def test_single_node_rotate_unchanged(dense_cube):

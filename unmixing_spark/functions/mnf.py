@@ -19,20 +19,21 @@ equi-self-join followed by 21 difference-product sums (whole-stage
 codegen end to end; the reductions emit O(p²) values regardless of data
 size, and the fit is a pure function of the data, independent of
 partition layout). Driver does the (p x p) eigendecompositions. Pass 2
-broadcasts the (p x p) rotation into a narrow mapInPandas projection.
+broadcasts the (p x p) rotation into a narrow whole-batch projection
+(``boundary.map_matrix``).
 
-NoData handling: NoData pixels are remapped to 0 before the rotation,
-matching transform.py:112.
+NoData handling: NoData band values are remapped to 0 before the fit and
+before the rotation, in both passes, matching transform.py:112.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from unmixing_spark.boundary import map_matrix
 
 NODATA = -9999.0
 
@@ -160,22 +161,15 @@ def mnf_fit_distributed(cells: DataFrame, band_cols: list[str],
 def mnf_transform_distributed(cells: DataFrame, band_cols: list[str],
                               R: np.ndarray, mu: np.ndarray,
                               keep_cols=("cell_id",)) -> DataFrame:
-    """Pass 2: broadcast rotation, narrow projection (no shuffle)."""
+    """Pass 2: broadcast rotation, narrow projection (no shuffle). NoData
+    band values are remapped to 0 first, as in pass 1 and ``mnf_rotate``."""
     p = len(band_cols)
-    keep_cols = list(keep_cols)
     Rb, mub = np.asarray(R), np.asarray(mu)
     schema = ", ".join([f"{c} long" for c in keep_cols] +
                        [f"mnf{i+1} double" for i in range(p)])
 
-    def _proj(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = pdf[band_cols].to_numpy(dtype=np.float64)
-            Y = (X - mub) @ Rb
-            out = {c: pdf[c].to_numpy() for c in keep_cols}
-            for i in range(p):
-                out[f"mnf{i+1}"] = Y[:, i]
-            yield pd.DataFrame(out)
+    def _proj(X: np.ndarray, batch: pa.RecordBatch) -> list:
+        X[X == NODATA] = 0.0
+        return [*(batch.column(c) for c in keep_cols), *((X - mub) @ Rb).T]
 
-    return cells.mapInPandas(_proj, schema)
+    return map_matrix(cells, band_cols, _proj, schema)

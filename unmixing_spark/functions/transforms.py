@@ -1,10 +1,10 @@
 """Spectral transforms as NumPy tile kernels.
 
-These are the batched kernels the Spark tile operators ship inside
-mapInPandas (one call per Arrow batch / tile); the same functions run
-directly in tests/test_golden_fixtures.py against the reference's bundled
-rasters to reproduce the reference's golden values exactly
-(test/tests.py:362-391).
+These are the single-node kernels over dense (p, m, n) cubes; the
+registered queries compute the same indices relationally over the cell
+table (queries/raster_q.py). The kernels run directly in
+tests/test_golden_fixtures.py against the reference's bundled rasters to
+reproduce the reference's golden values exactly (test/tests.py:362-391).
 
 Semantics re-implemented from the published papers the reference cites
 (transform.py docstrings): Crist (1985) RSE 17:302 Table 1 for TM

@@ -5,12 +5,13 @@ fans pixel chunks out to a ProcessPoolExecutor; here executors replace the
 process pool and Arrow batches replace pickled chunks:
 
 - LSMA path (one endmember matrix for the whole scene, lsma.py:152-157):
-  the (q, p) matrix is a broadcast closure constant; pixels stream through
-  ``mapInPandas`` — a narrow, shuffle-free stage whose parallelism is the
-  upstream partitioning. This is the 100 TB fast path.
+  the (q, p) matrix is a broadcast closure constant; each Arrow batch of
+  pixels is one matrix solve through ``boundary.map_matrix`` — a narrow,
+  shuffle-free stage whose parallelism is the upstream partitioning. This
+  is the 100 TB fast path.
 - MESMA path (per-pixel endmembers, lsma.py:159-167): endmember tensors
   travel as a co-partitioned ``array<double>`` column next to the spectra —
-  never collected, never broadcast.
+  never collected, never broadcast — and are read from the same batch.
 - Tile path: ``mapInArrow`` over tile rows (grouped per ``tile_id`` by
   the sort-based ``mapInArrow`` of raster/rasterize.py), emitting one
   abundance cube per tile — the unit the BASELINE throughput metric
@@ -33,45 +34,40 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from unmixing_spark.boundary import map_matrix, nan_as_null
 from unmixing_spark.lsma.fcls import fcls_abundance, predict_spectra_from_abundance
 from unmixing_spark.raster import NODATA
-from unmixing_spark.raster.rasterize import band_major_positions, list_array, nan_as_null
+from unmixing_spark.raster.rasterize import band_major_positions, list_array
+
+
+def _fcls_rmse(X: np.ndarray, E: np.ndarray,
+               delta: float | None) -> tuple[np.ndarray, np.ndarray]:
+    """FCLS abundances (N, q) of pixels X (N, p) and each pixel's
+    forward-model RMSE (validate_by_forward_model, lsma.py:232-297 /
+    utils.rmse, utils.py:940-968)."""
+    A = fcls_abundance(X, E, delta=delta)
+    R = predict_spectra_from_abundance(A, E)
+    return A, np.sqrt(np.mean((R - X) ** 2, axis=1))
 
 
 def unmix_cells(cells: DataFrame, endmembers: np.ndarray,
                 band_cols: list[str], keep_cols: list[str] = ("cell_id",),
                 delta: float | None = None) -> DataFrame:
-    """LSMA over pixel rows: (keep_cols…, b1..bp) → (keep_cols…, a1..aq, rmse).
-
-    rmse is the per-pixel forward-model residual (validate_by_forward_model,
-    lsma.py:232-297 / utils.rmse, utils.py:940-968).
-    """
+    """LSMA over pixel rows: (keep_cols…, b1..bp) → (keep_cols…, a1..aq,
+    rmse), rmse being the per-pixel forward-model residual."""
     E = np.ascontiguousarray(np.asarray(endmembers, dtype=np.float64))
     q = E.shape[0]
-    keep_cols = list(keep_cols)
-    schema_fields = [f"{c} long" for c in keep_cols] + \
-        [f"a{i+1} double" for i in range(q)] + ["rmse double"]
-    schema = ", ".join(schema_fields)
+    schema = ", ".join([f"{c} long" for c in keep_cols] +
+                       [f"a{i+1} double" for i in range(q)] + ["rmse double"])
 
-    def _unmix(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = pdf[band_cols].to_numpy(dtype=np.float64)
-            A = fcls_abundance(X, E, delta=delta)
-            R = predict_spectra_from_abundance(A, E)
-            rmse = np.sqrt(np.mean((R - X) ** 2, axis=1))
-            out = {c: pdf[c].to_numpy() for c in keep_cols}
-            for i in range(q):
-                out[f"a{i+1}"] = A[:, i]
-            out["rmse"] = rmse
-            yield pd.DataFrame(out)
+    def _unmix(X: np.ndarray, batch: pa.RecordBatch) -> list:
+        A, rmse = _fcls_rmse(X, E, delta)
+        return [*(batch.column(c) for c in keep_cols), *A.T, rmse]
 
-    return cells.mapInPandas(_unmix, schema)
+    return map_matrix(cells, band_cols, _unmix, schema)
 
 
 ABUNDANCE_TILE_SCHEMA = (
@@ -124,10 +120,7 @@ def unmix_tile_batches(batches: Iterator[pa.RecordBatch], endmembers: np.ndarray
         A_all = np.full((n, q), NODATA)
         rmse = np.zeros(0)
         if valid.any():
-            A = fcls_abundance(X[valid], E, delta=delta)
-            A_all[valid] = A
-            R = predict_spectra_from_abundance(A, E)
-            rmse = np.sqrt(np.mean((R - X[valid]) ** 2, axis=1))
+            A_all[valid], rmse = _fcls_rmse(X[valid], E, delta)
         flat = np.empty(n * q)
         flat[band_major_positions(counts, q).ravel()] = A_all.T.ravel()
         # per-tile valid counts and mean RMSE: rmse holds the valid pixels
@@ -172,30 +165,21 @@ def unmix_cells_mesma(cells: DataFrame, band_cols: list[str],
     array column (concat_endmember_arrays product, sasma.py:96-111;
     __mesma2__ kernel, lsma.py:169-177). Co-partitioned data-parallel —
     no broadcast, no collect."""
-    p = len(band_cols)
-    keep_cols = list(keep_cols)
     schema = ", ".join([f"{c} long" for c in keep_cols] +
                        [f"a{i+1} double" for i in range(q)])
 
-    def _unmix(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = pdf[band_cols].to_numpy(dtype=np.float64)
-            EM = np.stack(pdf[em_col].to_numpy()).reshape(len(pdf), q, p)
-            A = np.empty((len(pdf), q))
-            # group pixels sharing an endmember matrix → batched solves;
-            # keyed by the exact bytes (not their hash) so distinct
-            # matrices can never silently collide into one group
-            groups: dict[bytes, list[int]] = {}
-            for i, e in enumerate(EM):
-                groups.setdefault(e.tobytes(), []).append(i)
-            for idxs in groups.values():
-                idx = np.asarray(idxs)
-                A[idx] = fcls_abundance(X[idx], EM[idx[0]])
-            out = {c: pdf[c].to_numpy() for c in keep_cols}
-            for i in range(q):
-                out[f"a{i+1}"] = A[:, i]
-            yield pd.DataFrame(out)
+    def _unmix(X: np.ndarray, batch: pa.RecordBatch) -> list:
+        EM = batch.column(em_col).flatten().to_numpy().reshape(len(X), q, -1)
+        A = np.empty((len(X), q))
+        # group pixels sharing an endmember matrix → batched solves;
+        # keyed by the exact bytes (not their hash) so distinct
+        # matrices can never silently collide into one group
+        groups: dict[bytes, list[int]] = {}
+        for i, e in enumerate(EM):
+            groups.setdefault(e.tobytes(), []).append(i)
+        for idxs in groups.values():
+            idx = np.asarray(idxs)
+            A[idx] = fcls_abundance(X[idx], EM[idx[0]])
+        return [*(batch.column(c) for c in keep_cols), *A.T]
 
-    return cells.mapInPandas(_unmix, schema)
+    return map_matrix(cells, band_cols, _unmix, schema)

@@ -13,12 +13,12 @@ independent of pixel count.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from unmixing_spark.boundary import map_matrix
 
 
 def skewers(p: int, n_skewers: int, seed: int = 42) -> np.ndarray:
@@ -46,29 +46,18 @@ def ppi_distributed(cells: DataFrame, band_cols: list[str],
     Per-batch partial extremes → groupBy(skewer) global extreme → hit
     count per pixel. Deterministic under repartitioning: global extremes
     use (value, id) lexicographic tie-break."""
-    p = len(band_cols)
-    S = skewers(p, n_skewers, seed)
+    S = skewers(len(band_cols), n_skewers, seed)
+    sk = np.tile(np.arange(n_skewers), 2)
 
-    def _partial(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = pdf[band_cols].to_numpy(dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            proj = X @ S                     # (N, k)
-            imax = proj.argmax(axis=0)
-            imin = proj.argmin(axis=0)
-            k = S.shape[1]
-            yield pd.DataFrame({
-                "skewer": np.concatenate([np.arange(k), np.arange(k)]),
-                "side": np.concatenate([np.ones(k, dtype=np.int32),
-                                        -np.ones(k, dtype=np.int32)]),
-                "val": np.concatenate([proj[imax, np.arange(k)],
-                                       proj[imin, np.arange(k)]]),
-                "id": np.concatenate([ids[imax], ids[imin]]),
-            })
+    def _partial(X: np.ndarray, batch: pa.RecordBatch) -> list:
+        proj = X @ S                     # (N, k)
+        # each skewer's max then min row: 2k rows out of every batch
+        ext = np.r_[proj.argmax(axis=0), proj.argmin(axis=0)]
+        return [sk, np.repeat([1, -1], n_skewers), proj[ext, sk],
+                batch.column(id_col).to_numpy()[ext]]
 
-    partials = cells.mapInPandas(_partial, "skewer int, side int, val double, id long")
+    partials = map_matrix(cells, band_cols, _partial,
+                          "skewer int, side int, val double, id long")
     # global extreme per (skewer, side): max side uses max(val), min side min(val);
     # ties broken by smallest id for determinism
     from pyspark.sql import Window

@@ -1,7 +1,8 @@
 """Engine-pipeline queries: MNF, PPI, SASMA, sampling, set ops, windows.
 
-MNF/PPI/SASMA are pandas-UDF pipelines (rows-only driver check; numeric
-verification in tests/); the rest carry full DuckDB oracles.
+MNF/PPI/SASMA run numpy stages over whole Arrow batches
+(``boundary.map_matrix``; rows-only driver check, numeric verification in
+tests/); the rest carry full DuckDB oracles.
 """
 
 from __future__ import annotations

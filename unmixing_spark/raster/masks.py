@@ -2,8 +2,8 @@
 
 Array kernels reproduce the reference semantics exactly (golden tests
 tests.py:444-481, 534-545); the relational forms over the cell table live
-in queries/raster_q.py. The array kernels run inside tile UDFs when dense
-masking is needed (they are what mapInPandas ships).
+in queries/raster_q.py. The array kernels run on dense tile cubes where
+masking needs spatial structure (``sasma.focal.interpolate_endmember_map``).
 """
 
 from __future__ import annotations

@@ -26,6 +26,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unmixing_spark.boundary import nan_as_null
 from unmixing_spark.raster import NODATA
 from unmixing_spark.spatial.grid import GridSpec, WORLD_GRID
 
@@ -47,13 +48,6 @@ def tile_to_dense(row) -> np.ndarray:
     vals = np.asarray(row["bands"], dtype=np.float64).reshape(p, len(idx))
     arr[:, idx] = vals
     return arr.reshape(p, m, n)
-
-
-def nan_as_null(values: np.ndarray) -> pa.Array:
-    """A double array with NaN stored as null — the pandas-to-Arrow rule
-    (``from_pandas``) the tile columns have always been written under."""
-    nan = np.isnan(values)
-    return pa.array(values, pa.float64(), mask=nan if nan.any() else None)
 
 
 def list_array(offsets: np.ndarray, values: pa.Array) -> pa.ListArray:

@@ -196,7 +196,7 @@ def interpolate_endmember_tiles(tiles: DataFrame, window: np.ndarray,
         "interp": pd.Series([], dtype="object"),
     })
 
-    def _conv(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _conv(key, pdf):
         dest = int(key[0])
         dby, dbx = divmod(dest, nbx)
         ty0, tx0 = dby * B - rings, dbx * B - rings
