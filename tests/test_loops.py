@@ -186,11 +186,12 @@ def test_every_eager_checkpoint_goes_through_loops():
     assert len(allowed) == 2, allowed
 
 
-# Every mapInPandas and mapInArrow call in the package, one entry per
-# call: (module, innermost enclosing function, reason). A per-payload
-# decoder goes through ``boundary.map_rows`` and a whole-batch numpy
-# stage through ``boundary.map_matrix``; a new site here needs a stated
-# reason it cannot.
+# Every Python-boundary call in the package, one entry per call:
+# (module, innermost enclosing function, reason). A per-payload decoder
+# goes through ``boundary.map_rows`` and a whole-batch numpy stage
+# through ``boundary.map_matrix``; a new site here needs a stated reason
+# it cannot. A ``pandas_udf`` decorator counts in the function that
+# defines the decorated one.
 MAP_IN_PANDAS_SITES = [
     ("boundary.py", "map_rows", "the row map itself"),
     ("io/warc.py", "write_records", "a per-partition file sink: one file "
@@ -208,31 +209,70 @@ MAP_IN_ARROW_SITES = [
     ("queries/kmeans_q.py", "_lloyd_loop",
      "Lloyd assign: one output batch per subspace of each input batch"),
 ]
+APPLY_IN_PANDAS_SITES = [
+    ("sasma/focal.py", "interpolate_endmember_tiles",
+     "grouped map: one normalized convolution per destination tile's "
+     "halo group, which neither row-wise map can see"),
+]
+_COLUMN_UDF = ("a column expression: one value per row, used inside a "
+               "select next to JVM columns")
+PANDAS_UDF_SITES = [
+    ("text/similarity.py", "with_lsh_buckets",
+     f"SimHash bucket ids per vector; {_COLUMN_UDF}"),
+    ("text/similarity.py", "_centroid_udfs",
+     f"IVF nearest coarse list per vector; {_COLUMN_UDF}"),
+    ("text/similarity.py", "_centroid_udfs",
+     f"IVF n_probe nearest lists per query; {_COLUMN_UDF}"),
+    ("text/similarity.py", "ann_ivfpq_topk",
+     f"IVF-PQ residual to the assigned centroid; {_COLUMN_UDF}"),
+    ("text/similarity.py", "ann_ivfpq_topk",
+     f"PQ sub-quantizer codes per residual; {_COLUMN_UDF}"),
+    ("text/similarity.py", "ann_ivfpq_topk",
+     f"asymmetric query-to-code distance; {_COLUMN_UDF}"),
+    ("spatial/joins.py", "point_in_polygon_join",
+     f"winding-number polygon match per point; {_COLUMN_UDF}"),
+    ("queries/text_q.py", "_bpe_token_count",
+     f"BPE token count per text, one cached tokenizer per executor; "
+     f"{_COLUMN_UDF}"),
+]
 
 
 def test_every_row_map_goes_through_boundary():
     """A per-payload Python decoder crosses the Arrow boundary only
     through ``boundary.map_rows`` and a whole-batch numpy stage only
     through ``boundary.map_matrix``, so each batch loop exists once. The
-    scan pins each ``mapInPandas(``/``mapInArrow(`` call in the package
-    to its module and innermost enclosing function, one pin per call."""
+    scan pins every Python-boundary call in the package to its module
+    and innermost enclosing function, one pin per call: every
+    ``mapIn*(`` and ``applyIn*(`` method, and ``pandas_udf(`` called as
+    an attribute or a bare name. A method with no pin list has no
+    allowed site: the stateful grouped map has none, because the engine
+    has no Structured Streaming surface (incremental work goes through
+    io/checkpoint.py batch commits)."""
     import ast
     import pathlib
     from collections import Counter
 
     root = pathlib.Path(loops.__file__).parent
     pinned = {"mapInPandas": MAP_IN_PANDAS_SITES,
-              "mapInArrow": MAP_IN_ARROW_SITES}
+              "mapInArrow": MAP_IN_ARROW_SITES,
+              "applyInPandas": APPLY_IN_PANDAS_SITES,
+              "pandas_udf": PANDAS_UDF_SITES}
     sites = Counter()
 
     def visit(node, module, fn):
+        inner = fn
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            fn = node.name
-        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
-                and node.func.attr in pinned):
-            sites[(node.func.attr, module, fn)] += 1
+            inner = node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else \
+                getattr(f, "id", None)
+            if name and (name == "pandas_udf"
+                         or name.startswith(("mapIn", "applyIn"))):
+                sites[(name, module, fn)] += 1
+        decorators = getattr(node, "decorator_list", ())
         for child in ast.iter_child_nodes(node):
-            visit(child, module, fn)
+            visit(child, module, fn if child in decorators else inner)
 
     for path in sorted(root.rglob("*.py")):
         visit(ast.parse(path.read_text()), path.relative_to(root).as_posix(),

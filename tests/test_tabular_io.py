@@ -175,40 +175,3 @@ def test_csv_nul_boundary_is_declared(spark):  # noqa: F811
     assert back[2] == "a,\x00b"     # quoted interior: NUL survives
     assert back[3] == "\x00,q\x00"  # quoted edges, no quote char: survives
     assert back[4] == '"q'          # escaped-quote path: edge NULs trimmed
-
-
-def test_csv_streaming_ingest_byte_identical(spark):  # noqa: F811
-    """The pinned CSV dialect composes with Structured Streaming: two
-    shards written by write_csv drain through stream_csv (availableNow,
-    one file per trigger -> at least two micro-batches) into parquet with
-    every text byte intact and no row duplicated or lost."""
-    from unmixing_spark.streaming.ingest import stream_csv
-
-    half = len(NASTY) // 2
-    with tempfile.TemporaryDirectory() as tmp:
-        land = os.path.join(tmp, "landing")
-        os.makedirs(land)
-        for i, part in enumerate((NASTY[:half], NASTY[half:])):
-            shard = os.path.join(tmp, f"shard{i}")
-            tabular.write_csv(
-                spark.createDataFrame(part, SCHEMA), shard,
-                single_file=True)
-            src = [f for f in os.listdir(shard) if f.endswith(".csv")][0]
-            os.rename(os.path.join(shard, src),
-                      os.path.join(land, f"part-{i}.csv"))
-        out = os.path.join(tmp, "out")
-        ckpt = os.path.join(tmp, "ckpt")
-        q = (stream_csv(spark, land, SCHEMA, max_files_per_trigger=1)
-             .writeStream.outputMode("append").format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        back = spark.read.parquet(out)
-        assert _rows(back) == {i: (u, t) for i, u, t in NASTY}
-        # restarting the drained stream is a no-op (exactly-once)
-        q2 = (stream_csv(spark, land, SCHEMA, max_files_per_trigger=1)
-              .writeStream.outputMode("append").format("parquet")
-              .option("path", out).option("checkpointLocation", ckpt)
-              .trigger(availableNow=True).start())
-        q2.awaitTermination()
-        assert spark.read.parquet(out).count() == len(NASTY)

@@ -27,7 +27,9 @@ directory scan). First transformation lands in columnar storage; ORC is
 provided as the columnar alternative for interop with Hive-side
 consumers — same predicate-pushdown + column-pruning behavior as parquet
 from Catalyst's side (the engine's internal checkpoints stay parquet,
-io/checkpoint.py).
+io/checkpoint.py). Ingest is batch only: `read_csv` is the one CSV read
+path, and incremental work lands through io/checkpoint.py batch commits,
+not a streaming reader.
 
 The reference engine has no tabular IO surface (it reads GeoTIFF/HDF
 only); this module is the task brief's "another source format" axis.
@@ -66,7 +68,8 @@ _CSV_WRITE_OPTS = {**_CSV_COMMON,
 # all three wrong settings were tried and each collapses '' into NULL.)
 _CSV_READ_OPTS = {**_CSV_COMMON,
                   "nullValue": None,     # unquoted empty -> NULL (see above)
-                  "emptyValue": ""}      # quoted empty   -> ''
+                  "emptyValue": "",      # quoted empty   -> ''
+                  "multiLine": "true"}   # embedded newlines stay in-row
 
 
 def write_csv(df: DataFrame, path: str, *, single_file: bool = False,
@@ -87,25 +90,16 @@ def write_csv(df: DataFrame, path: str, *, single_file: bool = False,
     w.csv(path)
 
 
-def apply_csv_read_opts(reader):
-    """Apply the FULL pinned read dialect (including multiLine) to a
-    DataFrameReader or DataStreamReader — the one place the read-side
-    options live. Both `read_csv` and the streaming boundary
-    (streaming/ingest.stream_csv) call this, so the byte-identity
-    guarantee cannot silently diverge between batch and streaming."""
-    for k, v in _CSV_READ_OPTS.items():
-        reader = reader.option(k, v)
-    return reader.option("multiLine", "true")
-
-
 def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Read CSV written by `write_csv` (or any RFC 4180 producer) with an
     EXPLICIT schema — inference is refused by signature: it needs an
     extra full pass and silently widens/downgrades types on dirty rows.
     multiLine=True makes embedded-newline text rows parse as one record;
     parallelism then comes from the file count, so keep ingest sharded.
+    This is the one CSV read path: the pinned read dialect
+    (`_CSV_READ_OPTS`) is applied here and nowhere else.
     """
-    return apply_csv_read_opts(spark.read.schema(schema)).csv(path)
+    return spark.read.schema(schema).options(**_CSV_READ_OPTS).csv(path)
 
 
 def write_orc(df: DataFrame, path: str, *,

@@ -134,10 +134,11 @@ sql_template("q_retention_cohorts", _retention_cohorts,
 
 
 # ONE source for the 30-minute inactivity gap (scale_q defines it for
-# the streaming sessionizer). Boundary conventions are deliberately
-# those of q_sessionize_events (core.py): a gap of EXACTLY 1800 s stays
+# q_session_windows, Spark's session_window operator run in batch
+# mode). Boundary conventions are deliberately those of
+# q_sessionize_events (core.py): a gap of EXACTLY 1800 s stays
 # in-session here and there (`> 1800` starts a new session), while the
-# streaming session_window path (scale_q.py:143, `>= 1800`) closes at
+# session_window path (scale_q._session_windows_oracle, `>= 1800`) closes at
 # exactly 1800 — a declared divergence pinned to the shared constant so
 # the three sites cannot silently drift further apart.
 from unmixing_spark.queries.scale_q import SESSION_GAP_S  # noqa: E402

@@ -500,29 +500,11 @@ def _mask_regions_oracle() -> str:
     {REGION_ORACLE_ROUNDS}, with the convergence check re-derived
     in-query (conv CTE) so an under-deep unroll breaks the value hash
     via converged=0 against the Spark side's proven converged=1."""
-    ctes = [_region_cells(D.DUCKDB), _region_edges_sql(D.DUCKDB),
-            "l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS lbl FROM edges)"]
-    for r in range(REGION_ORACLE_ROUNDS):
-        ctes.append(f"""n{r} AS MATERIALIZED (
-      SELECT a.id, min(least(a.lbl, coalesce(nb.lbl, a.lbl))) AS lbl
-      FROM l{r} a
-      LEFT JOIN edges e ON e.u = a.id
-      LEFT JOIN l{r} nb ON nb.id = e.v
-      GROUP BY a.id
-    ),
-    l{r + 1} AS MATERIALIZED (
-      SELECT a.id, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-      FROM n{r} a LEFT JOIN n{r} b ON b.id = a.lbl
-    )""")
-    last = f"l{REGION_ORACLE_ROUNDS}"
-    ctes.append(f"""chk AS MATERIALIZED (
-      SELECT a.id, min(least(a.lbl, coalesce(nb.lbl, a.lbl))) AS lbl
-      FROM {last} a
-      LEFT JOIN edges e ON e.u = a.id
-      LEFT JOIN {last} nb ON nb.id = e.v
-      GROUP BY a.id
-    ),
-    conv AS (
+    from unmixing_spark.queries.scale_q import label_prop_ctes, nbr_min_cte
+
+    chain, last = label_prop_ctes(REGION_ORACLE_ROUNDS)
+    ctes = [_region_cells(D.DUCKDB), _region_edges_sql(D.DUCKDB), *chain,
+            nbr_min_cte(last, "chk"), f"""conv AS (
       SELECT coalesce(max(CASE WHEN c.lbl <> l.lbl THEN 1 ELSE 0 END), 0)
         AS changed
       FROM chk c JOIN {last} l ON l.id = c.id
@@ -530,7 +512,7 @@ def _mask_regions_oracle() -> str:
     labeled AS (
       SELECT coalesce(l.lbl, c.pcell) AS region, c.px, c.py, c.n_pages
       FROM cells c LEFT JOIN {last} l ON l.id = c.pcell
-    )""")
+    )"""]
     joined = ",\n    ".join(ctes)
     return f"""
     WITH {joined}

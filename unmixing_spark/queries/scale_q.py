@@ -536,50 +536,58 @@ CC_MAX_ROUNDS = 40     # hard cap for the adaptive loop: 2^40 - 1 hop cover.
                        # returning stale labels.
 
 
+def nbr_min_cte(src: str, name: str) -> str:
+    """DuckDB CTE ``name``(id, lbl): each node's min over its own label
+    in ``src`` and its out-neighbors' labels along ``edges``(u, v)."""
+    return f"""{name} AS MATERIALIZED (
+      SELECT a.id, min(least(a.lbl, coalesce(nb.lbl, a.lbl))) AS lbl
+      FROM {src} a
+      LEFT JOIN edges e ON e.u = a.id
+      LEFT JOIN {src} nb ON nb.id = e.v
+      GROUP BY a.id
+    )"""
+
+
+def label_prop_ctes(rounds: int) -> tuple[list[str], str]:
+    """The unrolled label-propagation chain over an ``edges``(u, v) CTE
+    as DuckDB CTEs: l0 (every source node labels itself), then per round
+    a neighbor-min n{r} and a pointer jump l{r+1} = least(lbl, lbl(lbl)).
+    Returns (CTE list, name of the final label CTE). A convergence check
+    is one more `nbr_min_cte` over the final labels. Shared by the
+    q_neardup_components, q_cluster_keep_best and q_mask_regions
+    oracles."""
+    ctes = ["l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS lbl FROM edges)"]
+    for r in range(rounds):
+        ctes += [nbr_min_cte(f"l{r}", f"n{r}"), f"""l{r + 1} AS MATERIALIZED (
+      SELECT a.id, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
+      FROM n{r} a LEFT JOIN n{r} b ON b.id = a.lbl
+    )"""]
+    return ctes, f"l{rounds}"
+
+
 def _cc_core_ctes() -> tuple[str, str]:
-    """The shared unrolled label-propagation chain (edge list + round
-    CTEs) as DuckDB SQL; returns (joined CTE text, name of the final
-    label CTE). Every CTE referenced more than once is MATERIALIZED —
-    the default inlining would otherwise replicate the LSH subquery
-    2^rounds times (the pointer-jump self-joins double references per
-    round). Shared by _cc_oracle below and content_q's
-    q_cluster_keep_best oracle."""
+    """The candidate-graph edge list plus `label_prop_ctes` as DuckDB
+    SQL; returns (joined CTE text, name of the final label CTE). Every
+    CTE referenced more than once is MATERIALIZED — the default inlining
+    would otherwise replicate the LSH subquery 2^rounds times (the
+    pointer-jump self-joins double references per round). Shared by
+    _cc_oracle below and content_q's q_cluster_keep_best oracle."""
     from unmixing_spark.queries.text_q import _minhash_lsh
 
-    ctes = [f"""pairs AS MATERIALIZED ({_minhash_lsh(D.DUCKDB)}),
+    chain, last = label_prop_ctes(CC_ORACLE_ROUNDS)
+    graph = f"""pairs AS MATERIALIZED ({_minhash_lsh(D.DUCKDB)}),
     edges AS MATERIALIZED (
       SELECT doc_a AS u, doc_b AS v FROM pairs
       UNION ALL
       SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS lbl FROM edges)"""]
-    for r in range(CC_ORACLE_ROUNDS):
-        ctes.append(f"""n{r} AS MATERIALIZED (
-      SELECT a.id, min(least(a.lbl, coalesce(nb.lbl, a.lbl))) AS lbl
-      FROM l{r} a
-      LEFT JOIN edges e ON e.u = a.id
-      LEFT JOIN l{r} nb ON nb.id = e.v
-      GROUP BY a.id
-    ),
-    l{r + 1} AS MATERIALIZED (
-      SELECT a.id, least(a.lbl, coalesce(b.lbl, a.lbl)) AS lbl
-      FROM n{r} a LEFT JOIN n{r} b ON b.id = a.lbl
-    )""")
-    return ",\n    ".join(ctes), f"l{CC_ORACLE_ROUNDS}"
+    )"""
+    return ",\n    ".join([graph, *chain]), last
 
 
 def _cc_oracle() -> str:
     """Unrolled CC + min-doc_id keeper + convergence proof (DuckDB)."""
     core, last = _cc_core_ctes()
-    ctes = [core]
-    ctes.append(f"""chk AS MATERIALIZED (
-      SELECT a.id, min(least(a.lbl, coalesce(nb.lbl, a.lbl))) AS lbl
-      FROM {last} a
-      LEFT JOIN edges e ON e.u = a.id
-      LEFT JOIN {last} nb ON nb.id = e.v
-      GROUP BY a.id
-    ),
-    conv AS (
+    ctes = [core, nbr_min_cte(last, "chk"), f"""conv AS (
       SELECT max(CASE WHEN c.lbl <> l.lbl THEN 1 ELSE 0 END) AS changed
       FROM chk c JOIN {last} l ON l.id = c.id
     ),
@@ -590,7 +598,7 @@ def _cc_oracle() -> str:
     sized AS (
       SELECT component, cast(count(*) as bigint) AS comp_size
       FROM final GROUP BY component
-    )""")
+    )"""]
     joined = ",\n    ".join(ctes)
     return f"""
     WITH {joined}
@@ -601,8 +609,7 @@ def _cc_oracle() -> str:
     """
 
 
-def cc_labels(edges: DataFrame, max_rounds: int = CC_MAX_ROUNDS,
-              edges_checkpointed: bool = False):
+def cc_labels(edges: DataFrame, max_rounds: int = CC_MAX_ROUNDS):
     """Label-propagation connected components over a directed edge list
     (columns u, v; pass both directions for an undirected graph), iterated
     to a PROVEN fixpoint by loops.fixpoint. Each round is a neighbor-min
@@ -621,11 +628,8 @@ def cc_labels(edges: DataFrame, max_rounds: int = CC_MAX_ROUNDS,
 
     Lineage truncation each round is load-bearing: without it the
     3-joins-per-round self-referencing plan grows past what Catalyst can
-    re-optimize. A caller that already holds a checkpointed edge list
-    passes ``edges_checkpointed=True`` to skip re-materializing a second
-    copy of it."""
-    if not edges_checkpointed:
-        edges = loops.checkpoint(edges)
+    re-optimize."""
+    edges = loops.checkpoint(edges)
     lbl0 = edges.select(F.col("u").alias("id")).distinct() \
                 .withColumn("lbl", F.col("id"))
 
