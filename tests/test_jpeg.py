@@ -11,6 +11,7 @@ libjpeg's default shape but float, not libjpeg's exact integer rounding).
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -328,3 +329,93 @@ def test_progressive_encode_decode_equals_baseline():
         decode_jpeg(encode_jpeg(g, quality=95)),
         decode_jpeg(encode_jpeg(g, quality=95,
                                 scan_mode="progressive", dri=3)))
+
+
+# ---- sha256 pins: decoder output and encoder bytes, frozen ----
+#
+# Any change to the coefficient path, the IDCT/FDCT arithmetic or the
+# scan writers that moves one byte or one pixel shows up here.
+
+
+def _sha(b):
+    return hashlib.sha256(b).hexdigest()[:16]
+
+
+def _pixels_sha(img):
+    return _sha(str(img.shape).encode() + img.tobytes())
+
+
+# fixture name -> digest of decode_jpeg(fixture bytes)
+DECODE_PINS = {
+    "enc_420": "ff335bf74cd91f35",
+    "enc_422": "3b4266f62e58a9b1",
+    "enc_prog_dri_420": "ff335bf74cd91f35",
+    "enc_sep_420": "ff335bf74cd91f35",
+    "enc_sep_444": "325b50f2f25446e6",
+    "encoded_rgb_q90": "846b61aad7b47880",
+    "flower_444_dri": "e07f19d0d3b266ae",
+    "gray2x2": "72d6dc8d325b2349",
+    "prog_422": "0dd5711806097f9a",
+    "prog_444": "e0a6a2fdde55c442",
+    "py16_420": "e50fe2343c436de1",
+    "spark_420": "cd184b709db7bd1f",
+}
+
+
+@pytest.mark.parametrize("name", sorted(DECODE_PINS))
+def test_fixture_decode_pinned(name):
+    jpg = open(os.path.join(FIX, f"{name}.jpg"), "rb").read()
+    assert _pixels_sha(decode_jpeg(jpg)) == DECODE_PINS[name]
+
+
+# "kind-quality-subsample" -> (decoded pixels, then the encoded bytes of
+# each (scan_mode, dri) in _PINNED_SCRIPTS). Every scan mode and restart
+# interval carries the same quantized coefficients, so all of them decode
+# to the one pixel digest. Grayscale ignores the subsampling argument.
+_PINNED_SCRIPTS = [("interleaved", 0), ("separate", 0),
+                   ("progressive", 0), ("progressive", 3)]
+CODEC_PINS = {
+    "rgb-q50-444": ("a9229fe618db61b2", "4d75f7030cbb9936", "4ae3b9b8d45ab048",
+                    "7e8b9633ec549403", "e5486c3fbcf70129"),
+    "rgb-q50-422": ("7b641aa5650d2dfa", "b1aa55bd0ecea542", "c76d756637fb1d13",
+                    "f87b513332f7b5c8", "dfb590eaba7c5dc1"),
+    "rgb-q50-420": ("4344bc2b9d258e9f", "b05cc01613186b36", "6e3d118b9b305e09",
+                    "67303aeac5899f10", "d24dd195a204f034"),
+    "rgb-q90-444": ("846b61aad7b47880", "8e0e1370555ae24b", "df2a4cfe4514e44b",
+                    "04c2474a8af16e9e", "d71b1db2c1d5cbe8"),
+    "rgb-q90-422": ("679bb2cb39b663f1", "a2688ad3c6008135", "bcb611a94711cbf3",
+                    "9a6429373ebbafab", "4245e9b90ccab7d9"),
+    "rgb-q90-420": ("19b8ebd12706f291", "50d75843c2fa428b", "abd68e9fe4cfbc12",
+                    "0c5ee7bd9b91fbcf", "f44ad552a6acef8b"),
+    "gray-q50-444": ("5000c87190efa8fe", "3b686de0369e9b0b", "3b686de0369e9b0b",
+                     "cece60c94ecaf98b", "7472bd23c48fda24"),
+    "gray-q50-422": ("5000c87190efa8fe", "3b686de0369e9b0b", "3b686de0369e9b0b",
+                     "cece60c94ecaf98b", "7472bd23c48fda24"),
+    "gray-q50-420": ("5000c87190efa8fe", "3b686de0369e9b0b", "3b686de0369e9b0b",
+                     "cece60c94ecaf98b", "7472bd23c48fda24"),
+    "gray-q90-444": ("df13359dcbdd043d", "ecd525dc08ea0685", "ecd525dc08ea0685",
+                     "9247f8f656db1fa9", "58423a2ac7cc121f"),
+    "gray-q90-422": ("df13359dcbdd043d", "ecd525dc08ea0685", "ecd525dc08ea0685",
+                     "9247f8f656db1fa9", "58423a2ac7cc121f"),
+    "gray-q90-420": ("df13359dcbdd043d", "ecd525dc08ea0685", "ecd525dc08ea0685",
+                     "9247f8f656db1fa9", "58423a2ac7cc121f"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CODEC_PINS))
+def test_codec_matrix_pinned(case):
+    from unmixing_spark.text.jpeg import encode_jpeg
+    kind, q, sub = case.split("-")
+    img = _test_image()
+    if kind == "gray":
+        img = img[..., 0]
+    px, *byte_pins = CODEC_PINS[case]
+    for (mode, dri), want in zip(_PINNED_SCRIPTS, byte_pins):
+        enc = encode_jpeg(img, quality=int(q[1:]), subsample=sub,
+                          scan_mode=mode, dri=dri)
+        assert _sha(enc) == want, (mode, dri)
+    for mode in ("interleaved", "separate", "progressive"):
+        for dri in (0, 3):
+            enc = encode_jpeg(img, quality=int(q[1:]), subsample=sub,
+                              scan_mode=mode, dri=dri)
+            assert _pixels_sha(decode_jpeg(enc)) == px, (mode, dri)
