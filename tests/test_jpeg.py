@@ -419,3 +419,77 @@ def test_codec_matrix_pinned(case):
             enc = encode_jpeg(img, quality=int(q[1:]), subsample=sub,
                               scan_mode=mode, dri=dri)
             assert _pixels_sha(decode_jpeg(enc)) == px, (mode, dri)
+
+
+# ---- sequential scans through the shared scan walker ----
+
+def test_sequential_eob_run_raises():
+    """EOBn with r > 0 (an end-of-band run over several blocks) exists
+    only in progressive AC scans (G.1.2.2); a sequential block ends with
+    EOB alone (F.1.2.2). Relabel the AC-luma code of EOB (HUFFVAL 0x00)
+    as EOB2 (0x10) and the first luma block's end must refuse."""
+    data = bytearray(open(os.path.join(FIX, "encoded_rgb_q90.jpg"),
+                          "rb").read())
+    for m, s, _e in _jpeg_segments(bytes(data)):
+        if m == 0xC4 and data[s + 4] == 0x10:        # DHT class 1, id 0
+            vals = s + 4 + 17
+            eob = data.index(0x00, vals)
+            assert eob < vals + sum(data[s + 5:s + 21])
+            data[eob] = 0x10
+            break
+    else:
+        pytest.fail("fixture has no AC-luma DHT")
+    with pytest.raises(ValueError, match="EOB run in a sequential scan"):
+        decode_jpeg(bytes(data))
+
+
+@pytest.mark.parametrize("mode", ["interleaved", "separate", "progressive"])
+def test_restart_interval_every_scan_mode(mode):
+    """dri > 0 writes DRI and RSTn in every scan mode; restart markers
+    reset the DC predictors but carry no coefficients, so the decode
+    equals the dri=0 decode exactly."""
+    from unmixing_spark.text.jpeg import encode_jpeg
+    img = _test_image()
+    for sub in ("444", "422", "420"):
+        enc = encode_jpeg(img, quality=90, subsample=sub, scan_mode=mode,
+                          dri=3)
+        assert any(m == 0xDD for m, _s, _e in _jpeg_segments(enc))
+        assert sum(enc.count(bytes([0xFF, 0xD0 + i])) for i in range(8)) >= 3
+        plain = encode_jpeg(img, quality=90, subsample=sub, scan_mode=mode)
+        assert np.array_equal(decode_jpeg(enc), decode_jpeg(plain)), sub
+
+
+def test_sequential_scan_over_some_components():
+    """A sequential scan over 2 of 3 components interleaves them in MCU
+    order (A.2.3) and the third follows in its own scan (A.2.2). Re-code
+    a 4:2:0 image's coefficients as scans [Y, Cb] + [Cr] with the
+    codec's own scan writer: the decode equals the one-scan decode."""
+    from unmixing_spark.text import jpeg
+    base = jpeg.encode_jpeg(_test_image(), quality=90, subsample="420")
+    seen = {}
+    real = jpeg._reconstruct_coefs
+
+    def capture(frame, coefs, qt):
+        seen.update(frame=frame, coefs=coefs)
+        return real(frame, coefs, qt)
+
+    jpeg._reconstruct_coefs = capture
+    try:
+        want = decode_jpeg(base)
+    finally:
+        jpeg._reconstruct_coefs = real
+    codes = [(jpeg._huff_codes(*jpeg._HUFF_DC_LUM),
+              jpeg._huff_codes(*jpeg._HUFF_AC_LUM)),
+             (jpeg._huff_codes(*jpeg._HUFF_DC_CHROM),
+              jpeg._huff_codes(*jpeg._HUFF_AC_CHROM))]
+    sos = base.index(b"\xff\xda")
+    out = bytearray(base[:sos])
+    for members in ([0, 1], [2]):
+        spec = b"".join(bytes([ci + 1, 0 if ci == 0 else 0x11])
+                        for ci in members)
+        payload = bytes([len(members)]) + spec + b"\x00\x3f\x00"
+        out += b"\xff\xda" + (len(payload) + 2).to_bytes(2, "big") + payload
+        out += jpeg._encode_scan(seen["frame"], seen["coefs"], members,
+                                 0, 63, 0, codes)
+    out += b"\xff\xd9"
+    assert np.array_equal(decode_jpeg(bytes(out)), want)

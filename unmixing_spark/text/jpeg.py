@@ -1,28 +1,41 @@
-"""Baseline JPEG codec — ITU-T T.81 sequential DCT (SOF0), stdlib+numpy.
+"""JPEG codec — ITU-T T.81 sequential (SOF0) and progressive (SOF2) DCT
+with Huffman coding, stdlib+numpy.
 
 Re-implemented from the public spec (ITU-T Recommendation T.81, 1992:
-Annex F sequential coding, Annex A DCT/zigzag/quantization, Annex B
-interchange format, Annex K standard tables) — no image library. Retires
-the repo's last multimodal stub: the reference's multimodal surface
-treats images as opaque payloads; here decode AND encode are real for the
-codecs a crawl actually sees (PNG, BMP, JPEG baseline).
+Annex A DCT/zigzag/quantization and data-unit order, Annex B interchange
+format, Annex F sequential coding, Annex G progressive coding, Annex K
+standard tables) — no image library. Retires the repo's last multimodal
+stub: the reference's multimodal surface treats images as opaque
+payloads; here decode AND encode are real for the codecs a crawl
+actually sees (PNG, BMP, JPEG).
 
-Decoder: 8-bit baseline sequential (SOF0) AND progressive (SOF2, Annex
-G.2: spectral selection + successive approximation, interleaved DC /
-non-interleaved AC scans, EOB runs, refinement bits), 1 component
-(grayscale) or 3 components (YCbCr → RGB, JFIF conversion), arbitrary
-h/v sampling factors (4:4:4, 4:2:2, 4:2:0), restart intervals
-(DRI/RSTn). Chroma upsampling is the triangular filter for 2x factors
-(libjpeg's default shape; spec A.1.1 leaves the filter open), nearest
-otherwise. Not supported (raise NotImplementedError): arithmetic
-coding, 12-bit, hierarchical, per-component baseline scans, CMYK.
+One data-unit walker and one coefficient path carry every scan mode,
+decode and encode. ``_data_units`` yields the blocks of a scan in T.81
+order (A.2.2 row-major over a lone component's own ceil grid, A.2.3 MCU
+order for several components) with the restart points of the DRI
+interval. Decoding: every scan, sequential (Ss=0, Se=63, Ah=Al=0) or
+progressive (spectral selection + successive approximation, EOB runs,
+refinement bits), lands in per-component zigzag coefficient arrays
+allocated at SOF; ``_reconstruct_coefs`` dequantizes and runs one
+batched IDCT per component at EOI. Encoding: every block is quantized
+once, then each ``scan_mode`` is a scan script written by one scan
+writer.
 
-Encoder: baseline 4:4:4 (gray or RGB→YCbCr) with the Annex K standard
-quantization + Huffman tables and libjpeg-compatible quality scaling;
-deterministic (pure numpy).
+Decoder: 8-bit, 1 component (grayscale) or 3 components (YCbCr → RGB,
+JFIF conversion), arbitrary h/v sampling factors (4:4:4, 4:2:2, 4:2:0),
+any grouping of components into scans, restart intervals (DRI/RSTn).
+Chroma upsampling is the triangular filter for 2x factors (libjpeg's
+default shape; spec A.1.1 leaves the filter open), nearest otherwise.
+Not supported (raise NotImplementedError): arithmetic coding, 12-bit,
+hierarchical, CMYK.
+
+Encoder: gray or RGB→YCbCr at 4:4:4, 4:2:2 or 4:2:0, with the Annex K
+standard quantization + Huffman tables and libjpeg-compatible quality
+scaling; interleaved, per-component or progressive scan scripts, with
+an optional restart interval; deterministic (pure numpy).
 
 Verified against an INDEPENDENT decoder (gdk-pixbuf/libjpeg renderings of
-four real-world files, plus gdk decoding OUR encoder's output) in
+real-world files, plus gdk decoding OUR encoder's output) in
 tests/test_jpeg.py.
 """
 
@@ -105,11 +118,6 @@ _A = 0.5 * np.cos((2 * _U[None, :] + 1) * _U[:, None] * np.pi / 16.0)
 _A[0, :] *= 1.0 / np.sqrt(2.0)
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    """2-D inverse DCT of an (8, 8) coefficient block."""
-    return _A.T @ block @ _A
-
-
 class _Huffman:
     """Canonical Huffman table from DHT BITS/HUFFVAL (T.81 C.2), compiled
     to a 16-bit peek table: lut[peek16] = (length << 8) | value — one
@@ -158,14 +166,16 @@ class _BitReader:
     def read_bits(self, n: int) -> int:
         if n == 0:
             return 0
-        self._ensure(n)
+        if self.nbits < n:
+            self._ensure(n)
         self.nbits -= n
         v = (self.bitbuf >> self.nbits) & ((1 << n) - 1)
         self.bitbuf &= (1 << self.nbits) - 1
         return v
 
     def decode_huff(self, table: _Huffman) -> int:
-        self._ensure(16)
+        if self.nbits < 16:
+            self._ensure(16)
         peek = (self.bitbuf >> (self.nbits - 16)) & 0xFFFF
         entry = int(table.lut[peek])
         length = entry >> 8
@@ -191,14 +201,17 @@ def _extend(v: int, t: int) -> int:
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline JPEG bytes → (h, w, c) uint8 (c = 1 gray, 3 RGB)."""
+    """JPEG bytes (sequential or progressive) → (h, w, c) uint8 (c = 1
+    gray, 3 RGB). Every scan decodes into the coefficient arrays; the
+    pixels are reconstructed once, at EOI."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     qt: dict[int, np.ndarray] = {}
     huff_dc: dict[int, _Huffman] = {}
     huff_ac: dict[int, _Huffman] = {}
     frame = None
-    coefs = None  # progressive: per-component zigzag coefficient arrays
+    coefs = None   # per-component zigzag coefficient arrays, from SOF
+    scanned = False
     restart_interval = 0
     pos = 2
     while pos < len(data):
@@ -238,12 +251,17 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
             if prec != 8:
                 raise NotImplementedError(f"JPEG precision {prec} (8-bit only)")
+            if nc not in (1, 3):
+                raise NotImplementedError(
+                    "JPEG with %d components (grayscale/YCbCr only)" % nc)
             comps = []
             for c in range(nc):
                 cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
-            frame = {"h": h, "w": w, "comps": comps,
-                     "progressive": marker == 0xC2}
+            frame = _frame(h, w, comps, progressive=marker == 0xC2)
+            my, mx = frame["mcus"]
+            coefs = [np.zeros((my * c["v"], mx * c["h"], 64), dtype=np.int32)
+                     for c in comps]
         elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCA, 0xCB, 0xCE, 0xCF):
             raise NotImplementedError(
@@ -252,46 +270,192 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack(">H", seg[:2])
         elif marker == 0xDA:  # SOS — scan follows
+            if frame is None:
+                raise ValueError("JPEG missing SOF before SOS")
             ns = seg[0]
             scan = {}
             for c in range(ns):
                 cid, tt = seg[1 + 2 * c], seg[2 + 2 * c]
                 scan[cid] = (tt >> 4, tt & 15)
-            if frame is not None and frame["progressive"]:
-                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-                ahal = seg[3 + 2 * ns]
-                if coefs is None:
-                    coefs = _alloc_coefs(frame)
-                pos = _decode_progressive_scan(
-                    data, pos + 2 + length, frame, scan, huff_dc, huff_ac,
-                    restart_interval, ss, se, ahal >> 4, ahal & 15, coefs)
-                continue
-            if frame is not None and (
-                    len(scan) < len(frame["comps"])
-                    or (len(frame["comps"]) == 1
-                        and (frame["comps"][0]["h"] > 1
-                             or frame["comps"][0]["v"] > 1))):
-                # per-component scans are ALWAYS non-interleaved
-                # (T.81 A.2.2) — including a single-component frame with
-                # sampling factors > 1: accumulate coefficients per
-                # scan, reconstruct at EOI
-                if len(scan) != 1:
-                    raise NotImplementedError(
-                        "baseline scan with %d of %d components (full "
-                        "interleave or one component per scan)"
-                        % (len(scan), len(frame["comps"])))
-                if coefs is None:
-                    coefs = _alloc_coefs(frame)
-                pos = _decode_baseline_component_scan(
-                    data, pos + 2 + length, frame, scan, huff_dc, huff_ac,
-                    restart_interval, coefs)
-                continue
-            return _decode_scan(data, pos + 2 + length, frame, scan, qt,
-                                huff_dc, huff_ac, restart_interval)
+            ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
+            if not frame["progressive"]:
+                ss, se, ahal = 0, 63, 0    # the full band, full precision
+            pos = _decode_scan(
+                data, pos + 2 + length, frame, scan, huff_dc, huff_ac,
+                restart_interval, ss, se, ahal >> 4, ahal & 15, coefs)
+            scanned = True
+            continue
         pos += 2 + length
-    if frame is not None and coefs is not None:
+    if scanned:
         return _reconstruct_coefs(frame, coefs, qt)
     raise ValueError("JPEG truncated before SOS")
+
+
+def _frame(h: int, w: int, comps: list[dict], progressive: bool) -> dict:
+    """Frame geometry shared by the decoder and the encoder: image size,
+    components (id, h, v, tq), the maximum sampling factors and the MCU
+    grid (A.2.4), plus the progression history of delivered bands."""
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
+    return {"h": h, "w": w, "comps": comps, "progressive": progressive,
+            "hmax": hmax, "vmax": vmax,
+            "mcus": (-(-h // (8 * vmax)), -(-w // (8 * hmax))),
+            "delivered": {}}
+
+
+def _data_units(frame: dict, members: list[int], dri: int):
+    """Yield ``(restart, ci, by, bx)`` for every data unit of a scan over
+    component indices ``members``, in T.81 order: one component is
+    non-interleaved, row-major over that component's OWN ceil(size/8)
+    block grid (A.2.2, narrower than the MCU-padded arrays for subsampled
+    edges); several components walk the MCU grid, each contributing its
+    h x v blocks per MCU (A.2.3). ``restart`` is true on the first unit
+    of every MCU that a restart marker precedes (every ``dri`` MCUs)."""
+    comps = frame["comps"]
+    if len(members) == 1:
+        c = comps[members[0]]
+        cw = -(-(frame["w"] * c["h"]) // frame["hmax"])   # A.1.1
+        ch = -(-(frame["h"] * c["v"]) // frame["vmax"])
+        mcus_y, mcus_x = -(-ch // 8), -(-cw // 8)
+        layout = [(members[0], 1, 1)]
+    else:
+        mcus_y, mcus_x = frame["mcus"]
+        layout = [(ci, comps[ci]["h"], comps[ci]["v"]) for ci in members]
+    mcu = 0
+    for my in range(mcus_y):
+        for mx in range(mcus_x):
+            restart = bool(dri) and mcu > 0 and mcu % dri == 0
+            mcu += 1
+            for ci, h, v in layout:
+                for by in range(v):
+                    for bx in range(h):
+                        yield restart, ci, my * v + by, mx * h + bx
+                        restart = False
+
+
+def _check_progression(hist: dict, ci: int, ss: int, se: int, ah: int,
+                       al: int) -> None:
+    """G.1.1.1.1 progression checks for one component of a progressive
+    scan: the DC band must arrive before any AC band of the component,
+    no band may be delivered twice, and a refinement scan's Ah must
+    equal the Al at which the band was previously delivered — violations
+    decode garbage silently if let through. ``hist`` maps (ci, k) to the
+    Al each coefficient was last delivered at."""
+    if ss == 0:
+        prev = hist.get((ci, 0))
+        if ah == 0:
+            if prev is not None:
+                raise ValueError(
+                    "duplicate progressive DC first scan (G.1.1.1.1)")
+        elif prev != ah:
+            raise ValueError(
+                "progressive DC refinement at Ah=%d but band delivered "
+                "at Al=%s (G.1.1.1.1)" % (ah, prev))
+        hist[(ci, 0)] = al
+        return
+    if hist.get((ci, 0)) is None:
+        raise ValueError(
+            "progressive AC scan before the component's DC scan "
+            "(G.1.1.1.1)")
+    for k in range(ss, se + 1):
+        prev = hist.get((ci, k))
+        if ah == 0:
+            if prev is not None:
+                raise ValueError(
+                    "overlapping progressive AC first scans for "
+                    "coefficient %d (G.1.1.1.1)" % k)
+        elif prev != ah:
+            raise ValueError(
+                "progressive AC refinement at Ah=%d but coefficient "
+                "%d delivered at Al=%s (G.1.1.1.1)" % (ah, k, prev))
+        hist[(ci, k)] = al
+
+
+def _decode_scan(data, pos, frame, scan, huff_dc, huff_ac, dri,
+                 ss, se, ah, al, coefs):
+    """Decode one scan into ``coefs``: band Ss..Se of the scan's
+    components at bit position Al (refining from Ah when Ah > 0). A
+    sequential scan is Ss=0, Se=63, Ah=Al=0: its DC difference and its
+    AC run-lengths are coded exactly as a progressive DC first scan and
+    an AC first scan, except that an EOB run longer than one block is
+    illegal (F.1.2.2). Returns the position of the marker following the
+    entropy-coded segment."""
+    comps = frame["comps"]
+    cidx = {c["id"]: i for i, c in enumerate(comps)}
+    members = [cidx[cid] for cid in scan]     # SOS order
+    sequential = not frame["progressive"]
+    if not sequential:
+        if ss == 0 and se != 0:
+            raise ValueError("progressive DC scan with Se != 0")
+        if ss != 0 and len(members) != 1:
+            raise ValueError(
+                "progressive AC scan with %d components (G.1.1.1.1 allows "
+                "1)" % len(members))
+    tables = {}
+    for ci in members:
+        td, ta = scan[comps[ci]["id"]]
+        if ss == 0 and ah == 0 and td not in huff_dc:
+            raise ValueError("missing DHT DC table %d for scan" % td)
+        if se > 0 and ta not in huff_ac:
+            raise ValueError("missing DHT AC table %d for scan" % ta)
+        if not sequential:
+            _check_progression(frame["delivered"], ci, ss, se, ah, al)
+        tables[ci] = (huff_dc.get(td), huff_ac.get(ta))
+    rd = _BitReader(data, pos)
+    preds = dict.fromkeys(members, 0)
+    eobrun = 0
+    for restart, ci, by, bx in _data_units(frame, members, dri):
+        if restart:
+            rd.align_and_consume_rst()
+            preds = dict.fromkeys(members, 0)
+            eobrun = 0
+        blk = coefs[ci][by, bx]
+        dc, ac = tables[ci]
+        if ss == 0:
+            if ah == 0:
+                t = rd.decode_huff(dc)
+                preds[ci] += _extend(rd.read_bits(t), t)
+                blk[0] = preds[ci] << al
+            elif rd.read_bits(1):
+                blk[0] |= 1 << al
+        if se == 0:
+            continue
+        if ah:
+            eobrun = _refine_ac_block(rd, blk, ac, ss, se, al, eobrun)
+            continue
+        eobrun = _first_ac_block(rd, blk, ac, max(ss, 1), se, al, eobrun)
+        if sequential and eobrun:
+            raise ValueError("EOB run in a sequential scan (F.1.2.2 codes "
+                             "one block's end only)")
+    return _next_marker(data, rd.pos)
+
+
+def _reconstruct_coefs(frame, coefs, qt):
+    """Dequantize + IDCT the accumulated coefficient arrays — one batched
+    ``_A.T @ blocks @ _A`` matmul per component over all its blocks —
+    then upsample chroma, crop to the image size and convert YCbCr→RGB
+    (JFIF)."""
+    planes = []
+    for c, cf in zip(frame["comps"], coefs):
+        if c["tq"] not in qt:
+            raise ValueError("missing DQT table %d for scan" % c["tq"])
+        nby, nbx = cf.shape[:2]
+        blocks = np.zeros((nby, nbx, 64))
+        # qt tables are kept in DQT (zigzag) order, matching cf's indexing
+        blocks[:, :, ZIGZAG] = cf.astype(np.float64) * qt[c["tq"]]
+        px = _A.T @ blocks.reshape(nby, nbx, 8, 8) @ _A + 128.0
+        p = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
+        p = _upsample(p, frame["vmax"] // c["v"], frame["hmax"] // c["h"])
+        planes.append(p[:frame["h"], :frame["w"]])
+    if len(planes) == 1:
+        y = np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
+        return y[:, :, None]
+    y, cb, cr = planes
+    r = y + 1.402 * (cr - 128.0)
+    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+    b = y + 1.772 * (cb - 128.0)
+    rgb = np.stack([r, g, b], axis=-1)
+    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
 def _tri2(p: np.ndarray, axis: int) -> np.ndarray:
@@ -322,178 +486,12 @@ def _upsample(p: np.ndarray, fy: int, fx: int) -> np.ndarray:
     return p
 
 
-def _decode_baseline_component_scan(data, pos, frame, scan, huff_dc,
-                                    huff_ac, dri, coefs):
-    """One baseline sequential scan covering a SINGLE component
-    (T.81 A.2.2 non-interleaved data-unit order: row-major over the
-    component's OWN ceil(comp_size/8) block grid, not the MCU-padded
-    one). Full DC+AC coefficients land in ``coefs`` in zigzag order —
-    reconstruction happens at EOI via _reconstruct_coefs, exactly like
-    the progressive path. Returns the position of the next marker."""
-    comps = frame["comps"]
-    cidx = {c["id"]: i for i, c in enumerate(comps)}
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    (cid, (td, ta)), = scan.items()
-    ci = cidx[cid]
-    c = comps[ci]
-    if td not in huff_dc:
-        raise ValueError("missing DHT DC table %d for scan" % td)
-    if ta not in huff_ac:
-        raise ValueError("missing DHT AC table %d for scan" % ta)
-    cw = -(-(frame["w"] * c["h"]) // hmax)       # ceil component size (A.1.1)
-    ch = -(-(frame["h"] * c["v"]) // vmax)
-    nbx, nby = -(-cw // 8), -(-ch // 8)
-    rd = _BitReader(data, pos)
-    pred, unit = 0, 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if dri and unit and unit % dri == 0:
-                rd.align_and_consume_rst()
-                pred = 0
-            blk = coefs[ci][by, bx]
-            t = rd.decode_huff(huff_dc[td])
-            pred += _extend(rd.read_bits(t), t)
-            blk[0] = pred
-            k = 1
-            while k < 64:
-                rs = rd.decode_huff(huff_ac[ta])
-                r, s = rs >> 4, rs & 15
-                if s == 0:
-                    if r == 15:                  # ZRL: 16 zeros
-                        k += 16
-                        continue
-                    break                        # EOB
-                k += r
-                if k > 63:
-                    raise ValueError("AC index overrun")
-                blk[k] = _extend(rd.read_bits(s), s)
-                k += 1
-            unit += 1
-    return _next_marker(data, rd.pos)
-
-
-def _decode_scan(data, pos, frame, scan, qt, huff_dc, huff_ac, dri):
-    if frame is None:
-        raise ValueError("JPEG missing SOF before SOS")
-    h_img, w_img, comps = frame["h"], frame["w"], frame["comps"]
-    # This decoder handles the single interleaved scan covering every frame
-    # component (the shape every baseline encoder in practice emits). T.81
-    # also allows per-component scans (ns < nc, non-interleaved data-unit
-    # order per A.2.2) and 4-component Adobe CMYK frames — refuse those
-    # explicitly rather than mis-decode.
-    if len(scan) != len(comps):
-        raise NotImplementedError(
-            "JPEG per-component scans (ns %d != nc %d): single interleaved "
-            "scan only" % (len(scan), len(comps)))
-    if len(comps) not in (1, 3):
-        raise NotImplementedError(
-            "JPEG with %d components (grayscale/YCbCr only)" % len(comps))
-    if len(comps) == 1 and (comps[0]["h"] > 1 or comps[0]["v"] > 1):
-        raise NotImplementedError(
-            "single-component JPEG with sampling factors >1 requires "
-            "non-interleaved data-unit order (T.81 A.2.2)")
-    for c in comps:
-        td, ta = scan[c["id"]]
-        if td not in huff_dc:
-            raise ValueError("missing DHT DC table %d for scan" % td)
-        if ta not in huff_ac:
-            raise ValueError("missing DHT AC table %d for scan" % ta)
-        if c["tq"] not in qt:
-            raise ValueError("missing DQT table %d for scan" % c["tq"])
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-w_img // (8 * hmax))
-    mcus_y = -(-h_img // (8 * vmax))
-    planes = [np.zeros((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8))
-              for c in comps]
-    rd = _BitReader(data, pos)
-    pred = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if dri and mcu_count and mcu_count % dri == 0:
-                rd.align_and_consume_rst()
-                pred = [0] * len(comps)
-            for ci, c in enumerate(comps):
-                td, ta = scan[c["id"]]
-                q = qt[c["tq"]]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        coeffs = np.zeros(64)
-                        t = rd.decode_huff(huff_dc[td])
-                        diff = _extend(rd.read_bits(t), t)
-                        pred[ci] += diff
-                        coeffs[0] = pred[ci]
-                        k = 1
-                        while k < 64:
-                            rs = rd.decode_huff(huff_ac[ta])
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:   # ZRL: 16 zeros
-                                    k += 16
-                                    continue
-                                break         # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC index overrun")
-                            coeffs[k] = _extend(rd.read_bits(s), s)
-                            k += 1
-                        block = np.zeros(64)
-                        block[ZIGZAG] = coeffs * q
-                        px = _idct2(block.reshape(8, 8)) + 128.0
-                        y0 = (my * c["v"] + by) * 8
-                        x0 = (mx * c["h"] + bx) * 8
-                        planes[ci][y0:y0 + 8, x0:x0 + 8] = px
-            mcu_count += 1
-    return _finish_planes(comps, planes, h_img, w_img, hmax, vmax)
-
-
-def _finish_planes(comps, planes, h_img, w_img, hmax, vmax):
-    """Upsample chroma, crop to image size, YCbCr→RGB (JFIF)."""
-    out_planes = []
-    for ci, c in enumerate(comps):
-        p = planes[ci]
-        p = _upsample(p, vmax // c["v"], hmax // c["h"])
-        out_planes.append(p[:h_img, :w_img])
-    if len(comps) == 1:
-        y = np.clip(np.round(out_planes[0]), 0, 255).astype(np.uint8)
-        return y[:, :, None]
-    y, cb, cr = out_planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-# ---- progressive decoding (T.81 Annex G.2, Huffman) -------------------------
-#
-# A progressive image is a sequence of scans, each delivering one band of
-# zigzag coefficients (spectral selection Ss..Se) at one bit-precision
-# level (successive approximation Ah→Al) for one or all components.
-# Coefficients accumulate in per-component integer arrays; the IDCT and
-# color conversion run once, after all scans (G.1.1.1.1: AC scans are
-# single-component and non-interleaved; DC scans may interleave).
-
-
-def _alloc_coefs(frame):
-    """Per-component (blocks_y, blocks_x, 64) zigzag coefficient arrays
-    sized to the MCU-padded grid (interleaved DC scans write the padding
-    blocks; A.2.3's dummy data units)."""
-    comps = frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-frame["w"] // (8 * hmax))
-    mcus_y = -(-frame["h"] // (8 * vmax))
-    return [np.zeros((mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int32)
-            for c in comps]
-
-
 def _first_ac_block(rd, blk, ac, ss, se, al, eobrun):
     """One block of an AC first scan (G.2.2, Figure G.3/G.5): run-length
     coding with EOBn end-of-band runs; new coefficients arrive scaled by
-    2^Al. Returns the updated EOB run counter."""
+    2^Al. A sequential block's AC coefficients (F.2.2.2) are the same
+    coding at Ss=1, Se=63, Al=0, where EOB is the EOBn with r=0. Returns
+    the updated EOB run counter."""
     if eobrun > 0:
         return eobrun - 1
     k = ss
@@ -510,7 +508,7 @@ def _first_ac_block(rd, blk, ac, ss, se, al, eobrun):
             break
         k += r
         if k > se:
-            raise ValueError("AC index overrun in progressive scan")
+            raise ValueError("AC index overrun")
         blk[k] = _extend(rd.read_bits(s), s) << al
         k += 1
     return eobrun
@@ -585,147 +583,8 @@ def _next_marker(data, pos):
     return len(data)
 
 
-def _decode_progressive_scan(data, pos, frame, scan, huff_dc, huff_ac,
-                             dri, ss, se, ah, al, coefs):
-    """Decode one progressive scan into ``coefs``; returns the stream
-    position of the marker following the entropy-coded segment."""
-    comps = frame["comps"]
-    cidx = {c["id"]: i for i, c in enumerate(comps)}
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    members = [cidx[cid] for cid in scan]     # SOS order
-    if ss == 0 and se != 0:
-        raise ValueError("progressive DC scan with Se != 0")
-    if ss != 0 and len(members) != 1:
-        raise ValueError(
-            "progressive AC scan with %d components (G.1.1.1.1 allows 1)"
-            % len(members))
-    # G.1.1.1.1 progression checks: every referenced entropy table must
-    # exist, the DC band must arrive before any AC band of the same
-    # component, and a refinement scan's Ah must equal the Al at which the
-    # band was previously delivered — violations decode garbage silently
-    # if let through, so refuse them the way the codec refuses other
-    # malformed input.
-    hist = frame.setdefault("_delivered", {})   # (ci, k) -> current Al
-    for ci in members:
-        td, ta = scan[comps[ci]["id"]]
-        if ss == 0:
-            if ah == 0 and td not in huff_dc:
-                raise ValueError("missing DHT DC table %d for scan" % td)
-            prev = hist.get((ci, 0))
-            if ah == 0:
-                if prev is not None:
-                    raise ValueError(
-                        "duplicate progressive DC first scan (G.1.1.1.1)")
-            elif prev != ah:
-                raise ValueError(
-                    "progressive DC refinement at Ah=%d but band delivered "
-                    "at Al=%s (G.1.1.1.1)" % (ah, prev))
-            hist[(ci, 0)] = al
-        else:
-            if ta not in huff_ac:
-                raise ValueError("missing DHT AC table %d for scan" % ta)
-            if hist.get((ci, 0)) is None:
-                raise ValueError(
-                    "progressive AC scan before the component's DC scan "
-                    "(G.1.1.1.1)")
-            for k in range(ss, se + 1):
-                prev = hist.get((ci, k))
-                if ah == 0:
-                    if prev is not None:
-                        raise ValueError(
-                            "overlapping progressive AC first scans for "
-                            "coefficient %d (G.1.1.1.1)" % k)
-                elif prev != ah:
-                    raise ValueError(
-                        "progressive AC refinement at Ah=%d but coefficient "
-                        "%d delivered at Al=%s (G.1.1.1.1)" % (ah, k, prev))
-                hist[(ci, k)] = al
-    rd = _BitReader(data, pos)
-    if len(members) == 1:
-        # non-interleaved: row-major over the component's OWN data-unit
-        # grid, ceil(comp_size/8) per side (A.2.2) — smaller than the
-        # MCU-padded allocation for subsampled edge blocks.
-        ci = members[0]
-        c = comps[ci]
-        cw = -(-(frame["w"] * c["h"]) // hmax)   # ceil component size (A.1.1)
-        ch = -(-(frame["h"] * c["v"]) // vmax)
-        nbx, nby = -(-cw // 8), -(-ch // 8)
-        td, ta = scan[c["id"]]
-        pred, eobrun, unit = 0, 0, 0
-        for by in range(nby):
-            for bx in range(nbx):
-                if dri and unit and unit % dri == 0:
-                    rd.align_and_consume_rst()
-                    pred, eobrun = 0, 0
-                blk = coefs[ci][by, bx]
-                if ss == 0:
-                    if ah == 0:
-                        t = rd.decode_huff(huff_dc[td])
-                        pred += _extend(rd.read_bits(t), t)
-                        blk[0] = pred << al
-                    elif rd.read_bits(1):
-                        blk[0] |= 1 << al
-                elif ah == 0:
-                    eobrun = _first_ac_block(
-                        rd, blk, huff_ac[ta], ss, se, al, eobrun)
-                else:
-                    eobrun = _refine_ac_block(
-                        rd, blk, huff_ac[ta], ss, se, al, eobrun)
-                unit += 1
-    else:
-        # interleaved DC scan over the MCU grid (A.2.3)
-        mcus_x = -(-frame["w"] // (8 * hmax))
-        mcus_y = -(-frame["h"] // (8 * vmax))
-        preds = {ci: 0 for ci in members}
-        mcu = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if dri and mcu and mcu % dri == 0:
-                    rd.align_and_consume_rst()
-                    preds = {ci: 0 for ci in members}
-                for ci in members:
-                    c = comps[ci]
-                    td, _ = scan[c["id"]]
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            blk = coefs[ci][my * c["v"] + by,
-                                            mx * c["h"] + bx]
-                            if ah == 0:
-                                t = rd.decode_huff(huff_dc[td])
-                                preds[ci] += _extend(rd.read_bits(t), t)
-                                blk[0] = preds[ci] << al
-                            elif rd.read_bits(1):
-                                blk[0] |= 1 << al
-                mcu += 1
-    return _next_marker(data, rd.pos)
 
-
-def _reconstruct_coefs(frame, coefs, qt):
-    """Dequantize + IDCT the accumulated coefficient arrays (batched
-    einsum over all blocks) — shared by the progressive path (the
-    per-bit work happened scan-side) and baseline per-component scans
-    (each scan delivered its component's full coefficients)."""
-    comps = frame["comps"]
-    if len(comps) not in (1, 3):
-        raise NotImplementedError(
-            "JPEG with %d components (grayscale/YCbCr only)" % len(comps))
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    planes = []
-    for ci, c in enumerate(comps):
-        cf = coefs[ci]
-        nby, nbx = cf.shape[:2]
-        blocks = np.zeros((nby, nbx, 64))
-        # qt tables are kept in DQT (zigzag) order, matching cf's indexing
-        blocks[:, :, ZIGZAG] = cf.astype(np.float64) * qt[c["tq"]]
-        blocks = blocks.reshape(nby, nbx, 8, 8)
-        px = np.einsum("ux,ijuv,vy->ijxy", _A, blocks, _A) + 128.0
-        planes.append(px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8))
-    return _finish_planes(comps, planes, frame["h"], frame["w"], hmax, vmax)
-
-
-# ---- encoder (baseline sequential, standard Annex K tables) -----------------
+# ---- encoder (standard Annex K tables) ---------------------------------------
 
 class _BitWriter:
     """Entropy bit writer with 0xFF byte stuffing (T.81 F.1.2.3)."""
@@ -788,10 +647,6 @@ def _scaled_q(base: np.ndarray, quality: int) -> np.ndarray:
     return np.clip(np.floor((base * scale + 50) / 100), 1, 255)
 
 
-def _block_zz(block: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """FDCT + quantize one 8x8 sample block to zigzag-order integers."""
-    coef = _A @ (block - 128.0) @ _A.T                  # forward DCT
-    return np.round(coef.reshape(-1)[ZIGZAG] / q[ZIGZAG]).astype(np.int64)
 
 
 def _encode_dc(zz0: int, pred: int, dc_codes, bw: _BitWriter) -> int:
@@ -829,14 +684,39 @@ def _encode_ac_band(zz: np.ndarray, ac_codes, bw: _BitWriter) -> None:
         bw.write(c, ln)
 
 
-def _encode_block(block: np.ndarray, q: np.ndarray,
-                  dc_codes, ac_codes, bw: _BitWriter, pred: int) -> int:
-    """FDCT + quantize + Huffman-encode one 8x8 sample block, returning
-    the updated DC predictor (T.81 F.1.2)."""
-    zz = _block_zz(block, q)
-    pred = _encode_dc(int(zz[0]), pred, dc_codes, bw)
-    _encode_ac_band(zz, ac_codes, bw)
-    return pred
+def _quantize(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """FDCT + quantize every 8x8 block of an MCU-padded sample plane to
+    zigzag-order integers, shape (blocks_y, blocks_x, 64) — one batched
+    ``_A @ blocks @ _A.T`` matmul for the whole plane."""
+    nby, nbx = plane.shape[0] // 8, plane.shape[1] // 8
+    blocks = np.ascontiguousarray(
+        (plane - 128.0).reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3))
+    coef = (_A @ blocks @ _A.T).reshape(nby, nbx, 64)     # forward DCT
+    return np.round(coef[..., ZIGZAG] / q[ZIGZAG]).astype(np.int64)
+
+
+def _encode_scan(frame, coefs, members, ss, se, dri, codes) -> bytes:
+    """Entropy-code one scan of the quantized ``coefs``: the DC
+    difference of every data unit when Ss=0, coefficients 1..63 when
+    Se=63 (the encoder's scan scripts use no other bands), in
+    ``_data_units`` order with RSTn every ``dri`` MCUs. ``codes[tq]``
+    holds the (DC, AC) Huffman codes of quantization table tq's
+    component class."""
+    bw = _BitWriter()
+    preds = dict.fromkeys(members, 0)
+    rst = 0
+    for restart, ci, by, bx in _data_units(frame, members, dri):
+        if restart:
+            bw.restart(rst)
+            rst = (rst + 1) & 7
+            preds = dict.fromkeys(members, 0)
+        zz = coefs[ci][by, bx]
+        dc, ac = codes[frame["comps"][ci]["tq"]]
+        if ss == 0:
+            preds[ci] = _encode_dc(int(zz[0]), preds[ci], dc, bw)
+        if se:
+            _encode_ac_band(zz, ac, bw)
+    return bw.flush()
 
 
 _SUBSAMPLE = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}
@@ -849,22 +729,28 @@ def encode_jpeg(arr: np.ndarray, quality: int = 85,
     """(h, w) / (h, w, 1) grayscale or (h, w, 3) RGB uint8 -> JPEG bytes
     (standard Annex K quant + Huffman tables, libjpeg quality scaling).
     ``subsample``: "444", "422" or "420" chroma subsampling
-    (box-filtered; ignored for grayscale). ``scan_mode``:
-    "interleaved" (SOF0, one SOS, A.2.3 MCU order), "separate" (SOF0,
-    one SOS per component, A.2.2 non-interleaved data-unit order over
-    the component's own ceil-grid), or "progressive" (SOF2,
-    spectral-selection-only scan script: interleaved DC scan then one
-    full-band AC scan per component, Ah=Al=0 — same quantized
-    coefficients as baseline, progressive framing). ``dri``: restart
-    interval in data units ("progressive" mode only — emits DRI + RSTn,
-    exercising the progressive restart path end-to-end). Deterministic:
-    pure numpy arithmetic."""
+    (box-filtered; ignored for grayscale). ``scan_mode`` picks the scan
+    script over the same quantized coefficients: "interleaved" (SOF0,
+    one SOS over every component, A.2.3 MCU order), "separate" (SOF0,
+    one SOS per component, A.2.2 order over the component's own
+    ceil-grid), or "progressive" (SOF2, spectral selection only: an
+    interleaved DC scan, then one full-band AC scan per component,
+    Ah=Al=0). ``dri``: restart interval in MCUs; when > 0 a DRI segment
+    is written and every scan carries RSTn markers. Deterministic: pure
+    numpy arithmetic."""
     arr = np.asarray(arr, dtype=np.uint8)
     if arr.ndim == 2:
         arr = arr[:, :, None]
     h, w, nc = arr.shape
     if nc not in (1, 3):
         raise ValueError("encode_jpeg takes gray or RGB input")
+    every = list(range(nc))
+    scripts = {"interleaved": [(every, 0, 63)],
+               "separate": [([ci], 0, 63) for ci in every],
+               "progressive": [(every, 0, 0)]
+               + [([ci], 1, 63) for ci in every]}
+    if scan_mode not in scripts:
+        raise ValueError(f"unknown scan_mode {scan_mode!r}")
     hf, vf = _SUBSAMPLE[subsample] if nc == 3 else (1, 1)
     mh, mw = 8 * vf, 8 * hf                      # MCU size in samples
     ph, pw = -(-h // mh) * mh, -(-w // mw) * mw
@@ -879,149 +765,43 @@ def encode_jpeg(arr: np.ndarray, quality: int = 85,
             cb = cb.reshape(ph // vf, vf, pw // hf, hf).mean(axis=(1, 3))
             cr = cr.reshape(ph // vf, vf, pw // hf, hf).mean(axis=(1, 3))
         planes = [y, cb, cr]
-        factors = [(hf, vf), (1, 1), (1, 1)]
     else:
         planes = [padded[..., 0]]
-        factors = [(1, 1)]
-    q_lum = _scaled_q(_Q_LUM, quality)
-    q_chrom = _scaled_q(_Q_CHROM, quality)
+    frame = _frame(h, w, [{"id": ci + 1, "h": hf if ci == 0 else 1,
+                           "v": vf if ci == 0 else 1, "tq": min(ci, 1)}
+                          for ci in every],
+                   progressive=scan_mode == "progressive")
+    qts = [_scaled_q(_Q_LUM, quality)]
+    if nc == 3:
+        qts.append(_scaled_q(_Q_CHROM, quality))
+    coefs = [_quantize(p, qts[c["tq"]])
+             for p, c in zip(planes, frame["comps"])]
 
     def seg(marker: int, payload: bytes) -> bytes:
         return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
 
     out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, b"\x00" + q_lum[ZIGZAG].astype(np.uint8).tobytes())
-    if nc == 3:
-        out += seg(0xDB, b"\x01" + q_chrom[ZIGZAG].astype(np.uint8).tobytes())
-    comp_spec = b"".join(
-        struct.pack(">BBB", ci + 1, (factors[ci][0] << 4) | factors[ci][1],
-                    0 if ci == 0 else 1)
-        for ci in range(nc))
-    sof = 0xC2 if scan_mode == "progressive" else 0xC0
-    out += seg(sof, struct.pack(">BHHB", 8, h, w, nc) + comp_spec)
-    tables = [(0x00, _HUFF_DC_LUM), (0x10, _HUFF_AC_LUM)]
-    if nc == 3:
-        tables += [(0x01, _HUFF_DC_CHROM), (0x11, _HUFF_AC_CHROM)]
-    for tid, (bits, vals) in tables:
-        out += seg(0xC4, bytes([tid]) + bytes(bits) + vals)
-    dc_lum = _huff_codes(*_HUFF_DC_LUM)
-    ac_lum = _huff_codes(*_HUFF_AC_LUM)
-    dc_chrom = _huff_codes(*_HUFF_DC_CHROM)
-    ac_chrom = _huff_codes(*_HUFF_AC_CHROM)
-    if scan_mode == "progressive":
-        if dri:
-            out += seg(0xDD, struct.pack(">H", dri))
-        hmax = max(f[0] for f in factors)
-        vmax = max(f[1] for f in factors)
-        # quantize every block of each MCU-padded plane up front — the
-        # DC scan covers padding blocks (A.2.3 dummy units), AC scans
-        # cover only the component's own A.2.2 ceil-grid
-        coef = []
-        for ci in range(nc):
-            qt = q_lum if ci == 0 else q_chrom
-            p = planes[ci]
-            nby_p, nbx_p = p.shape[0] // 8, p.shape[1] // 8
-            zz = np.zeros((nby_p, nbx_p, 64), dtype=np.int64)
-            for by in range(nby_p):
-                for bx in range(nbx_p):
-                    zz[by, bx] = _block_zz(
-                        p[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8], qt)
-            coef.append(zz)
-        # scan 1: interleaved DC, Ss=Se=0, Ah=Al=0
-        scan_spec = b"".join(
-            struct.pack(">BB", ci + 1, (0 if ci == 0 else 1) << 4)
-            for ci in range(nc))
-        out += seg(0xDA, bytes([nc]) + scan_spec + b"\x00\x00\x00")
-        bw = _BitWriter()
-        preds = [0] * nc
-        mcu, rst = 0, 0
-        for my in range(ph // mh):
-            for mx in range(pw // mw):
-                if dri and mcu and mcu % dri == 0:
-                    bw.restart(rst)
-                    rst = (rst + 1) & 7
-                    preds = [0] * nc
-                for ci in range(nc):
-                    cf_h, cf_v = factors[ci]
-                    dc = dc_lum if ci == 0 else dc_chrom
-                    for byy in range(cf_v):
-                        for bxx in range(cf_h):
-                            zz0 = int(coef[ci][my * cf_v + byy,
-                                               mx * cf_h + bxx, 0])
-                            preds[ci] = _encode_dc(zz0, preds[ci], dc, bw)
-                mcu += 1
-        out += bw.flush()
-        # one full-band AC scan per component (Ss=1, Se=63, Ah=Al=0),
-        # non-interleaved over the component ceil-grid
-        for ci in range(nc):
-            out += seg(0xDA, bytes([1])
-                       + struct.pack(">BB", ci + 1, 0 if ci == 0 else 1)
-                       + b"\x01\x3f\x00")
-            cw = -(-(w * factors[ci][0]) // hmax)
-            ch = -(-(h * factors[ci][1]) // vmax)
-            nbx, nby = -(-cw // 8), -(-ch // 8)
-            ac = ac_lum if ci == 0 else ac_chrom
-            bw = _BitWriter()
-            unit, rst = 0, 0
-            for by in range(nby):
-                for bx in range(nbx):
-                    if dri and unit and unit % dri == 0:
-                        bw.restart(rst)
-                        rst = (rst + 1) & 7
-                    _encode_ac_band(coef[ci][by, bx], ac, bw)
-                    unit += 1
-            out += bw.flush()
-        out += b"\xff\xd9"
-        return bytes(out)
-    if scan_mode == "separate":
-        hmax = max(f[0] for f in factors)
-        vmax = max(f[1] for f in factors)
-        for ci in range(nc):
-            out += seg(0xDA, bytes([1])
-                       + struct.pack(">BB", ci + 1, 0 if ci == 0 else 0x11)
-                       + b"\x00\x3f\x00")
-            # A.2.2: row-major over THIS component's ceil-grid (can be
-            # narrower than the MCU-padded plane), fresh DC predictor
-            cw = -(-(w * factors[ci][0]) // hmax)
-            ch = -(-(h * factors[ci][1]) // vmax)
-            nbx, nby = -(-cw // 8), -(-ch // 8)
-            qt = q_lum if ci == 0 else q_chrom
-            dc = dc_lum if ci == 0 else dc_chrom
-            ac = ac_lum if ci == 0 else ac_chrom
-            bw = _BitWriter()
-            pred = 0
-            for by in range(nby):
-                for bx in range(nbx):
-                    pred = _encode_block(
-                        planes[ci][by * 8:by * 8 + 8, bx * 8:bx * 8 + 8],
-                        qt, dc, ac, bw, pred)
-            out += bw.flush()
-        out += b"\xff\xd9"
-        return bytes(out)
-    if scan_mode != "interleaved":
-        raise ValueError(f"unknown scan_mode {scan_mode!r}")
-    scan_spec = b"".join(struct.pack(">BB", ci + 1, 0 if ci == 0 else 0x11)
-                         for ci in range(nc))
-    out += seg(0xDA, bytes([nc]) + scan_spec + b"\x00\x3f\x00")
-
-    bw = _BitWriter()
-    preds = [0] * nc
-    # interleaved MCUs (T.81 A.2.3): component ci contributes its
-    # (hf_ci x vf_ci) blocks per MCU, row-major
-    for my in range(ph // mh):
-        for mx in range(pw // mw):
-            for ci in range(nc):
-                cf_h, cf_v = factors[ci]
-                qt = q_lum if ci == 0 else q_chrom
-                dc = dc_lum if ci == 0 else dc_chrom
-                ac = ac_lum if ci == 0 else ac_chrom
-                for byy in range(cf_v):
-                    for bxx in range(cf_h):
-                        y0 = (my * cf_v + byy) * 8
-                        x0 = (mx * cf_h + bxx) * 8
-                        preds[ci] = _encode_block(
-                            planes[ci][y0:y0 + 8, x0:x0 + 8],
-                            qt, dc, ac, bw, preds[ci])
-    out += bw.flush()
+    for tq, q in enumerate(qts):
+        out += seg(0xDB, bytes([tq]) + q[ZIGZAG].astype(np.uint8).tobytes())
+    comp_spec = b"".join(bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
+                         for c in frame["comps"])
+    out += seg(0xC2 if frame["progressive"] else 0xC0,
+               struct.pack(">BHHB", 8, h, w, nc) + comp_spec)
+    tables = [(_HUFF_DC_LUM, _HUFF_AC_LUM), (_HUFF_DC_CHROM, _HUFF_AC_CHROM)]
+    for tq in range(len(qts)):
+        for cls in (0, 1):
+            bits, vals = tables[tq][cls]
+            out += seg(0xC4, bytes([(cls << 4) | tq]) + bytes(bits) + vals)
+    if dri:
+        out += seg(0xDD, struct.pack(">H", dri))
+    codes = [(_huff_codes(*dc), _huff_codes(*ac)) for dc, ac in tables]
+    for members, ss, se in scripts[scan_mode]:
+        # table selectors name only the tables the scan uses (Td for a DC
+        # band, Ta for an AC band); component class tq picks the table
+        uses = (0x10 if ss == 0 else 0) | (0x01 if se else 0)
+        spec = b"".join(bytes([ci + 1, frame["comps"][ci]["tq"] * uses])
+                        for ci in members)
+        out += seg(0xDA, bytes([len(members)]) + spec + bytes([ss, se, 0]))
+        out += _encode_scan(frame, coefs, members, ss, se, dri, codes)
     out += b"\xff\xd9"
     return bytes(out)
