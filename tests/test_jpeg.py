@@ -443,6 +443,22 @@ def test_sequential_eob_run_raises():
         decode_jpeg(bytes(data))
 
 
+def test_dc_category_out_of_range_raises():
+    """An 8-bit DC difference has category 0-11 (F.1.2.1); a DHT that
+    maps a code to a larger one must refuse, not read that many bits
+    and overflow the coefficient arrays."""
+    data = bytearray(open(os.path.join(FIX, "encoded_rgb_q90.jpg"),
+                          "rb").read())
+    for m, s, _e in _jpeg_segments(bytes(data)):
+        if m == 0xC4 and data[s + 4] == 0x00:        # DHT class 0, id 0
+            vals = s + 4 + 17
+            data[vals:vals + sum(data[s + 5:s + 21])] = bytes(
+                [200] * sum(data[s + 5:s + 21]))
+            break
+    with pytest.raises(ValueError, match="DC difference category"):
+        decode_jpeg(bytes(data))
+
+
 @pytest.mark.parametrize("mode", ["interleaved", "separate", "progressive"])
 def test_restart_interval_every_scan_mode(mode):
     """dri > 0 writes DRI and RSTn in every scan mode; restart markers
@@ -459,7 +475,7 @@ def test_restart_interval_every_scan_mode(mode):
         assert np.array_equal(decode_jpeg(enc), decode_jpeg(plain)), sub
 
 
-def test_sequential_scan_over_some_components():
+def test_sequential_scan_over_some_components(monkeypatch):
     """A sequential scan over 2 of 3 components interleaves them in MCU
     order (A.2.3) and the third follows in its own scan (A.2.2). Re-code
     a 4:2:0 image's coefficients as scans [Y, Cb] + [Cr] with the
@@ -473,11 +489,9 @@ def test_sequential_scan_over_some_components():
         seen.update(frame=frame, coefs=coefs)
         return real(frame, coefs, qt)
 
-    jpeg._reconstruct_coefs = capture
-    try:
-        want = decode_jpeg(base)
-    finally:
-        jpeg._reconstruct_coefs = real
+    monkeypatch.setattr(jpeg, "_reconstruct_coefs", capture)
+    want = decode_jpeg(base)
+    monkeypatch.undo()
     codes = [(jpeg._huff_codes(*jpeg._HUFF_DC_LUM),
               jpeg._huff_codes(*jpeg._HUFF_AC_LUM)),
              (jpeg._huff_codes(*jpeg._HUFF_DC_CHROM),

@@ -414,6 +414,9 @@ def _decode_scan(data, pos, frame, scan, huff_dc, huff_ac, dri,
         if ss == 0:
             if ah == 0:
                 t = rd.decode_huff(dc)
+                if t > 11:
+                    raise ValueError("DC difference category %d (F.1.2.1 "
+                                     "allows 0-11 at 8-bit)" % t)
                 preds[ci] += _extend(rd.read_bits(t), t)
                 blk[0] = preds[ci] << al
             elif rd.read_bits(1):

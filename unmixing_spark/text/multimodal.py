@@ -175,10 +175,10 @@ def encode_fake_image(arr: np.ndarray) -> bytes:
 def decode_image(payload: bytes) -> np.ndarray:
     """Decode a binary image payload → (h, w, c) uint8 array.
 
-    PNG, 24-bit BMP and baseline JPEG all decode for real (stdlib+numpy
-    implementations from the public specs; JPEG in text/jpeg.py, verified
-    against independent gdk-pixbuf/libjpeg renderings). Progressive JPEG
-    raises NotImplementedError."""
+    PNG, 24-bit BMP and JPEG (sequential and progressive) all decode for
+    real (stdlib+numpy implementations from the public specs; JPEG in
+    text/jpeg.py, verified against independent gdk-pixbuf/libjpeg
+    renderings)."""
     if payload[:4] == FAKE_MAGIC:
         h, w, c = struct.unpack("<HHB", payload[4:9])
         return np.frombuffer(payload[9:9 + h * w * c], dtype=np.uint8).reshape(h, w, c)
