@@ -3,6 +3,8 @@ SASMA kernel/focal goldens."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 
 from unmixing_spark.raster.composite import composite2, composite3, fill_nodata_bandwise
@@ -56,6 +58,16 @@ def test_composite_none_subtracts_endmember():
     assert (out == np.array([[[-9999., 1.], [1., 1.]]])).all()
     out = composite3(("max", None), *EX1, normalize="sum")
     assert (out == np.array([[[-9999., 1.], [1., 1.]]])).all()
+
+
+def test_composite_goldens_raise_no_runtime_warning():
+    """All-NoData pixels are expected input: the kernels handle them
+    without a numpy RuntimeWarning (all-NaN slice, NaN-to-int cast)."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        test_composite2_goldens()
+        test_composite3_goldens()
+        test_composite_none_subtracts_endmember()
 
 
 def test_fill_nodata_bandwise():

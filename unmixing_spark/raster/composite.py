@@ -23,9 +23,20 @@ own tests pin (tests.py:179-222, 262-329):
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 
-NODATA = -9999.0
+from unmixing_spark.raster import NODATA
+
+
+def _nan_reduce(reducer: str, a: np.ndarray) -> np.ndarray:
+    """np.nan{reducer} over axis 0, where an all-NaN column yields NaN
+    silently: numpy reports all-NaN and empty slices through
+    ``warnings``, which ``np.errstate`` does not reach."""
+    with warnings.catch_warnings(), np.errstate(all="ignore"):
+        warnings.simplefilter("ignore", RuntimeWarning)
+        return getattr(np, f"nan{reducer}")(a, axis=0)
 
 
 def _as_stack(rasters, band):
@@ -44,8 +55,7 @@ def composite(*rasters, target_band: int = 1, reducer: str = "median",
         rasters = [np.asarray(r).reshape(shp) for r in rasters]
     stack = _as_stack(rasters, target_band).astype(np.float64)
     stack[stack == nodata] = np.nan
-    with np.errstate(all="ignore"):
-        out = getattr(np, f"nan{reducer}")(stack, axis=0)
+    out = _nan_reduce(reducer, stack)
     out = np.where(np.isnan(out), nodata, out)
     return out.reshape(1, shp[1], shp[2])
 
@@ -62,12 +72,10 @@ def composite2(reducers, *rasters, normalize: str | None = "sum",
             continue  # None → drop band (endmember subtraction under unity)
         stack = _as_stack(rasters, i).astype(np.float64)
         stack[stack == nodata] = np.nan
-        with np.errstate(all="ignore"):
-            bands.append(getattr(np, f"nan{red}")(stack, axis=0))
+        bands.append(_nan_reduce(red, stack))
     final = np.stack(bands)                    # (q', pixels), NaN = NoData
     if normalize is not None:
-        with np.errstate(all="ignore"):
-            const = getattr(np, f"nan{normalize}")(final, axis=0)
+        const = _nan_reduce(normalize, final)
         const = np.where(np.isnan(const), 1.0, const)
         final = final / const
     final = np.where(np.isnan(final), dtype(nodata), final)
@@ -80,7 +88,8 @@ def _first_pixel_dtype_rule(values: np.ndarray, first_is_nodata: bool,
     first pixel returned dtype(nodata) (an int for dtype=int), every later
     float is truncated — the trap pinned by tests.py:262-329."""
     if first_is_nodata and np.issubdtype(np.dtype(dtype), np.integer):
-        return values.astype(np.int64).astype(np.float64)
+        with np.errstate(invalid="ignore"):     # NaN casts to INT64_MIN
+            return values.astype(np.int64).astype(np.float64)
     return values
 
 
@@ -101,8 +110,7 @@ def composite3(reducers, *rasters, normalize: str | None = "sum",
         if red in ("min*", "max*", "mean*", "median"):
             fn = red.strip("*")
             masked = np.where(stack == nodata, np.nan, stack)
-            with np.errstate(all="ignore"):
-                vals = getattr(np, f"nan{fn}")(masked, axis=0)
+            vals = _nan_reduce(fn, masked)
             all_nodata = np.isnan(masked).all(axis=0)
             vals = _first_pixel_dtype_rule(vals, bool(all_nodata.flat[0]), dtype)
             vals = np.where(all_nodata, dtype(nodata), vals)
