@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from unmixing_spark.boundary import map_matrix
-
-NODATA = -9999.0
+from unmixing_spark.raster import NODATA
 
 
 def _sign_fix(V: np.ndarray) -> np.ndarray:

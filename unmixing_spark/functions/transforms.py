@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 
-NODATA = -9999.0
+from unmixing_spark.raster import NODATA
 
 # Crist (1985), Table 1 — TM reflectance factor coefficients, bands
 # 1-5 and 7. Published constants (same source the reference cites at

@@ -14,6 +14,7 @@ from itertools import combinations, product
 
 import numpy as np
 
+from unmixing_spark.raster import NODATA
 from unmixing_spark.spatial.affine import GT, xy_to_pixel
 
 
@@ -169,7 +170,7 @@ def endmembers_by_maximum_angle(cube, cases, ref_target, gt: GT = None):
 def hall_rectification(reference: np.ndarray, subject: np.ndarray,
                        ref_sets: dict, sub_sets: dict, gt_ref: GT, gt_sub: GT,
                        keys=("High/Bright", "Low/Dark"),
-                       nodata: float = -9999.0) -> np.ndarray:
+                       nodata: float = NODATA) -> np.ndarray:
     """Radiometric rectification after Hall et al. (1991): per-band linear
     map m·x + b fitted so the subject's bright/dark control-set means match
     the reference's (lsma.py:523-584). NoData-filtered control means;

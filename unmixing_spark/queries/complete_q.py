@@ -14,6 +14,7 @@ from unmixing_spark import dialect as D
 from unmixing_spark import pipeline
 from unmixing_spark.pagegen import BAND_NAMES, cell_raster_sql, geo_pages_sql
 from unmixing_spark.queries import QuerySpec, register, sql_template
+from unmixing_spark.raster import NODATA
 from unmixing_spark.spatial.grid import WORLD_GRID
 
 
@@ -126,7 +127,7 @@ sql_template("q_anti_filter_spectra", _anti_filter,
 def _subarray(d: str) -> str:
     # utils.subarray keep rule: pixel kept if not-NoData in ANY band
     # ((arr != v).any(axis=0), utils.py:1095) — as an exists-style OR filter
-    nd = D.dbl(-9999.0)
+    nd = D.dbl(NODATA)
     cond = " OR ".join(f"{b} != {nd}" for b in BAND_NAMES)
     return f"""
     WITH cells AS ({cell_raster_sql(d)}),
@@ -274,7 +275,7 @@ def _ledaps_modal_keep(d: str) -> str:
     mode get NoData stamped across the bands (maskr[maskr != mode] = 0;
     rastr[maskr == 0] = nodata). The mode is one broadcast row; the filter
     is a constant-predicate projection over the big table."""
-    nd = D.dbl(-9999.0)
+    nd = D.dbl(NODATA)
     return f"""
     WITH cells AS ({cell_raster_sql(d)}),
     qa AS (SELECT cell_id, cast(b1 as bigint) AS qaval, b2, b4 FROM cells),

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 
-NODATA = -9999.0
+from unmixing_spark.raster import NODATA
 
 
 def binary_mask(cube: np.ndarray, mask: np.ndarray, nodata: float = NODATA,

@@ -21,9 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unmixing_spark.raster import NODATA
 from unmixing_spark.spatial.grid import GridSpec, WORLD_GRID
-
-NODATA = -9999.0
 
 
 def normalized_convolution(band: np.ndarray, window: np.ndarray,

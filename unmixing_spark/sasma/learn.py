@@ -13,7 +13,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NODATA = -9999.0
+from unmixing_spark.raster import NODATA
 
 
 def concat_endmember_arrays(*em_rast_arrays: np.ndarray) -> np.ndarray:
