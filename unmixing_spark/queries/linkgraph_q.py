@@ -550,18 +550,6 @@ def _harmonic_oracle() -> str:
     """
 
 
-def _hb_est_col(cnt, s_int):  # type: ignore[no-untyped-def]
-    """Spark Column twin of _hb_est_sql: identical literals, identical
-    branch structure, lc lookup as a when-chain over the 15 tabulated
-    values (exact same doubles as the VALUES relation)."""
-    raw = F.lit(HB_NUM) / s_int.cast("double")
-    lc_e = F
-    for v in range(1, HB_M):
-        lc_e = lc_e.when(cnt == HB_M - v, F.lit(HB_LC_EST[v]))
-    return F.when((raw <= F.lit(HB_LC_CUT)) & (cnt < HB_M),
-                  lc_e).otherwise(raw)
-
-
 def _hb_setup(spark: SparkSession) -> tuple[DataFrame, DataFrame, int]:
     """Checkpointed edge list + initial WIDE register state from the SAME
     SQL templates the oracles render — the shared loop scaffolding of the
@@ -632,16 +620,20 @@ _HB_REGS = [f"r{b}" for b in range(HB_M)]
 # bare decimals would parse as DECIMAL), so results are bit-identical.
 _HB_MERGE_EXPRS = [f"greatest(r{b}, coalesce(c_r{b}, 0)) AS r{b}"
                    for b in range(HB_M)]
-_HB_CNT_EXPR = " + ".join(
-    f"(CASE WHEN r{b} > 0 THEN 1 ELSE 0 END)"
-    for b in range(HB_M)) + " AS cnt"
-_HB_SINT_EXPR = " + ".join(
-    f"shiftleft(cast(1 as bigint), {HB_W + 1} - r{b})"
-    for b in range(HB_M)) + " AS s_int"
+# per-node register statistics over the wide row, as bare SQL text
+# (aliased where they are selected). Occupied-register count: present
+# registers have rho >= 1 (the bit-length lookup never yields 0 for a
+# present hash), so r_b > 0 <=> the (node, b) row existed in the long
+# form. Exact-integer register sum: 2^(W+1-rho) per register, absent
+# registers (rho=0) contributing 2^(W+1) — one uniform shift for both.
+_HB_CNT = " + ".join(
+    f"(CASE WHEN r{b} > 0 THEN 1 ELSE 0 END)" for b in range(HB_M))
+_HB_SINT = " + ".join(
+    f"shiftleft(cast(1 as bigint), {HB_W + 1} - r{b})" for b in range(HB_M))
 
 
 def _hb_est_expr() -> str:
-    """selectExpr twin of _hb_est_col over (cnt, s_int) columns: same
+    """selectExpr twin of _hb_est_sql over (cnt, s_int) columns: same
     literals, same branch order (lc chain cnt = 15 .. 1)."""
     raw = f"{D.dbl(HB_NUM)} / cast(s_int as double)"
     chain = " ".join(f"WHEN cnt = {HB_M - v} THEN {D.dbl(HB_LC_EST[v])}"
@@ -651,26 +643,6 @@ def _hb_est_expr() -> str:
 
 
 _HB_EST_EXPR = _hb_est_expr()
-
-
-def _hb_cnt_col():
-    """Occupied-register count over the wide row: present registers have
-    rho >= 1 (the bit-length lookup never yields 0 for a present hash),
-    so r_b > 0 <=> the (node, b) row existed in the long form."""
-    out = None
-    for b in range(HB_M):
-        t = F.when(F.col(f"r{b}") > 0, 1).otherwise(0)
-        out = t if out is None else out + t
-    return out
-
-
-def _hb_sint_col():
-    """Exact-integer register sum over the wide row: sum of 2^(W+1-rho)
-    with absent registers (rho=0) contributing 2^(W+1) — the same
-    uniform shift expression for both cases."""
-    return F.expr(" + ".join(
-        f"shiftleft(cast(1 as bigint), {HB_W + 1} - r{b})"
-        for b in range(HB_M)))
 
 
 def _hb_propagate_wide(links: DataFrame, state: DataFrame,
@@ -719,7 +691,7 @@ def _hb_wide_round(links: DataFrame, state: DataFrame, acc_exprs: list,
     agg = _hb_propagate_wide(links, state, extras, k, small)
     extras0 = [f"{c}0" for c in extras]
     stats = agg.selectExpr("node", *_HB_REGS, *extras0,
-                           _HB_CNT_EXPR, _HB_SINT_EXPR)
+                           f"{_HB_CNT} AS cnt", f"{_HB_SINT} AS s_int")
     est = stats.selectExpr("node", *_HB_REGS, *extras0, _HB_EST_EXPR)
     return est.selectExpr("node", *_HB_REGS, *acc_exprs)
 
@@ -728,7 +700,7 @@ def _hb_init_acc(state: DataFrame, acc_exprs: list) -> DataFrame:
     """Initial accumulator columns appended to the wide state: the
     radius-0 estimate via the same layered cnt/s_int/e projections."""
     stats = state.selectExpr("node", *_HB_REGS,
-                             _HB_CNT_EXPR, _HB_SINT_EXPR)
+                             f"{_HB_CNT} AS cnt", f"{_HB_SINT} AS s_int")
     est = stats.selectExpr("node", *_HB_REGS, _HB_EST_EXPR)
     return est.selectExpr("node", *_HB_REGS, *acc_exprs)
 
@@ -740,7 +712,7 @@ def _hb_conv_col(state: DataFrame, prev_state: DataFrame):
     rho_sum = F.expr(" + ".join(f"r{b}" for b in range(HB_M)))
 
     def reg_stats(st: DataFrame, c: str, sr: str) -> DataFrame:
-        return st.agg(F.sum(_hb_cnt_col()).alias(c),
+        return st.agg(F.sum(F.expr(_HB_CNT)).alias(c),
                       F.sum(rho_sum).alias(sr))
 
     return (reg_stats(state, "c", "sr")
@@ -757,8 +729,8 @@ def harmonic_over_documents(spark: SparkSession) -> DataFrame:
     construction). Round-6 shape: each round is one src-keyed join + ONE
     node-keyed register-max aggregation over wide rows, with the
     harmonic accumulator riding in the same row (no per-round hc join);
-    estimator doubles evaluate the identical _hb_est_col expression
-    tree, so results are bit-identical to the row-form loop. Lineage
+    estimator doubles evaluate the identical _hb_est_sql expression
+    text, so results are bit-identical to the row-form loop. Lineage
     truncates every HB_CKPT_EVERY rounds plus the last two rounds (the
     convergence proof reads both)."""
     links, state, k = _hb_setup(spark)
@@ -775,8 +747,8 @@ def harmonic_over_documents(spark: SparkSession) -> DataFrame:
             if r % HB_CKPT_EVERY == 0 or r >= HB_ROUNDS - 1:
                 state = loops.checkpoint(state, key="node", k=k)
     conv = _hb_conv_col(state, prev_state)
-    stats = state.select("node", "h", _hb_cnt_col().alias("cnt"),
-                         _hb_sint_col().alias("s_int"))
+    stats = state.selectExpr("node", "h", f"{_HB_CNT} AS cnt",
+                             f"{_HB_SINT} AS s_int")
     return (stats
             .crossJoin(F.broadcast(conv))
             .select(F.col("node").alias("doc_id"),
@@ -999,7 +971,7 @@ register("q_hits_scores", QuerySpec(
 # report for the web graph). NF(r) = sum over nodes v of |B_r(v)|; the
 # effective diameter is the smallest r with NF(r) >= 0.9 * NF(r_max).
 # Reuses the HyperBall machinery above verbatim (_hb_base_ctes /
-# _hb_agg_sql / _hb_est_sql / _hb_est_col): per node the ball estimate is
+# _hb_agg_sql / _hb_est_sql / _hb_est_expr): per node the ball estimate is
 # forced monotone via the same clamped-increment envelope the harmonic
 # accumulator uses (env += max(0, e_r - e_{r-1}) — HyperANF's standard
 # monotonization), and NF(r) is the per-round global sum of envelopes.
