@@ -874,6 +874,7 @@ def test_script_mix_planted_multilingual(spark, tmp_path):
         "νόμος ελληνικά",                        # greek
         "हिन्दी पाठ",                             # devanagari
         "абв abc",                               # 3-3 tie -> latin (first)
+        "3×4÷2 résumé",                          # × ÷ are not letters
     ]
     docs = _docs().head(len(texts)).copy()
     docs["text"] = texts
@@ -882,7 +883,8 @@ def test_script_mix_planted_multilingual(spark, tmp_path):
     docs.to_parquet(f"{sf_dir}/documents.parquet", index=False)
 
     spans = {
-        "latin": [(0x41, 0x5A), (0x61, 0x7A), (0xC0, 0x24F)],
+        "latin": [(0x41, 0x5A), (0x61, 0x7A), (0xC0, 0xD6), (0xD8, 0xF6),
+                  (0xF8, 0x24F)],
         "cyrillic": [(0x400, 0x4FF)],
         "greek": [(0x370, 0x3FF)],
         "arabic": [(0x600, 0x6FF)],

@@ -95,6 +95,45 @@ def test_truncated_raises():
         decode_jpeg(b"not a jpeg")
 
 
+def test_mutated_fixtures_raise_named_errors():
+    """Malformed input raises a named error, never an IndexError,
+    KeyError, struct.error or ZeroDivisionError out of the parser: 1-3
+    seeded random bytes overwritten (past SOI) in each fixture, 25
+    decodes per fixture, and every decode returns an array or raises
+    ValueError/NotImplementedError. prog_422.jpg (259 KB, ~0.6 s a
+    decode) sits out; prog_444 and enc_prog_dri_420 cover the
+    progressive path."""
+    rng = np.random.default_rng(17)
+    names = sorted(n for n in os.listdir(FIX)
+                   if n.endswith(".jpg") and n != "prog_422.jpg")
+    escaped, decodes = [], 0
+    for name in names:
+        base = open(os.path.join(FIX, name), "rb").read()
+        for _ in range(25):
+            data = bytearray(base)
+            for _ in range(rng.integers(1, 4)):
+                data[rng.integers(2, len(data))] = rng.integers(256)
+            decodes += 1
+            try:
+                assert isinstance(decode_jpeg(bytes(data)), np.ndarray)
+            except (ValueError, NotImplementedError):
+                pass
+            except Exception as e:  # noqa: BLE001
+                escaped.append((name, type(e).__name__, str(e)))
+    assert decodes >= 250
+    assert escaped == []
+
+
+def test_zero_sampling_factor_raises():
+    """A sampling factor of 0 in SOF is malformed (B.2.2 allows 1-4);
+    it used to divide by zero in the frame geometry."""
+    data = bytearray(open(os.path.join(FIX, "gray2x2.jpg"), "rb").read())
+    s = next(s for m, s, _e in _jpeg_segments(bytes(data)) if m == 0xC0)
+    data[s + 11] = 0x00       # component 1's HiVi byte
+    with pytest.raises(ValueError, match="sampling factors"):
+        decode_jpeg(bytes(data))
+
+
 def _test_image():
     yy, xx = np.mgrid[0:40, 0:56]
     img = np.zeros((40, 56, 3), dtype=np.uint8)

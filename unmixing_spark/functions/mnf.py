@@ -158,17 +158,17 @@ def mnf_fit_distributed(cells: DataFrame, band_cols: list[str],
 
 
 def mnf_transform_distributed(cells: DataFrame, band_cols: list[str],
-                              R: np.ndarray, mu: np.ndarray,
-                              keep_cols=("cell_id",)) -> DataFrame:
-    """Pass 2: broadcast rotation, narrow projection (no shuffle). NoData
-    band values are remapped to 0 first, as in pass 1 and ``mnf_rotate``."""
+                              R: np.ndarray, mu: np.ndarray) -> DataFrame:
+    """Pass 2: broadcast rotation, narrow projection (no shuffle) to
+    ``cell_id`` and ``mnf1..mnfp``. NoData band values are remapped to 0
+    first, as in pass 1 and ``mnf_rotate``."""
     p = len(band_cols)
     Rb, mub = np.asarray(R), np.asarray(mu)
-    schema = ", ".join([f"{c} long" for c in keep_cols] +
+    schema = ", ".join(["cell_id long"] +
                        [f"mnf{i+1} double" for i in range(p)])
 
     def _proj(X: np.ndarray, batch: pa.RecordBatch) -> list:
         X[X == NODATA] = 0.0
-        return [*(batch.column(c) for c in keep_cols), *((X - mub) @ Rb).T]
+        return [batch.column("cell_id"), *((X - mub) @ Rb).T]
 
     return map_matrix(cells, band_cols, _proj, schema)

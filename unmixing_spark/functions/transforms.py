@@ -9,7 +9,7 @@ reproduce the reference's golden values exactly (test/tests.py:362-391).
 Semantics re-implemented from the published papers the reference cites
 (transform.py docstrings): Crist (1985) RSE 17:302 Table 1 for TM
 reflectance Tasseled Cap; Baig et al. (2014) RSL 5:5 Table 2 for OLI;
-Deng & Wu (2012) RSE 127 for BCI; Deng et al. (2015) for RNDSI.
+Deng & Wu (2012) RSE 127 for BCI.
 """
 
 from __future__ import annotations
@@ -76,35 +76,3 @@ def biophysical_composition_index(cube: np.ndarray, rt: np.ndarray = TC_TM_REFLE
         comps.append((vals - tcmin) / (vals.max() - tcmin))
     h, v, l = comps
     return (((h + l) / 2.0 - v) / ((h + l) / 2.0 + v)).reshape(1, m, n)
-
-
-def rndsi(cube: np.ndarray, rt: np.ndarray = TC_TM_REFLECTANCE,
-          bands: tuple[int, int] = (6, 2), nodata: float = NODATA) -> np.ndarray:
-    """Ratio normalized difference soil index, Deng et al. (2015);
-    semantics of transform.py:220-262 (NaN-masked global min-max)."""
-    p, m, n = cube.shape
-    tc1 = tasseled_cap(cube, rt, ncomp=1).astype(np.float64)
-    tc1 = np.where(cube[0] == nodata, np.nan, tc1)
-    b_swir2, b_green = bands[0] - 1, bands[1] - 1
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ndsi = ((cube[b_swir2] - cube[b_green]) /
-                (cube[b_swir2] + cube[b_green])).reshape(1, m, n)
-    ndsi = np.where(cube[0] == nodata, np.nan, ndsi)
-    ntc1 = (tc1 - np.nanmin(tc1)) / (np.nanmax(tc1) - np.nanmin(tc1))
-    nndsi = (ndsi - np.nanmin(ndsi)) / (np.nanmax(ndsi) - np.nanmin(ndsi))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return nndsi / np.where(ntc1 == 0, np.nan, ntc1)
-
-
-def normalize_reflectance_within_image(cube: np.ndarray, band_range=(0, 5),
-                                       scale: float = 100.0,
-                                       nodata: float = NODATA) -> np.ndarray:
-    """Per-pixel division by the cross-band mean, x scale (Wu 2004);
-    lsma.py:658-692 incl. NoData re-stamp."""
-    p, m, n = cube.shape
-    b0, bend = band_range
-    k = bend - b0 + 1
-    mean = cube[b0:bend + 1].sum(axis=0) / k
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = scale * cube / mean
-    return np.where(cube == nodata, nodata, out)

@@ -27,15 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, table: str, keys: list[str],
-                   n_buckets: int, path: str,
-                   sort_keys: list[str] | None = None) -> None:
+                   n_buckets: int, path: str) -> None:
     """Persist ``df`` as a bucketed parquet table registered as
-    ``table`` (external, data at ``path``). Sorting within buckets is
-    on by default (sort_keys=None → keys): it costs one in-task sort at
-    write time and removes the per-join Sort under SortMergeJoin."""
+    ``table`` (external, data at ``path``), sorted by ``keys`` within
+    each bucket: it costs one in-task sort at write time and removes the
+    per-join Sort under SortMergeJoin."""
     (df.write.format("parquet").mode("overwrite")
      .bucketBy(n_buckets, *keys)
-     .sortBy(*(sort_keys or keys))
+     .sortBy(*keys)
      .option("path", path)
      .saveAsTable(table))
 

@@ -102,13 +102,12 @@ def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     return spark.read.schema(schema).options(**_CSV_READ_OPTS).csv(path)
 
 
-def write_orc(df: DataFrame, path: str, *,
-              compression: str = "zstd") -> None:
-    """Write ``df`` as ORC (zstd by default — same ratio class as
-    parquet+zstd; pick snappy for CPU-bound writers). Column pruning and
-    predicate pushdown behave as with parquet; bucketing still requires
-    the table-managed path (io/bucketing.py)."""
-    df.write.mode("overwrite").option("compression", compression).orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    """Write ``df`` as zstd-compressed ORC (same ratio class as
+    parquet+zstd). Column pruning and predicate pushdown behave as with
+    parquet; bucketing still requires the table-managed path
+    (io/bucketing.py)."""
+    df.write.mode("overwrite").option("compression", "zstd").orc(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

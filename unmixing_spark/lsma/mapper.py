@@ -43,29 +43,27 @@ from unmixing_spark.raster import NODATA
 from unmixing_spark.raster.rasterize import band_major_positions, list_array
 
 
-def _fcls_rmse(X: np.ndarray, E: np.ndarray,
-               delta: float | None) -> tuple[np.ndarray, np.ndarray]:
+def _fcls_rmse(X: np.ndarray, E: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """FCLS abundances (N, q) of pixels X (N, p) and each pixel's
     forward-model RMSE (validate_by_forward_model, lsma.py:232-297 /
     utils.rmse, utils.py:940-968)."""
-    A = fcls_abundance(X, E, delta=delta)
+    A = fcls_abundance(X, E)
     R = predict_spectra_from_abundance(A, E)
     return A, np.sqrt(np.mean((R - X) ** 2, axis=1))
 
 
 def unmix_cells(cells: DataFrame, endmembers: np.ndarray,
-                band_cols: list[str], keep_cols: list[str] = ("cell_id",),
-                delta: float | None = None) -> DataFrame:
-    """LSMA over pixel rows: (keep_cols…, b1..bp) → (keep_cols…, a1..aq,
+                band_cols: list[str]) -> DataFrame:
+    """LSMA over pixel rows: (cell_id, b1..bp) → (cell_id, a1..aq,
     rmse), rmse being the per-pixel forward-model residual."""
     E = np.ascontiguousarray(np.asarray(endmembers, dtype=np.float64))
     q = E.shape[0]
-    schema = ", ".join([f"{c} long" for c in keep_cols] +
+    schema = ", ".join(["cell_id long"] +
                        [f"a{i+1} double" for i in range(q)] + ["rmse double"])
 
     def _unmix(X: np.ndarray, batch: pa.RecordBatch) -> list:
-        A, rmse = _fcls_rmse(X, E, delta)
-        return [*(batch.column(c) for c in keep_cols), *A.T, rmse]
+        A, rmse = _fcls_rmse(X, E)
+        return [batch.column("cell_id"), *A.T, rmse]
 
     return map_matrix(cells, band_cols, _unmix, schema)
 
@@ -91,8 +89,8 @@ def segment_sums(x: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndar
     return out
 
 
-def unmix_tile_batches(batches: Iterator[pa.RecordBatch], endmembers: np.ndarray,
-                       delta: float | None = None) -> Iterator[pa.RecordBatch]:
+def unmix_tile_batches(batches: Iterator[pa.RecordBatch],
+                       endmembers: np.ndarray) -> Iterator[pa.RecordBatch]:
     """Sparse tile batches (tile_id, p, m, n, idx, bands) → abundance tile
     batches, one batched FCLS solve per batch.
 
@@ -120,7 +118,7 @@ def unmix_tile_batches(batches: Iterator[pa.RecordBatch], endmembers: np.ndarray
         A_all = np.full((n, q), NODATA)
         rmse = np.zeros(0)
         if valid.any():
-            A_all[valid], rmse = _fcls_rmse(X[valid], E, delta)
+            A_all[valid], rmse = _fcls_rmse(X[valid], E)
         flat = np.empty(n * q)
         flat[band_major_positions(counts, q).ravel()] = A_all.T.ravel()
         # per-tile valid counts and mean RMSE: rmse holds the valid pixels
@@ -140,8 +138,7 @@ def unmix_tile_batches(batches: Iterator[pa.RecordBatch], endmembers: np.ndarray
         ], names=_ABUNDANCE_COLS)
 
 
-def unmix_tiles(tiles: DataFrame, endmembers: np.ndarray,
-                delta: float | None = None) -> DataFrame:
+def unmix_tiles(tiles: DataFrame, endmembers: np.ndarray) -> DataFrame:
     """FCLS per sparse tile: (tile_id, p, m, n, idx, bands) → abundance
     tile (same sparse layout, q bands) + per-tile metrics. Pixels whose
     band-0 value is NODATA are filtered (lsma.py:794 rule).
@@ -154,22 +151,22 @@ def unmix_tiles(tiles: DataFrame, endmembers: np.ndarray,
     (tests/test_synthetic_scene.py) and are bit-identical only for an
     unchanged partitioning."""
     return tiles.mapInArrow(
-        lambda it: unmix_tile_batches(it, endmembers, delta),
+        lambda it: unmix_tile_batches(it, endmembers),
         ABUNDANCE_TILE_SCHEMA)
 
 
 def unmix_cells_mesma(cells: DataFrame, band_cols: list[str],
-                      em_col: str = "endmembers", q: int = 3,
-                      keep_cols: list[str] = ("cell_id",)) -> DataFrame:
+                      q: int = 3) -> DataFrame:
     """MESMA: per-pixel endmember matrices carried as a flattened (q*p)
-    array column (concat_endmember_arrays product, sasma.py:96-111;
+    ``endmembers`` array column next to ``cell_id`` and the bands
+    (concat_endmember_arrays product, sasma.py:96-111;
     __mesma2__ kernel, lsma.py:169-177). Co-partitioned data-parallel —
     no broadcast, no collect."""
-    schema = ", ".join([f"{c} long" for c in keep_cols] +
-                       [f"a{i+1} double" for i in range(q)])
+    schema = ", ".join(["cell_id long"] + [f"a{i+1} double" for i in range(q)])
 
     def _unmix(X: np.ndarray, batch: pa.RecordBatch) -> list:
-        EM = batch.column(em_col).flatten().to_numpy().reshape(len(X), q, -1)
+        EM = (batch.column("endmembers").flatten().to_numpy()
+              .reshape(len(X), q, -1))
         A = np.empty((len(X), q))
         # group pixels sharing an endmember matrix → batched solves;
         # keyed by the exact bytes (not their hash) so distinct
@@ -180,6 +177,6 @@ def unmix_cells_mesma(cells: DataFrame, band_cols: list[str],
         for idxs in groups.values():
             idx = np.asarray(idxs)
             A[idx] = fcls_abundance(X[idx], EM[idx[0]])
-        return [*(batch.column(c) for c in keep_cols), *A.T]
+        return [batch.column("cell_id"), *A.T]
 
     return map_matrix(cells, band_cols, _unmix, schema)

@@ -39,14 +39,14 @@ def ppi_local(X: np.ndarray, n_skewers: int = 10000, seed: int = 42) -> np.ndarr
 
 
 def ppi_distributed(cells: DataFrame, band_cols: list[str],
-                    id_col: str = "cell_id", n_skewers: int = 1000,
-                    seed: int = 42, top: int = 20) -> DataFrame:
-    """→ DataFrame (cell_id, hits) of the ``top`` purest pixels.
+                    n_skewers: int = 1000, top: int = 20) -> DataFrame:
+    """→ DataFrame (cell_id, hits) of the ``top`` purest pixels, over
+    the seeded ``skewers``.
 
     Per-batch partial extremes → groupBy(skewer) global extreme → hit
     count per pixel. Deterministic under repartitioning: global extremes
     use (value, id) lexicographic tie-break."""
-    S = skewers(len(band_cols), n_skewers, seed)
+    S = skewers(len(band_cols), n_skewers)
     sk = np.tile(np.arange(n_skewers), 2)
 
     def _partial(X: np.ndarray, batch: pa.RecordBatch) -> list:
@@ -54,7 +54,7 @@ def ppi_distributed(cells: DataFrame, band_cols: list[str],
         # each skewer's max then min row: 2k rows out of every batch
         ext = np.r_[proj.argmax(axis=0), proj.argmin(axis=0)]
         return [sk, np.repeat([1, -1], n_skewers), proj[ext, sk],
-                batch.column(id_col).to_numpy()[ext]]
+                batch.column("cell_id").to_numpy()[ext]]
 
     partials = map_matrix(cells, band_cols, _partial,
                           "skewer int, side int, val double, id long")
@@ -66,7 +66,7 @@ def ppi_distributed(cells: DataFrame, band_cols: list[str],
         F.col("id"))
     winners = (partials.withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") == 1))
-    return (winners.groupBy(F.col("id").alias(id_col))
+    return (winners.groupBy(F.col("id").alias("cell_id"))
             .agg(F.count("*").alias("hits"))
-            .orderBy(F.desc("hits"), id_col)
+            .orderBy(F.desc("hits"), "cell_id")
             .limit(top))

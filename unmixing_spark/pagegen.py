@@ -19,7 +19,7 @@ end-to-end; ``sha2(text,256)`` is exposed for pipeline-invariant checks.
 from __future__ import annotations
 
 from unmixing_spark import dialect as D
-from unmixing_spark.spatial.grid import GridSpec, WORLD_GRID
+from unmixing_spark.spatial.grid import WORLD_GRID
 
 # (lon, lat) hotspots: NYC, London, Paris, Tokyo, Beijing, Delhi, LA, Sydney
 CITIES: list[tuple[float, float]] = [
@@ -38,7 +38,7 @@ def url_expr(dialect: str) -> str:
             + D.to_str("doc_id", dialect))
 
 
-def pages_sql(dialect: str, documents: str = "documents") -> str:
+def pages_sql(dialect: str) -> str:
     """SELECT producing the canonical ``pages`` table from ``documents``."""
     url = url_expr(dialect)
     h1 = D.md5_slice("url", 1, dialect)
@@ -50,15 +50,15 @@ def pages_sql(dialect: str, documents: str = "documents") -> str:
            {html} AS html,
            text,
            lang
-    FROM (SELECT {url} AS url, text, lang FROM {documents})
+    FROM (SELECT {url} AS url, text, lang FROM documents)
     """
 
 
-def geocode_exprs(dialect: str, url: str = "url") -> dict[str, str]:
+def geocode_exprs(dialect: str) -> dict[str, str]:
     """lon/lat as a pure function of md5(url) — hotspot-skewed."""
-    h1 = D.md5_slice(url, 1, dialect)
-    h2 = D.md5_slice(url, 9, dialect)
-    h3 = D.md5_slice(url, 17, dialect)
+    h1 = D.md5_slice("url", 1, dialect)
+    h2 = D.md5_slice("url", 9, dialect)
+    h3 = D.md5_slice("url", 17, dialect)
     city_lon = "CASE (" + h1 + ") % 8 " + " ".join(
         f"WHEN {i} THEN cast({lon} as double)" for i, (lon, _) in enumerate(CITIES)
     ) + " END"
@@ -74,11 +74,11 @@ def geocode_exprs(dialect: str, url: str = "url") -> dict[str, str]:
     return {"lon": lon, "lat": lat}
 
 
-def geo_pages_sql(dialect: str, documents: str = "documents",
-                  grid: GridSpec = WORLD_GRID) -> str:
-    """pages + (lon, lat, cell_id, tile_id, epoch) — the ``geo_pages``
-    stage (SURVEY.md §7.0 lifecycle)."""
+def geo_pages_sql(dialect: str) -> str:
+    """pages + (lon, lat, cell_id, tile_id, epoch) on ``WORLD_GRID`` —
+    the ``geo_pages`` stage (SURVEY.md §7.0 lifecycle)."""
     g = geocode_exprs(dialect)
+    grid = WORLD_GRID
     return f"""
     SELECT url, warc_ts, text, lang,
            {D.ts_to_epoch('warc_ts', dialect)} AS warc_epoch,
@@ -87,7 +87,7 @@ def geo_pages_sql(dialect: str, documents: str = "documents",
            {grid.tile_sql_from_cell(grid.cell_sql('lon', 'lat'))} AS tile_id
     FROM (
       SELECT p.*, {g['lon']} AS lon, {g['lat']} AS lat
-      FROM ({pages_sql(dialect, documents)}) p
+      FROM ({pages_sql(dialect)}) p
     )
     """
 
@@ -100,8 +100,7 @@ def geo_pages_sql(dialect: str, documents: str = "documents",
 BAND_NAMES = ["b1", "b2", "b3", "b4", "b5", "b6"]
 
 
-def cell_raster_sql(dialect: str, documents: str = "documents",
-                    grid: GridSpec = WORLD_GRID) -> str:
+def cell_raster_sql(dialect: str) -> str:
     """The rasterize step as a relational aggregate: one row per occupied
     cell, 6 'band' statistics. This is the long/sparse form of the raster
     cube (SURVEY.md §1.5) — tile assembly to sparse tile rows happens in
@@ -123,6 +122,6 @@ def cell_raster_sql(dialect: str, documents: str = "documents",
            round(avg({tokens}), 6)                   AS b4,
            round(avg(length(url)), 6)                AS b5,
            cast(max({doy}) as double)                AS b6
-    FROM ({geo_pages_sql(dialect, documents, grid)})
+    FROM ({geo_pages_sql(dialect)})
     GROUP BY cell_id
     """

@@ -17,7 +17,6 @@ from unmixing_spark import loops
 from unmixing_spark import pagegen
 from unmixing_spark.lsma.mapper import unmix_cells, unmix_tiles
 from unmixing_spark.raster.rasterize import assemble_tiles
-from unmixing_spark.spatial.grid import WORLD_GRID, GridSpec
 
 # Canonical endmember spectra in band space (b1 pages, b2 text-len, b3
 # langs, b4 tokens, b5 url-len, b6 crawl-day) — the "dense hub / average /
@@ -56,22 +55,18 @@ def register_tables(spark: SparkSession, sf_dir: str,
         df.createOrReplaceTempView(t)
 
 
-def geo_pages(spark: SparkSession, sf_dir: str,
-              grid: GridSpec = WORLD_GRID) -> DataFrame:
+def geo_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir)
-    return spark.sql(pagegen.geo_pages_sql(D.SPARK, grid=grid))
+    return spark.sql(pagegen.geo_pages_sql(D.SPARK))
 
 
-def cell_raster(spark: SparkSession, sf_dir: str,
-                grid: GridSpec = WORLD_GRID) -> DataFrame:
+def cell_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir)
-    return spark.sql(pagegen.cell_raster_sql(D.SPARK, grid=grid))
+    return spark.sql(pagegen.cell_raster_sql(D.SPARK))
 
 
-def tiles(spark: SparkSession, sf_dir: str,
-          grid: GridSpec = WORLD_GRID) -> DataFrame:
-    return assemble_tiles(cell_raster(spark, sf_dir, grid),
-                          pagegen.BAND_NAMES, grid)
+def tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return assemble_tiles(cell_raster(spark, sf_dir), pagegen.BAND_NAMES)
 
 
 def flagship_abundance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1371,8 +1371,11 @@ register("q_winnow_fingerprints", QuerySpec(
 
 SCRIPT_RANGES = (
     # (name, regex char class) — BMP ranges; order = deterministic
-    # dominant-script tie-break (first listed wins at equal counts)
-    ("latin", r"[A-Za-z\x{00C0}-\x{024F}]"),
+    # dominant-script tie-break (first listed wins at equal counts).
+    # Latin-1's two math signs × (U+00D7) and ÷ (U+00F7) sit inside the
+    # accented-letter block and are not letters: latin skips them
+    ("latin", r"[A-Za-z\x{00C0}-\x{00D6}\x{00D8}-\x{00F6}"
+              r"\x{00F8}-\x{024F}]"),
     ("cyrillic", r"[\x{0400}-\x{04FF}]"),
     ("greek", r"[\x{0370}-\x{03FF}]"),
     ("arabic", r"[\x{0600}-\x{06FF}]"),

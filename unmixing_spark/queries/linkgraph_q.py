@@ -863,8 +863,7 @@ def _hits_oracle() -> str:
     """
 
 
-def hits_over_documents(spark: SparkSession,
-                        docs: DataFrame | None = None) -> DataFrame:
+def hits_over_documents(spark: SparkSession) -> DataFrame:
     """Driver loop twin of the unrolled oracle, reading the registered
     ``documents`` view: HS_ROUNDS exact-integer HITS rounds; the edge
     list checkpointed once. Each raw-sum table (ar/hr, one row per
@@ -879,8 +878,7 @@ def hits_over_documents(spark: SparkSession,
     transforms (doc scan ⋈ checkpointed raw sums ⋈ 1-row broadcast)."""
     links = loops.checkpoint(spark.sql(
         f"WITH {link_ctes(D.SPARK)} SELECT src, dst FROM links"))
-    docs = (docs if docs is not None
-            else spark.table("documents")).select("doc_id")
+    docs = spark.table("documents").select("doc_id")
     n = docs.count()
     h = docs.select(
         "doc_id", F.lit(HS_SCALE // n).cast("bigint").alias("h"))

@@ -79,11 +79,12 @@ def _media_parts(spark: SparkSession) -> int:
                       spark.sparkContext.defaultParallelism))
 
 
-def render_page_image(seed: int, h: int = 48, w: int = 64) -> np.ndarray:
-    """Deterministic smooth RGB image for a doc: three low-frequency
+def render_page_image(seed: int) -> np.ndarray:
+    """Deterministic smooth 48x64 RGB image for a doc: three low-frequency
     sinusoid planes (frequency/phase drawn from a doc-keyed RNG). Smooth
     content is the realistic case for perceptual dedup — JPEG
     quantization moves pixel values but not the 8x9 luma structure."""
+    h, w = 48, 64
     rng = np.random.default_rng(seed)
     yy, xx = np.mgrid[0:h, 0:w]
     chans = []
@@ -105,14 +106,13 @@ def _image_twins(seed: int) -> tuple[bytes, bytes]:
     return encode_png(img), encode_jpeg(img, quality=90)
 
 
-def render_page_audio(seed: int, rate: int = 8000,
-                      dur: float = 1.0) -> np.ndarray:
-    """Deterministic noisy audio clip for a doc: five enveloped tones
-    inside the fingerprint analysis band over an enveloped broadband
-    floor — every band carries genuine energy, so the fingerprint's
-    comparisons key on signal, not quantization noise."""
+def render_page_audio(seed: int) -> np.ndarray:
+    """Deterministic noisy 1 s, 8 kHz audio clip for a doc: five
+    enveloped tones inside the fingerprint analysis band over an
+    enveloped broadband floor — every band carries genuine energy, so the
+    fingerprint's comparisons key on signal, not quantization noise."""
     rng = np.random.default_rng(seed)
-    t = np.arange(int(rate * dur)) / rate
+    t = np.arange(8000) / 8000
     x = rng.normal(0, 0.15, t.shape)
     x *= 0.6 + 0.4 * np.sin(2 * np.pi * rng.uniform(0.5, 3.0) * t)
     for _ in range(5):
@@ -157,14 +157,13 @@ def _box_blur(a: np.ndarray, r: int) -> np.ndarray:
     return a
 
 
-def render_video_frame(seed: int, t: int, h: int = 32,
-                       w: int = 40) -> np.ndarray:
-    """Frame t of a doc's deterministic synthetic video: a seed-keyed
+def render_video_frame(seed: int, t: int) -> np.ndarray:
+    """32x40 frame t of a doc's deterministic synthetic video: a seed-keyed
     blurred-noise field viewed through a window that pans one pixel
     every 4 frames (a camera pan, so consecutive frames are highly
     correlated while unrelated videos are independent — measured cross
     signature distance >= 16 bits over 96 seeds, planted twins <= 4)."""
-    margin = 24
+    h, w, margin = 32, 40, 24
     rng = np.random.default_rng(seed)
     field = _box_blur(rng.normal(0.0, 1.0, (h + margin, w + margin)), 4)
     s = t // 4

@@ -20,15 +20,15 @@ from unmixing_spark import loops
 from unmixing_spark.queries import QuerySpec, register, sql_template
 
 
-def _tokens(d: str, rel: str = "documents") -> str:
-    """Exploded (doc_id, tok) over whitespace-class tokens (``\\s+`` —
-    tabs/newlines split too; a space-only split would glue tokens across
-    line breaks in real text)."""
+def _tokens(d: str) -> str:
+    """Exploded (doc_id, tok) of ``documents`` over whitespace-class
+    tokens (``\\s+`` — tabs/newlines split too; a space-only split would
+    glue tokens across line breaks in real text)."""
     if d == D.SPARK:
-        return (f"(SELECT doc_id, tok FROM {rel} "
+        return ("(SELECT doc_id, tok FROM documents "
                 f"LATERAL VIEW explode({D.ws_split('text', d)}) t AS tok)")
     return (f"(SELECT doc_id, unnest({D.ws_split('text', d)}) AS tok "
-            f"FROM {rel})")
+            "FROM documents)")
 
 
 # ---- exact dedup -----------------------------------------------------------
@@ -484,10 +484,11 @@ def _emb_el(expr: str, i: int, d: str) -> str:
     return f"cast({expr}[{idx}] as double)"
 
 
-def _sign_bucket(d: str, table: int, expr: str = "embedding") -> str:
+def _sign_bucket(d: str, table: int) -> str:
     bits = []
     for p, plane in enumerate(_PLANES[table]):
-        dot = " + ".join(f"({s}) * {_emb_el(expr, i, d)}" for i, s in plane)
+        dot = " + ".join(f"({s}) * {_emb_el('embedding', i, d)}"
+                         for i, s in plane)
         bits.append(f"(CASE WHEN ({dot}) >= {D.dbl(0.0)} "
                     f"THEN {1 << p} ELSE 0 END)")
     return "(" + " + ".join(bits) + ")"

@@ -1,7 +1,7 @@
 """Multi-date compositing kernels — exact reference semantics.
 
-Re-implements utils.composite / composite2 / composite3
-(utils.py:343-525) with vectorized NumPy (no apply_along_axis, no
+Re-implements utils.composite2 / composite3
+(utils.py:392-525) with vectorized NumPy (no apply_along_axis, no
 multiprocessing — executors replace the reference's process pool; the
 relational form over the cell table is queries/raster_q.q_composite_*).
 
@@ -42,22 +42,6 @@ def _nan_reduce(reducer: str, a: np.ndarray) -> np.ndarray:
 def _as_stack(rasters, band):
     """dates x pixels matrix for one band."""
     return np.stack([np.asarray(r)[band].ravel() for r in rasters])
-
-
-def composite(*rasters, target_band: int = 1, reducer: str = "median",
-              nodata: float = NODATA, dtype=np.float32) -> np.ndarray:
-    """Single-band composite: NoData→NaN, nan-reducer (utils.py:343-389)."""
-    if reducer not in ("median", "min", "max", "mean"):
-        raise ValueError("Invalid reducer name")
-    shp = np.asarray(rasters[0]).shape
-    if len(shp) < 3:
-        shp = (1, *shp)
-        rasters = [np.asarray(r).reshape(shp) for r in rasters]
-    stack = _as_stack(rasters, target_band).astype(np.float64)
-    stack[stack == nodata] = np.nan
-    out = _nan_reduce(reducer, stack)
-    out = np.where(np.isnan(out), nodata, out)
-    return out.reshape(1, shp[1], shp[2])
 
 
 def composite2(reducers, *rasters, normalize: str | None = "sum",

@@ -1,4 +1,4 @@
-"""Mask kernels (NumPy, tile-level) + their Spark column forms.
+"""Mask kernels (NumPy, tile-level).
 
 Array kernels reproduce the reference semantics exactly (golden tests
 tests.py:444-481, 534-545); the relational forms over the cell table live
@@ -36,11 +36,6 @@ def cfmask(mask: np.ndarray, mask_values=(1, 2, 3, 4, 255)) -> np.ndarray:
     return np.isin(m, mask_values).reshape(1, *m.shape).astype(np.int64)
 
 
-def clean_mask(mask: np.ndarray) -> np.ndarray:
-    """Clip to [0,1] (utils.clean_mask, utils.py:266-280)."""
-    return np.clip(mask, 0, 1)
-
-
 def density_slice(band: np.ndarray, rel=np.less_equal, threshold: float = 1000,
                   nodata: float = NODATA) -> np.ndarray:
     """Threshold predicate ∧ not-NoData → 0/1 (utils.py:560-579)."""
@@ -54,44 +49,3 @@ def saturation_mask(cube: np.ndarray, saturation_value: float = 10000) -> np.nda
     for i in range(cube.shape[0]):
         np.logical_or(mask, cube[i] > saturation_value, out=mask)
     return mask
-
-
-def combine_masks(*masks: np.ndarray, multiply: bool = False) -> np.ndarray:
-    """Greedy OR (default) or conservative AND-by-multiplication
-    (utils.combine_masks, utils.py:309-340)."""
-    base = np.ones(masks[0].shape) if multiply else np.zeros(masks[0].shape)
-    for m in masks:
-        base = np.multiply(base, m) if multiply else np.where(m > 0, m, base)
-    return base
-
-
-def copy_nodata(source: np.ndarray, target: np.ndarray,
-                nodata: float = NODATA) -> np.ndarray:
-    """Propagate source's NoData cells into target (utils.py:528-557)."""
-    out = target.copy()
-    out[source == nodata] = nodata
-    return out
-
-
-def subarray(cube: np.ndarray, filtered_value: float = NODATA,
-             indices: bool = False):
-    """(p, m, n) → (p, z) keeping pixels that are not `filtered_value` in
-    ANY band — the `(arr != v).any(axis=0)` keep rule of utils.subarray
-    (utils.py:1067-1101)."""
-    p = cube.shape[0]
-    flat = cube.reshape(p, -1)
-    keep = (flat != filtered_value).any(axis=0)
-    if indices:
-        return flat[:, keep], np.flatnonzero(keep)
-    return flat[:, keep]
-
-
-def ravel_and_filter(cube: np.ndarray, filter_values: bool = True,
-                     nodata: float = NODATA) -> np.ndarray:
-    """(p, m, n) → ((m·n), p), dropping rows whose FIRST band is NoData —
-    lsma.ravel_and_filter (lsma.py:769-796; filter rule at 794)."""
-    p = cube.shape[0]
-    arr = cube.reshape(p, -1).T
-    if filter_values:
-        arr = arr[arr[:, 0] != nodata]
-    return arr

@@ -131,8 +131,7 @@ def _halo_rings(r: int, t: int) -> int:
 def interpolate_endmember_tiles(tiles: DataFrame, window: np.ndarray,
                                 class_band: int, spectral_bands: list[int],
                                 labels: list[int],
-                                grid: GridSpec = WORLD_GRID,
-                                nodata: float = NODATA) -> DataFrame:
+                                grid: GridSpec = WORLD_GRID) -> DataFrame:
     """Distributed interpolate_endmember_map (sasma.py:189-265): the
     per-(endmember class × band) fan-out the reference runs as q·n
     processes (sasma.py:245-252) becomes per-destination-tile halo groups,
@@ -229,8 +228,8 @@ def interpolate_endmember_tiles(tiles: DataFrame, window: np.ndarray,
         for label in labels:
             for b in sb:
                 v = sup_vals[b]
-                masked = np.where((sup_cls == label) & (v != nodata), v, 0.0)
-                out = normalized_convolution(masked, window, 0.0, nodata)[0]
+                masked = np.where((sup_cls == label) & (v != NODATA), v, 0.0)
+                out = normalized_convolution(masked, window, 0.0, NODATA)[0]
                 for i, j, tid in centers:
                     rows.append((tid, label, b, t, t,
                                  out[(rings + i) * t:(rings + i + 1) * t,

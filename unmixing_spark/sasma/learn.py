@@ -25,7 +25,7 @@ def concat_endmember_arrays(*em_rast_arrays: np.ndarray) -> np.ndarray:
 
 
 def fit_cart(cells: DataFrame, label_col: str, feature_cols: list[str],
-             max_depth: int = 8, seed: int = 42):
+             max_depth: int = 8):
     """Fit a decision tree on labeled cells (NoData-joint-masked rows
     excluded — the reference's combined X/y mask, sasma.py:53-67, becomes
     a WHERE clause). Returns the fitted pyspark.ml model."""
@@ -38,17 +38,18 @@ def fit_cart(cells: DataFrame, label_col: str, feature_cols: list[str],
     train = cells.filter(cond)
     assembled = VectorAssembler(inputCols=feature_cols, outputCol="features")\
         .transform(train).withColumn("label", F.col(label_col).cast("double"))
-    dt = DecisionTreeClassifier(maxDepth=max_depth, seed=seed)
+    dt = DecisionTreeClassifier(maxDepth=max_depth, seed=42)
     return dt.fit(assembled)
 
 
-def predict_cart(model, cells: DataFrame, feature_cols: list[str],
-                 out_col: str = "em_class") -> DataFrame:
-    """Label every cell with its endmember class (sasma.py:78-93)."""
+def predict_cart(model, cells: DataFrame,
+                 feature_cols: list[str]) -> DataFrame:
+    """Label every cell with its endmember class ``em_class``
+    (sasma.py:78-93)."""
     from pyspark.ml.feature import VectorAssembler
 
     assembled = VectorAssembler(inputCols=feature_cols, outputCol="features",
                                 handleInvalid="keep").transform(cells)
     return (model.transform(assembled)
-            .withColumn(out_col, F.col("prediction").cast("int"))
+            .withColumn("em_class", F.col("prediction").cast("int"))
             .drop("features", "rawPrediction", "probability", "prediction"))

@@ -110,14 +110,14 @@ class GridSpec:
         y0 = 90.0 - ty * self.tile * self.deg
         return (x0, self.deg, 0.0, y0, 0.0, -self.deg)
 
-    def neighbors(self, tile_id: int, ring: int = 1) -> list[int]:
-        """Tile ids in the square ring neighborhood (halo-exchange support
-        for focal windows, sasma.py:268-293)."""
+    def neighbors(self, tile_id: int) -> list[int]:
+        """Ids of the (up to 8) tiles around ``tile_id`` (halo-exchange
+        support for focal windows, sasma.py:268-293)."""
         nty = (self.ny + self.tile - 1) // self.tile
         ty, tx = divmod(tile_id, self.ntx)
         out = []
-        for dy in range(-ring, ring + 1):
-            for dx in range(-ring, ring + 1):
+        for dy in (-1, 0, 1):
+            for dx in (-1, 0, 1):
                 y, x = ty + dy, tx + dx
                 if 0 <= y < nty and 0 <= x < self.ntx and (dy, dx) != (0, 0):
                     out.append(y * self.ntx + x)

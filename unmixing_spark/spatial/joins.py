@@ -42,9 +42,10 @@ def winding_contains(poly: np.ndarray, lon: np.ndarray, lat: np.ndarray) -> np.n
     return wn != 0
 
 
-def point_in_polygon_join(points: DataFrame, polygons: list[tuple[str, np.ndarray]],
-                          lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """points ⋈ polygons → points + matched polygon name (inner).
+def point_in_polygon_join(points: DataFrame,
+                          polygons: list[tuple[str, np.ndarray]]) -> DataFrame:
+    """points (lon, lat, …) ⋈ polygons → points + matched polygon name
+    (inner).
 
     polygons: [(name, (k,2) ring array)] — closed over (broadcast) by the
     UDF; bbox prefilter stays in the JVM as a pushed-down predicate."""
@@ -56,8 +57,8 @@ def point_in_polygon_join(points: DataFrame, polygons: list[tuple[str, np.ndarra
     # bbox OR-filter: cheap JVM-side candidate pruning before Python
     cond = None
     for (x0, x1, y0, y1) in bboxes:
-        c = (F.col(lon_col) >= x0) & (F.col(lon_col) <= x1) & \
-            (F.col(lat_col) >= y0) & (F.col(lat_col) <= y1)
+        c = (F.col("lon") >= x0) & (F.col("lon") <= x1) & \
+            (F.col("lat") >= y0) & (F.col("lat") <= y1)
         cond = c if cond is None else (cond | c)
     pruned = points.filter(cond)
 
@@ -81,8 +82,7 @@ def point_in_polygon_join(points: DataFrame, polygons: list[tuple[str, np.ndarra
     # evaluation. The function is pure — the marker only constrains
     # the optimizer, values are unchanged.
     match_nd = match.asNondeterministic()
-    return (pruned.withColumn("aoi", match_nd(F.col(lon_col),
-                                              F.col(lat_col)))
+    return (pruned.withColumn("aoi", match_nd(F.col("lon"), F.col("lat")))
             .filter(F.col("aoi").isNotNull()))
 
 
@@ -155,9 +155,9 @@ def _knn_probe(cells: DataFrame, qspecs: list[tuple[str, float, float, int]],
 
 
 def knn_join(cells: DataFrame, queries: list[tuple[str, float, float]],
-             k: int = 5, grid: GridSpec = WORLD_GRID,
-             max_rings: int | None = None, init_rings: int = 20) -> DataFrame:
-    """k nearest occupied cells per query point via ADAPTIVE ring search.
+             k: int = 5) -> DataFrame:
+    """k nearest occupied cells of ``WORLD_GRID`` per query point via
+    ADAPTIVE ring search.
 
     Probe → certify → expand: each round joins the big cell table against
     the (tiny, broadcast, JVM-generated) candidate disks of the still-
@@ -166,10 +166,10 @@ def knn_join(cells: DataFrame, queries: list[tuple[str, float, float]],
     outside Chebyshev radius r can have from a point of the query's own
     cell — so certified results are guaranteed identical to the
     brute-force cross-join oracle (same distances, same cell_id
-    tie-break). Unsatisfied queries quadruple their radius (bounded by
-    ``max_rings``, default the grid diameter = always exact) and re-probe;
-    satisfied ones drop out, so the common case is ONE scan of the big
-    table for all queries at once.
+    tie-break). Every query starts at radius 20; unsatisfied queries
+    quadruple their radius (bounded by the grid diameter, so always
+    exact) and re-probe; satisfied ones drop out, so the common case is
+    ONE scan of the big table for all queries at once.
 
     The per-round certification check reads only the probe OUTPUT — at
     most k·|queries| rows, tiny by definition of kNN — and the final
@@ -177,10 +177,10 @@ def knn_join(cells: DataFrame, queries: list[tuple[str, float, float]],
     table is ever repeated for data that is already certified. This is
     adaptive-query-execution-style control flow, not a driver-side
     compute path. Generalizes the candidate search of lsma.py:587-655."""
-    g = grid
+    g = WORLD_GRID
     spark = cells.sparkSession
-    cap = max_rings if max_rings is not None else max(g.nx, g.ny)
-    pending = {name: min(init_rings, cap) for name, _, _ in queries}
+    cap = max(g.nx, g.ny)
+    pending = {name: min(20, cap) for name, _, _ in queries}
     coords = {name: (lon, lat) for name, lon, lat in queries}
     out_rows: list[tuple] = []
     while pending:

@@ -66,11 +66,11 @@ def utm_from_lonlat(lon, lat, epsg: int) -> tuple[np.ndarray, np.ndarray]:
     return e, n
 
 
-def utm_forward_sql(src_select: str, epsg: int,
-                    lon: str = "lon", lat: str = "lat") -> str:
+def utm_forward_sql(src_select: str, epsg: int) -> str:
     """Render the forward Transverse-Mercator transform (the same Snyder
     eqs. 8-9..8-14 as ``utm_from_lonlat``) as portable SQL: wraps
-    ``src_select`` adding ``easting``/``northing`` columns.
+    ``src_select`` (with ``lon``/``lat`` columns) adding
+    ``easting``/``northing`` columns.
 
     The SQL text is identical under both dialects (only sin/cos/tan/sqrt/
     radians, shared ANSI), so the dual-rendered oracle compares like for
@@ -113,8 +113,8 @@ def utm_forward_sql(src_select: str, epsg: int,
                sin(2 * phi) AS sin2p, sin(4 * phi) AS sin4p,
                sin(6 * phi) AS sin6p
         FROM (
-          SELECT *, radians({lat}) AS phi,
-                 radians({lon}) - {D.dbl(lam0)} AS dlam
+          SELECT *, radians(lat) AS phi,
+                 radians(lon) - {D.dbl(lam0)} AS dlam
           FROM ({src_select})
         )
       )

@@ -21,12 +21,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def skew_report(df: DataFrame, key: str, top: int = 10,
-                sample_fraction: float | None = None) -> DataFrame:
+def skew_report(df: DataFrame, key: str, top: int = 10) -> DataFrame:
     """Per-key row share + skew factor (share / mean share) of the `top`
     hottest keys — the explicit skew detection the north rule requires."""
-    src = df.sample(sample_fraction, seed=42) if sample_fraction else df
-    counts = src.groupBy(key).count()
+    counts = df.groupBy(key).count()
     stats = counts.agg(F.avg("count").alias("mean_n"),
                        F.count("*").alias("n_keys"),
                        F.sum("count").alias("total"))

@@ -72,8 +72,8 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     return arr.reshape(-1, ch), rate
 
 
-def audio_features(clips: DataFrame, payload_col: str = "audio") -> DataFrame:
-    """Per-clip decode + stats: duration, RMS level (dBFS),
+def audio_features(clips: DataFrame) -> DataFrame:
+    """Per-clip (id, audio) decode + stats: duration, RMS level (dBFS),
     zero-crossing rate, peak amplitude — the silence/clipping filters a
     speech-corpus pipeline keys on. One Python decode per payload."""
     schema = ("id long, channels int, rate int, n_samples long, "
@@ -91,15 +91,15 @@ def audio_features(clips: DataFrame, payload_col: str = "audio") -> DataFrame:
                20.0 * np.log10(rms / 32768.0) if rms > 0 else float("-inf"),
                zc, int(np.max(np.abs(x))) if n else 0)
 
-    return map_rows(clips.select("id", payload_col), _feat, schema)
+    return map_rows(clips.select("id", "audio"), _feat, schema)
 
 
-def resample_audio(clips: DataFrame, factor: int,
-                   payload_col: str = "audio") -> DataFrame:
-    """Integer-factor downsample: boxcar (moving-average) prefilter over
-    each factor-sized window, then decimate — binary→binary, rate/factor
-    in the re-encoded header. Tail samples that do not fill a window are
-    dropped (declared; a polyphase resampler would consume them)."""
+def resample_audio(clips: DataFrame, factor: int) -> DataFrame:
+    """Integer-factor downsample of each (id, audio) clip: boxcar
+    (moving-average) prefilter over each factor-sized window, then
+    decimate — binary→binary, rate/factor in the re-encoded header. Tail
+    samples that do not fill a window are dropped (declared; a polyphase
+    resampler would consume them)."""
     def _resample(i, payload):
         arr, rate = decode_wav(bytes(payload))
         n = (arr.shape[0] // factor) * factor
@@ -108,7 +108,7 @@ def resample_audio(clips: DataFrame, factor: int,
         out = np.clip(np.rint(win), -32768, 32767).astype(np.int16)
         yield int(i), encode_wav(out, rate // factor)
 
-    return map_rows(clips.select("id", payload_col), _resample,
+    return map_rows(clips.select("id", "audio"), _resample,
                     "id long, audio binary")
 
 
@@ -158,14 +158,13 @@ def audio_fingerprint64(arr: np.ndarray, rate: int, n_t: int = 8,
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def audio_fingerprints(clips: DataFrame,
-                       payload_col: str = "audio") -> DataFrame:
-    """Per-clip decode + fingerprint, (id, fp bigint) out — the map
-    side of audio near-dup dedup; the join side is
+def audio_fingerprints(clips: DataFrame) -> DataFrame:
+    """Per-clip (id, audio) decode + fingerprint, (id, fp bigint) out —
+    the map side of audio near-dup dedup; the join side is
     multimodal.dhash_pairs(hash_col='fp'), pure DataFrame ops over
     bit-slice buckets, exactly as with images."""
 
     def _fp(i, payload):
         yield int(i), audio_fingerprint64(*decode_wav(bytes(payload)))
 
-    return map_rows(clips.select("id", payload_col), _fp, "id long, fp long")
+    return map_rows(clips.select("id", "audio"), _fp, "id long, fp long")

@@ -189,9 +189,10 @@ class _BitReader:
         """Byte-align and step over an RSTn marker (T.81 F.2.1.3.1)."""
         self.bitbuf = 0
         self.nbits = 0
-        while self.data[self.pos] != 0xFF:
+        data = self.data
+        while self.pos < len(data) and data[self.pos] != 0xFF:
             self.pos += 1
-        if 0xD0 <= self.data[self.pos + 1] <= 0xD7:
+        if self.pos + 1 < len(data) and 0xD0 <= data[self.pos + 1] <= 0xD7:
             self.pos += 2
 
 
@@ -200,10 +201,17 @@ def _extend(v: int, t: int) -> int:
     return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
 
 
+def _need(seg: bytes, n: int, what: str) -> None:
+    """Refuse a marker segment shorter than the ``n`` bytes it declares."""
+    if len(seg) < n:
+        raise ValueError(f"JPEG {what} runs past its segment")
+
+
 def decode_jpeg(data: bytes) -> np.ndarray:
     """JPEG bytes (sequential or progressive) → (h, w, c) uint8 (c = 1
     gray, 3 RGB). Every scan decodes into the coefficient arrays; the
-    pixels are reconstructed once, at EOI."""
+    pixels are reconstructed once, at EOI. Malformed input raises
+    ValueError (NotImplementedError for valid but unsupported coding)."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     qt: dict[int, np.ndarray] = {}
@@ -218,19 +226,28 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         if data[pos] != 0xFF:
             pos += 1
             continue
+        if pos + 1 >= len(data):
+            raise ValueError("JPEG truncated inside a marker")
         marker = data[pos + 1]
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             pos += 2
             continue
         if marker == 0xD9:  # EOI
             break
+        if pos + 4 > len(data):
+            raise ValueError("JPEG truncated inside a segment length")
         (length,) = struct.unpack(">H", data[pos + 2:pos + 4])
+        if length < 2:
+            raise ValueError(f"JPEG segment length {length} (B.1.1.4: >= 2)")
+        if pos + 2 + length > len(data):
+            raise ValueError("JPEG segment runs past the data")
         seg = data[pos + 4:pos + 2 + length]
         if marker == 0xDB:  # DQT
             i = 0
             while i < len(seg):
                 prec, tid = seg[i] >> 4, seg[i] & 15
                 i += 1
+                _need(seg, i + (128 if prec else 64), "DQT table")
                 if prec:
                     q = np.frombuffer(seg[i:i + 128], dtype=">u2").astype(np.float64)
                     i += 128
@@ -242,21 +259,28 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             i = 0
             while i < len(seg):
                 cls, tid = seg[i] >> 4, seg[i] & 15
+                _need(seg, i + 17, "DHT code counts")
                 bits = list(seg[i + 1:i + 17])
                 n = sum(bits)
+                _need(seg, i + 17 + n, "DHT symbol table")
                 vals = seg[i + 17:i + 17 + n]
                 (huff_ac if cls else huff_dc)[tid] = _Huffman(bits, vals)
                 i += 17 + n
         elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
+            _need(seg, 6, "SOF header")
             prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
             if prec != 8:
                 raise NotImplementedError(f"JPEG precision {prec} (8-bit only)")
             if nc not in (1, 3):
                 raise NotImplementedError(
                     "JPEG with %d components (grayscale/YCbCr only)" % nc)
+            _need(seg, 6 + 3 * nc, "SOF component list")
             comps = []
             for c in range(nc):
                 cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 15 <= 4):
+                    raise ValueError("JPEG sampling factors %dx%d (B.2.2 "
+                                     "allows 1-4)" % (hv >> 4, hv & 15))
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
             frame = _frame(h, w, comps, progressive=marker == 0xC2)
             my, mx = frame["mcus"]
@@ -268,14 +292,20 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 f"JPEG SOF marker 0xFF{marker:02X} "
                 "(baseline sequential + progressive only)")
         elif marker == 0xDD:  # DRI
+            _need(seg, 2, "DRI")
             (restart_interval,) = struct.unpack(">H", seg[:2])
         elif marker == 0xDA:  # SOS — scan follows
             if frame is None:
                 raise ValueError("JPEG missing SOF before SOS")
+            _need(seg, 1, "SOS header")
             ns = seg[0]
+            _need(seg, 4 + 2 * ns, "SOS component list")
+            ids = {c["id"] for c in frame["comps"]}
             scan = {}
             for c in range(ns):
                 cid, tt = seg[1 + 2 * c], seg[2 + 2 * c]
+                if cid not in ids:
+                    raise ValueError(f"SOS component {cid} not in the frame")
                 scan[cid] = (tt >> 4, tt & 15)
             ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
             if not frame["progressive"]:

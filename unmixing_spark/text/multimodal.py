@@ -192,9 +192,9 @@ def decode_image(payload: bytes) -> np.ndarray:
     raise ValueError("unknown image codec")
 
 
-def image_features(frames: DataFrame, payload_col: str = "image") -> DataFrame:
-    """Per-image decode + per-channel stats, one Python decode per
-    payload; a channel the image lacks reads NULL."""
+def image_features(frames: DataFrame) -> DataFrame:
+    """Per-image (id, image) decode + per-channel stats, one Python
+    decode per payload; a channel the image lacks reads NULL."""
     schema = ("id long, height int, width int, channels int, "
               "mean_r double, mean_g double, mean_b double")
 
@@ -205,20 +205,20 @@ def image_features(frames: DataFrame, payload_col: str = "image") -> DataFrame:
                *(float(means[ch]) if ch < arr.shape[2] else float("nan")
                  for ch in range(3)))
 
-    return map_rows(frames.select("id", payload_col), _feat, schema)
+    return map_rows(frames.select("id", "image"), _feat, schema)
 
 
-def resize_images(frames: DataFrame, out_h: int, out_w: int,
-                  payload_col: str = "image") -> DataFrame:
-    """Nearest-neighbor resize (pure NumPy — works for any decoded image),
-    re-encoded with the fake codec. Demonstrates binary→binary transforms."""
+def resize_images(frames: DataFrame, out_h: int, out_w: int) -> DataFrame:
+    """Nearest-neighbor resize of each (id, image) row (pure NumPy —
+    works for any decoded image), re-encoded with the fake codec.
+    Demonstrates binary→binary transforms."""
     def _resize(i, payload):
         arr = decode_image(bytes(payload))
         ys = (np.arange(out_h) * arr.shape[0] // out_h)
         xs = (np.arange(out_w) * arr.shape[1] // out_w)
         yield int(i), encode_fake_image(arr[np.ix_(ys, xs)])
 
-    return map_rows(frames.select("id", payload_col), _resize,
+    return map_rows(frames.select("id", "image"), _resize,
                     "id long, image binary")
 
 
@@ -261,23 +261,20 @@ def dhash64(arr: np.ndarray) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def image_dhash(frames: DataFrame, payload_col: str = "image",
-                id_col: str = "id") -> DataFrame:
-    """Per-image decode + perceptual hash, (id, dhash bigint) out, one
-    Python decode per payload. This is the map side of image near-dup
-    dedup — the join side (dhash_pairs) is pure DataFrame ops, so only
-    the unavoidable decode runs in Python."""
+def image_dhash(frames: DataFrame) -> DataFrame:
+    """Per-image (id, image) decode + perceptual hash, (id, dhash bigint)
+    out, one Python decode per payload. This is the map side of image
+    near-dup dedup — the join side (dhash_pairs) is pure DataFrame ops,
+    so only the unavoidable decode runs in Python."""
 
     def _hash(i, payload):
         yield int(i), dhash64(decode_image(bytes(payload)))
 
-    return map_rows(frames.select(id_col, payload_col), _hash,
-                    f"{id_col} long, dhash long")
+    return map_rows(frames.select("id", "image"), _hash, "id long, dhash long")
 
 
-def dhash_pairs(hashes: DataFrame, id_col: str = "id",
-                hash_col: str = "dhash", max_hamming: int = 7,
-                n_bands: int = 8) -> DataFrame:
+def dhash_pairs(hashes: DataFrame, hash_col: str = "dhash",
+                max_hamming: int = 7, n_bands: int = 8) -> DataFrame:
     """Image near-dup pairs at Hamming distance <= max_hamming over the
     64-bit dHash, blocked on n_bands equal bit-slices (the Manku et al.
     2007 construction q_simhash_pairs uses): a pair differing in fewer
@@ -294,7 +291,7 @@ def dhash_pairs(hashes: DataFrame, id_col: str = "id",
         raise ValueError("pigeonhole exactness needs max_hamming < n_bands")
     width = 64 // n_bands
     mask = (1 << width) - 1
-    h = hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
+    h = hashes.select("id", F.col(hash_col).alias("h"))
     # arithmetic shift sign-extends negative hashes; the & mask keeps
     # exactly the band's bits, so band values are identical either way
     banded = (h.select(
@@ -321,11 +318,10 @@ def dhash_pairs(hashes: DataFrame, id_col: str = "id",
             .select("id_a", "id_b", "hamming"))
 
 
-def sample_video_frames(videos: DataFrame, every_n: int = 10,
-                        payload_col: str = "video") -> DataFrame:
-    """Frame sampling over a fake video payload (concatenated fake-image
-    frames): one output row per sampled frame — the UDTF-style expansion
-    shape (1 row → m rows) a real ffmpeg sampler produces."""
+def sample_video_frames(videos: DataFrame, every_n: int = 10) -> DataFrame:
+    """Frame sampling over (id, video) fake video payloads (concatenated
+    fake-image frames): one output row per sampled frame — the UDTF-style
+    expansion shape (1 row → m rows) a real ffmpeg sampler produces."""
     def _sample(i, payload):
         buf = bytes(payload)
         off, fno = 0, 0
@@ -337,25 +333,22 @@ def sample_video_frames(videos: DataFrame, every_n: int = 10,
             off += size
             fno += 1
 
-    return map_rows(videos.select("id", payload_col), _sample,
+    return map_rows(videos.select("id", "video"), _sample,
                     "id long, frame_no int, image binary")
 
 
-def frame_dhash(frames: DataFrame, payload_col: str = "image",
-                id_col: str = "id",
-                frame_col: str = "frame_no") -> DataFrame:
-    """Per-frame decode + dHash keeping the (id, frame_no) key — the map
-    side of video near-dup signatures."""
+def frame_dhash(frames: DataFrame) -> DataFrame:
+    """Per-frame (id, frame_no, image) decode + dHash keeping the
+    (id, frame_no) key — the map side of video near-dup signatures."""
 
     def _hash(i, frame_no, payload):
         yield int(i), int(frame_no), dhash64(decode_image(bytes(payload)))
 
-    return map_rows(frames.select(id_col, frame_col, payload_col), _hash,
-                    f"{id_col} long, {frame_col} int, dhash long")
+    return map_rows(frames.select("id", "frame_no", "image"), _hash,
+                    "id long, frame_no int, dhash long")
 
 
-def video_signatures(videos: DataFrame, every_n: int = 5,
-                     payload_col: str = "video") -> DataFrame:
+def video_signatures(videos: DataFrame, every_n: int = 5) -> DataFrame:
     """64-bit video near-dup signature: sample frames, dHash each, then
     take the PER-BIT MAJORITY across sampled frames (the temporal
     pooling used for video copy detection over frame hashes — order-
@@ -366,9 +359,8 @@ def video_signatures(videos: DataFrame, every_n: int = 5,
     is pure Spark SQL — one groupBy with 64 conditional-sum aggregates
     (JVM-side, whole-stage codegen, one exchange keyed by video id),
     rebuilt into a signed bigint so the result pairs with dhash_pairs.
-    Returns (id, vhash, n_frames)."""
-    hashes = frame_dhash(sample_video_frames(videos, every_n=every_n,
-                                             payload_col=payload_col))
+    Reads (id, video) rows; returns (id, vhash, n_frames)."""
+    hashes = frame_dhash(sample_video_frames(videos, every_n=every_n))
     aggs = [F.sum(F.shiftright(F.col("dhash"), k)
                   .bitwiseAND(F.lit(1))).alias(f"s{k}")
             for k in range(64)] + [F.count(F.lit(1)).alias("c")]

@@ -23,22 +23,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.default_rng(42)
     return rng.standard_normal((dim, n_planes))
 
 
 def with_lsh_buckets(df: DataFrame, dim: int, n_planes: int = 4,
-                     n_tables: int = 8, seed: int = 42,
-                     vec_col: str = "embedding") -> DataFrame:
-    """Explode each row into its per-table LSH bucket keys.
+                     n_tables: int = 8) -> DataFrame:
+    """Explode each row into the per-table LSH bucket keys of its
+    ``embedding``.
 
     OR-construction over ``n_tables`` independent sign-pattern hashes
     (Charikar 2002 + Indyk-Motwani multi-table amplification): a candidate
     pair is generated if ANY table buckets them together — recall
     1-(1-p^k)^L where p = 1 - θ/π. Output rows: n_tables per input row,
     keyed by (table, bucket)."""
-    H = hyperplanes(dim, n_planes * n_tables, seed)
+    H = hyperplanes(dim, n_planes * n_tables)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -51,7 +51,7 @@ def with_lsh_buckets(df: DataFrame, dim: int, n_planes: int = 4,
         keys = codes + (np.arange(codes.shape[1]) << len(weights))
         return pd.Series(list(keys.astype(np.int64)))
 
-    return (df.withColumn("lsh_bucket", F.explode(buckets(F.col(vec_col)))))
+    return df.withColumn("lsh_bucket", F.explode(buckets(F.col("embedding"))))
 
 
 def _cosine_rerank(cand: DataFrame, k: int) -> DataFrame:
@@ -84,16 +84,15 @@ def _cand_shape(q: DataFrame, c: DataFrame) -> list:
 
 
 def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-                 n_planes: int = 4, n_tables: int = 16,
-                 seed: int = 42) -> DataFrame:
+                 n_planes: int = 4, n_tables: int = 16) -> DataFrame:
     """Approximate top-k by cosine within shared LSH buckets.
 
     Both sides hash with the same seeded hyperplanes; the join is a bucket
     equi-join (shuffle on the bucket key — candidates only, never all
     pairs); multi-table duplicate pairs are dropped BEFORE scoring so the
     cosine is computed once per unique (query, hit) pair."""
-    c = with_lsh_buckets(corpus, dim, n_planes, n_tables, seed).alias("c")
-    q = with_lsh_buckets(queries, dim, n_planes, n_tables, seed).alias("q")
+    c = with_lsh_buckets(corpus, dim, n_planes, n_tables).alias("c")
+    q = with_lsh_buckets(queries, dim, n_planes, n_tables).alias("q")
     cand = (q.join(c, F.col("q.lsh_bucket") == F.col("c.lsh_bucket"))
             .filter(F.col("q.vec_id") != F.col("c.vec_id"))
             .select(*_cand_shape(q, c))
@@ -145,15 +144,14 @@ def _centroid_udfs(centroids: np.ndarray, n_probe: int):
     return assign_list, probe_lists
 
 
-def _coarse_centroids(c_n: DataFrame, n_centroids: int,
-                      seed: int) -> np.ndarray:
+def _coarse_centroids(c_n: DataFrame, n_centroids: int) -> np.ndarray:
     """(n_centroids, dim) coarse-quantizer centers: seeded pyspark.ml
     KMeans over the ``unit`` column. One fit for the IVF and IVF-PQ
     paths."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    km = KMeans(k=n_centroids, seed=seed, maxIter=20,
+    km = KMeans(k=n_centroids, seed=42, maxIter=20,
                 featuresCol="features", predictionCol="ivf_list")
     model = km.fit(c_n.withColumn("features", array_to_vector("unit"))
                    .select("features"))
@@ -161,8 +159,7 @@ def _coarse_centroids(c_n: DataFrame, n_centroids: int,
 
 
 def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-                 n_centroids: int = 16, n_probe: int = 4,
-                 seed: int = 42) -> DataFrame:
+                 n_centroids: int = 16, n_probe: int = 4) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the coarse-quantizer scale
     path the task brief names alongside LSH.
 
@@ -178,7 +175,7 @@ def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     needed (unlike multi-table LSH)."""
     c_n = _l2_normed(corpus, "unit")
     assign_list, probe_lists = _centroid_udfs(
-        _coarse_centroids(c_n, n_centroids, seed), n_probe)
+        _coarse_centroids(c_n, n_centroids), n_probe)
 
     c = (c_n.withColumn("ivf_list", assign_list("unit"))
          .select("vec_id", "embedding", "ivf_list").alias("c"))
@@ -193,21 +190,19 @@ def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
 
 
 def ann_ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
-                   k: int = 5, n_centroids: int = 16, n_probe: int = 4,
-                   pq_m: int = 8, pq_ks: int = 32, shortlist: int = 64,
-                   seed: int = 42) -> DataFrame:
+                   k: int = 5) -> DataFrame:
     """IVF-PQ approximate top-k (Jegou et al. 2011 §V, the FAISS
     IVFPQ+refine pattern) — the composed scale path: the IVF coarse
-    quantizer prunes the corpus to n_probe inverted lists, ASYMMETRIC
-    DISTANCE (ADC) over {pq_m}-byte RESIDUAL codes ranks the candidates,
-    and only the top-``shortlist`` survivors are re-ranked with exact
-    cosine. Why it matters at 10^12 vectors: the exact re-rank tier
-    reads 64 floats for only ``shortlist`` rows per query, while the
-    ADC tier reads {pq_m} bytes + table lookups per candidate — the
-    bulk tier's working set drops ~64x, which is what keeps it in
-    memory. Residual encoding (x − coarse centroid, §V) is what makes
-    the codes discriminative inside a list: the shared coarse offset is
-    removed before quantization.
+    quantizer (16 lists) prunes the corpus to the 4 nearest inverted
+    lists, ASYMMETRIC DISTANCE (ADC) over 8-byte RESIDUAL codes (32
+    centroids per subspace) ranks the candidates, and only the top-64
+    survivors are re-ranked with exact cosine. Why it matters at 10^12
+    vectors: the exact re-rank tier reads 64 floats for only 64 rows
+    per query, while the ADC tier reads 8 bytes + table lookups per
+    candidate — the bulk tier's working set drops ~64x, which is what
+    keeps it in memory. Residual encoding (x − coarse centroid, §V) is
+    what makes the codes discriminative inside a list: the shared coarse
+    offset is removed before quantization.
 
     Training: one pyspark.ml KMeans for the coarse book and one per PQ
     subspace over the coarse RESIDUALS of the L2-normalized corpus
@@ -217,10 +212,11 @@ def ann_ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    n_centroids, n_probe, pq_m, pq_ks, shortlist = 16, 4, 8, 32, 64
     sd = dim // pq_m
 
     c_n = _l2_normed(corpus, "unit").cache()
-    coarse = _coarse_centroids(c_n, n_centroids, seed)
+    coarse = _coarse_centroids(c_n, n_centroids)
     assign_list, probe_lists = _centroid_udfs(coarse, n_probe)
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
@@ -236,7 +232,7 @@ def ann_ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     books = []
     for m in range(pq_m):
         sub = F.slice("resid", m * sd + 1, sd)
-        bm = KMeans(k=pq_ks, seed=seed + m + 1, maxIter=20,
+        bm = KMeans(k=pq_ks, seed=42 + m + 1, maxIter=20,
                     featuresCol="features", predictionCol="pq_code")
         bmod = bm.fit(c_r.withColumn("features",
                                      array_to_vector(sub)).select("features"))

@@ -18,7 +18,8 @@ _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8, 11: 4
 _TYPE_FMT = {1: "B", 3: "H", 4: "I", 8: "h", 9: "i", 11: "f", 12: "d", 16: "Q", 17: "q"}
 
 
-def _read_values(buf: bytes, endian: str, ftype: int, count: int, value_field: bytes, offset_base: int = 0):
+def _read_values(buf: bytes, endian: str, ftype: int, count: int,
+                 value_field: bytes):
     size = _TYPE_SIZE.get(ftype, 1) * count
     if size <= 4:
         raw = value_field[:size]
