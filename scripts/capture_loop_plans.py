@@ -45,29 +45,29 @@ def main() -> None:
             fh.write(buf.getvalue())
         print(f"wrote {path}")
 
-    # HyperBall: one register-propagation round over the wide state
+    # HyperBall: one register-propagation round over the wide state,
+    # planned inside the loop scope as the loop plans it
     links, state, k = L._hb_setup(spark)
     state = L._hb_init_acc(state, [f"{D.dbl(0.0)} AS h", "e AS prev"])
     upd = [f"(h0 + greatest({D.dbl(0.0)}, e - prev0) / {D.dbl(1.0)}) AS h",
            "e AS prev"]
-    with loops.interpreted_loop(spark, k) as small:
+    with loops.scope(spark, k):
         write("hyperball_round",
-              L._hb_wide_round(links, state, upd, ["h", "prev"], k, small))
+              L._hb_wide_round(links, state, upd, ["h", "prev"]))
 
-    # HITS: one authority half-step (links join score vector + dst sum),
-    # with the score vector broadcast when it fits, as the loop does
-    hlinks = loops.checkpoint(spark.sql(
-        f"WITH {L.link_ctes(D.SPARK)} SELECT src, dst FROM links"))
+    # HITS: one authority half-step past the first round — links and the
+    # score vector both checkpointed laid out by src inside the scope
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     n = docs.count()
-    h = docs.select("doc_id",
-                    F.lit(L.HS_SCALE // n).cast("bigint").alias("h"))
-    hv = h.withColumnRenamed("doc_id", "src")
-    if n * 16 < int(spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", str(10 << 20))):
-        hv = F.broadcast(hv)
-    write("hits_halfstep",
-          hlinks.join(hv, "src").groupBy("dst").agg(F.sum("h").alias("s")))
+    k = loops.nparts(spark, 3 * n, row_bytes=16)
+    with loops.scope(spark, k):
+        by_src = loops.checkpoint(spark.sql(
+            f"WITH {L.link_ctes(D.SPARK)} SELECT src, dst FROM links")
+            .repartition(k, "src"))
+        h = loops.checkpoint(docs.select(
+            "doc_id", F.lit(L.HS_SCALE // n).cast("bigint").alias("h"))
+            .repartition(k, "doc_id"))
+        write("hits_halfstep", L._hits_half(by_src, h, "src", "dst"))
 
     # PageRank: the final-state plan embeds the last PR_CKPT_EVERY
     # rounds of the recurrence (join + contribution sum per round)

@@ -1,11 +1,18 @@
-"""The shared loop mechanics (unmixing_spark/loops.py) and the adaptive
-operators built on them: fixpoint convergence and its round cap, the
-one-job observed checkpoint, job attribution of concurrent checkpoint
-builds, the TrustRank empty-seed guard, that no eager checkpoint
-bypasses ``loops.checkpoint``, and that no hand-written ``mapInPandas`` or
-``mapInArrow`` body bypasses ``boundary.map_rows``/``boundary.map_matrix``."""
+"""The shared loop mechanics (unmixing_spark/loops.py) and the operators
+built on them: fixpoint convergence and its round cap, the one-job
+observed checkpoint, the loop scope (checkpoint layouts, restored confs),
+the pinned job counts of the fixed-depth loop queries, job attribution of
+concurrent checkpoint builds, the TrustRank empty-seed guard, that no
+eager checkpoint bypasses ``loops.checkpoint``, and that no hand-written
+``mapInPandas`` or ``mapInArrow`` body bypasses
+``boundary.map_rows``/``boundary.map_matrix``."""
 
 from __future__ import annotations
+
+import contextlib
+import io
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,6 +81,86 @@ def test_observed_checkpoint_is_one_job(spark):
     assert total == 4950
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert out.count() == 100
+
+
+def _physical_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def test_scope_checkpoint_keeps_layout(spark):
+    """Inside ``loops.scope`` a checkpoint of ``df.repartition(k, key)``
+    keeps its hash layout: ``groupBy(key)`` over it and a join with a
+    side laid out the same way both plan with no Exchange."""
+    k = 3
+
+    def keyed(n, col):
+        return (spark.range(n)
+                .select((F.col("id") % 7).alias("key"), F.col("id").alias(col))
+                .repartition(k, "key"))
+
+    with loops.scope(spark, k):
+        left = loops.checkpoint(keyed(100, "a"))
+        right = loops.checkpoint(keyed(50, "b"))
+        grouped = left.groupBy("key").agg(F.sum("a").alias("s"))
+        joined = left.join(right.hint("SHUFFLE_HASH"), "key")
+        plans = {"groupBy": _physical_plan(grouped),
+                 "join": _physical_plan(joined)}
+        sums = {r["key"]: r["s"] for r in grouped.collect()}
+        n_joined = joined.count()
+    assert "ShuffledHashJoin" in plans["join"], plans["join"]
+    for what, plan in plans.items():
+        assert "Exchange" not in plan, f"{what}:\n{plan}"
+    assert sums == {m: sum(range(m, 100, 7)) for m in range(7)}
+    assert n_joined == sum(len(range(m, 100, 7)) * len(range(m, 50, 7))
+                           for m in range(7))
+
+
+def test_scope_restores_confs_after_error(spark):
+    """The scope sets AQE off, ``k`` shuffle partitions and (below the
+    session width) codegen off, and restores all three when its body
+    raises."""
+    confs = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+             "spark.sql.codegen.wholeStage")
+    before = {c: spark.conf.get(c) for c in confs}
+    with pytest.raises(ZeroDivisionError):
+        with loops.scope(spark, 2):
+            assert {c: spark.conf.get(c) for c in confs} == dict(
+                zip(confs, ("false", "2", "false")))
+            1 / 0
+    assert {c: spark.conf.get(c) for c in confs} == before
+
+
+LOOP_JOBS_PIN = os.path.join(os.path.dirname(__file__), "fixtures",
+                             "loop_query_jobs.json")
+
+
+@pytest.mark.parametrize("name", [
+    "q_hits_scores", "q_link_pagerank", "q_trustrank",
+    "q_harmonic_hyperball", "q_effective_diameter"])
+def test_loop_query_jobs_within_pin(spark, name):
+    """Each fixed-depth loop query, run to ``toPandas`` under its own job
+    group at SF_SMALL, runs at most the jobs pinned for it in
+    ``tests/fixtures/loop_query_jobs.json`` (jobs only: stage counts
+    move with AQE's runtime choices). The pins are the counts measured
+    under ``SPARK_GRAFT_CPUS=4`` and ``=8``, equal under both. A change
+    that moves a count writes the new count into the pin in the same
+    change and lists it in CHANGES.md."""
+    import __spark_entry__ as ent
+
+    with open(LOOP_JOBS_PIN) as fh:
+        ceiling = json.load(fh)[name]
+    sc = spark.sparkContext
+    group = f"loop-jobs-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        ent.queries()[name](spark, SF_SMALL).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= ceiling, f"{name}: {jobs} jobs, pinned at {ceiling}"
 
 
 def _run_cc(spark):

@@ -6,10 +6,9 @@ bow-tie BFS, PageRank/TrustRank, HITS, HyperBall/NF, Lloyd/PQ).
 eagerly: loop rounds, multi-consumer CTEs that the Spark-side forks
 compute once, and the flagship abundance tiles all call it, so a
 different checkpoint mode changes this module alone. The loop
-mechanics are its observed scalar and layout re-assertion, the adaptive
-fixpoint loop with its round cap, the size-derived loop partition
-count, and the small-data codegen switch. Each loop module keeps only
-its round body.
+mechanics are its observed scalar, the adaptive fixpoint loop with its
+round cap, the size-derived loop partition count, and the scope a
+fixed-depth loop runs in. Each loop module keeps only its round body.
 
 Checkpoint and observe. A driver loop truncates lineage with an eager
 ``localCheckpoint``: each round references the previous one (often
@@ -23,12 +22,16 @@ executor-local blocks): right for a single-JVM run; on a lossy
 multi-executor cluster a reliable ``checkpoint()`` or a table write per
 round has the same semantics.
 
-Layout. A checkpointed DataFrame plans as ``Scan ExistingRDD`` with
-``UnknownPartitioning``: its hash layout survives physically but the
-planner forgets it, so every consumer would re-exchange it. A lazy
-``repartition(k, key)`` on top re-asserts the layout in-plan; the
-exchange it adds runs once per job and is reused across the job's rounds
-(``ReusedExchange``).
+Layout. Under AQE a checkpointed DataFrame plans as ``Scan ExistingRDD``
+with ``UnknownPartitioning``: its hash layout survives physically but the
+planner forgets it, so every consumer re-exchanges it. With AQE off the
+checkpoint keeps the ``HashPartitioning(key, k)`` it was built with, and
+a ``groupBy(key)`` or a join with a side laid out the same way plans with
+no Exchange. The fixed-depth loops (PageRank/TrustRank, HITS,
+HyperBall/NF) therefore run inside ``scope``, which turns AQE off and
+sets the loop's width; checkpoints outside a scope (the fixpoint loops,
+the multi-consumer CTEs, the flagship tiles) run with AQE on and forget
+their layout.
 """
 
 from __future__ import annotations
@@ -60,49 +63,56 @@ def nparts(spark: SparkSession, n_rows: int, row_bytes: int = 160) -> int:
 
 
 @contextmanager
-def interpreted_loop(spark: SparkSession, k: int):
-    """Whole-stage codegen OFF for the loop's eager jobs when the loop's
-    partition count ``k`` is below the session's shuffle parallelism —
-    the small-data regime. Each round's wide expressions compile fresh
-    generated classes per stage (per-round literals defeat the
-    source-text cache), and at ~50k state rows janino compilation
+def scope(spark: SparkSession, k: int):
+    """The session settings a fixed-depth loop runs under, for as long as
+    the ``with`` block is open: AQE off, ``k`` shuffle partitions, and
+    whole-stage codegen off when ``k`` is below the session's shuffle
+    parallelism. All three are restored on exit, also when the body
+    raises, so the lazy output tail is planned with the session's own
+    settings. Yields nothing.
+
+    AQE off keeps checkpoint layouts (see the module docstring), and
+    ``k`` shuffle partitions size every loop exchange by ``nparts``
+    without a per-call ``repartition``. The conditions: the loop's
+    exchanges are meant to run at ``nparts`` width, not at a width AQE
+    would coalesce them to; skew in the loop aggregations is absorbed by
+    their partial (map-side) aggregation, not by AQE's skew handling;
+    and no other query of the session runs concurrently inside the
+    scope, because the confs are session-wide.
+
+    Codegen: in the small-data regime each round's wide expressions
+    compile fresh generated classes per stage (per-round literals defeat
+    the source-text cache), and at ~50k state rows janino compilation
     dominates execution; interpreted evaluation of the identical
     expression trees measured 1.5-2x faster end-to-end (HyperBall
     15-20 s -> 9-10 s at a 10x replica of the test corpus). At cluster
     scale (``k`` at the cap) compilation amortizes over billions of rows
     and codegen stays on. Evaluation mode does not change expression
-    semantics. The previous value is restored on exit, before the lazy
-    output tail is planned.
-
-    Yields whether the loop is in the small-data regime; loops also use
-    that to pre-partition their aggregations to ``k``."""
-    small = k < shuffle_partitions(spark)
-    if not small:
-        yield small
-        return
-    prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    semantics."""
+    confs = {"spark.sql.adaptive.enabled": "false",
+             "spark.sql.shuffle.partitions": str(k)}
+    if k < shuffle_partitions(spark):
+        confs["spark.sql.codegen.wholeStage"] = "false"
+    prev = {key: spark.conf.get(key) for key in confs}
     try:
-        yield small
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
     finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev)
+        for key, value in prev.items():
+            spark.conf.set(key, value)
 
 
-def checkpoint(df: DataFrame, *, observe: Column | None = None,
-               key: str | None = None, k: int | None = None):
+def checkpoint(df: DataFrame, *, observe: Column | None = None):
     """Eagerly ``localCheckpoint`` ``df`` (one Spark job).
 
     ``observe`` is one aliased aggregate Column evaluated by that same
-    job; when given, returns ``(df, value)`` instead of ``df``. ``key``
-    re-asserts the ``repartition(k, key)`` layout on the checkpointed
-    result (see the module docstring)."""
+    job; when given, returns ``(df, value)`` instead of ``df``."""
     obs = None
     if observe is not None:
         obs = Observation()
         df = df.observe(obs, observe)
     df = df.localCheckpoint(eager=True)
-    if key is not None:
-        df = df.repartition(k, key)
     if obs is None:
         return df
     (value,) = obs.get.values()

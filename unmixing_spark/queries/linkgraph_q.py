@@ -222,24 +222,22 @@ def pagerank_over_documents(spark: SparkSession,
     # state hash-partitioned by doc_id and links by src, each round is
     # ONE exchange (the dst-keyed contribution sum) — the rank side and
     # the merge join move nothing.
-    # loop partitioning sized from the edge count (~2.5 N); links carry
-    # their src hash layout into every round
+    # loop partitioning sized from the edge count (~2.5 N); inside the
+    # loop scope links and the rank state keep their hash layouts
     k = loops.nparts(spark, 3 * n_docs, row_bytes=24)
     pr = (docs.select("doc_id", init.cast("bigint").alias("pr"))
           .repartition(k, "doc_id"))
     prev = pr
-    with loops.interpreted_loop(spark, k) as small:
+    with loops.scope(spark, k):
         links = loops.checkpoint(spark.sql(
             f"WITH {link_ctes(D.SPARK)} SELECT src, outdeg, dst "
-            "FROM links").repartition(k, "src"), key="src", k=k)
+            "FROM links").repartition(k, "src"))
         for r in range(PR_ROUNDS):
             prev = pr
             inc = (links.join(pr.withColumnRenamed("doc_id", "src")
                               .hint("SHUFFLE_HASH"), "src")
-                   .select("dst", F.expr("pr div outdeg").alias("c")))
-            if small:
-                inc = inc.repartition(k, "dst")
-            inc = inc.groupBy("dst").agg(F.sum("c").alias("s"))
+                   .select("dst", F.expr("pr div outdeg").alias("c"))
+                   .groupBy("dst").agg(F.sum("c").alias("s")))
             pr = (pr.join(inc.hint("SHUFFLE_HASH"),
                           pr["doc_id"] == inc["dst"], "left")
                   .select(pr["doc_id"],
@@ -248,7 +246,7 @@ def pagerank_over_documents(spark: SparkSession,
                               f"div {PR_DAMP_DEN}"))
                           .cast("bigint").alias("pr")))
             if (r + 1) % PR_CKPT_EVERY == 0 and r + 1 < PR_ROUNDS:
-                pr = loops.checkpoint(pr, key="doc_id", k=k)
+                pr = loops.checkpoint(pr)
         # final ranks feed three consumers (output join, residual, and
         # the residual's broadcast) — materialize once so none re-runs
         # the chain
@@ -571,18 +569,18 @@ def _hb_setup(spark: SparkSession) -> tuple[DataFrame, DataFrame, int]:
     # session constant; the documents count is a parquet-footer action
     n_docs = spark.table("documents").count()
     k = loops.nparts(spark, 3 * n_docs)
-    with loops.interpreted_loop(spark, k):
+    with loops.scope(spark, k):
         # the two checkpoint builds are independent eager jobs over the
         # same documents scan — submit them concurrently (guide §2.6)
         # so the second job's tasks back-fill the first one's tail; the
         # driver-side saving is one whole job's scheduling+tail latency.
-        # Re-asserting the layouts matters here: without it every round
-        # re-exchanged links AND state and sorted both for a merge join
-        # (measured: 4 Exchange + 2 SortMergeJoin per round).
+        # Their layouts matter here: a round over checkpoints that lost
+        # them re-exchanged links AND state and sorted both for a merge
+        # join (measured: 4 Exchange + 2 SortMergeJoin per round).
         def _build_links() -> DataFrame:
             return loops.checkpoint(spark.sql(
                 f"WITH {link_ctes(D.SPARK)} SELECT src, dst FROM links"
-            ).repartition(k, "src"), key="src", k=k)
+            ).repartition(k, "src"))
 
         def _build_state() -> DataFrame:
             # s0 has EXACTLY one register row per node (one md5 pair
@@ -595,8 +593,7 @@ def _hb_setup(spark: SparkSession) -> tuple[DataFrame, DataFrame, int]:
             return loops.checkpoint(spark.sql(
                 f"WITH {_hb_base_ctes(D.SPARK)} "
                 "SELECT node, b, rho FROM s0")
-                .repartition(k, "node").select("node", *wide),
-                key="node", k=k)
+                .repartition(k, "node").select("node", *wide))
 
         # the helper threads inherit the caller's local properties (job
         # group, description, scheduler pool) and session tags, so their
@@ -646,7 +643,7 @@ _HB_EST_EXPR = _hb_est_expr()
 
 
 def _hb_propagate_wide(links: DataFrame, state: DataFrame,
-                       extras: list, k: int, small: bool) -> DataFrame:
+                       extras: list) -> DataFrame:
     """One HyperBall round over the wide state: src-keyed edge join,
     node-keyed register-max aggregation of the CONTRIBUTIONS only, then
     a node-keyed left join merging them into the state row with
@@ -667,13 +664,6 @@ def _hb_propagate_wide(links: DataFrame, state: DataFrame,
                .join(state.selectExpr("node AS src", *_HB_REGS)
                      .hint("SHUFFLE_HASH"), "src")
                .selectExpr("dst AS node", *_HB_REGS))
-    # in the small-data regime (loops.interpreted_loop), pre-repartition
-    # so the register aggregation runs on k partitions (no second
-    # exchange — the groupBy's clustering requirement is already met);
-    # at cluster scale keep the plain groupBy so the map-side partial
-    # max is planned as usual
-    if small:
-        contrib = contrib.repartition(k, "node")
     cg = contrib.groupBy("node").agg(
         *[F.max(c).alias(f"c_{c}") for c in _HB_REGS])
     return (state.join(cg.hint("SHUFFLE_HASH"), "node", "left")
@@ -682,13 +672,13 @@ def _hb_propagate_wide(links: DataFrame, state: DataFrame,
 
 
 def _hb_wide_round(links: DataFrame, state: DataFrame, acc_exprs: list,
-                   extras: list, k: int, small: bool) -> DataFrame:
+                   extras: list) -> DataFrame:
     """Propagate + estimator + accumulator update, in layered selects so
     cnt/s_int/e each evaluate once per row (CollapseProject is excluded
     session-wide). ``acc_exprs`` are the new accumulator columns as SQL
     strings over the estimator column ``e`` and the carried ``{c}0``
     columns."""
-    agg = _hb_propagate_wide(links, state, extras, k, small)
+    agg = _hb_propagate_wide(links, state, extras)
     extras0 = [f"{c}0" for c in extras]
     stats = agg.selectExpr("node", *_HB_REGS, *extras0,
                            f"{_HB_CNT} AS cnt", f"{_HB_SINT} AS s_int")
@@ -736,16 +726,15 @@ def harmonic_over_documents(spark: SparkSession) -> DataFrame:
     links, state, k = _hb_setup(spark)
     state = _hb_init_acc(state, [f"{D.dbl(0.0)} AS h", "e AS prev"])
     prev_state = state
-    with loops.interpreted_loop(spark, k) as small:
+    with loops.scope(spark, k):
         for r in range(1, HB_ROUNDS + 1):
             prev_state = state
             upd = [f"(h0 + greatest({D.dbl(0.0)}, e - prev0) "
                    f"/ {D.dbl(float(r))}) AS h",
                    "e AS prev"]
-            state = _hb_wide_round(links, state, upd, ["h", "prev"],
-                                   k, small)
+            state = _hb_wide_round(links, state, upd, ["h", "prev"])
             if r % HB_CKPT_EVERY == 0 or r >= HB_ROUNDS - 1:
-                state = loops.checkpoint(state, key="node", k=k)
+                state = loops.checkpoint(state)
     conv = _hb_conv_col(state, prev_state)
     stats = state.selectExpr("node", "h", f"{_HB_CNT} AS cnt",
                              f"{_HB_SINT} AS s_int")
@@ -794,12 +783,13 @@ register("q_harmonic_hyperball", QuerySpec(
 # honest, exactly like q_link_pagerank.
 #
 # Scale shape (10^12 pages): per round, one src-keyed join + dst-keyed
-# sum (authorities), one dst-keyed join + src-keyed sum (hubs), and two
-# 1-row total aggregations broadcast back — the same two exchanges
-# PageRank pays, doubled. Edge list checkpointed once; score state is
-# two bigints per page. DuckDB's integer sum() widens to HUGEINT — the
-# normalized quotient is cast back to bigint (values fit by the bound
-# above), keeping both engines on int64 state.
+# sum (authorities) and one dst-keyed join + src-keyed sum (hubs), each
+# join co-partitioned and each sum's total observed — one exchange per
+# half-step, the one PageRank pays per round. Edge list checkpointed
+# twice (by src and by dst); score state is two bigints per page.
+# DuckDB's integer sum() widens to HUGEINT — the normalized quotient is
+# cast back to bigint (values fit by the bound above), keeping both
+# engines on int64 state.
 
 HS_SCALE = 10 ** 9   # fixed-point L1 mass per score vector (see overflow
                      # bound above: products stay under 4e18 < 2^63; at
@@ -863,25 +853,46 @@ def _hits_oracle() -> str:
     """
 
 
+def _hits_half(links: DataFrame, vec: DataFrame, key: str,
+               out: str) -> DataFrame:
+    """One HITS half-step's raw sums: ``links`` laid out by ``key`` joins
+    the score vector ``vec`` (doc_id, score) laid out by doc_id, and the
+    scores sum by ``out``. Inside the loop scope both join sides keep
+    their layout, so the sum's exchange is the half-step's only one."""
+    return (links.join(vec.toDF(key, "x").hint("SHUFFLE_HASH"), key)
+            .groupBy(out).agg(F.sum("x").alias("s")))
+
+
 def hits_over_documents(spark: SparkSession) -> DataFrame:
     """Driver loop twin of the unrolled oracle, reading the registered
-    ``documents`` view: HS_ROUNDS exact-integer HITS rounds; the edge
-    list checkpointed once. Each raw-sum table (ar/hr, one row per
-    linked page) is eagerly checkpointed EVERY half-step: the 1-row
-    normalization total that cross-joins back is a broadcast, and a
-    broadcast subtree is re-evaluated from its source when the consumer
-    plan runs — off an unmaterialized chain that re-execution compounds
-    quadratically across rounds (measured 113 s at sf0.01 vs ~9 s with
-    per-half-step truncation; q_link_pagerank can defer checkpointing
-    because its loop has no in-loop aggregate, the CC/HITS loops
-    cannot). The normalized vectors a/h stay lazy — they are shallow
-    transforms (doc scan ⋈ checkpointed raw sums ⋈ 1-row broadcast)."""
-    links = loops.checkpoint(spark.sql(
-        f"WITH {link_ctes(D.SPARK)} SELECT src, dst FROM links"))
+    ``documents`` view: HS_ROUNDS exact-integer HITS rounds inside the
+    loop scope, over the edge list checkpointed twice, once laid out by
+    src (authority half-steps) and once by dst (hub half-steps). Each
+    raw-sum table (ar/hr, one row per linked page) is eagerly
+    checkpointed EVERY half-step, with its L1 total observed in the same
+    job: the next half-step's normalization needs that total, and
+    computing it in-plan instead would re-evaluate the unmaterialized
+    chain per consumer, which compounds quadratically across rounds
+    (measured 113 s at sf0.01 vs ~9 s with per-half-step truncation;
+    q_link_pagerank can defer checkpointing because its loop has no
+    in-loop total, the HITS loop cannot). The normalized vectors a/h
+    stay lazy — shallow projections over the checkpointed raw sums that
+    keep their layout, so each half-step's join is co-partitioned."""
     docs = spark.table("documents").select("doc_id")
     n = docs.count()
-    h = docs.select(
-        "doc_id", F.lit(HS_SCALE // n).cast("bigint").alias("h"))
+    k = loops.nparts(spark, 3 * n, row_bytes=16)
+    h = (docs.select("doc_id", F.lit(HS_SCALE // n).cast("bigint")
+                     .alias("h"))
+         .repartition(k, "doc_id"))
+
+    def _dense(vec: DataFrame, col: str) -> DataFrame:
+        # the dense form the residual/output contract expects: absent
+        # pages hold the exact 0 the dense recurrence computed for them
+        return (docs.join(vec, "doc_id", "left")
+                .select(docs["doc_id"],
+                        F.coalesce(F.col(col), F.lit(0).cast("bigint"))
+                        .alias(col)))
+
     # Round-6 loop shape (guide §2.3 "shuffle fewer bytes" + §1.2): the
     # in-loop vectors stay SPARSE — only pages with a non-zero raw sum
     # carry a row. Pages absent from ar/hr held exactly
@@ -892,45 +903,28 @@ def hits_over_documents(spark: SparkSession) -> DataFrame:
     # (24 extra scans + joins) happens ONCE at the end. The L1 total t
     # is observed on the raw-sum checkpoint — no per-half-step 1-row
     # aggregation job or broadcast; t embeds as an exact int literal.
-    # score vectors are <= N 16-byte rows; when that fits the session's
-    # broadcast threshold, ship THEM to the (static, never-shuffled)
-    # edge table instead of letting the planner fall back to a
-    # sort-merge join — the checkpointed vectors come back as bare RDD
-    # scans with unknown size, so the auto-broadcast never fires after
-    # round 1 and links re-shuffled every half-step (guide §3.1)
-    bcast_ok = n * 16 < int(spark.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", str(10 << 20)))
-    side = F.broadcast if bcast_ok else (lambda df: df)
-    a = prev_h = prev_a = None
-    for r in range(1, HS_ROUNDS + 1):
-        prev_h, prev_a = h, a
-        ar, ta = loops.checkpoint(
-            links.join(side(h.withColumnRenamed("doc_id", "src")), "src")
-            .groupBy("dst").agg(F.sum("h").alias("s")),
-            observe=F.sum("s").alias("t"))
-        a = ar.select(F.col("dst").alias("doc_id"),
-                      F.expr(f"(s * {HS_SCALE}) div {int(ta)}")
-                      .cast("bigint").alias("a"))
-        hr, th = loops.checkpoint(
-            links.join(side(a.withColumnRenamed("doc_id", "dst")), "dst")
-            .groupBy("src").agg(F.sum("a").alias("s")),
-            observe=F.sum("s").alias("t"))
-        h = hr.select(F.col("src").alias("doc_id"),
-                      F.expr(f"(s * {HS_SCALE}) div {int(th)}")
-                      .cast("bigint").alias("h"))
-
-    def _dense(vec: DataFrame, col: str) -> DataFrame:
-        # the dense form the residual/output contract expects: absent
-        # pages hold the exact 0 the dense recurrence computed for them
-        return (docs.join(vec, "doc_id", "left")
-                .select(docs["doc_id"],
-                        F.coalesce(F.col(col), F.lit(0).cast("bigint"))
-                        .alias(col)))
-
-    # final vectors feed the output join plus a residual each —
-    # materialize once so neither consumer re-runs the chain
-    h = loops.checkpoint(_dense(h, "h"))
-    a = loops.checkpoint(_dense(a, "a"))
+    a = None
+    with loops.scope(spark, k):
+        by_src = loops.checkpoint(spark.sql(
+            f"WITH {link_ctes(D.SPARK)} SELECT src, dst FROM links")
+            .repartition(k, "src"))
+        by_dst = loops.checkpoint(by_src.repartition(k, "dst"))
+        for r in range(1, HS_ROUNDS + 1):
+            prev_h, prev_a = h, a
+            ar, ta = loops.checkpoint(_hits_half(by_src, h, "src", "dst"),
+                                      observe=F.sum("s").alias("t"))
+            a = ar.select(F.col("dst").alias("doc_id"),
+                          F.expr(f"(s * {HS_SCALE}) div {int(ta)}")
+                          .cast("bigint").alias("a"))
+            hr, th = loops.checkpoint(_hits_half(by_dst, a, "dst", "src"),
+                                      observe=F.sum("s").alias("t"))
+            h = hr.select(F.col("src").alias("doc_id"),
+                          F.expr(f"(s * {HS_SCALE}) div {int(th)}")
+                          .cast("bigint").alias("h"))
+        # final vectors feed the output join plus a residual each —
+        # materialize once so neither consumer re-runs the chain
+        h = loops.checkpoint(_dense(h, "h"))
+        a = loops.checkpoint(_dense(a, "a"))
     prev_h = _dense(prev_h, "h")
     prev_a = _dense(prev_a, "a")
     dh = (h.withColumnRenamed("h", "x")
@@ -1044,14 +1038,12 @@ def neighborhood_function_over_documents(spark: SparkSession) -> DataFrame:
     upd = [f"(env0 + greatest({D.dbl(0.0)}, e - prev0)) AS env",
            "e AS prev"]
     nf_vals = []
-    with loops.interpreted_loop(spark, k) as small:
+    with loops.scope(spark, k):
         for r in range(HB_ROUNDS + 1):
             if r:
-                state = _hb_wide_round(links, state, upd, ["env", "prev"],
-                                       k, small)
+                state = _hb_wide_round(links, state, upd, ["env", "prev"])
             state, nf = loops.checkpoint(
-                state, observe=F.round(F.sum("env"), 6).alias("nf"),
-                key="node", k=k)
+                state, observe=F.round(F.sum("env"), 6).alias("nf"))
             nf_vals.append((r, float(nf)))
     nf = spark.createDataFrame(
         [(int(r), v) for r, v in nf_vals], "r bigint, nf double")
